@@ -41,6 +41,18 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(dot_product(a, a))
 
 
+def seq_l2_norm(vals) -> float:
+    """Driver-side twin of :func:`l2_norm`: the same sequential float64
+    fold of x·x from 0.0, then a correctly rounded sqrt — bit-identical
+    to the JVM value, so it can be passed as a hoisted norm literal."""
+    import math
+
+    acc = 0.0
+    for x in vals:
+        acc += x * x
+    return math.sqrt(acc)
+
+
 def cosine_similarity(a: Column, b: Column) -> Column:
     """dot(a,b) / (‖a‖·‖b‖ + 1e-8), float64 (reference IVF.cpp:122-152)."""
     return dot_product(a, b) / (l2_norm(a) * l2_norm(b) + F.lit(EPSILON))
@@ -146,7 +158,7 @@ def dot_product_seq_pandas(a: Column, b: Column) -> Column:
 # string that round-trips to the same IEEE-754 bits, and the SQL
 # parser's ``Double.parseDouble`` is correctly rounded — so the parsed
 # Literal is bit-identical to ``F.lit(x)``'s. Pinned by
-# tests/test_functions.py::test_lit_double_array_matches_per_element.
+# tests/test_properties.py::test_lit_array_helpers_match_per_element.
 
 _LONG_MIN = -(2**63)
 
@@ -160,7 +172,13 @@ def _sql_double(x: float) -> str:
 
 
 def lit_double_array(vals) -> Column:
-    """``ARRAY<DOUBLE>`` literal in one py4j round-trip (see above)."""
+    """``ARRAY<DOUBLE>`` literal in one py4j round-trip (see above).
+
+    Fails loud: a NaN or ±Inf component raises ``ValueError`` (from
+    ``_sql_double``) while the literal is built on the driver, so no job
+    ever runs with a non-finite constant. Per-element ``F.lit`` would
+    accept it and score rows NaN, which Spark orders FIRST under
+    ``desc`` — a silently wrong top-k."""
     vals = list(vals)
     if not vals:
         return F.array().cast("array<double>")

@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gpu_accelerated_vector_indexing_spark.functions.vector import lit_double_array2
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
 
@@ -90,25 +91,16 @@ def kmeans_assign(
     if k * len(centers[0]) <= 4096:
         # JVM-literal construction: createDataFrame from a Python list
         # routes through a Python-RDD task (measured ~5s of worker
-        # spin-up for 10 rows); explode-of-literal-structs stays
-        # entirely JVM-side
-        rows = [
-            F.struct(
-                F.lit(i).alias("cluster"),
-                F.array(*[F.lit(float(x)) for x in c]).cast("array<double>").alias("centroid"),
-            )
-            for i, c in enumerate(centers)
-        ]
-        centroids = (
-            spark.range(1)
-            .select(F.explode(F.array(*rows)).alias("s"))
-            .select("s.cluster", "s.centroid")
+        # spin-up for 10 rows); a posexplode of ONE parsed literal
+        # (lit_double_array2) stays entirely JVM-side
+        centroids = spark.range(1).select(
+            F.posexplode(lit_double_array2(centers)).alias("cluster", "centroid")
         )
     else:
-        # past ~4k cells the literal tree's Py4J round-trips dominate —
-        # 128 clusters × 384 dims measured 24.9s of F.lit() calls vs
-        # 1.5s through createDataFrame — so big shapes take the
-        # Python-RDD path and small fixture shapes keep the JVM one
+        # past ~4k cells the literal's SQL parse dominates — one parse
+        # of 128 clusters × 384 dims measured 6-7 s vs 0.5-0.7 s through
+        # createDataFrame — so big shapes take the Python-RDD path and
+        # small fixture shapes keep the JVM one
         centroids = spark.createDataFrame(
             [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
             schema="cluster int, centroid array<double>",

@@ -404,6 +404,29 @@ def test_driver_coarse_probes_match_dataframe_coarse(spark):
             assert df_probes == sorted(coarse_probes(spark, SF_CORRECT, qid, n_probe))
 
 
+def test_multi_query_ivf_matches_single_and_empty_batch(spark):
+    """The batched IVF search equals the single-query search per query
+    (the probe pairs built as one parsed literal), and an empty batch
+    returns an empty result with the batch schema instead of raising."""
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import knn_ivf, multi_query_knn_ivf
+
+    batch = multi_query_knn_ivf(spark, SF_CORRECT, query_ids=(0, 3, 17), k=5, n_probe=3)
+    by_q: dict[int, list] = {}
+    for r in batch.collect():
+        by_q.setdefault(r.query_id, []).append((r.rn, r.vec_id, r.score))
+    for qid in (0, 3, 17):
+        single = [
+            (r.vec_id, r.score)
+            for r in knn_ivf(spark, SF_CORRECT, query_id=qid, k=5, n_probe=3).collect()
+        ]
+        assert [(v, s) for _, v, s in sorted(by_q[qid])] == single, f"q{qid}"
+
+    empty = multi_query_knn_ivf(spark, SF_CORRECT, query_ids=(), k=5, n_probe=3)
+    assert empty.columns == batch.columns
+    assert empty.schema.simpleString() == batch.schema.simpleString()
+    assert empty.collect() == []
+
+
 def test_append_to_index_searchable_without_rebuild(spark, tmp_path):
     """Continuous-ingest contract: vectors appended to an existing
     index (nearest-centroid assignment, partition-directory append)

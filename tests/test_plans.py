@@ -697,3 +697,32 @@ def test_delete_where_serve_masks_via_broadcast_antijoin(spark):
     df = index_delete_where(spark, SF_CORRECT)
     plan = assert_plan(df, contains=("BroadcastHashJoin",))
     assert "LeftAnti" in plan, plan
+
+
+def test_warm_engine_point_search_is_one_stage_topk(spark, tmp_path):
+    """A warm ``IVFEngine.search`` is one pruned scan feeding a bounded
+    top-k: TakeOrderedAndProject (partial top-k per partition, then
+    merge) over a PartitionFilters scan, with no Window and no Exchange
+    — the coarse stage ran on the driver, and both
+    ``sequential_fine_search`` values share this plan."""
+    from pyspark.sql import functions as F
+
+    from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
+    from gpu_accelerated_vector_indexing_spark.operators.index_build import build_partitioned_index
+    from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
+
+    out = str(tmp_path / "idx")
+    build_partitioned_index(spark, SF_CORRECT, out, k=4, seed=42)
+    row = load_table(spark, SF_CORRECT, "embeddings").filter(F.col("vec_id") == 0).first()
+    qvec = [float(x) for x in row.embedding]
+    for sequential in (True, False):
+        eng = IVFEngine.from_pretrained(
+            spark, out, n_probe=2, sequential_fine_search=sequential
+        )
+        eng.search(qvec, k=5).collect()  # warm: centroid rows now held
+        plan = assert_plan(
+            eng.search(qvec, k=5),
+            contains=("TakeOrderedAndProject", "PartitionFilters"),
+            absent=("Window", "Exchange"),
+        )
+        assert "cluster" in plan.split("PartitionFilters", 1)[1][:200], plan

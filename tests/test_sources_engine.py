@@ -294,13 +294,165 @@ def test_engine_full_probe_matches_bruteforce(spark, built_index):
 
 
 def test_engine_sequential_equals_combined(spark, built_index):
-    """Two physical fine-search strategies, one logical result (O16≡O17)."""
+    """Both ``sequential_fine_search`` values return identical
+    ``(score, vec_id)`` rows (O16≡O17) across queries and k."""
+    from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
+
+    seq = IVFEngine.from_pretrained(spark, built_index, n_probe=2, sequential_fine_search=True)
+    comb = IVFEngine.from_pretrained(spark, built_index, n_probe=2, sequential_fine_search=False)
+    for qid in (0, 3, 11):
+        qvec = _query_vec(spark, SF_SMOKE, qid)
+        for k in (1, 5, 50):
+            rows = [(r.score, r.vec_id) for r in seq.search(qvec, k=k).collect()]
+            assert rows == [(r.score, r.vec_id) for r in comb.search(qvec, k=k).collect()]
+            assert rows, f"q{qid} k={k}: empty answer"
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran) via a private job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"engine-jobs-{uuid.uuid4()}"
+    sc.setJobGroup(group, "engine job count")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _spark_coarse(centroids, qvec, n_probe):
+    """The engine's former per-query coarse job, kept as the oracle for
+    the driver-side probes: cosine against every centroid row in Spark,
+    rounded to SCORE_SCALE, (score desc, cluster desc), limit n_probe."""
+    from pyspark.sql import functions as F
+
+    from gpu_accelerated_vector_indexing_spark.functions.vector import cosine_similarity
+    from gpu_accelerated_vector_indexing_spark.operators.knn import SCORE_SCALE
+
+    q = F.lit([float(x) for x in qvec]).cast("array<double>")
+    scored = centroids.select(
+        "cluster",
+        F.round(cosine_similarity(F.col("centroid"), q), SCORE_SCALE).alias("cscore"),
+    )
+    rows = scored.orderBy(F.desc("cscore"), F.desc("cluster")).limit(n_probe).collect()
+    return [r.cluster for r in rows]
+
+
+def test_engine_driver_probes_match_spark_coarse(spark, built_index, tmp_path):
+    """The engine's driver-side coarse stage (``ivf.probe_labels`` over
+    engine-held centroid rows) picks the same probes, in the same order,
+    as the Spark coarse expression — on the built index's centroids and
+    on a table with exact duplicate centroids (tied scores fall back to
+    cluster desc), for seeded random queries, the zero query, and
+    n_probe up to and past the cluster count."""
+    import random
+
+    from gpu_accelerated_vector_indexing_spark.engine import IVFEngine, SearchConfig
+
+    rng = random.Random(2024)
+    built = [
+        (int(r.cluster), [float(x) for x in r.centroid])
+        for r in spark.read.parquet(f"{built_index}/centroids").collect()
+    ]
+    dim = len(built[0][1])
+    rand = [(10 + i, [rng.gauss(0.0, 1.0) for _ in range(dim)]) for i in range(8)]
+    dup = [(20, built[0][1]), (21, rand[2][1]), (22, rand[2][1])]
+    cent_path = str(tmp_path / "centroids")
+    spark.createDataFrame(
+        built + rand + dup, "cluster int, centroid array<double>"
+    ).coalesce(1).write.parquet(cent_path)
+    cents = spark.read.parquet(cent_path)
+    n_clusters = len(built + rand + dup)
+
+    queries = [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(6)]
+    queries += [[0.0] * dim, built[0][1], rand[2][1]]
+    eng = IVFEngine(spark, f"{built_index}/embeddings_indexed", cent_path, SearchConfig())
+    for n_probe in (1, 3, n_clusters, n_clusters + 5):
+        for qvec in queries:
+            assert eng._coarse(qvec, n_probe) == _spark_coarse(cents, qvec, n_probe)
+    # clusters 12, 21 and 22 hold the same vector: an exact three-way
+    # tie at 1.0, broken by cluster desc
+    assert eng._coarse(rand[2][1], 3) == [22, 21, 12]
+
+
+def test_engine_warm_search_is_one_job(spark, built_index):
+    """Centroid rows are collected by the first search only, once per
+    engine instance; after that ``search()`` runs no job and its
+    ``collect()`` exactly one (the pruned scan with its top-k)."""
     from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
 
     qvec = _query_vec(spark, SF_SMOKE)
-    seq = IVFEngine.from_pretrained(spark, built_index, n_probe=2, sequential_fine_search=True)
-    comb = IVFEngine.from_pretrained(spark, built_index, n_probe=2, sequential_fine_search=False)
-    assert seq.search(qvec, k=5).collect() == comb.search(qvec, k=5).collect()
+    eng = IVFEngine.from_pretrained(spark, built_index, n_probe=2)
+    assert eng._centroid_rows is None  # nothing collected at load
+    _, cold_jobs = _jobs(spark, lambda: eng.search(qvec, k=5))
+    assert cold_jobs == 1  # the one centroid collect
+    held = eng._centroid_rows
+    for q in (qvec, _query_vec(spark, SF_SMOKE, 5)):
+        df, search_jobs = _jobs(spark, lambda: eng.search(q, k=5))
+        assert search_jobs == 0, "a warm search must run no coarse job"
+        rows, collect_jobs = _jobs(spark, df.collect)
+        assert collect_jobs == 1 and len(rows) == 5
+    assert eng._centroid_rows is held
+
+
+def test_engine_non_finite_query_fails_before_any_job(spark, built_index):
+    """A NaN/±Inf query component raises ``ValueError`` from
+    ``search()`` itself — not at collect, and before even the cold
+    centroid collect runs."""
+    from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
+
+    qvec = _query_vec(spark, SF_SMOKE)
+    eng = IVFEngine.from_pretrained(spark, built_index, n_probe=2)
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        q = list(qvec)
+        q[3] = bad
+
+        def call(q=q):
+            with pytest.raises(ValueError, match="non-finite"):
+                eng.search(q, k=5)
+
+        _, jobs = _jobs(spark, call)
+        assert jobs == 0
+    assert eng._centroid_rows is None
+
+
+def _cluster_members(eng, clusters):
+    return sorted(
+        (r.vec_id for r in eng.embeddings.select("cluster", "vec_id").collect() if r.cluster in clusters),
+        reverse=True,
+    )
+
+
+def test_engine_zero_query_scores_zero_in_vec_id_order(spark, built_index):
+    """A zero query vector scores every centroid and row 0.0 (the
+    ``+1e-8`` guard): probes tie-break by cluster desc, and the k rows
+    come back scored 0.0 in vec_id desc order."""
+    from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
+
+    dim = len(_query_vec(spark, SF_SMOKE))
+    eng = IVFEngine.from_pretrained(spark, built_index, n_probe=2)
+    rows = eng.search([0.0] * dim, k=5).collect()
+    clusters = sorted((c for c, _ in eng._centroid_rows), reverse=True)
+    assert eng._coarse([0.0] * dim, 2) == clusters[:2]
+    expect = _cluster_members(eng, set(clusters[:2]))[:5]
+    assert [(r.score, r.vec_id) for r in rows] == [(0.0, v) for v in expect]
+
+
+def test_engine_k_past_candidates_returns_every_candidate(spark, built_index):
+    """k larger than the probed candidate count returns every row of
+    the probed clusters, in (score desc, vec_id desc) order."""
+    from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
+
+    qvec = _query_vec(spark, SF_SMOKE)
+    eng = IVFEngine.from_pretrained(spark, built_index, n_probe=1)
+    rows = eng.search(qvec, k=100_000).collect()
+    members = _cluster_members(eng, set(eng._coarse(qvec, 1)))
+    assert 0 < len(rows) == len(members)
+    assert sorted(r.vec_id for r in rows) == sorted(members)
+    keys = [(r.score, r.vec_id) for r in rows]
+    assert keys == sorted(keys, reverse=True)
 
 
 def test_engine_partition_pruning(spark, built_index):
