@@ -39,6 +39,7 @@ from gpu_accelerated_vector_indexing_spark.functions.vector import (
     lit_double_array,
     seq_l2_norm,
 )
+from gpu_accelerated_vector_indexing_spark.memo import session_state
 from gpu_accelerated_vector_indexing_spark.operators.ivf import probe_labels
 from gpu_accelerated_vector_indexing_spark.operators.knn import SCORE_SCALE
 
@@ -215,15 +216,38 @@ class IVFEngine:
 # device/host memory before serving, IVF.cpp load path); before this
 # memo every search re-scanned the index parquet per hop and re-ran the
 # entry-point groupBy — the job-overhead drift VERDICT r8 wrong #1
-# flagged. Value = [edges, corpus, entry_ids|None]; evictable via
-# memo.clear_session_caches (DataFrame items unpersist).
+# flagged. Evictable via memo.clear_session_caches (the cached
+# relations unpersist).
 # CONTRACT: a served index directory is IMMUTABLE — every writer in
-# this repo builds into a fresh mkdtemp and in-place maintenance
+# this repo builds into a fresh state_dir and in-place maintenance
 # (compaction) runs BEFORE serving; rewriting a directory an engine
-# has already served would leave this cache (and the memoized entry
+# has already served would leave this state (and the memoized entry
 # ids) stale. To re-serve a rewritten dir, evict first
 # (memo.clear_session_caches) or write to a new directory.
-_GRAPH_SERVING_CACHE: dict[tuple[SparkSession, str], list] = {}
+@session_state
+def _graph_relations(spark: SparkSession, index_dir: str) -> tuple[DataFrame, DataFrame]:
+    """``(edges, corpus_normed)`` — lazy cached relations, like
+    IVFEngine: nothing reads until a search materializes the cache."""
+    return (
+        spark.read.parquet(f"{index_dir}/edges").cache(),
+        spark.read.parquet(f"{index_dir}/corpus_normed").cache(),
+    )
+
+
+@session_state
+def _graph_entry_ids(spark: SparkSession, index_dir: str) -> list[int]:
+    """The index's entry points (one per cell — min vec_id), collected
+    on the first search: index-derived, so fixed for a pretrained
+    index."""
+    from gpu_accelerated_vector_indexing_spark.operators.graph_ann import _entry_points
+
+    corpus = _graph_relations(spark, index_dir)[1]
+    return sorted(
+        r.vec_id
+        for r in _entry_points(corpus.select("vec_id", "label"))
+        .select("vec_id")
+        .collect()
+    )
 
 
 class GraphEngine:
@@ -244,33 +268,11 @@ class GraphEngine:
         self.spark = spark
         self.beam = beam
         self.hops = hops
-        key = (spark, index_dir)
-        if key not in _GRAPH_SERVING_CACHE:
-            # lazy relations, like IVFEngine: nothing reads until a
-            # search materializes the cache
-            _GRAPH_SERVING_CACHE[key] = [
-                spark.read.parquet(f"{index_dir}/edges").cache(),
-                spark.read.parquet(f"{index_dir}/corpus_normed").cache(),
-                None,
-            ]
-        self._state = _GRAPH_SERVING_CACHE[key]
-        self.edges = self._state[0]
-        self.corpus = self._state[1]
+        self.index_dir = index_dir
+        self.edges, self.corpus = _graph_relations(spark, index_dir)
 
     def _entry_ids(self) -> list[int]:
-        """The index's entry points (one per cell — min vec_id),
-        collected once per (session, index_dir) and reused by every
-        search: index-derived, so fixed for a pretrained index."""
-        if self._state[2] is None:
-            from gpu_accelerated_vector_indexing_spark.operators.graph_ann import _entry_points
-
-            self._state[2] = sorted(
-                r.vec_id
-                for r in _entry_points(self.corpus.select("vec_id", "label"))
-                .select("vec_id")
-                .collect()
-            )
-        return self._state[2]
+        return _graph_entry_ids(self.spark, self.index_dir)
 
     @classmethod
     def from_pretrained(

@@ -39,6 +39,9 @@ DEFAULT_DIM = 64  # fixture embedding dim (TESTDATA.md); reference uses 384
 # crawled vocabulary is effectively unbounded (URLs, hex ids, typos),
 # so past the cap the memo resets rather than growing without limit —
 # Zipf means the refilled head recovers the hit rate immediately.
+# Not session state (memo.session_state): the memo runs inside
+# executor-side UDF workers, depends on no session or corpus, and its
+# values are pure functions of the key — nothing to evict or release.
 _TOKEN_MEMO: dict[tuple[str, int, str], tuple[int, float]] = {}
 _TOKEN_MEMO_MAX = 1 << 20
 

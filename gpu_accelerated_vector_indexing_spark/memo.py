@@ -1,84 +1,106 @@
-"""Session-scoped memo registry: discover and evict the package's
-per-``SparkSession`` caches.
+"""Session state: the ONE memo primitive for the package's
+per-``SparkSession`` index state.
 
-Many operators memoize derived state per session — persisted
-DataFrames (`graph._PR_EDGES_CACHE`, `dedup._SIGS_STATE`), persisted
-index directories (`ivf._MERGED_IVF_INDEX_DIR`), small driver-side
-lists (`refshape._REF_QVEC_CACHE`). The memo dicts key on the
-``SparkSession`` object (alone or as the first tuple element), which
-is the right lifetime for the repo's bench/test sessions but means a
-long-lived multi-corpus session pins every cached relation in executor
-memory forever, and entries for stopped sessions are never released
-(ADVICE r8, graph.py:531).
+The engine loads index state once and serves many queries from it
+(the reference's IVF.cpp:439-524 load-then-search posture; the EDBT'20
+"incremental top-k similarity search in interactive sessions" shape in
+PAPERS.md): persisted DataFrames (``graph._pagerank_edges``), persisted
+index directories (``ivf.merged_ivf_index``), small driver-side lists
+(``refshape.ref_qvec``). Every such builder is a function whose first
+parameter is the session, decorated with :func:`session_state`:
 
-A ``WeakKeyDictionary`` would NOT fix this: the cached DataFrames hold
-a strong reference back to their session, so value → key keeps the
-weak key alive — the classic WeakKeyDictionary cycle. The honest fix
-is an explicit eviction hook, which this module provides without
-touching the 40+ memo sites: caches are DISCOVERED by the package's
-own naming convention (module-level ``dict`` named ``_*CACHE`` /
-``_*STATE`` / ``_*MEMO`` / ``_*DIR`` in an imported package module).
+- the memo key is ``(spark, *arguments)``, bound through the function's
+  signature with defaults applied — no call site writes a key, so a key
+  can never silently omit an argument the state depends on;
+- every decorated function is recorded in one registry, which is what
+  :func:`clear_session_caches` walks (no naming convention to follow,
+  no module scan to miss a dict).
 
-Usage::
+A ``WeakKeyDictionary`` would NOT release anything: the cached
+DataFrames hold a strong reference back to their session, so value →
+key keeps the weak key alive. Release is an explicit eviction instead::
 
     from gpu_accelerated_vector_indexing_spark.memo import clear_session_caches
     clear_session_caches(spark)                  # one session's state
     clear_session_caches(all_sessions=True)      # every STOPPED session
 
-OWNERSHIP CONTRACT (ADVICE r9): a ``_*DIR`` memo entry must be the
-EXCLUSIVE owner of the directory path it holds — eviction rmtrees it.
-Every such entry in this package holds a ``tempfile.mkdtemp`` created
-by (and only reachable through) that memo; do not store shared or
-caller-owned paths in a convention-named memo dict. The all-sessions
-form is explicit-opt-in and skips sessions that are still running (a
-live session may be mid-query over its memoized relations and temp
-layouts); purge a live session by passing it directly.
+Eviction unpersists DataFrames and deletes package temp directories
+held in a state value. OWNERSHIP CONTRACT: only :func:`state_dir` paths
+are rmtree'd — it is the only place the package creates a directory
+with the package prefix, so a state value may hold exactly the
+directories its own build created, never a shared or caller-owned
+path. The all-sessions form is explicit opt-in and skips sessions that
+are still running (a live session may be mid-query over its memoized
+relations and temp layouts); purge a live session by passing it
+directly.
 """
 
 from __future__ import annotations
 
-import re
-import sys
-from typing import Any
+import functools
+import inspect
+import os
+import shutil
+import tempfile
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-_PACKAGE = __name__.rsplit(".", 1)[0]
-_MEMO_NAME = re.compile(r"^_[A-Z0-9_]*(CACHE|STATE|MEMO|DIR)$")
-
-
-def _memo_dicts() -> list[dict]:
-    """Every module-level memo dict in already-imported package modules.
-
-    Only IMPORTED modules are scanned — a cache that was never imported
-    cannot hold entries, so there is nothing to miss.
-    """
-    out: list[dict] = []
-    for name, mod in list(sys.modules.items()):
-        if mod is None or not name.startswith(_PACKAGE):
-            continue
-        for attr, val in list(vars(mod).items()):
-            if _MEMO_NAME.match(attr) and isinstance(val, dict):
-                out.append(val)
-    return out
-
-
-# Every persisted-state directory this package creates is a
-# tempfile.mkdtemp with this prefix — the marker that makes it safe for
-# eviction to reclaim the disk (a _*DIR memo entry is the ONLY handle
-# to its directory; popping it without deleting would leak one full
-# index copy per build/clear cycle).
 _TEMP_DIR_PREFIX = "gpu_accelerated_vector_indexing_"
 
+# Every @session_state function, in definition order.
+_REGISTRY: list[Callable[..., Any]] = []
 
-def _unpersist(value: Any) -> None:
-    """Release storage held by a memo VALUE: DataFrames (or tuples/
-    lists of them) unpersist; package-prefixed temp-dir path strings
-    (persisted index/state layouts) are deleted from disk. Other
-    values (float lists, ints) need no release."""
-    import os
-    import shutil
 
+def state_dir(tag: str) -> str:
+    """A fresh package temp directory — the ONLY directories eviction
+    may delete (see the ownership contract above)."""
+    return tempfile.mkdtemp(prefix=f"{_TEMP_DIR_PREFIX}{tag}_")
+
+
+def session_state(fn: Callable[..., Any]) -> Callable[..., Any]:
+    """Memoize a state builder ``fn(spark, ...)`` per bound arguments.
+
+    The decorated function carries ``entries`` (key → value),
+    ``lookup(*args)`` (the memoized value or ``None``, never building),
+    ``prime(value, *args)`` (store a value built elsewhere, e.g. one
+    batched job filling many per-id entries) and ``evict(*args)``
+    (release one entry, e.g. state superseded by a changed source).
+    """
+    sig = inspect.signature(fn)
+    entries: dict[tuple, Any] = {}
+
+    def key(*args: Any, **kwargs: Any) -> tuple:
+        bound = sig.bind(*args, **kwargs)
+        bound.apply_defaults()
+        return tuple(bound.arguments.values())
+
+    @functools.wraps(fn)
+    def state(*args: Any, **kwargs: Any) -> Any:
+        k = key(*args, **kwargs)
+        if k not in entries:
+            entries[k] = fn(*args, **kwargs)
+        return entries[k]
+
+    def prime(value: Any, *args: Any, **kwargs: Any) -> None:
+        entries[key(*args, **kwargs)] = value
+
+    def evict(*args: Any, **kwargs: Any) -> None:
+        _release(entries.pop(key(*args, **kwargs), None))
+
+    state.entries = entries
+    state.lookup = lambda *args, **kwargs: entries.get(key(*args, **kwargs))
+    state.prime = prime
+    state.evict = evict
+    _REGISTRY.append(state)
+    return state
+
+
+def _release(value: Any) -> None:
+    """Release storage held by a state VALUE: DataFrames (or tuples/
+    lists of them) unpersist; package temp-dir path strings are deleted
+    from disk. Other values (float lists, ints, engines) need no
+    release."""
     items = value if isinstance(value, (tuple, list)) else (value,)
     for item in items:
         if isinstance(item, DataFrame):
@@ -93,14 +115,6 @@ def _unpersist(value: Any) -> None:
             and os.path.isdir(item)
         ):
             shutil.rmtree(item, ignore_errors=True)
-
-
-def _key_session(key: Any) -> Any:
-    """The session a memo key belongs to (keys are either the session
-    itself or a tuple whose first element is the session)."""
-    if isinstance(key, tuple) and key:
-        return key[0]
-    return key
 
 
 def _is_stopped(session: Any) -> bool:
@@ -124,16 +138,16 @@ def _is_stopped(session: Any) -> bool:
 def clear_session_caches(
     spark: SparkSession | None = None, *, all_sessions: bool = False
 ) -> int:
-    """Evict (and unpersist) every memoized entry belonging to
-    ``spark``. Returns the number of entries evicted.
+    """Evict (and release) every state entry belonging to ``spark``.
+    Returns the number of entries evicted.
 
     Call this between corpora in a long-lived session, or after
     ``spark.stop()`` to drop the now-dead driver-side references.
 
-    The sweep form (``all_sessions=True``, ADVICE r9: explicit opt-in,
-    not a default-argument accident) evicts entries of STOPPED sessions
-    only — a live session may be mid-query over its memoized relations
-    and temp directories, so bulk cleanup never deletes state out from
+    The sweep form (``all_sessions=True``, explicit opt-in, not a
+    default-argument accident) evicts entries of STOPPED sessions only
+    — a live session may be mid-query over its memoized relations and
+    temp directories, so bulk cleanup never deletes state out from
     under one; pass each live session explicitly to purge it.
     """
     if spark is None and not all_sessions:
@@ -142,21 +156,21 @@ def clear_session_caches(
             "every stopped session's state (deletes their temp index layouts)"
         )
     evicted = 0
-    for cache in _memo_dicts():
-        for key in list(cache.keys()):
-            sess = _key_session(key)
+    for state in _REGISTRY:
+        for key in list(state.entries):
+            sess = key[0]
             if spark is not None:
                 if sess is not spark:
                     continue
             elif (
                 # duck-typed: classic AND Connect sessions (different
                 # classes) both expose read/sql; non-session keys fall
-                # through and stay evictable as before
+                # through and stay evictable
                 hasattr(sess, "read")
                 and hasattr(sess, "sql")
                 and not _is_stopped(sess)
             ):
                 continue
-            _unpersist(cache.pop(key))
+            _release(state.entries.pop(key))
             evicted += 1
     return evicted

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
 from gpu_accelerated_vector_indexing_spark.operators.text_analysis import (
     LANG_STOPWORDS,
     PUNCT_CLASS,
@@ -623,24 +624,19 @@ def domain_cap(spark: SparkSession, sf_dir: str, cap: int = DOMAIN_CAP) -> DataF
 # pushdown substitutes the verdict expressions through the staged
 # projections into the scan (one ~4 KB interpreted-HOF predicate per
 # row, measured 21 s at sf0.1 for the composition vs ~2 s joined).
-_VERDICT_STATE: dict[tuple[SparkSession, str], DataFrame] = {}
-
-
+@session_state
 def verdict_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(doc_id, q_keep, r_keep)`` — cached quality + repetition
     verdicts, computed once per (session, corpus)."""
-    key = (spark, sf_dir)
-    if key not in _VERDICT_STATE:
-        qf = quality_filter(spark, sf_dir).select(
-            "doc_id", F.col("keep").alias("q_keep")
-        )
-        rep = repetition_signals(spark, sf_dir).select(
-            "doc_id", F.col("keep").alias("r_keep")
-        )
-        df = qf.join(rep, "doc_id").cache()
-        df.count()
-        _VERDICT_STATE[key] = df
-    return _VERDICT_STATE[key]
+    qf = quality_filter(spark, sf_dir).select(
+        "doc_id", F.col("keep").alias("q_keep")
+    )
+    rep = repetition_signals(spark, sf_dir).select(
+        "doc_id", F.col("keep").alias("r_keep")
+    )
+    df = qf.join(rep, "doc_id").cache()
+    df.count()
+    return df
 
 
 def clean_corpus_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -825,9 +821,8 @@ def nb_language_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 5-char shingle hashes folded into DSIR_BUCKETS buckets.
 DSIR_BUCKETS = 256
 
-_DSIR_AFFINITY_STATE: dict[tuple[SparkSession, str], DataFrame] = {}
 
-
+@session_state
 def dsir_bucket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(bucket, r_b, t_b, aff_micro) — per-bucket raw/target gram
     occurrence counts and the floor-scaled target-affinity weight
@@ -847,31 +842,28 @@ def dsir_bucket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
         _doc_shingle_hashes,
     )
 
-    key = (spark, sf_dir)
-    if key not in _DSIR_AFFINITY_STATE:
-        docs = load_table(spark, sf_dir, "documents")
-        grams = _doc_shingle_hashes(docs, keep=("lang",)).select(
-            "lang", (F.col("h") % DSIR_BUCKETS).alias("bucket")
+    docs = load_table(spark, sf_dir, "documents")
+    grams = _doc_shingle_hashes(docs, keep=("lang",)).select(
+        "lang", (F.col("h") % DSIR_BUCKETS).alias("bucket")
+    )
+    counts = grams.groupBy("bucket").agg(
+        F.count("*").alias("r_b"),
+        F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("t_b"),
+    )
+    df = counts.select(
+        "bucket",
+        "r_b",
+        "t_b",
+        F.floor(
+            F.lit(1000000.0)
+            * (F.col("t_b") + F.lit(1)).cast("double")
+            / (F.col("r_b") + F.lit(2)).cast("double")
         )
-        counts = grams.groupBy("bucket").agg(
-            F.count("*").alias("r_b"),
-            F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("t_b"),
-        )
-        df = counts.select(
-            "bucket",
-            "r_b",
-            "t_b",
-            F.floor(
-                F.lit(1000000.0)
-                * (F.col("t_b") + F.lit(1)).cast("double")
-                / (F.col("r_b") + F.lit(2)).cast("double")
-            )
-            .cast("long")
-            .alias("aff_micro"),
-        ).cache()
-        df.count()
-        _DSIR_AFFINITY_STATE[key] = df
-    return _DSIR_AFFINITY_STATE[key]
+        .cast("long")
+        .alias("aff_micro"),
+    ).cache()
+    df.count()
+    return df
 
 
 def dsir_importance_sample(
@@ -954,8 +946,7 @@ def dsir_importance_sample(
 # one materialized DSIR-model dir per (session, corpus), like the
 # dedup/PQ/graph state dirs: the roundtrip query is gate-checked and
 # benched at N-run medians — without the memo every invocation would
-# leave another state copy on disk
-_DSIR_STATE_DIR: dict[tuple[SparkSession, str], str] = {}
+# leave another state copy on disk (``dsir_state_dir``)
 
 
 def write_dsir_state(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
@@ -970,18 +961,14 @@ def write_dsir_state(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     )
 
 
+@session_state
 def dsir_state_dir(spark: SparkSession, sf_dir: str) -> str:
     """The persisted DSIR model's directory, written once per
     (session, corpus) — shared by the roundtrip digest and the
     pretrained scoring path."""
-    import tempfile
-
-    key = (spark, sf_dir)
-    if key not in _DSIR_STATE_DIR:
-        out = tempfile.mkdtemp(prefix="gpu_accelerated_vector_indexing_dsirstate_")
-        write_dsir_state(spark, sf_dir, out)
-        _DSIR_STATE_DIR[key] = out
-    return _DSIR_STATE_DIR[key]
+    out = state_dir("dsirstate")
+    write_dsir_state(spark, sf_dir, out)
+    return out
 
 
 def dsir_state_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1045,28 +1032,23 @@ CURRICULUM_BUCKETS = 1000  # stopword_ratio snapped to a fixed 1e-3 grid
 # memo each reference re-runs quality_filter's interpreted tokenize/
 # stopword pass over the whole corpus (the cost its own docstring
 # flags); cached, the scan is paid once per (session, corpus) like
-# _pack_counts_state.
-_CURRICULUM_BUCKETS_STATE: dict[tuple[SparkSession, str], DataFrame] = {}
-
-
+# text_analysis._pack_counts_state.
+@session_state
 def _curriculum_doc_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document curriculum key: ``(doc_id, n_tokens, bucket)`` —
     the stopword-ratio quality signal snapped to the fixed 1e-3 grid.
     ONE definition (memoized + cached) shared by the plan rollup and
     the packing composition, so a doc can never sit in different
     buckets across the two queries."""
-    key = (spark, sf_dir)
-    if key not in _CURRICULUM_BUCKETS_STATE:
-        df = quality_filter(spark, sf_dir).select(
-            "doc_id",
-            "n_tokens",
-            F.floor(F.col("stopword_ratio") * CURRICULUM_BUCKETS)
-            .cast("int")
-            .alias("bucket"),
-        ).cache()
-        df.count()
-        _CURRICULUM_BUCKETS_STATE[key] = df
-    return _CURRICULUM_BUCKETS_STATE[key]
+    df = quality_filter(spark, sf_dir).select(
+        "doc_id",
+        "n_tokens",
+        F.floor(F.col("stopword_ratio") * CURRICULUM_BUCKETS)
+        .cast("int")
+        .alias("bucket"),
+    ).cache()
+    df.count()
+    return df
 
 
 def curriculum_bucket_phases(

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gpu_accelerated_vector_indexing_spark.memo import session_state
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
 DAMPING = 0.85
@@ -54,30 +55,25 @@ PR_CKPT_EVERY = 3
 # is the expensive step, and without memoization a plan that references
 # the relation k times re-executes that build k times (measured: the
 # triangle query's 3 references tripled its runtime).
-_EDGES_CACHE: dict[tuple[SparkSession, str], DataFrame] = {}
-
-
+@session_state
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected co-purchase edges (both directions materialized) —
     (src, dst) part pairs sharing ≥1 order. Pair fan-out is bounded by
     (order size choose 2), never corpus-quadratic. Memoized + cached
     per (session, corpus) as graph state."""
-    key = (spark, sf_dir)
-    if key not in _EDGES_CACHE:
-        li = load_table(spark, sf_dir, "lineitem")
-        order_parts = li.select("l_orderkey", "l_partkey").distinct()
-        a = order_parts.select("l_orderkey", F.col("l_partkey").alias("src"))
-        b = order_parts.select("l_orderkey", F.col("l_partkey").alias("dst"))
-        pairs = (
-            a.join(b, "l_orderkey")
-            .filter(F.col("src") != F.col("dst"))
-            .select("src", "dst")
-            .distinct()
-            .cache()
-        )
-        pairs.count()
-        _EDGES_CACHE[key] = pairs
-    return _EDGES_CACHE[key]
+    li = load_table(spark, sf_dir, "lineitem")
+    order_parts = li.select("l_orderkey", "l_partkey").distinct()
+    a = order_parts.select("l_orderkey", F.col("l_partkey").alias("src"))
+    b = order_parts.select("l_orderkey", F.col("l_partkey").alias("dst"))
+    pairs = (
+        a.join(b, "l_orderkey")
+        .filter(F.col("src") != F.col("dst"))
+        .select("src", "dst")
+        .distinct()
+        .cache()
+    )
+    pairs.count()
+    return pairs
 
 
 # PageRank's loop-invariant (src, dst, outdeg) relation, pre-hashed on
@@ -87,23 +83,18 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # edge cache on exit, so every bench run re-paid the distinct self-join
 # build, and every round re-shuffled |E| for the rank join. Long-lived
 # multi-corpus sessions evict via memo.clear_session_caches (ADVICE r8).
-_PR_EDGES_CACHE: dict[tuple[SparkSession, str], DataFrame] = {}
-
-
+@session_state
 def _pagerank_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir)
-    if key not in _PR_EDGES_CACHE:
-        edges = copurchase_edges(spark, sf_dir)
-        deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-        ce = (
-            edges.join(deg, "src")
-            .select("src", "dst", "outdeg")
-            .repartition("src")  # per-round join key: |E| is shuffled ONCE, here
-            .cache()
-        )
-        ce.count()
-        _PR_EDGES_CACHE[key] = ce
-    return _PR_EDGES_CACHE[key]
+    edges = copurchase_edges(spark, sf_dir)
+    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
+    ce = (
+        edges.join(deg, "src")
+        .select("src", "dst", "outdeg")
+        .repartition("src")  # per-round join key: |E| is shuffled ONCE, here
+        .cache()
+    )
+    ce.count()
+    return ce
 
 
 def copurchase_pagerank(

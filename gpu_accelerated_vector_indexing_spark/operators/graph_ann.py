@@ -58,6 +58,7 @@ from gpu_accelerated_vector_indexing_spark.functions.vector import (
     l2_norm,
     lit_double_array,
 )
+from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
 from gpu_accelerated_vector_indexing_spark.operators.ivf import DELETE_MOD, fixture_qvec, fixture_qvecs
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
@@ -129,16 +130,11 @@ def _topk_per_node(scored: DataFrame, k: int) -> DataFrame:
 # like `fixture_graph`/`ivf.fixture_centroids`, so no query path ever
 # pays the corpus-wide norm fold more than once per snapshot (a real
 # deployment persists ‖v‖ alongside the vectors at ingest).
-_NORMED_STATE: dict[tuple[SparkSession, str], DataFrame] = {}
-
-
+@session_state
 def fixture_normed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir)
-    if key not in _NORMED_STATE:
-        df = _normed(load_table(spark, sf_dir, "embeddings")).cache()
-        df.count()
-        _NORMED_STATE[key] = df
-    return _NORMED_STATE[key]
+    df = _normed(load_table(spark, sf_dir, "embeddings")).cache()
+    df.count()
+    return df
 
 
 def _grouped(emb: DataFrame) -> DataFrame:
@@ -260,16 +256,11 @@ def _descent_round(graph: DataFrame, emb_n: DataFrame, k: int) -> DataFrame:
 # cached, the `ivf.fixture_centroids` posture. n·K edges (3 ints + a
 # double per row) cache comfortably; at 100 TB persist as a bucketed
 # table on `node` instead and each beam hop prunes to its bucket.
-_GRAPH_STATE: dict[tuple[SparkSession, str], DataFrame] = {}
-
-
+@session_state
 def fixture_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir)
-    if key not in _GRAPH_STATE:
-        df = build_knn_graph(spark, sf_dir).cache()
-        df.count()
-        _GRAPH_STATE[key] = df
-    return _GRAPH_STATE[key]
+    df = build_knn_graph(spark, sf_dir).cache()
+    df.count()
+    return df
 
 
 def _rank_digest(edges: DataFrame) -> DataFrame:
@@ -307,21 +298,16 @@ def _entry_points(emb: DataFrame) -> DataFrame:
 # collected once and reused by every fixture walk instead of paying an
 # entry-point groupBy job per search (the engine memoizes its own per
 # index dir — same posture; VERDICT r8 wrong #1's job-overhead drift).
-_ENTRY_IDS_CACHE: dict[tuple[SparkSession, str, int | None], list[int]] = {}
-
-
+@session_state
 def fixture_entry_ids(
     spark: SparkSession, sf_dir: str, delete_mod: int | None = None
 ) -> list[int]:
-    key = (spark, sf_dir, delete_mod)
-    if key not in _ENTRY_IDS_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        if delete_mod is not None:
-            emb = emb.filter(F.col("vec_id") % delete_mod != 0)
-        _ENTRY_IDS_CACHE[key] = sorted(
-            r.vec_id for r in _entry_points(emb).select("vec_id").collect()
-        )
-    return _ENTRY_IDS_CACHE[key]
+    emb = load_table(spark, sf_dir, "embeddings")
+    if delete_mod is not None:
+        emb = emb.filter(F.col("vec_id") % delete_mod != 0)
+    return sorted(
+        r.vec_id for r in _entry_points(emb).select("vec_id").collect()
+    )
 
 
 def _masked_adj(adj: DataFrame, modulus: int, keep_cols: bool = False) -> DataFrame:
@@ -1051,21 +1037,16 @@ BEAM_RESCORE = None  # None → exact-rescore EVERY visited node (see docstring)
 # compressed-traversal path (the DiskANN posture: the graph + a
 # compressed code per node stay in RAM, float vectors stay on disk and
 # are touched only by the final rescore). 8 bytes/vector at dim 64.
-_BQ_CODE_STATE: dict[tuple[SparkSession, str], DataFrame] = {}
-
-
+@session_state
 def fixture_bq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gpu_accelerated_vector_indexing_spark.operators.quantize import bq_code
 
-    key = (spark, sf_dir)
-    if key not in _BQ_CODE_STATE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        df = emb.select(
-            "vec_id", bq_code(as_double_array("embedding")).alias("code")
-        ).cache()
-        df.count()
-        _BQ_CODE_STATE[key] = df
-    return _BQ_CODE_STATE[key]
+    emb = load_table(spark, sf_dir, "embeddings")
+    df = emb.select(
+        "vec_id", bq_code(as_double_array("embedding")).alias("code")
+    ).cache()
+    df.count()
+    return df
 
 
 def _bq_scorer(codes: DataFrame, qvec: list[float]):
@@ -1175,8 +1156,6 @@ def knn_graph_beam_bq(
 # --- graph index-state persistence (the graph side of dedup's / PQ's
 # state roundtrips) -----------------------------------------------------------
 
-_GRAPH_STATE_DIR: dict[tuple[SparkSession, str], str] = {}
-
 
 def write_graph_state(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     """Materialize the built kNN graph to parquet — the production form
@@ -1200,6 +1179,14 @@ def write_graph_index(edges: DataFrame, corpus_normed: DataFrame, out_dir: str) 
     corpus_normed.write.mode("overwrite").parquet(f"{out_dir}/corpus_normed")
 
 
+@session_state
+def graph_state_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The built graph persisted once per (session, corpus)."""
+    out = state_dir("graphstate")
+    write_graph_state(spark, sf_dir, out)
+    return out
+
+
 def graph_state_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persist the graph index state, read it back, and fingerprint it
     in one row — pinning that what lands on disk is EXACTLY the
@@ -1212,14 +1199,7 @@ def graph_state_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     would drop 1 whenever the error lands negative. Id sums are plain
     bigint folds. One flipped edge, dropped rank, or perturbed score
     anywhere in the persisted state changes the row."""
-    import tempfile
-
-    key = (spark, sf_dir)
-    if key not in _GRAPH_STATE_DIR:
-        out = tempfile.mkdtemp(prefix="gpu_accelerated_vector_indexing_graphstate_")
-        write_graph_state(spark, sf_dir, out)
-        _GRAPH_STATE_DIR[key] = out
-    edges = spark.read.parquet(f"{_GRAPH_STATE_DIR[key]}/edges")
+    edges = spark.read.parquet(f"{graph_state_dir(spark, sf_dir)}/edges")
     return edges.agg(
         F.count("*").alias("n_edges"),
         F.countDistinct("node").alias("n_nodes"),
@@ -1377,46 +1357,26 @@ def relink_edges(
     return _topk_per_node(_score_pairs(cand, fixture_normed(spark, sf_dir)), k)
 
 
-_GRAPH_INDEX_DIR: dict[tuple[SparkSession, str], str] = {}
+def new_graph_index(tag: str, edges: DataFrame, corpus_normed: DataFrame) -> str:
+    """ONE persisted-index build (edges + normed corpus — the layout
+    ``engine.GraphEngine.from_pretrained`` consumes) into a fresh state
+    directory, shared by the fixture and reference-shape families so an
+    index-layout change can never land in one and not the other. The
+    memoized callers own the directory."""
+    out = state_dir(tag)
+    write_graph_index(edges, corpus_normed, out)
+    return out
 
 
-def ensure_graph_index(
-    cache: dict[tuple, str],
-    key: tuple,
-    prefix: str,
-    edges: DataFrame,
-    corpus_normed: DataFrame,
-) -> str:
-    """ONE memoized persisted-index build (edges + normed corpus — the
-    layout ``engine.GraphEngine.from_pretrained`` consumes), shared by
-    the fixture and reference-shape families so an index-layout change
-    can never land in one and not the other."""
-    import tempfile
-
-    if key not in cache:
-        out = tempfile.mkdtemp(prefix=prefix)
-        write_graph_index(edges, corpus_normed, out)
-        cache[key] = out
-    return cache[key]
-
-
+@session_state
 def fixture_graph_index(spark: SparkSession, sf_dir: str) -> str:
     """The PRETRAINED fixture graph index, once per (session, corpus)
     (the fixture twin of ``refshape.refshape_graph_index``)."""
-    key = (spark, sf_dir)
-    if key not in _GRAPH_INDEX_DIR:
-        emb = load_table(spark, sf_dir, "embeddings")
-        corpus_normed = emb.select("vec_id", "label").join(
-            fixture_normed(spark, sf_dir), "vec_id"
-        )
-        ensure_graph_index(
-            _GRAPH_INDEX_DIR,
-            key,
-            "gpu_accelerated_vector_indexing_graphidx_",
-            fixture_graph(spark, sf_dir),
-            corpus_normed,
-        )
-    return _GRAPH_INDEX_DIR[key]
+    emb = load_table(spark, sf_dir, "embeddings")
+    corpus_normed = emb.select("vec_id", "label").join(
+        fixture_normed(spark, sf_dir), "vec_id"
+    )
+    return new_graph_index("graphidx", fixture_graph(spark, sf_dir), corpus_normed)
 
 
 def graph_engine_batch_search(
@@ -1475,9 +1435,8 @@ def graph_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- repair → persist → serve (r7: closes the delete story end to end) -------
 
-_REPAIRED_INDEX_DIR: dict[tuple, str] = {}  # (spark, sf_dir, delete_mod, k)
 
-
+@session_state
 def repaired_graph_index(
     spark: SparkSession,
     sf_dir: str,
@@ -1499,34 +1458,25 @@ def repaired_graph_index(
     else is one scan of the edge state. Memoized per (session, corpus)
     like every index build here.
     """
-    key = (spark, sf_dir, delete_mod, k)
-    if key not in _REPAIRED_INDEX_DIR:
-        g = fixture_graph(spark, sf_dir)
-        # ONE candidate derivation feeds both halves (affected for the
-        # anti-join, cand for the re-rank) — a second call would run
-        # the masked/2-hop join subtrees twice in the index-build job
-        affected, cand = _relink_affected_and_candidates(spark, sf_dir, delete_mod)
-        unaffected = _masked_adj(g, delete_mod, keep_cols=True).join(
-            F.broadcast(affected), "node", "left_anti"
-        )
-        repaired = _topk_per_node(_score_pairs(cand, fixture_normed(spark, sf_dir)), k)
-        full = unaffected.select("node", "nbr", "score", "rk").unionByName(
-            repaired.select("node", "nbr", "score", "rk")
-        )
-        emb = load_table(spark, sf_dir, "embeddings").filter(
-            F.col("vec_id") % delete_mod != 0
-        )
-        corpus_normed = emb.select("vec_id", "label").join(
-            fixture_normed(spark, sf_dir), "vec_id"
-        )
-        ensure_graph_index(
-            _REPAIRED_INDEX_DIR,
-            key,
-            "gpu_accelerated_vector_indexing_graphrepaired_",
-            full,
-            corpus_normed,
-        )
-    return _REPAIRED_INDEX_DIR[key]
+    g = fixture_graph(spark, sf_dir)
+    # ONE candidate derivation feeds both halves (affected for the
+    # anti-join, cand for the re-rank) — a second call would run
+    # the masked/2-hop join subtrees twice in the index-build job
+    affected, cand = _relink_affected_and_candidates(spark, sf_dir, delete_mod)
+    unaffected = _masked_adj(g, delete_mod, keep_cols=True).join(
+        F.broadcast(affected), "node", "left_anti"
+    )
+    repaired = _topk_per_node(_score_pairs(cand, fixture_normed(spark, sf_dir)), k)
+    full = unaffected.select("node", "nbr", "score", "rk").unionByName(
+        repaired.select("node", "nbr", "score", "rk")
+    )
+    emb = load_table(spark, sf_dir, "embeddings").filter(
+        F.col("vec_id") % delete_mod != 0
+    )
+    corpus_normed = emb.select("vec_id", "label").join(
+        fixture_normed(spark, sf_dir), "vec_id"
+    )
+    return new_graph_index("graphrepaired", full, corpus_normed)
 
 
 def graph_serve_after_repair(
@@ -1668,28 +1618,23 @@ def merge_graph_shards(
 
 
 # merged graph is index state, memoized like fixture_graph
-_MERGED_GRAPH_STATE: dict[tuple[SparkSession, str], DataFrame] = {}
-
-
+@session_state
 def fixture_merged_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two half-corpus builds (vec_id parity — standing in for any
     hash sharding) merged via :func:`merge_graph_shards`; memoized per
     (session, corpus) like ``fixture_graph``."""
-    key = (spark, sf_dir)
-    if key not in _MERGED_GRAPH_STATE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        emb_n = fixture_normed(spark, sf_dir)
-        shards = [
-            build_knn_graph_over(
-                emb.filter(F.col("vec_id") % 2 == i),
-                emb_n.filter(F.col("vec_id") % 2 == i),
-            )
-            for i in (0, 1)
-        ]
-        df = merge_graph_shards(emb, emb_n, shards).cache()
-        df.count()
-        _MERGED_GRAPH_STATE[key] = df
-    return _MERGED_GRAPH_STATE[key]
+    emb = load_table(spark, sf_dir, "embeddings")
+    emb_n = fixture_normed(spark, sf_dir)
+    shards = [
+        build_knn_graph_over(
+            emb.filter(F.col("vec_id") % 2 == i),
+            emb_n.filter(F.col("vec_id") % 2 == i),
+        )
+        for i in (0, 1)
+    ]
+    df = merge_graph_shards(emb, emb_n, shards).cache()
+    df.count()
+    return df
 
 
 def knn_graph_beam_merged(
@@ -1748,29 +1693,18 @@ def graph_retrieval_ndcg(
     )
 
 
-_MERGED_INDEX_DIR: dict[tuple, str] = {}  # (spark, sf_dir)
-
-
+@session_state
 def merged_graph_index(spark: SparkSession, sf_dir: str) -> str:
     """Persist the shard-merged graph through the standard index layout
     (edges + normed corpus) — the step between
     :func:`merge_graph_shards` and serving, completing the lifecycle
     build-shards → merge → persist → serve exactly as the repair family
     does for deletes (``repaired_graph_index``)."""
-    key = (spark, sf_dir)
-    if key not in _MERGED_INDEX_DIR:
-        emb = load_table(spark, sf_dir, "embeddings")
-        corpus_normed = emb.select("vec_id", "label").join(
-            fixture_normed(spark, sf_dir), "vec_id"
-        )
-        ensure_graph_index(
-            _MERGED_INDEX_DIR,
-            key,
-            "gpu_accelerated_vector_indexing_graphmerged_",
-            fixture_merged_graph(spark, sf_dir),
-            corpus_normed,
-        )
-    return _MERGED_INDEX_DIR[key]
+    emb = load_table(spark, sf_dir, "embeddings")
+    corpus_normed = emb.select("vec_id", "label").join(
+        fixture_normed(spark, sf_dir), "vec_id"
+    )
+    return new_graph_index("graphmerged", fixture_merged_graph(spark, sf_dir), corpus_normed)
 
 
 def graph_merge_serve(
@@ -1856,9 +1790,7 @@ def _cdc_live_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GRAPH_CDC_INDEX_DIR: dict[tuple[SparkSession, str], str] = {}
-
-
+@session_state
 def cdc_refreshed_graph_index(spark: SparkSession, sf_dir: str) -> str:
     """Build the OLD-snapshot graph, apply the snapshot delta as ONE
     maintenance pass, persist through the standard layout:
@@ -1880,10 +1812,6 @@ def cdc_refreshed_graph_index(spark: SparkSession, sf_dir: str) -> str:
     the BATCH (Θ(|delta|·SEED_WINDOW·(1+K))) — the base graph is never
     rebuilt and unaffected nodes' files carry their stored scores.
     """
-    key = (spark, sf_dir)
-    if key in _GRAPH_CDC_INDEX_DIR:
-        return _GRAPH_CDC_INDEX_DIR[key]
-
     old = load_table(spark, sf_dir, "embeddings").filter(_cdc_in_old(F.col("vec_id")))
     # both normed relations are build-scoped: cached for the build's
     # many scoring actions (seed + 4 descent rounds / repair + attach),
@@ -1932,16 +1860,10 @@ def cdc_refreshed_graph_index(spark: SparkSession, sf_dir: str) -> str:
         .unionByName(attached.select("node", "nbr", "score", "rk"))
     )
     corpus_normed = live.select("vec_id", "label").join(live_n, "vec_id")
-    ensure_graph_index(
-        _GRAPH_CDC_INDEX_DIR,
-        key,
-        "gpu_accelerated_vector_indexing_graphcdc_",
-        full,
-        corpus_normed,
-    )
+    out = new_graph_index("graphcdc", full, corpus_normed)
     old_n.unpersist()
     live_n.unpersist()
-    return _GRAPH_CDC_INDEX_DIR[key]
+    return out
 
 
 def graph_refresh_cdc(
@@ -2027,9 +1949,7 @@ def _cdc_live_emb_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GRAPH_CDC2_INDEX_DIR: dict[tuple[SparkSession, str], str] = {}
-
-
+@session_state
 def cdc_refreshed_graph_index_gen2(spark: SparkSession, sf_dir: str) -> str:
     """Apply the SECOND snapshot delta to the PERSISTED cycle-1 index —
     the nightly loop actually looping for the graph family: read the
@@ -2041,10 +1961,6 @@ def cdc_refreshed_graph_index_gen2(spark: SparkSession, sf_dir: str) -> str:
     stored scores stay valid because any endpoint whose vector moved is
     dead-masked by construction. Repair stays damage-bounded, attach
     stays batch-bounded — two cycles cost two deltas, never two builds."""
-    key = (spark, sf_dir)
-    if key in _GRAPH_CDC2_INDEX_DIR:
-        return _GRAPH_CDC2_INDEX_DIR[key]
-
     idx1 = cdc_refreshed_graph_index(spark, sf_dir)
     edges1 = spark.read.parquet(f"{idx1}/edges")
     live3 = _cdc_live_emb_v3(spark, sf_dir)
@@ -2085,15 +2001,9 @@ def cdc_refreshed_graph_index_gen2(spark: SparkSession, sf_dir: str) -> str:
         .unionByName(attached.select("node", "nbr", "score", "rk"))
     )
     corpus_normed = live3.select("vec_id", "label").join(live3_n, "vec_id")
-    ensure_graph_index(
-        _GRAPH_CDC2_INDEX_DIR,
-        key,
-        "gpu_accelerated_vector_indexing_graphcdc2_",
-        full,
-        corpus_normed,
-    )
+    out = new_graph_index("graphcdc2", full, corpus_normed)
     live3_n.unpersist()
-    return _GRAPH_CDC2_INDEX_DIR[key]
+    return out
 
 
 def graph_refresh_cdc_gen2(

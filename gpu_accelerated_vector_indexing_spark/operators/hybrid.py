@@ -35,6 +35,7 @@ from gpu_accelerated_vector_indexing_spark.functions.vector import (
     as_double_array,
     cosine_similarity_hoisted,
 )
+from gpu_accelerated_vector_indexing_spark.memo import session_state
 from gpu_accelerated_vector_indexing_spark.operators.knn import query_vectors
 from gpu_accelerated_vector_indexing_spark.operators.text_analysis import tokens
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
@@ -50,30 +51,23 @@ RRF_K = 60
 # these are materialized tables written beside the corpus by one
 # tokenize pass, and the per-query work is only the broadcast term-set
 # join + per-doc sum below.
-_BM25_STATE: dict[
-    tuple[SparkSession, str], tuple[DataFrame, DataFrame, DataFrame, int, float]
-] = {}
-
-
+@session_state
 def bm25_state(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame, int, float]:
     """``(tf, df, dl, n_docs, avgdl)`` — tokenize-once corpus state."""
-    key = (spark, sf_dir)
-    if key not in _BM25_STATE:
-        docs = load_table(spark, sf_dir, "documents")
-        tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
-        tf = tok.groupBy("doc_id", "token").agg(F.count("*").alias("tf")).cache()
-        df = tok.groupBy("token").agg(F.countDistinct("doc_id").alias("df")).cache()
-        dl = tok.groupBy("doc_id").agg(F.count("*").alias("dl")).cache()
-        row = dl.agg(
-            F.count("*").alias("n_docs"),
-            (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
-        ).first()
-        tf.count()
-        df.count()
-        _BM25_STATE[key] = (tf, df, dl, int(row.n_docs), float(row.avgdl))
-    return _BM25_STATE[key]
+    docs = load_table(spark, sf_dir, "documents")
+    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
+    tf = tok.groupBy("doc_id", "token").agg(F.count("*").alias("tf")).cache()
+    df = tok.groupBy("token").agg(F.countDistinct("doc_id").alias("df")).cache()
+    dl = tok.groupBy("doc_id").agg(F.count("*").alias("dl")).cache()
+    row = dl.agg(
+        F.count("*").alias("n_docs"),
+        (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
+    ).first()
+    tf.count()
+    df.count()
+    return (tf, df, dl, int(row.n_docs), float(row.avgdl))
 
 
 def bm25_scores(spark: SparkSession, sf_dir: str, query_id: int = 0) -> DataFrame:

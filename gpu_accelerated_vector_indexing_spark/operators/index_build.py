@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpu_accelerated_vector_indexing_spark.functions.vector import lit_double_array2
+from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
 
@@ -199,9 +200,7 @@ def append_to_index(
     return n
 
 
-_KMEANS_FIXTURE_STATE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
+@session_state
 def fixture_kmeans(
     spark: SparkSession, sf_dir: str, k: int = 10, seed: int = 42
 ) -> tuple[DataFrame, DataFrame]:
@@ -211,16 +210,13 @@ def fixture_kmeans(
     graph_ann.fixture_graph). A KMeans fit is an index BUILD: paying it
     once per session is the production shape; callers that audit or
     serve re-run their own plan over the cached assignment each call."""
-    key = (spark, sf_dir, k, seed)
-    if key not in _KMEANS_FIXTURE_STATE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        assigned, centroids = kmeans_assign(emb, k=k, seed=seed)
-        assigned = assigned.cache()
-        assigned.count()
-        centroids = centroids.cache()
-        centroids.count()
-        _KMEANS_FIXTURE_STATE[key] = (assigned, centroids)
-    return _KMEANS_FIXTURE_STATE[key]
+    emb = load_table(spark, sf_dir, "embeddings")
+    assigned, centroids = kmeans_assign(emb, k=k, seed=seed)
+    assigned = assigned.cache()
+    assigned.count()
+    centroids = centroids.cache()
+    centroids.count()
+    return (assigned, centroids)
 
 
 def cluster_invariants(spark: SparkSession, sf_dir: str, k: int = 10, seed: int = 42) -> DataFrame:
@@ -312,11 +308,6 @@ def assignment_invariants(assigned: DataFrame, centroids: DataFrame) -> DataFram
 CDC_QUERY_TEXT = "hash table merge join"
 CDC_K_CLUSTERS = 10
 
-# (spark, sf_dir) → index_dir of the base-built-then-refreshed layout.
-_CDC_INDEX_DIR: dict[tuple[SparkSession, str], str] = {}
-# (spark, sf_dir) → refresh accounting, filled by the same build
-_CDC_REFRESH_STATE: dict[tuple[SparkSession, str], dict[str, int]] = {}
-
 
 def _snapshot_emb(docs: DataFrame, gen: int, salt: str = "") -> DataFrame:
     """``(vec_id, embedding, gen)`` — hash-embedded snapshot docs.
@@ -360,11 +351,9 @@ def build_base_snapshot_index(
     one partition-discovered root; readers see an extra ``batch``
     partition column that every serve path ignores, and ``cluster``
     pruning composes unchanged (it is a partition key either way)."""
-    import tempfile
-
     from gpu_accelerated_vector_indexing_spark.operators.curation import snapshot_old_docs
 
-    out = tempfile.mkdtemp(prefix="gpu_accelerated_vector_indexing_cdcidx_")
+    out = state_dir("cdcidx")
     sub = "/batch=-1" if batch_layout else ""
     docs = load_table(spark, sf_dir, "documents")
     base = _snapshot_emb(snapshot_old_docs(docs), gen=0, salt=salt)
@@ -382,9 +371,11 @@ def build_base_snapshot_index(
     return out
 
 
-def cdc_refreshed_index(spark: SparkSession, sf_dir: str) -> str:
+@session_state
+def cdc_refresh_state(spark: SparkSession, sf_dir: str) -> tuple[str, dict[str, int]]:
     """Build the OLD-snapshot index once, then refresh it from the CDC
-    diff — returns the refreshed index directory.
+    diff — returns the refreshed index directory and the refresh's
+    write accounting.
 
     The nightly loop of a versioned 100 TB corpus, composed from parts
     that each already exist here: ``curation.corpus_snapshot_diff``
@@ -406,12 +397,12 @@ def cdc_refreshed_index(spark: SparkSession, sf_dir: str) -> str:
     partition them (SURVEY §5.3's full-probe ≡ exact invariant, pinned
     by test_cdc_refresh_equals_scratch_rebuild).
     """
-    key = (spark, sf_dir)
-    if key not in _CDC_INDEX_DIR:
-        out = build_base_snapshot_index(spark, sf_dir)
-        _CDC_REFRESH_STATE[key] = apply_cdc_refresh(spark, sf_dir, out)
-        _CDC_INDEX_DIR[key] = out
-    return _CDC_INDEX_DIR[key]
+    out = build_base_snapshot_index(spark, sf_dir)
+    return out, apply_cdc_refresh(spark, sf_dir, out)
+
+
+def cdc_refreshed_index(spark: SparkSession, sf_dir: str) -> str:
+    return cdc_refresh_state(spark, sf_dir)[0]
 
 
 def apply_refresh_cycle(
@@ -496,35 +487,23 @@ def serve_refreshed_index(spark: SparkSession, idx_dir: str, k: int = 5) -> Data
     finds beside the index (r9: masked reads through the facade, the
     same index-agnostic posture as the graph class), and
     n_probe = every cluster makes the read provably exact."""
-    from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import layout_engine
 
     qvec = _cdc_query_vec(spark)
-    key = (spark, idx_dir)
-    if key not in _CDC_SERVE_ENGINE_CACHE:
-        _CDC_SERVE_ENGINE_CACHE[key] = IVFEngine.from_pretrained(
-            spark, idx_dir, n_probe=CDC_K_CLUSTERS
-        )
-    eng = _CDC_SERVE_ENGINE_CACHE[key]
+    eng = layout_engine(spark, idx_dir, CDC_K_CLUSTERS)
     return eng.search(qvec, k=k).select(F.col("vec_id").alias("doc_id"), "score")
 
 
-# served engines + the embedded query vector are session-fixed state —
-# memoized like every other serving memo (evictable via
-# memo.clear_session_caches; the dict values here hold no persisted
-# DataFrames, only lazy relations + a float list)
-_CDC_SERVE_ENGINE_CACHE: dict[tuple[SparkSession, str], object] = {}
-_CDC_QVEC_STATE: dict[SparkSession, list[float]] = {}
-
-
+# served engines (ivf.layout_engine) and the embedded query vector are
+# session-fixed state, memoized like every other serving state
+@session_state
 def _cdc_query_vec(spark: SparkSession) -> list[float]:
-    if spark not in _CDC_QVEC_STATE:
-        from gpu_accelerated_vector_indexing_spark.functions.embedder import embed_queries
+    from gpu_accelerated_vector_indexing_spark.functions.embedder import embed_queries
 
-        _CDC_QVEC_STATE[spark] = [
-            float(x)
-            for x in embed_queries(spark, [CDC_QUERY_TEXT]).collect()[0].qvec
-        ]
-    return _CDC_QVEC_STATE[spark]
+    return [
+        float(x)
+        for x in embed_queries(spark, [CDC_QUERY_TEXT]).collect()[0].qvec
+    ]
 
 
 def index_refresh_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -537,8 +516,7 @@ def index_refresh_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the row a nightly pipeline alerts on when a diff goes sideways."""
     from gpu_accelerated_vector_indexing_spark.operators.curation import corpus_snapshot_diff
 
-    idx_dir = cdc_refreshed_index(spark, sf_dir)
-    stats = _CDC_REFRESH_STATE[(spark, sf_dir)]
+    idx_dir, stats = cdc_refresh_state(spark, sf_dir)
     by_status = corpus_snapshot_diff(spark, sf_dir).groupBy().pivot(
         "status", ["added", "removed", "changed", "unchanged"]
     ).count()
@@ -557,12 +535,10 @@ def index_refresh_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (spark, sf_dir) → compacted index dir — its OWN refreshed copy (the
-# shared cdc_refreshed_index memo must stay tombstoned: index_refresh_cdc
+# The compacted index dir is its OWN refreshed copy (the shared
+# cdc_refreshed_index state must stay tombstoned: index_refresh_cdc
 # reads it through the masked path every call).
-_CDC_COMPACT_DIR: dict[tuple[SparkSession, str], str] = {}
-
-
+@session_state
 def compact_refreshed_index(spark: SparkSession, sf_dir: str) -> str:
     """Fold the tombstone list into the files — the maintenance step
     that closes the CDC lifecycle (refresh nightly, compact when the
@@ -583,14 +559,9 @@ def compact_refreshed_index(spark: SparkSession, sf_dir: str) -> str:
     Serve-identical by construction: live rows before ≡ rows after,
     pinned by test_compaction_preserves_serving + the shared oracle.
     """
-    key = (spark, sf_dir)
-    if key in _CDC_COMPACT_DIR:
-        return _CDC_COMPACT_DIR[key]
-
     out = build_base_snapshot_index(spark, sf_dir)
     apply_cdc_refresh(spark, sf_dir, out)
     compact_index_dir(spark, out)
-    _CDC_COMPACT_DIR[key] = out
     return out
 
 
@@ -675,12 +646,6 @@ def index_refresh_compacted(spark: SparkSession, sf_dir: str, k: int = 5) -> Dat
 # immutable monoliths (IVF.cpp:439-524) — any corpus change reruns the
 # whole embedding.py → clusters.py → convert pipeline.
 
-# (spark, sf_dir) → twice-refreshed index dir + per-cycle accounting
-_CDC_GEN2_DIR: dict[tuple[SparkSession, str], str] = {}
-_CDC_GEN2_STATE: dict[tuple[SparkSession, str], list[dict[str, int]]] = {}
-# (spark, sf_dir) → the mid-sequence-compacted twin's own copy
-_CDC_GEN2_COMPACT_DIR: dict[tuple[SparkSession, str], str] = {}
-
 
 def apply_cdc_refresh_v3(spark: SparkSession, sf_dir: str, out: str) -> dict[str, int]:
     """Cycle 2 (snapshot N+1 → N+2): the same generic step at gen=2 —
@@ -697,19 +662,22 @@ def apply_cdc_refresh_v3(spark: SparkSession, sf_dir: str, out: str) -> dict[str
     )
 
 
-def cdc_refreshed_index_gen2(spark: SparkSession, sf_dir: str) -> str:
+@session_state
+def cdc_refresh_gen2_state(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, list[dict[str, int]]]:
     """Base build on snapshot N, then TWO diff-driven refresh cycles —
-    the nightly loop actually looping. Owns its directory (the shared
-    single-cycle memo must stay at generation 1 for
-    ``index_refresh_cdc``)."""
-    key = (spark, sf_dir)
-    if key not in _CDC_GEN2_DIR:
-        out = build_base_snapshot_index(spark, sf_dir)
-        c1 = apply_cdc_refresh(spark, sf_dir, out)
-        c2 = apply_cdc_refresh_v3(spark, sf_dir, out)
-        _CDC_GEN2_STATE[key] = [c1, c2]
-        _CDC_GEN2_DIR[key] = out
-    return _CDC_GEN2_DIR[key]
+    the nightly loop actually looping: the twice-refreshed index dir +
+    per-cycle accounting. Owns its directory (the shared single-cycle
+    state must stay at generation 1 for ``index_refresh_cdc``)."""
+    out = build_base_snapshot_index(spark, sf_dir)
+    c1 = apply_cdc_refresh(spark, sf_dir, out)
+    c2 = apply_cdc_refresh_v3(spark, sf_dir, out)
+    return out, [c1, c2]
+
+
+def cdc_refreshed_index_gen2(spark: SparkSession, sf_dir: str) -> str:
+    return cdc_refresh_gen2_state(spark, sf_dir)[0]
 
 
 def index_refresh_cdc_gen2(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
@@ -730,8 +698,7 @@ def index_refresh_gen2_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus_snapshot_diff_v3,
     )
 
-    idx_dir = cdc_refreshed_index_gen2(spark, sf_dir)
-    c1, c2 = _CDC_GEN2_STATE[(spark, sf_dir)]
+    idx_dir, (c1, c2) = cdc_refresh_gen2_state(spark, sf_dir)
     by_status = corpus_snapshot_diff_v3(spark, sf_dir).groupBy().pivot(
         "status", ["added", "removed", "changed", "unchanged"]
     ).count()
@@ -749,21 +716,19 @@ def index_refresh_gen2_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_state
 def compact_mid_sequence_index(spark: SparkSession, sf_dir: str) -> str:
     """Compaction MID-sequence: base → cycle 1 → compact → cycle 2.
     The compacted layout (tombstones folded into the files, list
     emptied, gen stamps preserved in the rewritten rows) must accept
     the next cycle as if nothing happened — cycle-2 tombstones at
     dead-gen 1 still retire the surviving gen-0/gen-1 rows they name.
-    Own copy: the gen-2 serve memo must keep its masked layout."""
-    key = (spark, sf_dir)
-    if key not in _CDC_GEN2_COMPACT_DIR:
-        out = build_base_snapshot_index(spark, sf_dir)
-        apply_cdc_refresh(spark, sf_dir, out)
-        compact_index_dir(spark, out)
-        apply_cdc_refresh_v3(spark, sf_dir, out)
-        _CDC_GEN2_COMPACT_DIR[key] = out
-    return _CDC_GEN2_COMPACT_DIR[key]
+    Own copy: the gen-2 serve state must keep its masked layout."""
+    out = build_base_snapshot_index(spark, sf_dir)
+    apply_cdc_refresh(spark, sf_dir, out)
+    compact_index_dir(spark, out)
+    apply_cdc_refresh_v3(spark, sf_dir, out)
+    return out
 
 
 def index_refresh_gen2_compact_mid(
@@ -865,48 +830,41 @@ def index_read_asof_gen(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFra
 
 EMBEDDER_V2_SALT = "v2 "
 
-_MIGRATION_DIRS: dict[tuple[SparkSession, str], tuple[str, str]] = {}
-_MIGRATION_QVEC: dict[SparkSession, list[float]] = {}
-# (spark, sf_dir) → a READ-ONLY v1 base layout. build_base_snapshot_index
-# is deliberately unmemoized because its other callers MUTATE their
-# directory (refresh cycles, deletes); the migration's v1 side is the
-# one read-only consumer, so it alone shares a memoized base instead of
-# paying a redundant embed + KMeans per query family.
-_READONLY_BASE_DIR: dict[tuple[SparkSession, str], str] = {}
 
-
+# A READ-ONLY v1 base layout. build_base_snapshot_index is deliberately
+# unmemoized because its other callers MUTATE their directory (refresh
+# cycles, deletes); the migration's v1 side is the one read-only
+# consumer, so it alone shares a memoized base instead of paying a
+# redundant embed + KMeans per query family.
+@session_state
 def _readonly_base_index(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark, sf_dir)
-    if key not in _READONLY_BASE_DIR:
-        _READONLY_BASE_DIR[key] = build_base_snapshot_index(spark, sf_dir)
-    return _READONLY_BASE_DIR[key]
+    return build_base_snapshot_index(spark, sf_dir)
+
+
+@session_state
+def _v2_base_index(spark: SparkSession, sf_dir: str) -> str:
+    return build_base_snapshot_index(spark, sf_dir, salt=EMBEDDER_V2_SALT)
 
 
 def embedder_migration_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """``(v1_dir, v2_dir)`` — the same snapshot indexed under both
     embedder versions, each with its own KMeans over its own geometry.
     v1 is the shared read-only base (never mutated by the migration —
-    that is the point: readers stay on it until v2 is complete)."""
-    key = (spark, sf_dir)
-    if key not in _MIGRATION_DIRS:
-        _MIGRATION_DIRS[key] = (
-            _readonly_base_index(spark, sf_dir),
-            build_base_snapshot_index(spark, sf_dir, salt=EMBEDDER_V2_SALT),
-        )
-    return _MIGRATION_DIRS[key]
+    that is the point: readers stay on it until v2 is complete). Each
+    side is its own state, owning exactly the directory it built."""
+    return _readonly_base_index(spark, sf_dir), _v2_base_index(spark, sf_dir)
 
 
+@session_state
 def _v2_query_vec(spark: SparkSession) -> list[float]:
-    if spark not in _MIGRATION_QVEC:
-        from gpu_accelerated_vector_indexing_spark.functions.embedder import embed_queries
+    from gpu_accelerated_vector_indexing_spark.functions.embedder import embed_queries
 
-        _MIGRATION_QVEC[spark] = [
-            float(x)
-            for x in embed_queries(spark, [CDC_QUERY_TEXT], salt=EMBEDDER_V2_SALT)
-            .collect()[0]
-            .qvec
-        ]
-    return _MIGRATION_QVEC[spark]
+    return [
+        float(x)
+        for x in embed_queries(spark, [CDC_QUERY_TEXT], salt=EMBEDDER_V2_SALT)
+        .collect()[0]
+        .qvec
+    ]
 
 
 def index_embedder_migration(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
@@ -916,7 +874,7 @@ def index_embedder_migration(spark: SparkSession, sf_dir: str, k: int = 5) -> Da
     text (the featurizer CTE at salt "" and at the v2 salt), so a value
     match certifies the v2 rewrite re-embedded every document under the
     new model and v1 serving is untouched by the migration."""
-    from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import layout_engine
 
     v1_dir, v2_dir = embedder_migration_dirs(spark, sf_dir)
     out: DataFrame | None = None
@@ -924,13 +882,8 @@ def index_embedder_migration(spark: SparkSession, sf_dir: str, k: int = 5) -> Da
         ("v1", v1_dir, _cdc_query_vec(spark)),
         ("v2", v2_dir, _v2_query_vec(spark)),
     ):
-        ekey = (spark, idx_dir)
-        if ekey not in _CDC_SERVE_ENGINE_CACHE:
-            _CDC_SERVE_ENGINE_CACHE[ekey] = IVFEngine.from_pretrained(
-                spark, idx_dir, n_probe=CDC_K_CLUSTERS
-            )
         topk = (
-            _CDC_SERVE_ENGINE_CACHE[ekey]
+            layout_engine(spark, idx_dir, CDC_K_CLUSTERS)
             .search(qvec, k=k)
             .select(
                 F.lit(version).alias("version"),
@@ -942,10 +895,7 @@ def index_embedder_migration(spark: SparkSession, sf_dir: str, k: int = 5) -> Da
     return out
 
 
-# (spark, sf_dir) → quality-gated refreshed layout dir
-_GATED_DIR: dict[tuple[SparkSession, str], str] = {}
-
-
+@session_state
 def quality_gated_refresh_index(spark: SparkSession, sf_dir: str) -> str:
     """Cycle-1 refresh with the CURATION GATE on the append path — the
     "don't index junk" rule every production pipeline runs between
@@ -961,28 +911,25 @@ def quality_gated_refresh_index(spark: SparkSession, sf_dir: str) -> str:
         snapshot_new_docs,
     )
 
-    key = (spark, sf_dir)
-    if key not in _GATED_DIR:
-        out = build_base_snapshot_index(spark, sf_dir)
-        diff = corpus_snapshot_diff(spark, sf_dir)
-        new_docs = snapshot_new_docs(load_table(spark, sf_dir, "documents"))
-        tombs = diff.filter(F.col("status").isin("removed", "changed")).select(
-            F.col("doc_id").alias("vec_id"), F.lit(0).cast("int").alias("gen")
-        )
-        tombs.coalesce(1).write.mode("append").parquet(f"{out}/tombstones")
-        # restrict to the upsert batch BEFORE scoring quality: the gate
-        # must be O(|delta|) by construction, not by hoping Catalyst
-        # pushes the semi-join below the interpreted HOF projections
-        upsert_docs = new_docs.join(
-            diff.filter(F.col("status").isin("added", "changed")).select("doc_id"),
-            "doc_id",
-            "left_semi",
-        )
-        keep_ids = quality_flags(upsert_docs).filter(F.col("keep")).select("doc_id")
-        upserts = upsert_docs.join(keep_ids, "doc_id", "left_semi")
-        append_to_index(spark, out, _snapshot_emb(upserts, gen=1))
-        _GATED_DIR[key] = out
-    return _GATED_DIR[key]
+    out = build_base_snapshot_index(spark, sf_dir)
+    diff = corpus_snapshot_diff(spark, sf_dir)
+    new_docs = snapshot_new_docs(load_table(spark, sf_dir, "documents"))
+    tombs = diff.filter(F.col("status").isin("removed", "changed")).select(
+        F.col("doc_id").alias("vec_id"), F.lit(0).cast("int").alias("gen")
+    )
+    tombs.coalesce(1).write.mode("append").parquet(f"{out}/tombstones")
+    # restrict to the upsert batch BEFORE scoring quality: the gate
+    # must be O(|delta|) by construction, not by hoping Catalyst
+    # pushes the semi-join below the interpreted HOF projections
+    upsert_docs = new_docs.join(
+        diff.filter(F.col("status").isin("added", "changed")).select("doc_id"),
+        "doc_id",
+        "left_semi",
+    )
+    keep_ids = quality_flags(upsert_docs).filter(F.col("keep")).select("doc_id")
+    upserts = upsert_docs.join(keep_ids, "doc_id", "left_semi")
+    append_to_index(spark, out, _snapshot_emb(upserts, gen=1))
+    return out
 
 
 def index_refresh_gated(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
@@ -993,10 +940,7 @@ def index_refresh_gated(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFra
     return serve_refreshed_index(spark, quality_gated_refresh_index(spark, sf_dir), k)
 
 
-# (spark, sf_dir) → rebalanced-after-refresh layout dir
-_CDC_REBAL_DIR: dict[tuple[SparkSession, str], str] = {}
-
-
+@session_state
 def rebalanced_refreshed_index(spark: SparkSession, sf_dir: str) -> str:
     """The two lifecycles COMPOSED: after two CDC refresh cycles the
     nearest-stored-centroid appends have skewed some clusters (appends
@@ -1011,12 +955,9 @@ def rebalanced_refreshed_index(spark: SparkSession, sf_dir: str) -> str:
         split_hot_clusters,
     )
 
-    key = (spark, sf_dir)
-    if key not in _CDC_REBAL_DIR:
-        live = _live_index_rows(spark, cdc_refreshed_index_gen2(spark, sf_dir))
-        relabeled = split_hot_clusters(live.select("cluster", "vec_id", "embedding"))
-        _CDC_REBAL_DIR[key] = _write_rebalanced_layout(spark, relabeled)
-    return _CDC_REBAL_DIR[key]
+    live = _live_index_rows(spark, cdc_refreshed_index_gen2(spark, sf_dir))
+    relabeled = split_hot_clusters(live.select("cluster", "vec_id", "embedding"))
+    return _write_rebalanced_layout(spark, relabeled)
 
 
 def index_refresh_rebalanced(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
@@ -1024,16 +965,9 @@ def index_refresh_rebalanced(spark: SparkSession, sf_dir: str, k: int = 5) -> Da
     oracle unchanged: maintenance (splitting + tombstone folding)
     moves no result value, while post-split probes scan smaller
     partitions."""
-    from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import layout_engine
 
-    out = rebalanced_refreshed_index(spark, sf_dir)
-    key = (spark, out)
-    if key not in _CDC_SERVE_ENGINE_CACHE:
-        n_clusters = spark.read.parquet(f"{out}/centroids").count()
-        _CDC_SERVE_ENGINE_CACHE[key] = IVFEngine.from_pretrained(
-            spark, out, n_probe=n_clusters
-        )
-    eng = _CDC_SERVE_ENGINE_CACHE[key]
+    eng = layout_engine(spark, rebalanced_refreshed_index(spark, sf_dir))
     return eng.search(_cdc_query_vec(spark), k=k).select(
         F.col("vec_id").alias("doc_id"), "score"
     )
@@ -1098,9 +1032,8 @@ def index_history_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every fixture SF (documents.source is uniform over src0..src19)
 DELETE_WHERE_SOURCES = ("src3", "src7", "src11")
 
-_DELETE_WHERE_DIR: dict[tuple[SparkSession, str], str] = {}
 
-
+@session_state
 def delete_where_index(spark: SparkSession, sf_dir: str) -> str:
     """Base-build on the old snapshot, then tombstone every indexed doc
     whose ``source`` is in :data:`DELETE_WHERE_SOURCES` — tombstones at
@@ -1110,20 +1043,17 @@ def delete_where_index(spark: SparkSession, sf_dir: str) -> str:
     metadata delete is a semi-join catalog→id-list, broadcast-sized."""
     from gpu_accelerated_vector_indexing_spark.operators.curation import snapshot_old_docs
 
-    key = (spark, sf_dir)
-    if key not in _DELETE_WHERE_DIR:
-        out = build_base_snapshot_index(spark, sf_dir)
-        docs = load_table(spark, sf_dir, "documents")
-        victims = (
-            docs.join(snapshot_old_docs(docs).select("doc_id"), "doc_id", "left_semi")
-            .filter(F.col("source").isin(*DELETE_WHERE_SOURCES))
-            .select(
-                F.col("doc_id").alias("vec_id"), F.lit(0).cast("int").alias("gen")
-            )
+    out = build_base_snapshot_index(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
+    victims = (
+        docs.join(snapshot_old_docs(docs).select("doc_id"), "doc_id", "left_semi")
+        .filter(F.col("source").isin(*DELETE_WHERE_SOURCES))
+        .select(
+            F.col("doc_id").alias("vec_id"), F.lit(0).cast("int").alias("gen")
         )
-        victims.coalesce(1).write.mode("append").parquet(f"{out}/tombstones")
-        _DELETE_WHERE_DIR[key] = out
-    return _DELETE_WHERE_DIR[key]
+    )
+    victims.coalesce(1).write.mode("append").parquet(f"{out}/tombstones")
+    return out
 
 
 def index_delete_where(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:

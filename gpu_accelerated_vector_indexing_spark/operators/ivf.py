@@ -39,6 +39,7 @@ from gpu_accelerated_vector_indexing_spark.functions.vector import (
     cosine_similarity_hoisted,
     seq_l2_norm,
 )
+from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
 from gpu_accelerated_vector_indexing_spark.operators.knn import SCORE_SCALE, query_vectors
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
@@ -76,52 +77,43 @@ def label_centroids(emb: DataFrame, cluster_col: str = "label") -> DataFrame:
 # as the coarse materialization, IVF.cpp:282). Every subsequent query's
 # coarse stage then ranks ≤ a few hundred local rows: no registered IVF
 # query pays a corpus-wide exchange before its pruned fine scan.
-_CENTROIDS_CACHE: dict[tuple[SparkSession, str], DataFrame] = {}
-_CENTROID_ROWS: dict[tuple[SparkSession, str], list[tuple[int, list[float]]]] = {}
-_QVEC_CACHE: dict[tuple[SparkSession, str, int], list[float]] = {}
-
-
+@session_state
 def fixture_centroid_rows(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[int, list[float]]]:
     """Memoized collected ``(label, centroid)`` rows — the in-memory
     form the reference holds after loading cluster_centroids.bin."""
-    key = (spark, sf_dir)
-    if key not in _CENTROID_ROWS:
-        cents = label_centroids(load_table(spark, sf_dir, "embeddings"))
-        _CENTROID_ROWS[key] = [
-            (int(r.label), [float(x) for x in r.centroid]) for r in cents.collect()
-        ]
-    return _CENTROID_ROWS[key]
+    cents = label_centroids(load_table(spark, sf_dir, "embeddings"))
+    return [
+        (int(r.label), [float(x) for x in r.centroid]) for r in cents.collect()
+    ]
 
 
+@session_state
 def fixture_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized ``(label, centroid)`` relation for the fixture corpus.
+    """Memoized ``(label, centroid)`` relation for the fixture corpus,
+    derived from :func:`fixture_centroid_rows`.
 
     ≙ reading the prebuilt centroid table (IVF.cpp:489-510) instead of
-    re-deriving it — the exact analog of ``_PQ_CACHE`` memoizing PQ
-    codebooks as build-time index state. ``cache()``d so repeat scans
-    stay JVM-side instead of re-serializing the local rows per query.
+    re-deriving it — the exact analog of ``quantize.pq_codebooks``
+    memoizing PQ codebooks as build-time index state. ``cache()``d so
+    repeat scans stay JVM-side instead of re-serializing the local rows
+    per query.
     """
-    key = (spark, sf_dir)
-    if key not in _CENTROIDS_CACHE:
-        rows = fixture_centroid_rows(spark, sf_dir)
-        df = spark.createDataFrame(
-            rows, schema="label int, centroid array<double>"
-        ).cache()
-        df.count()
-        _CENTROIDS_CACHE[key] = df
-    return _CENTROIDS_CACHE[key]
+    rows = fixture_centroid_rows(spark, sf_dir)
+    df = spark.createDataFrame(
+        rows, schema="label int, centroid array<double>"
+    ).cache()
+    df.count()
+    return df
 
 
+@session_state
 def fixture_qvec(spark: SparkSession, sf_dir: str, query_id: int) -> list[float]:
     """Memoized raw query vector (float32 storage widened to float64) —
     ≙ the reference reading queries_data/*.bin once (IVF.cpp:650-672)."""
-    key = (spark, sf_dir, query_id)
-    if key not in _QVEC_CACHE:
-        row = query_vectors(spark, sf_dir, [query_id]).first()
-        _QVEC_CACHE[key] = [float(x) for x in row.qvec]
-    return _QVEC_CACHE[key]
+    row = query_vectors(spark, sf_dir, [query_id]).first()
+    return [float(x) for x in row.qvec]
 
 
 def fixture_qvecs(
@@ -130,10 +122,10 @@ def fixture_qvecs(
     """Batched ``fixture_qvec``: fetch every COLD id in ONE job (a
     batched endpoint must not pay one driver round-trip per query id)
     and fill the memo; warm ids are free."""
-    cold = [q for q in query_ids if (spark, sf_dir, q) not in _QVEC_CACHE]
+    cold = [q for q in query_ids if fixture_qvec.lookup(spark, sf_dir, q) is None]
     if cold:
         for row in query_vectors(spark, sf_dir, cold).collect():
-            _QVEC_CACHE[(spark, sf_dir, row.query_id)] = [float(x) for x in row.qvec]
+            fixture_qvec.prime([float(x) for x in row.qvec], spark, sf_dir, row.query_id)
     return [(q, fixture_qvec(spark, sf_dir, q)) for q in query_ids]
 
 
@@ -875,9 +867,6 @@ def knn_filtered_planned(
 # a broadcast semi-join; the rewrite touches ONLY hot clusters'
 # partitions (the same damage-bounded posture as compaction).
 
-_REBALANCE_DIR: dict[tuple[SparkSession, str], str] = {}
-_REBALANCE_ENGINE: dict[tuple[SparkSession, str], object] = {}
-
 
 def _d2_rounded(a, b):
     """Rounded squared-L2 between two double arrays — the one distance
@@ -983,18 +972,14 @@ def split_hot_clusters(emb: DataFrame) -> DataFrame:
     return keep_rows.unionByName(split_rows)
 
 
+@session_state
 def rebalanced_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write the post-split layout (cluster-partitioned rows + a fresh
     centroid table = per-cluster means) — the artifact the accounting
     and serve queries read, so the oracle pins the REWRITE, not a lazy
     plan. At scale only hot clusters' partitions change; the fixture
     write rewrites all of them for test isolation (a caller-owned dir)."""
-    key = (spark, sf_dir)
-    if key not in _REBALANCE_DIR:
-        _REBALANCE_DIR[key] = _write_rebalanced_layout(
-            spark, rebalance_split_assignments(spark, sf_dir)
-        )
-    return _REBALANCE_DIR[key]
+    return _write_rebalanced_layout(spark, rebalance_split_assignments(spark, sf_dir))
 
 
 def ivf_rebalance_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1049,17 +1034,12 @@ def rebalance_merge_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     return keep_rows.unionByName(merged_rows)
 
 
-_REBALANCE_MERGE_DIR: dict[tuple[SparkSession, str], str] = {}
-
-
 def _write_rebalanced_layout(spark: SparkSession, rows: DataFrame) -> str:
     """Persist a relabeled ``(cluster, vec_id, embedding)`` relation as
     an engine-servable layout: cluster-partitioned rows + per-cluster
     mean centroids (the coarse stage's table; full-probe serves stay
     exact regardless of centroid quality)."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="gpu_accelerated_vector_indexing_rebal_")
+    out = state_dir("rebal")
     (
         rows.repartition("cluster")
         .write.mode("overwrite")
@@ -1079,13 +1059,9 @@ def _write_rebalanced_layout(spark: SparkSession, rows: DataFrame) -> str:
     return out
 
 
+@session_state
 def merged_rebalance_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark, sf_dir)
-    if key not in _REBALANCE_MERGE_DIR:
-        _REBALANCE_MERGE_DIR[key] = _write_rebalanced_layout(
-            spark, rebalance_merge_assignments(spark, sf_dir)
-        )
-    return _REBALANCE_MERGE_DIR[key]
+    return _write_rebalanced_layout(spark, rebalance_merge_assignments(spark, sf_dir))
 
 
 def ivf_rebalance_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1104,24 +1080,29 @@ def ivf_rebalance_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_state
+def layout_engine(spark: SparkSession, idx_dir: str, n_probe: int | None = None):
+    """``IVFEngine`` over a written layout, memoized per (layout,
+    n_probe); ``None`` probes every cluster (one centroid count when
+    the engine is built)."""
+    from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
+
+    if n_probe is None:
+        n_probe = spark.read.parquet(f"{idx_dir}/centroids").count()
+    return IVFEngine.from_pretrained(spark, idx_dir, n_probe=n_probe)
+
+
 def _serve_layout_full_probe(
     spark: SparkSession, sf_dir: str, idx_dir: str, k: int
 ) -> DataFrame:
     """Full-probe top-k through a rebalanced layout via the standard
     facade — the ONE serve recipe both rebalance serves share (engine
     memoized per layout, n_probe = every cluster, fixture query 0)."""
-    from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
-
-    key = (spark, idx_dir)
-    if key not in _REBALANCE_ENGINE:
-        n_clusters = spark.read.parquet(f"{idx_dir}/centroids").count()
-        _REBALANCE_ENGINE[key] = IVFEngine.from_pretrained(
-            spark, idx_dir, n_probe=n_clusters
-        )
     qrow = (
         load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0).first()
     )
-    return _REBALANCE_ENGINE[key].search([float(x) for x in qrow.embedding], k=k)
+    engine = layout_engine(spark, idx_dir)
+    return engine.search([float(x) for x in qrow.embedding], k=k)
 
 
 def ivf_rebalance_merge_serve(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
@@ -1483,9 +1464,7 @@ def knn_ivf_shard_merge(
     return fine.orderBy(F.desc("score"), F.desc("vec_id")).limit(k)
 
 
-_SHARD_STATE_DIR: dict[tuple[SparkSession, str, int], str] = {}
-
-
+@session_state
 def shard_state_dir(spark: SparkSession, sf_dir: str, n_shards: int = 2) -> str:
     """Directory holding the persisted per-shard centroid sufficient
     statistics, written once per (session, corpus, shard count) — the
@@ -1495,16 +1474,11 @@ def shard_state_dir(spark: SparkSession, sf_dir: str, n_shards: int = 2) -> str:
     all). ``n_shards`` is part of the memo key (ADVICE r7: without it
     a second call with a different shard count silently got the first
     count's partials)."""
-    import tempfile
-
-    key = (spark, sf_dir, n_shards)
-    if key not in _SHARD_STATE_DIR:
-        out = tempfile.mkdtemp(prefix="gpu_accelerated_vector_indexing_shardstate_")
-        shard_centroid_stats(
-            load_table(spark, sf_dir, "embeddings"), n_shards
-        ).write.mode("overwrite").parquet(f"{out}/stats")
-        _SHARD_STATE_DIR[key] = out
-    return _SHARD_STATE_DIR[key]
+    out = state_dir("shardstate")
+    shard_centroid_stats(
+        load_table(spark, sf_dir, "embeddings"), n_shards
+    ).write.mode("overwrite").parquet(f"{out}/stats")
+    return out
 
 
 def ivf_shard_state_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1530,9 +1504,7 @@ def ivf_shard_state_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MERGED_IVF_INDEX_DIR: dict[tuple[SparkSession, str, int], str] = {}
-
-
+@session_state
 def merged_ivf_index(spark: SparkSession, sf_dir: str, n_shards: int = 2) -> str:
     """Persist the shard-MERGED IVF state through the STANDARD engine
     layout (``embeddings_indexed`` partitioned by cluster +
@@ -1548,30 +1520,25 @@ def merged_ivf_index(spark: SparkSession, sf_dir: str, n_shards: int = 2) -> str
     DECIMAL-fold exactness contract; the corpus lands cluster-major so
     a probed search opens only the probed partition directories.
     """
-    import tempfile
-
-    key = (spark, sf_dir, n_shards)
-    if key not in _MERGED_IVF_INDEX_DIR:
-        out = tempfile.mkdtemp(prefix="gpu_accelerated_vector_indexing_ivfmerged_")
-        stats = spark.read.parquet(
-            f"{shard_state_dir(spark, sf_dir, n_shards)}/stats"
+    out = state_dir("ivfmerged")
+    stats = spark.read.parquet(
+        f"{shard_state_dir(spark, sf_dir, n_shards)}/stats"
+    )
+    cents = assemble_centroids(merged_component_values(stats)).select(
+        F.col("label").cast("int").alias("cluster"), "centroid"
+    )
+    cents.coalesce(1).write.mode("overwrite").parquet(f"{out}/centroids")
+    emb = load_table(spark, sf_dir, "embeddings")
+    (
+        emb.select(
+            "vec_id", "embedding", F.col("label").cast("int").alias("cluster")
         )
-        cents = assemble_centroids(merged_component_values(stats)).select(
-            F.col("label").cast("int").alias("cluster"), "centroid"
-        )
-        cents.coalesce(1).write.mode("overwrite").parquet(f"{out}/centroids")
-        emb = load_table(spark, sf_dir, "embeddings")
-        (
-            emb.select(
-                "vec_id", "embedding", F.col("label").cast("int").alias("cluster")
-            )
-            .repartition("cluster")
-            .write.mode("overwrite")
-            .partitionBy("cluster")
-            .parquet(f"{out}/embeddings_indexed")
-        )
-        _MERGED_IVF_INDEX_DIR[key] = out
-    return _MERGED_IVF_INDEX_DIR[key]
+        .repartition("cluster")
+        .write.mode("overwrite")
+        .partitionBy("cluster")
+        .parquet(f"{out}/embeddings_indexed")
+    )
+    return out
 
 
 def ivf_merge_serve(

@@ -41,6 +41,7 @@ from gpu_accelerated_vector_indexing_spark.functions.vector import (
     lit_double_array,
     lit_double_array2,
 )
+from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
 from gpu_accelerated_vector_indexing_spark.operators.knn import query_vectors
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
@@ -50,8 +51,7 @@ SPAN_GUARD = 1e-12  # constant-dimension guard (span 0 → code 0)
 # Quantizer parameters are INDEX state: computed once at build time and
 # stored beside the codes (like the centroid table). Memoizing per
 # (session, corpus dir) mirrors that — a query never re-scans the corpus
-# for stats it could read from the index.
-_STATS_CACHE: dict[tuple[SparkSession, str], tuple[list[float], list[float]]] = {}
+# for stats it could read from the index (``corpus_quantizer``).
 
 
 def _fixture_qrow(spark: SparkSession, sf_dir: str, query_id: int):
@@ -74,13 +74,11 @@ def _fixture_qrow(spark: SparkSession, sf_dir: str, query_id: int):
     return np.asarray(qv), math.sqrt(acc)
 
 
+@session_state
 def corpus_quantizer(spark: SparkSession, sf_dir: str) -> tuple[list[float], list[float]]:
-    key = (spark, sf_dir)
-    if key not in _STATS_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        dim = len(emb.select("embedding").first()[0])
-        _STATS_CACHE[key] = dim_min_max(emb, dim)
-    return _STATS_CACHE[key]
+    emb = load_table(spark, sf_dir, "embeddings")
+    dim = len(emb.select("embedding").first()[0])
+    return dim_min_max(emb, dim)
 
 
 def dim_min_max(emb: DataFrame, dim: int) -> tuple[list[float], list[float]]:
@@ -222,9 +220,8 @@ PQ_K = 16  # codewords per subspace → 4 bits/subspace, 4 bytes/vector here
 PQ_TRAIN_SAMPLE = 1024  # codebooks are ALWAYS trained on a sample in practice
 PQ_ITERS = 10
 
-_PQ_CACHE: dict[tuple[SparkSession, str], list[list[list[float]]]] = {}
 
-
+@session_state
 def pq_codebooks(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
     """Per-subspace codebooks via deterministic Lloyd iterations on a
     bounded sample.
@@ -243,17 +240,14 @@ def pq_codebooks(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
     to 8 d.p. — the same rounded-fold determinism recipe as the
     centroid/PageRank oracles.
     """
-    key = (spark, sf_dir)
-    if key not in _PQ_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        sample = (
-            emb.orderBy("vec_id")
-            .limit(PQ_TRAIN_SAMPLE)
-            .select(as_double_array("embedding").alias("v"))
-            .collect()
-        )
-        _PQ_CACHE[key] = _lloyd_fit([r.v for r in sample])
-    return _PQ_CACHE[key]
+    emb = load_table(spark, sf_dir, "embeddings")
+    sample = (
+        emb.orderBy("vec_id")
+        .limit(PQ_TRAIN_SAMPLE)
+        .select(as_double_array("embedding").alias("v"))
+        .collect()
+    )
+    return _lloyd_fit([r.v for r in sample])
 
 
 def _lloyd_fit(rows: list[list[float]]) -> list[list[list[float]]]:
@@ -305,9 +299,7 @@ def _pq_encode(v: Column, books: list[list[list[float]]], dim: int) -> Column:
     return F.array(*codes)
 
 
-_PQ_CODES_CACHE: dict[tuple[SparkSession, str], DataFrame] = {}
-
-
+@session_state
 def pq_codes_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The encoded corpus ``(vec_id, codes ARRAY<INT>)`` — index state.
 
@@ -316,19 +308,16 @@ def pq_codes_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per (session, corpus) and is cached — the expensive nearest-
     codeword expression is build-time work, exactly like the KMeans fit.
     """
-    key = (spark, sf_dir)
-    if key not in _PQ_CODES_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        dim = len(emb.select("embedding").first()[0])
-        books = pq_codebooks(spark, sf_dir)
-        codes = emb.select(
-            "vec_id",
-            "label",
-            _pq_encode(as_double_array("embedding"), books, dim).alias("codes"),
-        ).cache()
-        codes.count()  # materialize now: build-time cost, not query-time
-        _PQ_CODES_CACHE[key] = codes
-    return _PQ_CODES_CACHE[key]
+    emb = load_table(spark, sf_dir, "embeddings")
+    dim = len(emb.select("embedding").first()[0])
+    books = pq_codebooks(spark, sf_dir)
+    codes = emb.select(
+        "vec_id",
+        "label",
+        _pq_encode(as_double_array("embedding"), books, dim).alias("codes"),
+    ).cache()
+    codes.count()  # materialize now: build-time cost, not query-time
+    return codes
 
 
 def knn_pq(
@@ -529,9 +518,7 @@ def knn_ivf_pq(
 
 # --- IVF-PQ with RESIDUAL encoding (FAISS "IVFADC" proper) -------------------
 
-# Residual codebooks/codes are index state exactly like _PQ_CACHE.
-_PQR_CACHE: dict[tuple[SparkSession, str], list[list[list[float]]]] = {}
-_PQR_CODES_CACHE: dict[tuple[SparkSession, str], DataFrame] = {}
+# Residual codebooks/codes are index state exactly like pq_codebooks.
 
 
 def _residual_col() -> Column:
@@ -542,6 +529,7 @@ def _residual_col() -> Column:
     )
 
 
+@session_state
 def pq_residual_codebooks(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
     """Codebooks trained on RESIDUALS ``v − c(label)`` instead of raw
     vectors — the encoding FAISS's IVFADC uses, because residuals within
@@ -553,45 +541,40 @@ def pq_residual_codebooks(spark: SparkSession, sf_dir: str) -> list[list[list[fl
     sample; the centroids subtracted are the memoized 8-d.p. index
     state, so Spark and the oracle see bit-identical residuals.
     """
-    key = (spark, sf_dir)
-    if key not in _PQR_CACHE:
-        from gpu_accelerated_vector_indexing_spark.operators.ivf import fixture_centroids
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import fixture_centroids
 
-        emb = load_table(spark, sf_dir, "embeddings")
-        sample = (
-            emb.join(F.broadcast(fixture_centroids(spark, sf_dir)), "label")
-            .orderBy("vec_id")
-            .limit(PQ_TRAIN_SAMPLE)
-            .select(_residual_col().alias("v"))
-            .collect()
-        )
-        _PQR_CACHE[key] = _lloyd_fit([r.v for r in sample])
-    return _PQR_CACHE[key]
+    emb = load_table(spark, sf_dir, "embeddings")
+    sample = (
+        emb.join(F.broadcast(fixture_centroids(spark, sf_dir)), "label")
+        .orderBy("vec_id")
+        .limit(PQ_TRAIN_SAMPLE)
+        .select(_residual_col().alias("v"))
+        .collect()
+    )
+    return _lloyd_fit([r.v for r in sample])
 
 
+@session_state
 def pq_residual_codes_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The residual-encoded corpus ``(vec_id, label, codes)`` — written
     at build time in production; memoized + cached here (same posture
     as ``pq_codes_table``)."""
-    key = (spark, sf_dir)
-    if key not in _PQR_CODES_CACHE:
-        from gpu_accelerated_vector_indexing_spark.operators.ivf import fixture_centroids
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import fixture_centroids
 
-        emb = load_table(spark, sf_dir, "embeddings")
-        dim = len(emb.select("embedding").first()[0])
-        books = pq_residual_codebooks(spark, sf_dir)
-        codes = (
-            emb.join(F.broadcast(fixture_centroids(spark, sf_dir)), "label")
-            .select(
-                "vec_id",
-                "label",
-                _pq_encode(_residual_col(), books, dim).alias("codes"),
-            )
-            .cache()
+    emb = load_table(spark, sf_dir, "embeddings")
+    dim = len(emb.select("embedding").first()[0])
+    books = pq_residual_codebooks(spark, sf_dir)
+    codes = (
+        emb.join(F.broadcast(fixture_centroids(spark, sf_dir)), "label")
+        .select(
+            "vec_id",
+            "label",
+            _pq_encode(_residual_col(), books, dim).alias("codes"),
         )
-        codes.count()  # materialize now: build-time cost, not query-time
-        _PQR_CODES_CACHE[key] = codes
-    return _PQR_CODES_CACHE[key]
+        .cache()
+    )
+    codes.count()  # materialize now: build-time cost, not query-time
+    return codes
 
 
 def knn_ivf_pq_residual(
@@ -1060,8 +1043,6 @@ def compression_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- PQ index-state persistence (the ANN side of dedup's state roundtrip) ----
 
-_PQ_STATE_DIR: dict[tuple[SparkSession, str], str] = {}
-
 
 def write_pq_state(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     """Materialize the PQ index state to parquet — the production form
@@ -1081,6 +1062,14 @@ def write_pq_state(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     pq_codes_table(spark, sf_dir).write.mode("overwrite").parquet(f"{out_dir}/codes")
 
 
+@session_state
+def pq_state_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The PQ index state persisted once per (session, corpus)."""
+    out = state_dir("pqstate")
+    write_pq_state(spark, sf_dir, out)
+    return out
+
+
 def pq_state_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persist the PQ index state, read it back, and value-summarize it
     — pinning that what lands on disk is EXACTLY the in-session state
@@ -1094,14 +1083,7 @@ def pq_state_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     single flipped code assignment or perturbed component anywhere in
     the persisted state changes the result.
     """
-    import tempfile
-
-    key = (spark, sf_dir)
-    if key not in _PQ_STATE_DIR:
-        out = tempfile.mkdtemp(prefix="gpu_accelerated_vector_indexing_pqstate_")
-        write_pq_state(spark, sf_dir, out)
-        _PQ_STATE_DIR[key] = out
-    out = _PQ_STATE_DIR[key]
+    out = pq_state_dir(spark, sf_dir)
     books = spark.read.parquet(f"{out}/codebooks")
     codes = spark.read.parquet(f"{out}/codes")
     micro_sum = F.aggregate(
@@ -1141,17 +1123,12 @@ def pq_state_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reference cannot do any of this (immutable build artifacts,
 # ≙ IVF.cpp:439-524).
 
-_PQ_CDC_DIR: dict[tuple[SparkSession, str], str] = {}
-_PQ_CDC_BOOKS_CACHE: dict[tuple[SparkSession, str], list[list[list[float]]]] = {}
-
 
 def _pq_cdc_build(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
     """Un-memoized base + cycle-1 build (old-corpus fit, base encode,
     delta-1 tombstones/appends) into a fresh directory — shared by the
     single-cycle and gen-2 states (each memoizes its OWN copy). Returns
     (dir, codebooks)."""
-    import tempfile
-
     from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
         _cdc_dead,
         _cdc_in_old,
@@ -1159,7 +1136,7 @@ def _pq_cdc_build(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
         _cdc_new_node,
     )
 
-    out = tempfile.mkdtemp(prefix="gpu_accelerated_vector_indexing_pqcdc_")
+    out = state_dir("pqcdc")
     emb = load_table(spark, sf_dir, "embeddings")
     old = emb.filter(_cdc_in_old(F.col("vec_id")))
     sample = (
@@ -1198,22 +1175,17 @@ def _pq_cdc_build(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
     return out, books
 
 
+# The memoized single-cycle (dir, codebooks) state — each state owns its
+# directory (the gen-2 state mutates a fresh copy, never this one).
+_pq_cdc_state = session_state(_pq_cdc_build)
+
+
 def cdc_refreshed_pq_state(spark: SparkSession, sf_dir: str) -> str:
-    """The memoized single-cycle state — each memo owns its directory
-    (the gen-2 state mutates a fresh copy, never this one)."""
-    key = (spark, sf_dir)
-    if key not in _PQ_CDC_DIR:
-        out, books = _pq_cdc_build(spark, sf_dir)
-        _PQ_CDC_BOOKS_CACHE[key] = books
-        _PQ_CDC_DIR[key] = out
-    return _PQ_CDC_DIR[key]
+    return _pq_cdc_state(spark, sf_dir)[0]
 
 
-_PQ_CDC2_DIR: dict[tuple[SparkSession, str], str] = {}
-_PQ_CDC2_BOOKS_CACHE: dict[tuple[SparkSession, str], list[list[list[float]]]] = {}
-
-
-def cdc_refreshed_pq_state_gen2(spark: SparkSession, sf_dir: str) -> str:
+@session_state
+def _pq_cdc2_state(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
     """TWO delta cycles over the PQ state — the compression rung's loop
     (the IVF gen-2 posture): cycle-2 tombstones land at dead-gen 1
     (retiring cycle-1 APPENDS as well as base rows, under the shared
@@ -1228,10 +1200,6 @@ def cdc_refreshed_pq_state_gen2(spark: SparkSession, sf_dir: str) -> str:
         _cdc_live_emb_v3,
     )
 
-    key = (spark, sf_dir)
-    if key in _PQ_CDC2_DIR:
-        return _PQ_CDC2_DIR[key]
-
     out, books = _pq_cdc_build(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     dim = len(books[0][0]) * PQ_SUBSPACES
@@ -1244,9 +1212,11 @@ def cdc_refreshed_pq_state_gen2(spark: SparkSession, sf_dir: str) -> str:
         _pq_encode(as_double_array("embedding"), books, dim).alias("codes"),
         F.lit(2).cast("int").alias("gen"),
     ).write.mode("append").parquet(f"{out}/codes")
-    _PQ_CDC2_BOOKS_CACHE[key] = books
-    _PQ_CDC2_DIR[key] = out
-    return _PQ_CDC2_DIR[key]
+    return out, books
+
+
+def cdc_refreshed_pq_state_gen2(spark: SparkSession, sf_dir: str) -> str:
+    return _pq_cdc2_state(spark, sf_dir)[0]
 
 
 def pq_refresh_cdc(
@@ -1264,8 +1234,7 @@ def pq_refresh_cdc(
     encode with those books → ADC rank → exact rescore."""
     from gpu_accelerated_vector_indexing_spark.operators.graph_ann import _cdc_live_emb
 
-    out = cdc_refreshed_pq_state(spark, sf_dir)
-    books = _stored_books(spark, out, _PQ_CDC_BOOKS_CACHE, (spark, sf_dir))
+    out, books = _pq_cdc_state(spark, sf_dir)
     return _pq_serve_refreshed(
         spark, sf_dir, out, books, _cdc_live_emb(spark, sf_dir),
         query_id, k, n_candidates,
@@ -1287,8 +1256,7 @@ def pq_refresh_cdc_gen2(
         _cdc_live_emb_v3,
     )
 
-    out = cdc_refreshed_pq_state_gen2(spark, sf_dir)
-    books = _stored_books(spark, out, _PQ_CDC2_BOOKS_CACHE, (spark, sf_dir))
+    out, books = _pq_cdc2_state(spark, sf_dir)
     return _pq_serve_refreshed(
         spark, sf_dir, out, books, _cdc_live_emb_v3(spark, sf_dir),
         query_id, k, n_candidates,
@@ -1320,8 +1288,7 @@ def pq_read_asof(
     )
     from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
-    out = cdc_refreshed_pq_state_gen2(spark, sf_dir)
-    books = _stored_books(spark, out, _PQ_CDC2_BOOKS_CACHE, (spark, sf_dir))
+    out, books = _pq_cdc2_state(spark, sf_dir)
     v0 = (
         load_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") % GRAPH_CDC_ADD_MOD != GRAPH_CDC_ADD_REM)
@@ -1335,24 +1302,6 @@ def pq_read_asof(
         ).select(F.lit(v).alias("asof_gen"), "vec_id", "score")
         rows = topk if rows is None else rows.unionByName(topk)
     return rows
-
-
-def _stored_books(
-    spark: SparkSession, out: str, cache: dict, key: tuple
-) -> list[list[list[float]]]:
-    """The layout's codebooks, loaded from the PERSISTED table when the
-    session didn't build it (serving never refits)."""
-    books = cache.get(key)
-    if books is None:
-        brows = spark.read.parquet(f"{out}/codebooks").orderBy(
-            "subspace", "codeword"
-        ).collect()
-        books = [
-            [list(r.centroid) for r in brows if r.subspace == s]
-            for s in range(PQ_SUBSPACES)
-        ]
-        cache[key] = books
-    return books
 
 
 def _pq_serve_refreshed(

@@ -28,8 +28,6 @@ SHAPE is the subject, so the layout must be oracle-replayable).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,6 +38,7 @@ from gpu_accelerated_vector_indexing_spark.functions.vector import (
     lit_double_array,
     lit_long_array,
 )
+from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
 from gpu_accelerated_vector_indexing_spark.operators.ivf import (
     label_centroids,
     probe_labels,
@@ -87,67 +86,54 @@ def ref_query(spark: SparkSession, sf_dir: str, query_id: int) -> DataFrame:
     )
 
 
-_REF_QVEC_CACHE: dict[tuple[SparkSession, str, int], list[float]] = {}
-
-
+@session_state
 def ref_qvec(spark: SparkSession, sf_dir: str, query_id: int) -> list[float]:
     """Memoized raw 384-dim query vector (≙ reading queries_data/*.bin
     once, IVF.cpp:650-672)."""
-    key = (spark, sf_dir, query_id)
-    if key not in _REF_QVEC_CACHE:
-        _REF_QVEC_CACHE[key] = [
-            float(x) for x in ref_query(spark, sf_dir, query_id).first().qvec
-        ]
-    return _REF_QVEC_CACHE[key]
+    return [
+        float(x) for x in ref_query(spark, sf_dir, query_id).first().qvec
+    ]
 
 
-# Index state, same posture as ivf.fixture_centroids / quantize._PQ_CACHE:
+# Index state, same posture as ivf.fixture_centroids / quantize.pq_codebooks:
 # built once per (session, corpus dir), never recomputed at query time.
-_REF_INDEX_CACHE: dict[tuple[SparkSession, str], str] = {}
-_REF_CENT_ROWS: dict[tuple[SparkSession, str], list[tuple[int, list[float]]]] = {}
-
-
+@session_state
 def refshape_centroid_rows(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[int, list[float]]]:
     """Memoized collected 128 × 384 centroid rows (per-label means,
     8-dp rounded — the same determinism recipe as
     ``ivf.label_centroids``)."""
-    key = (spark, sf_dir)
-    if key not in _REF_CENT_ROWS:
-        cents = label_centroids(ref_corpus(spark, sf_dir))
-        _REF_CENT_ROWS[key] = [
-            (int(r.label), [float(x) for x in r.centroid]) for r in cents.collect()
-        ]
-    return _REF_CENT_ROWS[key]
+    cents = label_centroids(ref_corpus(spark, sf_dir))
+    return [
+        (int(r.label), [float(x) for x in r.centroid]) for r in cents.collect()
+    ]
 
 
+@session_state
 def refshape_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the reference-shape index ONCE per (session, corpus):
     cluster-partitioned parquet (128 directories) + centroid table —
     the layout ``IVFEngine.from_pretrained`` consumes, at the
     reference's own cluster count."""
-    key = (spark, sf_dir)
-    if key not in _REF_INDEX_CACHE:
-        out = tempfile.mkdtemp(prefix="gpu_accelerated_vector_indexing_refshape_index_")
-        corpus = ref_corpus(spark, sf_dir).withColumnRenamed("label", "cluster")
-        (
-            corpus.repartition("cluster")
-            .write.mode("overwrite")
-            .partitionBy("cluster")
-            .parquet(f"{out}/embeddings_indexed")
+    out = state_dir("refshape_index")
+    corpus = ref_corpus(spark, sf_dir).withColumnRenamed("label", "cluster")
+    (
+        corpus.repartition("cluster")
+        .write.mode("overwrite")
+        .partitionBy("cluster")
+        .parquet(f"{out}/embeddings_indexed")
+    )
+    (
+        spark.createDataFrame(
+            refshape_centroid_rows(spark, sf_dir),
+            schema="cluster int, centroid array<double>",
         )
-        (
-            spark.createDataFrame(
-                refshape_centroid_rows(spark, sf_dir),
-                schema="cluster int, centroid array<double>",
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{out}/centroids")
-        )
-        _REF_INDEX_CACHE[key] = out
-    return _REF_INDEX_CACHE[key]
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(f"{out}/centroids")
+    )
+    return out
 
 
 # Learned-layout index state (the memoization rule every index family
@@ -156,9 +142,7 @@ def refshape_index(spark: SparkSession, sf_dir: str) -> str:
 # job (measured 25s vs 2s cached at sf0.01) — so the corpus is cached
 # for the fit and the resulting (assigned, centroids) pair is
 # localCheckpoint-ed once per (session, corpus).
-_REF_KMEANS_CACHE: dict[tuple[SparkSession, str], tuple[DataFrame, DataFrame]] = {}
-
-
+@session_state
 def refshape_kmeans_layout(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -167,16 +151,13 @@ def refshape_kmeans_layout(
     build at its true shape."""
     from gpu_accelerated_vector_indexing_spark.operators.index_build import kmeans_assign
 
-    key = (spark, sf_dir)
-    if key not in _REF_KMEANS_CACHE:
-        corpus = ref_corpus(spark, sf_dir).select("vec_id", "embedding").cache()
-        corpus.count()
-        assigned, centroids = kmeans_assign(corpus, k=REF_CLUSTERS, seed=42)
-        assigned = assigned.localCheckpoint(eager=True)
-        centroids = centroids.localCheckpoint(eager=True)
-        corpus.unpersist()
-        _REF_KMEANS_CACHE[key] = (assigned, centroids)
-    return _REF_KMEANS_CACHE[key]
+    corpus = ref_corpus(spark, sf_dir).select("vec_id", "embedding").cache()
+    corpus.count()
+    assigned, centroids = kmeans_assign(corpus, k=REF_CLUSTERS, seed=42)
+    assigned = assigned.localCheckpoint(eager=True)
+    centroids = centroids.localCheckpoint(eager=True)
+    corpus.unpersist()
+    return (assigned, centroids)
 
 
 def refshape_kmeans_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -207,23 +188,18 @@ def refshape_kmeans_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the SAME NN-descent core and beam-walk core (operators/graph_ann —
 # corpus-parameterized, so nothing is copied) run over the derived
 # 384-dim corpus, and the doc mapback goes through the same sink.
-_REF_NORMED_CACHE: dict[tuple[SparkSession, str], DataFrame] = {}
-_REF_GRAPH_CACHE: dict[tuple[SparkSession, str], DataFrame] = {}
-
-
+@session_state
 def refshape_normed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized normed 384-dim corpus — the graph family's
     ``fixture_normed`` posture at reference shape."""
     from gpu_accelerated_vector_indexing_spark.operators.graph_ann import _normed
 
-    key = (spark, sf_dir)
-    if key not in _REF_NORMED_CACHE:
-        df = _normed(ref_corpus(spark, sf_dir)).cache()
-        df.count()
-        _REF_NORMED_CACHE[key] = df
-    return _REF_NORMED_CACHE[key]
+    df = _normed(ref_corpus(spark, sf_dir)).cache()
+    df.count()
+    return df
 
 
+@session_state
 def refshape_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized NN-descent kNN graph over the 384-dim corpus at 128
     cells — index state, built once per (session, corpus) like
@@ -232,14 +208,11 @@ def refshape_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_knn_graph_over,
     )
 
-    key = (spark, sf_dir)
-    if key not in _REF_GRAPH_CACHE:
-        df = build_knn_graph_over(
-            ref_corpus(spark, sf_dir), refshape_normed(spark, sf_dir)
-        ).cache()
-        df.count()
-        _REF_GRAPH_CACHE[key] = df
-    return _REF_GRAPH_CACHE[key]
+    df = build_knn_graph_over(
+        ref_corpus(spark, sf_dir), refshape_normed(spark, sf_dir)
+    ).cache()
+    df.count()
+    return df
 
 
 def refshape_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -258,21 +231,16 @@ def refshape_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus-derived state collected once per (session, corpus), the
 # graph_ann.fixture_entry_ids posture over ref_corpus: drops one
 # groupBy+collect job per walk serve (r11).
-_REF_ENTRY_IDS_CACHE: dict[tuple[SparkSession, str], list[int]] = {}
-
-
+@session_state
 def ref_entry_ids(spark: SparkSession, sf_dir: str) -> list[int]:
-    key = (spark, sf_dir)
-    if key not in _REF_ENTRY_IDS_CACHE:
-        from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
-            _entry_points,
-        )
+    from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
+        _entry_points,
+    )
 
-        _REF_ENTRY_IDS_CACHE[key] = sorted(
-            r.vec_id
-            for r in _entry_points(ref_corpus(spark, sf_dir)).collect()
-        )
-    return _REF_ENTRY_IDS_CACHE[key]
+    return sorted(
+        r.vec_id
+        for r in _entry_points(ref_corpus(spark, sf_dir)).collect()
+    )
 
 
 def refshape_graph_beam(
@@ -308,23 +276,18 @@ def refshape_graph_beam(
     return map_to_docs(topk, load_table(spark, sf_dir, "documents"))
 
 
-_REF_BQ_STATE: dict[tuple[SparkSession, str], DataFrame] = {}
-
-
+@session_state
 def refshape_bq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized multi-word sign codes over the 384-dim corpus:
     ``(vec_id, codes ARRAY<BIGINT>[6])`` — 48 bytes/vector vs 3072
     float64 bytes; index state like ``graph_ann.fixture_bq_codes``."""
-    key = (spark, sf_dir)
-    if key not in _REF_BQ_STATE:
-        df = (
-            ref_corpus(spark, sf_dir)
-            .select("vec_id", bq_codes(F.col("embedding"), REF_DIM).alias("codes"))
-            .cache()
-        )
-        df.count()
-        _REF_BQ_STATE[key] = df
-    return _REF_BQ_STATE[key]
+    df = (
+        ref_corpus(spark, sf_dir)
+        .select("vec_id", bq_codes(F.col("embedding"), REF_DIM).alias("codes"))
+        .cache()
+    )
+    df.count()
+    return df
 
 
 def refshape_graph_bq(
@@ -409,31 +372,20 @@ def refshape_graph_bq(
     )
 
 
-_REF_GRAPH_INDEX_DIR: dict[tuple[SparkSession, str], str] = {}
-
-
+@session_state
 def refshape_graph_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the PRETRAINED reference-shape graph index once per
     (session, corpus): edges + normed corpus, the layout
     ``engine.GraphEngine.from_pretrained`` consumes — the graph twin of
     :func:`refshape_index`."""
     from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
-        ensure_graph_index,
+        new_graph_index,
     )
 
-    key = (spark, sf_dir)
-    if key not in _REF_GRAPH_INDEX_DIR:
-        corpus_normed = ref_corpus(spark, sf_dir).select("vec_id", "label").join(
-            refshape_normed(spark, sf_dir), "vec_id"
-        )
-        ensure_graph_index(
-            _REF_GRAPH_INDEX_DIR,
-            key,
-            "gpu_accelerated_vector_indexing_refshape_graphindex_",
-            refshape_graph(spark, sf_dir),
-            corpus_normed,
-        )
-    return _REF_GRAPH_INDEX_DIR[key]
+    corpus_normed = ref_corpus(spark, sf_dir).select("vec_id", "label").join(
+        refshape_normed(spark, sf_dir), "vec_id"
+    )
+    return new_graph_index("refshape_graphindex", refshape_graph(spark, sf_dir), corpus_normed)
 
 
 def refshape_graph_cli(

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from gpu_accelerated_vector_indexing_spark.memo import session_state
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
 
@@ -487,7 +488,6 @@ def join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # bucketed mirrors written once per (session, sf_dir) — bucketing is a
 # STORAGE layout decision (like the IVF partitionBy), not per-query work
-_BUCKETED: dict[tuple[SparkSession, str], tuple[str, str]] = {}
 _N_BUCKETS = 8
 _WRITER_SIDECAR = "_writer_starttime"  # underscore prefix: hidden to FileIndex
 
@@ -509,6 +509,7 @@ def _proc_starttime(pid: int) -> int | None:
         return None
 
 
+@session_state
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """lineitem/orders mirrored as bucketBy(orderkey) managed tables.
 
@@ -519,159 +520,156 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     zero-exchange merge join. The write happens once per session per
     corpus, mirroring a real warehouse layout decision.
     """
-    key = (spark, sf_dir)
-    if key not in _BUCKETED:
-        import shutil
-        from urllib.parse import urlparse
+    import shutil
+    from urllib.parse import urlparse
 
-        import os
-        import re
+    import os
+    import re
 
-        # pid in the name: two engine PROCESSES sharing a warehouse dir
-        # (e.g. the pytest suite and the gate sweep side by side) must
-        # not drop/rewrite each other's managed tables mid-read
-        base_tag = "".join(c if c.isalnum() else "_" for c in sf_dir.rstrip("/")).strip("_")
-        tag = f"{base_tag}_{os.getpid()}"
-        lt, ot = f"lineitem_bkt_{tag}", f"orders_bkt_{tag}"
-        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        # prune leftovers: our own names, any legacy un-suffixed pair,
-        # and siblings whose writer pid is dead — pid-suffixed names
-        # would otherwise accumulate one orphaned pair per process
-        # every *_bkt_* name ends in digits (the sf tag for legacy
-        # un-suffixed names, the writer pid for current ones) — parse
-        # the trailing run as a pid. Only a POSITIVELY-dead pid (ESRCH)
-        # or a directory past the age threshold is pruned; anything
-        # young and alive-or-unsignalable is left, so a legacy tag
-        # whose digits collide with a live pid (e.g. "..._01" → init)
-        # survives here — the current corpus's legacy pair is dropped
-        # explicitly below instead. The age backstop covers pid
-        # recycling: a dead writer whose pid now names an unrelated
-        # long-lived process would otherwise orphan its pair forever.
-        # The threshold is a week — far past any plausible LIVE engine
-        # session on one host. Past it the liveness probe STILL runs
-        # (dropping a truly-live >7-day session's tables would strand
-        # its _BUCKETED memo); an old-but-live pid is only pruned when
-        # its process image shows it cannot be an engine session.
-        # The middle segment is restricted to identifier characters so
-        # every matched name interpolates safely into DROP TABLE
-        # (base_tag is sanitized to [alnum_], so ours always match).
-        stale = re.compile(r"^(?:lineitem|orders)_bkt_[a-z0-9_]*_(\d+)$")
-        max_age_s = 7 * 24 * 3600  # dir mtime = creation time: write-once tables
-        import time
+    # pid in the name: two engine PROCESSES sharing a warehouse dir
+    # (e.g. the pytest suite and the gate sweep side by side) must
+    # not drop/rewrite each other's managed tables mid-read
+    base_tag = "".join(c if c.isalnum() else "_" for c in sf_dir.rstrip("/")).strip("_")
+    tag = f"{base_tag}_{os.getpid()}"
+    lt, ot = f"lineitem_bkt_{tag}", f"orders_bkt_{tag}"
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    # prune leftovers: our own names, any legacy un-suffixed pair,
+    # and siblings whose writer pid is dead — pid-suffixed names
+    # would otherwise accumulate one orphaned pair per process
+    # every *_bkt_* name ends in digits (the sf tag for legacy
+    # un-suffixed names, the writer pid for current ones) — parse
+    # the trailing run as a pid. Only a POSITIVELY-dead pid (ESRCH)
+    # or a directory past the age threshold is pruned; anything
+    # young and alive-or-unsignalable is left, so a legacy tag
+    # whose digits collide with a live pid (e.g. "..._01" → init)
+    # survives here — the current corpus's legacy pair is dropped
+    # explicitly below instead. The age backstop covers pid
+    # recycling: a dead writer whose pid now names an unrelated
+    # long-lived process would otherwise orphan its pair forever.
+    # The threshold is a week — far past any plausible LIVE engine
+    # session on one host. Past it the liveness probe STILL runs
+    # (dropping a truly-live >7-day session's tables would strand
+    # its _bucketed_tables state); an old-but-live pid is only pruned when
+    # its process image shows it cannot be an engine session.
+    # The middle segment is restricted to identifier characters so
+    # every matched name interpolates safely into DROP TABLE
+    # (base_tag is sanitized to [alnum_], so ours always match).
+    stale = re.compile(r"^(?:lineitem|orders)_bkt_[a-z0-9_]*_(\d+)$")
+    max_age_s = 7 * 24 * 3600  # dir mtime = creation time: write-once tables
+    import time
 
-        for entry in os.listdir(warehouse) if os.path.isdir(warehouse) else []:
-            m = stale.match(entry)
-            if not m:
-                continue
-            pid = int(m.group(1))
-            if pid == os.getpid():
-                # OUR tables for another corpus, tracked by the live
-                # _BUCKETED memo — pruning them here strands the memo
-                # on dropped names (observed: a later memo hit read a
-                # table this prune had deleted)
-                continue
+    for entry in os.listdir(warehouse) if os.path.isdir(warehouse) else []:
+        m = stale.match(entry)
+        if not m:
+            continue
+        pid = int(m.group(1))
+        if pid == os.getpid():
+            # OUR tables for another corpus, tracked by the live
+            # _bucketed_tables state — pruning them here strands the memo
+            # on dropped names (observed: a later memo hit read a
+            # table this prune had deleted)
+            continue
+        try:
+            age = time.time() - os.path.getmtime(f"{warehouse}/{entry}")
+        except OSError:
+            age = 0.0
+        try:
+            os.kill(pid, 0)
+            alive = True
+        except ProcessLookupError:
+            alive = False  # ESRCH: positively dead — safe to prune
+        except OSError:
+            # EPERM et al.: the pid EXISTS but we can't signal it
+            # (another user's live process) — treat as alive
+            alive = True
+        if alive:
+            # Writer-identity check: the table dir
+            # carries a sidecar with the WRITER's (pid, starttime);
+            # if the process now at this pid has a different start
+            # time the pid was recycled — the writer is positively
+            # dead and the pair prunes at any age. A matching start
+            # time means the ACTUAL writer is still alive: never
+            # prune (dropping its tables would strand its memoized
+            # names mid-session).
+            recorded: int | None = None
             try:
-                age = time.time() - os.path.getmtime(f"{warehouse}/{entry}")
-            except OSError:
-                age = 0.0
-            try:
-                os.kill(pid, 0)
-                alive = True
-            except ProcessLookupError:
-                alive = False  # ESRCH: positively dead — safe to prune
-            except OSError:
-                # EPERM et al.: the pid EXISTS but we can't signal it
-                # (another user's live process) — treat as alive
-                alive = True
+                with open(f"{warehouse}/{entry}/{_WRITER_SIDECAR}") as fh:
+                    recorded = int(fh.read().strip())
+            except (OSError, ValueError):
+                recorded = None
+            if recorded is not None:
+                current = _proc_starttime(pid)
+                if current is not None and current == recorded:
+                    continue  # the genuine writer, still running
+                if current is not None and current != recorded:
+                    alive = False  # recycled pid: writer is dead
+                # current is None: can't inspect — fall through to
+                # the age-gated legacy posture below
             if alive:
-                # Writer-identity check (r5 advisor): the table dir
-                # carries a sidecar with the WRITER's (pid, starttime);
-                # if the process now at this pid has a different start
-                # time the pid was recycled — the writer is positively
-                # dead and the pair prunes at any age. A matching start
-                # time means the ACTUAL writer is still alive: never
-                # prune (dropping its tables would strand its _BUCKETED
-                # memo mid-session, the exact r4-ADVICE hazard).
-                recorded: int | None = None
-                try:
-                    with open(f"{warehouse}/{entry}/{_WRITER_SIDECAR}") as fh:
-                        recorded = int(fh.read().strip())
-                except (OSError, ValueError):
-                    recorded = None
-                if recorded is not None:
-                    current = _proc_starttime(pid)
-                    if current is not None and current == recorded:
-                        continue  # the genuine writer, still running
-                    if current is not None and current != recorded:
-                        alive = False  # recycled pid: writer is dead
-                    # current is None: can't inspect — fall through to
-                    # the age-gated legacy posture below
-                if alive:
-                    if age <= max_age_s:
-                        continue  # young + live sibling process — leave it
-                    # Sidecar-less legacy names past the backstop:
-                    # disambiguate via the process image (coarse), with
-                    # a HARD outer ceiling bounding the orphan leak.
-                    if age <= 4 * max_age_s:  # (7d, 28d]: image-gated keep
-                        try:
-                            with open(f"/proc/{pid}/cmdline", "rb") as fh:
-                                cmd = fh.read().lower()
-                            if b"python" in cmd or b"java" in cmd:
-                                continue  # plausibly a live engine session
-                        except OSError:
-                            continue  # can't inspect — never prune on ambiguity
-                    # > 28 days: prune unconditionally (bounded-leak backstop)
-            # sidecar goes FIRST (r6 advisor): if the rmtree below is
-            # interrupted, the surviving half-pruned directory must not
-            # retain the old writer identity — a recycled pid matching
-            # a stale sidecar would read as "genuine writer, still
-            # running" and keep the orphan forever. Sidecar-less dirs
-            # fall to the age-gated legacy posture instead.
+                if age <= max_age_s:
+                    continue  # young + live sibling process — leave it
+                # Sidecar-less legacy names past the backstop:
+                # disambiguate via the process image (coarse), with
+                # a HARD outer ceiling bounding the orphan leak.
+                if age <= 4 * max_age_s:  # (7d, 28d]: image-gated keep
+                    try:
+                        with open(f"/proc/{pid}/cmdline", "rb") as fh:
+                            cmd = fh.read().lower()
+                        if b"python" in cmd or b"java" in cmd:
+                            continue  # plausibly a live engine session
+                    except OSError:
+                        continue  # can't inspect — never prune on ambiguity
+                # > 28 days: prune unconditionally (bounded-leak backstop)
+        # sidecar goes FIRST: if the rmtree below is
+        # interrupted, the surviving half-pruned directory must not
+        # retain the old writer identity — a recycled pid matching
+        # a stale sidecar would read as "genuine writer, still
+        # running" and keep the orphan forever. Sidecar-less dirs
+        # fall to the age-gated legacy posture instead.
+        try:
+            os.remove(f"{warehouse}/{entry}/{_WRITER_SIDECAR}")
+        except OSError:
+            pass
+        spark.sql(f"DROP TABLE IF EXISTS {entry}")
+        shutil.rmtree(f"{warehouse}/{entry}", ignore_errors=True)
+    # our own names + this corpus's legacy un-suffixed pair (whose
+    # trailing sf digits parse as a live low pid above)
+    for t in (lt, ot, f"lineitem_bkt_{base_tag}", f"orders_bkt_{base_tag}"):
+        try:
+            os.remove(f"{warehouse}/{t}/{_WRITER_SIDECAR}")
+        except OSError:
+            pass
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
+    (
+        load_table(spark, sf_dir, "lineitem")
+        .write.mode("overwrite")
+        .bucketBy(_N_BUCKETS, "l_orderkey")
+        .sortBy("l_orderkey")
+        .saveAsTable(lt)
+    )
+    (
+        load_table(spark, sf_dir, "orders")
+        .write.mode("overwrite")
+        .bucketBy(_N_BUCKETS, "o_orderkey")
+        .sortBy("o_orderkey")
+        .saveAsTable(ot)
+    )
+    # stamp the writer identity so a future prune checks THIS
+    # process, not whatever later recycles our pid
+    own = _proc_starttime(os.getpid())
+    if own is not None:
+        for t in (lt, ot):
             try:
-                os.remove(f"{warehouse}/{entry}/{_WRITER_SIDECAR}")
+                # atomic via rename: a reader/pruner can never see
+                # a torn half-written identity
+                tmp = f"{warehouse}/{t}/.{_WRITER_SIDECAR}.tmp"
+                with open(tmp, "w") as fh:
+                    fh.write(str(own))
+                os.replace(tmp, f"{warehouse}/{t}/{_WRITER_SIDECAR}")
             except OSError:
-                pass
-            spark.sql(f"DROP TABLE IF EXISTS {entry}")
-            shutil.rmtree(f"{warehouse}/{entry}", ignore_errors=True)
-        # our own names + this corpus's legacy un-suffixed pair (whose
-        # trailing sf digits parse as a live low pid above)
-        for t in (lt, ot, f"lineitem_bkt_{base_tag}", f"orders_bkt_{base_tag}"):
-            try:
-                os.remove(f"{warehouse}/{t}/{_WRITER_SIDECAR}")
-            except OSError:
-                pass
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .write.mode("overwrite")
-            .bucketBy(_N_BUCKETS, "l_orderkey")
-            .sortBy("l_orderkey")
-            .saveAsTable(lt)
-        )
-        (
-            load_table(spark, sf_dir, "orders")
-            .write.mode("overwrite")
-            .bucketBy(_N_BUCKETS, "o_orderkey")
-            .sortBy("o_orderkey")
-            .saveAsTable(ot)
-        )
-        # stamp the writer identity so a future prune checks THIS
-        # process, not whatever later recycles our pid
-        own = _proc_starttime(os.getpid())
-        if own is not None:
-            for t in (lt, ot):
-                try:
-                    # atomic via rename: a reader/pruner can never see
-                    # a torn half-written identity (r6 advisor)
-                    tmp = f"{warehouse}/{t}/.{_WRITER_SIDECAR}.tmp"
-                    with open(tmp, "w") as fh:
-                        fh.write(str(own))
-                    os.replace(tmp, f"{warehouse}/{t}/{_WRITER_SIDECAR}")
-                except OSError:
-                    pass  # sidecar is best-effort; prune falls back to legacy
-        _BUCKETED[key] = (lt, ot)
-    return _BUCKETED[key]
+                pass  # sidecar is best-effort; prune falls back to legacy
+    return (lt, ot)
 
 
 def join_bucketed_colocate(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
 TOKEN_RE = "[A-Za-z0-9]+"
@@ -392,27 +393,22 @@ PACK_SEQ_LEN = 512  # fixture-sized training sequences (2048-8192 at prod)
 # id-span probe — memoized per (session, corpus) so the regex token
 # counting runs once, not three times per call (and not once per call
 # across the gate + N bench runs).
-_PACK_COUNTS_STATE: dict[tuple[SparkSession, str], DataFrame] = {}
-
-
+@session_state
 def _pack_counts_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir)
-    if key not in _PACK_COUNTS_STATE:
-        from gpu_accelerated_vector_indexing_spark.operators.dedup import _spread
+    from gpu_accelerated_vector_indexing_spark.operators.dedup import _spread
 
-        df = (
-            _spread(load_table(spark, sf_dir, "documents"))
-            .select(
-                "doc_id",
-                F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_RE), 0))
-                .cast("long")
-                .alias("n_toks"),
-            )
-            .cache()
+    df = (
+        _spread(load_table(spark, sf_dir, "documents"))
+        .select(
+            "doc_id",
+            F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_RE), 0))
+            .cast("long")
+            .alias("n_toks"),
         )
-        df.count()
-        _PACK_COUNTS_STATE[key] = df
-    return _PACK_COUNTS_STATE[key]
+        .cache()
+    )
+    df.count()
+    return df
 
 
 def range_prefix_sum(
@@ -612,6 +608,7 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str, top_n: int = BPE_MERG
 
 BPE_TRAIN_ROUNDS = 4
 
+
 # The character-level base segmentation is TOKENIZER-TRAINING STATE:
 # every round of every BPE query re-reads it, so it is tokenized,
 # spread across cores (fixture single-split pathology), and cache()d
@@ -637,25 +634,20 @@ BPE_TRAIN_ROUNDS = 4
 # per-occurrence form while each round's pair explode + replace touch
 # |vocabulary| rows instead of |token occurrences| (~40× fewer at
 # sf0.1; the ratio grows with corpus size since vocabulary saturates).
-_BPE_WORDS_STATE: dict[tuple[SparkSession, str], DataFrame] = {}
-
-
+@session_state
 def _bpe_words_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir)
-    if key not in _BPE_WORDS_STATE:
-        from gpu_accelerated_vector_indexing_spark.operators.dedup import _spread
+    from gpu_accelerated_vector_indexing_spark.operators.dedup import _spread
 
-        docs = _spread(load_table(spark, sf_dir, "documents"))
-        seg0 = F.regexp_replace(F.col("tok"), "(.)", "|$1|")
-        df = (
-            docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
-            .groupBy(seg0.alias("seg"))
-            .agg(F.count("*").alias("cnt"))
-            .cache()
-        )
-        df.count()
-        _BPE_WORDS_STATE[key] = df
-    return _BPE_WORDS_STATE[key]
+    docs = _spread(load_table(spark, sf_dir, "documents"))
+    seg0 = F.regexp_replace(F.col("tok"), "(.)", "|$1|")
+    df = (
+        docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
+        .groupBy(seg0.alias("seg"))
+        .agg(F.count("*").alias("cnt"))
+        .cache()
+    )
+    df.count()
+    return df
 
 
 def _bpe_syms() -> Column:
@@ -716,7 +708,7 @@ def bpe_train_merges(
     """Distributed BPE tokenizer training (Sennrich et al. 2016): the
     first ``n_rounds`` greedy merge rules learned from the corpus, with
     the re-segmentation between rounds done IN-PLAN (see the
-    representation note above `_BPE_WORDS_STATE`). Per round: pair
+    representation note above `_bpe_words_state`). Per round: pair
     counts are a word-count-shaped shuffle bounded by pair vocabulary;
     the winning rule is a ≤1-row driver collect (same device as the
     IVF coarse probes); the rewrite is a codegen'd projection. No
@@ -769,18 +761,18 @@ def bpe_compression_curve(
 # corpus) — the production posture (a tokenizer trains once and every
 # encode job loads the rule list), and what keeps the encode query from
 # paying 4 training rounds of driver round-trips per run.
-_BPE_RULES_STATE: dict[tuple[SparkSession, str], list[tuple[str, str]]] = {}
-
-
+@session_state
 def bpe_rules(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:
-    key = (spark, sf_dir)
-    if key not in _BPE_RULES_STATE:
-        rows = bpe_train_merges(spark, sf_dir).orderBy("step").collect()
-        _BPE_RULES_STATE[key] = [(r.left_sym, r.right_sym) for r in rows]
-    return _BPE_RULES_STATE[key]
+    rows = bpe_train_merges(spark, sf_dir).orderBy("step").collect()
+    return [(r.left_sym, r.right_sym) for r in rows]
 
 
-_BPE_STATE_DIR: dict[tuple[SparkSession, str], str] = {}
+@session_state
+def tokenizer_state_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The trained merge rules persisted once per (session, corpus)."""
+    out = state_dir("tokenizer")
+    bpe_train_merges(spark, sf_dir).write.mode("overwrite").parquet(f"{out}/merges")
+    return out
 
 
 def tokenizer_state_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -792,16 +784,7 @@ def tokenizer_state_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     and every encode job loads it). The oracle replays the training
     from raw documents, so a single flipped rule, reordered step, or
     perturbed count anywhere in the persisted file fails the hash."""
-    import tempfile
-
-    key = (spark, sf_dir)
-    if key not in _BPE_STATE_DIR:
-        out = tempfile.mkdtemp(prefix="gpu_accelerated_vector_indexing_tokenizer_")
-        bpe_train_merges(spark, sf_dir).write.mode("overwrite").parquet(
-            f"{out}/merges"
-        )
-        _BPE_STATE_DIR[key] = out
-    return spark.read.parquet(f"{_BPE_STATE_DIR[key]}/merges").select(
+    return spark.read.parquet(f"{tokenizer_state_dir(spark, sf_dir)}/merges").select(
         "step", "left_sym", "right_sym", "n_occurrences"
     )
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from functools import partial
 
+from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
 from gpu_accelerated_vector_indexing_spark.operators import index_build, ivf
 
 QUERY_ID = 0
@@ -81,8 +82,14 @@ def _centroids_table(spark, sf_dir):
 # KMeans + the cluster-partitioned write, later calls serve from the
 # persisted layout (r10: the previous form re-fit and re-wrote the
 # whole index into a FRESH temp dir on every call — 28 jobs/call warm).
-# Evicted by memo.clear_session_caches like every _*DIR layout.
-_ENGINE_INDEX_DIR: dict = {}
+# Evicted by memo.clear_session_caches like every session state.
+@session_state
+def _engine_index_dir(spark, sf_dir):
+    from gpu_accelerated_vector_indexing_spark.operators.index_build import build_partitioned_index
+
+    out = state_dir("ivf_index")
+    build_partitioned_index(spark, sf_dir, out, k=N_CLUSTERS, seed=42)
+    return out
 
 
 def _engine_full_probe(spark, sf_dir):
@@ -90,18 +97,10 @@ def _engine_full_probe(spark, sf_dir):
     write), then search it through the end-user facade at
     n_probe = n_clusters — which must equal exact brute force, so the
     whole build→facade→search path sits under the value-hash gate."""
-    import tempfile
-
     from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
-    from gpu_accelerated_vector_indexing_spark.operators.index_build import build_partitioned_index
     from gpu_accelerated_vector_indexing_spark.operators.ivf import fixture_qvec
 
-    key = (spark, sf_dir)
-    if key not in _ENGINE_INDEX_DIR:
-        out = tempfile.mkdtemp(prefix="gpu_accelerated_vector_indexing_ivf_index_")
-        build_partitioned_index(spark, sf_dir, out, k=N_CLUSTERS, seed=42)
-        _ENGINE_INDEX_DIR[key] = out
-    eng = IVFEngine.from_pretrained(spark, _ENGINE_INDEX_DIR[key], n_probe=N_CLUSTERS)
+    eng = IVFEngine.from_pretrained(spark, _engine_index_dir(spark, sf_dir), n_probe=N_CLUSTERS)
     return eng.search(fixture_qvec(spark, sf_dir, QUERY_ID), k=K)
 
 

@@ -18,6 +18,7 @@ key), so every entry in this family carries a full oracle.
 
 from __future__ import annotations
 
+from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
 from gpu_accelerated_vector_indexing_spark.streaming import windows as SW
 
 _EV = """
@@ -127,9 +128,61 @@ def _roundtrip(spark, sf_dir):
 
 QUERIES["sources_roundtrip"] = _roundtrip
 
-# (session, sf_dir) → exported per-cluster .bin layout for the
-# float32bin stream — a _*DIR memo (memo.clear_session_caches rmtrees it)
-_BINSTREAM_DIR: dict = {}
+
+def _embeddings_fingerprint(sf_dir):
+    """Content fingerprint of the source parquet: (name, size, mtime)
+    of every file."""
+    import os
+
+    src = os.path.join(sf_dir, "embeddings.parquet")
+    items = []
+    if os.path.isdir(src):
+        for root, _dirs, files in os.walk(src):
+            for f in sorted(files):
+                p = os.path.join(root, f)
+                st = os.stat(p)
+                items.append((os.path.relpath(p, src), st.st_size, st.st_mtime_ns))
+    elif os.path.exists(src):
+        st = os.stat(src)
+        items.append((src, st.st_size, st.st_mtime_ns))
+    return tuple(items)
+
+
+# The exported .bin layout is INDEX STATE: written once per (session,
+# corpus), so warm calls stream+decode+aggregate against the persisted
+# layout instead of re-running the export write job per call (the
+# engine_full_probe build-once/serve-many posture); the stream itself
+# re-reads and re-decodes every file every call. The value carries the
+# source's content fingerprint: regenerating the fixture in place
+# mid-session releases the superseded export and re-exports, instead of
+# streaming the stale layout or leaving it on disk.
+@session_state
+def _bin_export(spark, sf_dir):
+    """``(export_dir, fingerprint)`` — the corpus as per-cluster ``.bin``
+    files, exported executor-side, one task per cluster file (the
+    reference's unsplittable format) — no driver collect."""
+    from gpu_accelerated_vector_indexing_spark.sources.binary import (
+        write_float32_bin_clustered,
+    )
+    from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
+
+    fingerprint = _embeddings_fingerprint(sf_dir)
+    out = state_dir("binstream")
+    write_float32_bin_clustered(
+        load_table(spark, sf_dir, "embeddings").select("label", "vec_id", "embedding"),
+        out,
+    )
+    return out, fingerprint
+
+
+def _bin_export_dir(spark, sf_dir):
+    from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
+
+    held = _bin_export.lookup(spark, sf_dir)
+    if held is not None and held[1] != _embeddings_fingerprint(sf_dir):
+        _bin_export.evict(spark, sf_dir)
+        load_table.evict(spark, sf_dir, "embeddings")  # its file listing is stale too
+    return _bin_export(spark, sf_dir)[0]
 
 
 def _bin_stream(spark, sf_dir):
@@ -146,50 +199,11 @@ def _bin_stream(spark, sf_dir):
     sorted-filename convention, embedding.py:26), so the id checksum is
     N(N-1)/2 — restated arithmetically in the oracle.
     """
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from gpu_accelerated_vector_indexing_spark.sources.bin_datasource import register
-    from gpu_accelerated_vector_indexing_spark.sources.binary import (
-        write_float32_bin_clustered,
-    )
-    from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
-    # the exported .bin layout is INDEX STATE: written once per
-    # (session, corpus) — the _*DIR memo convention memo.py evicts —
-    # so warm calls stream+decode+aggregate against the persisted
-    # layout instead of re-running the export write job per call (the
-    # engine_full_probe build-once/serve-many posture); the stream
-    # itself re-reads and re-decodes every file every call.
-    # The key carries a CONTENT FINGERPRINT of the source parquet
-    # (names + sizes + mtimes), not just the directory path (ADVICE
-    # r10): regenerating the fixture in place mid-session now re-exports
-    # instead of silently streaming the stale layout.
-    import os as _os
-
-    src = _os.path.join(sf_dir, "embeddings.parquet")
-    fp_items = []
-    if _os.path.isdir(src):
-        for root, _dirs, files in _os.walk(src):
-            for f in sorted(files):
-                p = _os.path.join(root, f)
-                st = _os.stat(p)
-                fp_items.append((_os.path.relpath(p, src), st.st_size, st.st_mtime_ns))
-    elif _os.path.exists(src):
-        st = _os.stat(src)
-        fp_items.append((src, st.st_size, st.st_mtime_ns))
-    key = (spark, sf_dir, tuple(fp_items))
-    if key not in _BINSTREAM_DIR:
-        out = tempfile.mkdtemp(prefix="gpu_accelerated_vector_indexing_binstream_")
-        # executor-side export, one task per cluster file (the reference's
-        # unsplittable format) — no driver collect anywhere on this path
-        write_float32_bin_clustered(
-            load_table(spark, sf_dir, "embeddings").select("label", "vec_id", "embedding"),
-            out,
-        )
-        _BINSTREAM_DIR[key] = out
-    out = _BINSTREAM_DIR[key]
+    out = _bin_export_dir(spark, sf_dir)
 
     register(spark)
     with SW._memory_sink_counter:
@@ -233,8 +247,6 @@ def _npy_roundtrip(spark, sf_dir):
     ``read_npy`` (self-describing header parse), and checksum — count,
     reassigned-id sum and decimal component sum must match the parquet
     source (same contract as ``sources_bin_stream``)."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from gpu_accelerated_vector_indexing_spark.sources.binary import (
@@ -243,7 +255,7 @@ def _npy_roundtrip(spark, sf_dir):
     )
     from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
-    out = tempfile.mkdtemp(prefix="gpu_accelerated_vector_indexing_npy_")
+    out = state_dir("npy")
     write_npy_clustered(
         load_table(spark, sf_dir, "embeddings").select("label", "vec_id", "embedding"),
         out,
@@ -280,8 +292,6 @@ def _articles_roundtrip(spark, sf_dir):
     re-derived positional id to its text length, so any id↔content
     misalignment (wrong file order, wrong in-file order) breaks the
     hash, not just lost rows."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from gpu_accelerated_vector_indexing_spark.sources.articles import (
@@ -290,7 +300,7 @@ def _articles_roundtrip(spark, sf_dir):
     )
     from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
-    out = tempfile.mkdtemp(prefix="gpu_accelerated_vector_indexing_articles_")
+    out = state_dir("articles")
     write_article_dir(load_table(spark, sf_dir, "documents"), out)
     arts = read_article_dir(spark, out)
     return arts.agg(

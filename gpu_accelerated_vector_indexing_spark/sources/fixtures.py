@@ -14,6 +14,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gpu_accelerated_vector_indexing_spark.memo import session_state
 from gpu_accelerated_vector_indexing_spark.session import tune_session
 
 TABLES = (
@@ -30,14 +31,12 @@ TABLES = (
 )
 
 
-# (spark, sf_dir, name) → relation. DataFrames are immutable and lazy, so
-# handing the same object to every caller is safe; memoizing skips the
+# Memoized per (spark, sf_dir, name). DataFrames are immutable and lazy,
+# so handing the same object to every caller is safe; memoizing skips the
 # per-call footer read + schema inference that spark.read.parquet does on
 # the driver (measurable across a 75-query registry run). Keyed on the
 # session OBJECT so a stopped/recreated session never serves stale plans.
-_RELATION_CACHE: dict[tuple[SparkSession, str, str], DataFrame] = {}
-
-
+@session_state
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan of one fixture table.
 
@@ -47,13 +46,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}; known: {TABLES}")
-    key = (spark, sf_dir, name)
-    if key not in _RELATION_CACHE:
-        if name == "events":
-            _RELATION_CACHE[key] = _load_events(spark, sf_dir)
-        else:
-            _RELATION_CACHE[key] = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    return _RELATION_CACHE[key]
+    if name == "events":
+        return _load_events(spark, sf_dir)
+    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,11 +14,11 @@ source, or the format pair corrupted data.
 from __future__ import annotations
 
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gpu_accelerated_vector_indexing_spark.memo import state_dir
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
 _SCHEMA = "event_id long, user_id long, event_type string, value double"
@@ -38,7 +38,7 @@ def roundtrip_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type", "value"
     )
     frames = []
-    tmp = tempfile.mkdtemp(prefix="gpu_accelerated_vector_indexing_fmt_")
+    tmp = state_dir("fmt")
     try:
         for fmt in FORMATS:
             path = f"{tmp}/{fmt}"
@@ -109,10 +109,8 @@ def jsonl_shards_roundtrip(
     (``sum_keyed_len`` = Σ doc_id·len(text)), so a row landing in the
     wrong shard — not just a lost row — breaks the value hash.
     """
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="gpu_accelerated_vector_indexing_jsonl_")
+    out = state_dir("jsonl")
     (
         docs.withColumn("shard", F.col("doc_id") % n_shards)
         .repartition(n_shards, "shard")

@@ -9,10 +9,11 @@ from __future__ import annotations
 
 import glob as _glob
 import os
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from gpu_accelerated_vector_indexing_spark.memo import state_dir
 
 EMB_STREAM_SCHEMA = "vec_id long, embedding array<float>, label int"
 
@@ -109,7 +110,7 @@ def embeddings_stream(
 def drain_accumulate(
     src: DataFrame,
     transform: Callable[[DataFrame], DataFrame],
-    checkpoint_prefix: str,
+    checkpoint_tag: str,
 ) -> DataFrame:
     """Run ``src`` to completion, applying ``transform`` to each
     micro-batch and accumulating the results with ``localCheckpoint``
@@ -125,7 +126,7 @@ def drain_accumulate(
 
     q = (
         src.writeStream.outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix=checkpoint_prefix))
+        .option("checkpointLocation", state_dir(checkpoint_tag))
         .foreachBatch(fold)
         .start()
     )

@@ -72,5 +72,5 @@ def streaming_dsir_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with scoped_stream_partitions(spark, sf_dir, "documents"):
         return drain_accumulate(
-            raw, score_batch, "gpu_accelerated_vector_indexing_sdsir_"
+            raw, score_batch, "sdsir"
         )

@@ -88,6 +88,6 @@ def streaming_graph_attach(
 
     with scoped_stream_partitions(spark, sf_dir, "embeddings"):
         attached = drain_accumulate(
-            new_ids, attach, "gpu_accelerated_vector_indexing_sgraph_"
+            new_ids, attach, "sgraph"
         )
     return _rank_digest(attached)

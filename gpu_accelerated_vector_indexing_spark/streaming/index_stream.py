@@ -42,18 +42,15 @@ exactly where a serving system wants it).
 
 from __future__ import annotations
 
-import tempfile
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
 from gpu_accelerated_vector_indexing_spark.streaming._drain import documents_stream
 
 _lock = threading.Lock()
-# (spark, sf_dir) → refreshed index dir, once per session/corpus like
-# the batch twin's memo
-_STREAM_INDEX_DIR: dict[tuple[SparkSession, str], str] = {}
 
 
 def _classified(batch: DataFrame) -> DataFrame:
@@ -195,10 +192,7 @@ def _drain_cycle(spark: SparkSession, sf_dir: str, out: str, classifier, gen: in
     q = (
         documents_stream(spark, sf_dir)
         .writeStream.outputMode("append")
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="gpu_accelerated_vector_indexing_sidx_ckpt_"),
-        )
+        .option("checkpointLocation", state_dir("sidx_ckpt"))
         .foreachBatch(fold)
         .start()
     )
@@ -208,18 +202,15 @@ def _drain_cycle(spark: SparkSession, sf_dir: str, out: str, classifier, gen: in
         q.stop()
 
 
+# the refreshed index dir, once per session/corpus like the batch twin
+@session_state
 def _refreshed_dir(spark: SparkSession, sf_dir: str) -> str:
     from gpu_accelerated_vector_indexing_spark.operators.index_build import (
         build_base_snapshot_index,
     )
 
-    key = (spark, sf_dir)
-    if key in _STREAM_INDEX_DIR:
-        return _STREAM_INDEX_DIR[key]
-
     out = build_base_snapshot_index(spark, sf_dir, batch_layout=True)
     _drain_cycle(spark, sf_dir, out, _classified, gen=1)
-    _STREAM_INDEX_DIR[key] = out
     return out
 
 
@@ -237,23 +228,16 @@ def streaming_index_refresh(spark: SparkSession, sf_dir: str, k: int = 5) -> Dat
     return serve_refreshed_index(spark, idx_dir, k)
 
 
-# (spark, sf_dir) → the gen-2 stream's own twice-refreshed layout
-_STREAM_GEN2_DIR: dict[tuple[SparkSession, str], str] = {}
-
-
+# the gen-2 stream's own twice-refreshed layout
+@session_state
 def _refreshed_dir_gen2(spark: SparkSession, sf_dir: str) -> str:
     from gpu_accelerated_vector_indexing_spark.operators.index_build import (
         build_base_snapshot_index,
     )
 
-    key = (spark, sf_dir)
-    if key in _STREAM_GEN2_DIR:
-        return _STREAM_GEN2_DIR[key]
-
     out = build_base_snapshot_index(spark, sf_dir, batch_layout=True)
     _drain_cycle(spark, sf_dir, out, _classified, gen=1)
     _drain_cycle(spark, sf_dir, out, _classified_v3, gen=2)
-    _STREAM_GEN2_DIR[key] = out
     return out
 
 
@@ -285,8 +269,6 @@ def streaming_index_refresh_gen2(
 # work — so a delete feed never touches index files at all until
 # compaction reclaims the masked rows.
 
-_STREAM_DELETE_DIR: dict[tuple[SparkSession, str], str] = {}
-
 
 def fold_delete_batch(
     spark: SparkSession, out: str, batch_df: DataFrame, batch_id: int
@@ -313,6 +295,31 @@ def fold_delete_batch(
     )
 
 
+@session_state
+def _deleted_dir(spark: SparkSession, sf_dir: str) -> str:
+    from gpu_accelerated_vector_indexing_spark.operators.index_build import (
+        build_base_snapshot_index,
+    )
+
+    out = build_base_snapshot_index(spark, sf_dir, batch_layout=True)
+
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        fold_delete_batch(spark, out, batch_df, batch_id)
+
+    q = (
+        documents_stream(spark, sf_dir)
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", state_dir("sdel_ckpt"))
+        .foreachBatch(fold)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return out
+
+
 def streaming_index_delete_where(
     spark: SparkSession, sf_dir: str, k: int = 5
 ) -> DataFrame:
@@ -321,34 +328,12 @@ def streaming_index_delete_where(
     serve definition, shared oracle): the streaming purge and the
     one-shot batch DELETE maintain the same index."""
     from gpu_accelerated_vector_indexing_spark.operators.index_build import (
-        build_base_snapshot_index,
         serve_refreshed_index,
     )
 
     with _lock:
-        key = (spark, sf_dir)
-        if key not in _STREAM_DELETE_DIR:
-            out = build_base_snapshot_index(spark, sf_dir, batch_layout=True)
-
-            def fold(batch_df: DataFrame, batch_id: int) -> None:
-                fold_delete_batch(spark, out, batch_df, batch_id)
-
-            q = (
-                documents_stream(spark, sf_dir)
-                .writeStream.outputMode("append")
-                .option(
-                    "checkpointLocation",
-                    tempfile.mkdtemp(prefix="gpu_accelerated_vector_indexing_sdel_ckpt_"),
-                )
-                .foreachBatch(fold)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-            _STREAM_DELETE_DIR[key] = out
-    return serve_refreshed_index(spark, _STREAM_DELETE_DIR[key], k)
+        idx_dir = _deleted_dir(spark, sf_dir)
+    return serve_refreshed_index(spark, idx_dir, k)
 
 
 def streaming_index_read_asof(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:

@@ -66,5 +66,5 @@ def streaming_knn(
 
     with scoped_stream_partitions(spark, sf_dir, "embeddings"):
         return drain_accumulate(
-            qstream, search_batch, "gpu_accelerated_vector_indexing_sknn_"
+            qstream, search_batch, "sknn"
         )

@@ -15,13 +15,13 @@ money column (see operators/relational.py).
 from __future__ import annotations
 
 import os
-import tempfile
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from gpu_accelerated_vector_indexing_spark.memo import state_dir
 from gpu_accelerated_vector_indexing_spark.operators.relational import dec
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 from gpu_accelerated_vector_indexing_spark.streaming._drain import (
@@ -463,7 +463,7 @@ def streaming_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = (
             _events_stream(spark, sf_dir)
             .writeStream.outputMode("update")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="gpu_accelerated_vector_indexing_fb_"))
+            .option("checkpointLocation", state_dir("fb"))
             .foreachBatch(upsert)
             .start()
         )
@@ -511,7 +511,7 @@ def streaming_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = (
             _events_stream(spark, sf_dir)
             .writeStream.outputMode("update")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="gpu_accelerated_vector_indexing_hll_"))
+            .option("checkpointLocation", state_dir("hll"))
             .foreachBatch(fold)
             .start()
         )
@@ -584,7 +584,7 @@ def streaming_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = (
             _events_stream(spark, sf_dir)
             .writeStream.outputMode("update")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="gpu_accelerated_vector_indexing_cmsstream_"))
+            .option("checkpointLocation", state_dir("cmsstream"))
             .foreachBatch(fold)
             .start()
         )
@@ -664,5 +664,5 @@ def streaming_outlier_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
         return drain_accumulate(
             events_stream(spark, sf_dir),
             flag_batch,
-            "gpu_accelerated_vector_indexing_salerts_",
+            "salerts",
         )

@@ -513,15 +513,15 @@ def test_pq_state_roundtrip_search_parity(spark):
     from pyspark.sql import functions as F
 
     from gpu_accelerated_vector_indexing_spark.operators.quantize import (
-        _PQ_STATE_DIR,
         knn_pq,
+        pq_state_dir,
         pq_state_roundtrip,
     )
 
     # materialize the state (memoized dir)
     row = pq_state_roundtrip(spark, SF_CORRECT).collect()[0]
     assert row.n_codewords == 128 and row.n_code_rows == 500
-    out = _PQ_STATE_DIR[(spark, SF_CORRECT)]
+    out = pq_state_dir.lookup(spark, SF_CORRECT)
     codes = spark.read.parquet(f"{out}/codes")
     # the persisted codes must cover the corpus 1:1 with 8 subspace ids
     assert codes.count() == 500
@@ -800,15 +800,15 @@ def test_cdc_refresh_accounting_and_live_set(spark):
         snapshot_new_docs,
     )
     from gpu_accelerated_vector_indexing_spark.operators.index_build import (
-        _CDC_REFRESH_STATE,
         _live_index_rows,
+        cdc_refresh_state,
         cdc_refreshed_index,
     )
     from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
     from tests.conftest import SF_SMOKE
 
     idx_dir = cdc_refreshed_index(spark, SF_SMOKE)
-    stats = _CDC_REFRESH_STATE[(spark, SF_SMOKE)]
+    stats = cdc_refresh_state.lookup(spark, SF_SMOKE)[1]
     by_status = {
         r.status: r.n
         for r in corpus_snapshot_diff(spark, SF_SMOKE)
