@@ -21,7 +21,9 @@ The coarse stage runs on the driver, as the reference's does
 (≤ a few hundred rows) once and keeps it on the engine, and every
 search ranks it with ``ivf.probe_labels``. A warm search is then ONE
 Spark job — the pruned fine scan and its top-k — with the query
-shipped as one parsed literal and its norm hoisted to a scalar.
+shipped as one JVM-built literal and its norm hoisted to a scalar.
+Neither value, nor the probe IN-list, is inlined into generated code,
+so a warm search reuses the classes the previous one compiled.
 """
 
 from __future__ import annotations
@@ -34,9 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpu_accelerated_vector_indexing_spark.functions.vector import (
-    as_double_array,
-    cosine_similarity_hoisted,
     lit_double_array,
+    named_cosine,
     seq_l2_norm,
 )
 from gpu_accelerated_vector_indexing_spark.memo import session_state
@@ -190,12 +191,13 @@ class IVFEngine:
         # one parse for the probe IN-list (Column.isin pays a py4j call
         # per element); an empty centroid table probes nothing
         pruned = F.expr(f"cluster IN ({','.join(map(str, probes))})") if probes else F.lit(False)
-        score = cosine_similarity_hoisted(
-            as_double_array("embedding"), q, F.lit(seq_l2_norm(qvec))
-        )
+        # the query and its hoisted norm enter as named columns, so the
+        # score is the process-wide named_cosine; the optimizer folds the
+        # two projections into one, with both constants held by reference
         return (
             emb.filter(pruned)
-            .select(F.round(score, SCORE_SCALE).alias("score"), "vec_id")
+            .select("vec_id", "embedding", q.alias("qvec"), F.lit(seq_l2_norm(qvec)).alias("qnorm"))
+            .select(F.round(named_cosine("embedding", "qvec", "qnorm"), SCORE_SCALE).alias("score"), "vec_id")
             .orderBy(F.desc("score"), F.desc("vec_id"))
             .limit(k)
         )

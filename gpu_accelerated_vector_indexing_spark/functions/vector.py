@@ -19,6 +19,10 @@ BLAS execution, Arrow-batched.
 
 from __future__ import annotations
 
+import functools
+import json
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -67,8 +71,42 @@ def cosine_similarity_hoisted(v: Column, q: Column, qnorm: Column) -> Column:
     column on the tiny broadcast side removes a per-row O(dim) fold.
     Numerically identical to :func:`cosine_similarity` (same float64
     ops, same order).
+
+    The division runs in the fold's finish lambda: higher-order
+    functions are interpreted, not code-generated, so a literal ``q`` or
+    ``qnorm`` stays in the expression tree instead of being inlined into
+    generated Java — queries that differ only in their constants share
+    one compiled class.
     """
-    return dot_product(v, q) / (l2_norm(v) * qnorm + F.lit(EPSILON))
+    return F.aggregate(
+        F.zip_with(v, q, lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+        lambda dot: dot / (l2_norm(v) * qnorm + F.lit(EPSILON)),
+    )
+
+
+@functools.lru_cache(maxsize=32)
+def _named_cosine(v: str, q: str, qnorm: str, gateway: int | None) -> Column:
+    return cosine_similarity_hoisted(as_double_array(v), F.col(q), F.col(qnorm))
+
+
+def named_cosine(v: str, q: str, qnorm: str) -> Column:
+    """:func:`cosine_similarity_hoisted` over NAMED columns (``v`` widened
+    by :func:`as_double_array`), built once per process.
+
+    pyspark builds a higher-order function with ~100 py4j round trips
+    (one per lambda variable, operator and argument list) — ~250 for
+    this score, more than the rest of a warm query. The expression is
+    unresolved and holds no per-query value, so every later query reuses
+    the same Column; a query's constants come in as the named columns.
+    Keyed on the py4j gateway (``None`` on Spark Connect, whose Columns
+    are client-side), so a Column never outlives the JVM it lives in."""
+    from pyspark import SparkContext
+    from pyspark.sql.utils import is_remote
+
+    gateway = None if is_remote() else id(SparkContext._gateway)
+    return _named_cosine(v, q, qnorm, gateway)
 
 
 def l2_normalize(a: Column) -> Column:
@@ -99,16 +137,18 @@ def np_dot_seq(x, y):
     """(n, d) × (n, d) → (n,) dot products with the EXACT sequential
     float association of the JVM fold / DuckDB ``list_dot_product``:
     each product and each add rounds separately, accumulated column by
-    column. The ONE definition of this load-bearing invariant — shared
-    by :func:`_dot_seq_batch` and the compression-audit kernel
-    (operators/quantize.raw_terms), so an association change cannot
-    leave the two kernels silently diverging."""
+    column. Operands that broadcast, e.g. (1, c, d) × (q, 1, d) → (q, c),
+    fold along their last axis the same way. The ONE definition of this
+    load-bearing invariant — shared by :func:`_dot_seq_batch`, the
+    compression-audit kernel (operators/quantize.raw_terms) and the IVF
+    coarse stage (operators/ivf.coarse_scores), so an association change
+    cannot leave the kernels silently diverging."""
     import numpy as np
 
     prod = x * y
-    acc = np.zeros(x.shape[0], dtype=np.float64)
-    for j in range(prod.shape[1]):
-        acc += prod[:, j]
+    acc = np.zeros(prod.shape[:-1], dtype=np.float64)
+    for j in range(prod.shape[-1]):
+        acc += prod[..., j]
     return acc
 
 
@@ -144,53 +184,40 @@ def dot_product_seq_pandas(a: Column, b: Column) -> Column:
     return _dot_seq_batch(a, b)
 
 
-# --- literal-array construction (r11, guide §5 driver work) -----------------
+# --- literal-array construction ---------------------------------------------
 #
-# ``F.array(*[F.lit(float(x)) for x in vals])`` pays one py4j
-# driver→JVM round-trip PER ELEMENT (~0.5 ms each — measured 24.9 s for
-# a 128×384 codebook in operators/index_build.py): for a 64-dim query
-# vector that is ~65 round-trips per query CONSTRUCTION, and the
-# comparison harnesses construct dozens of such arrays per call.
-# Parsing the equivalent SQL text builds the same
-# ``CreateArray(Literal, ...)`` tree in ONE round-trip.
+# A per-query constant must reach Spark as DATA, never as SQL text to
+# parse and never as a value inlined into generated Java:
+# - ``F.array(*[F.lit(x) ...])`` pays one py4j round trip per element
+#   (~0.5 ms each; 24.9 s for a 128×384 codebook);
+# - parsed SQL text (``array(0.1D, ...)``) is one round trip, but the
+#   parser and every analyzer/optimizer rule then walk a ``CreateArray``
+#   with one child per element, on every query (warm: ~47 ms for one
+#   384-d vector, ~266 ms for an 8×384 batch).
+# So the builders pack the values on the driver into the binary image
+# of Spark's ``UnsafeArrayData`` — element count, null bits, the values;
+# a nested array holds one ``offset << 32 | size`` word per child, then
+# the children — and hand that ``bytes`` to the JVM, which points an
+# ``UnsafeArrayData`` at it and wraps it in ONE ``Literal``: a constant
+# number of py4j calls whatever the length. Generated code holds a
+# non-primitive literal by reference (``references[i]``), so queries
+# that differ only in their vectors compile to the same Java and hit
+# Spark's codegen cache.
 #
-# Value identity: ``repr()`` of a finite Python float is the shortest
-# string that round-trips to the same IEEE-754 bits, and the SQL
-# parser's ``Double.parseDouble`` is correctly rounded — so the parsed
-# Literal is bit-identical to ``F.lit(x)``'s. Pinned by
-# tests/test_properties.py::test_lit_array_helpers_match_per_element.
+# Value identity: the image carries the float64 bits themselves, so the
+# literal is bit-identical to ``F.lit(x)``'s, and its type is the one
+# the SQL parse produced (``array<double>``, containsNull=false). Pinned
+# by tests/test_properties.py::test_lit_array_helpers_match_per_element.
+#
+# Spark Connect has no py4j gateway; there the builders fall back to the
+# one-parse SQL text, which is bit-identical too: ``repr()`` of a finite
+# float round-trips and ``Double.parseDouble`` is correctly rounded.
 
 _LONG_MIN = -(2**63)
 
 
 def _sql_double(x: float) -> str:
-    v = float(x)
-    r = repr(v)
-    if "inf" in r or "nan" in r:
-        raise ValueError(f"non-finite array literal: {x!r}")
-    return r + "D"
-
-
-def lit_double_array(vals) -> Column:
-    """``ARRAY<DOUBLE>`` literal in one py4j round-trip (see above).
-
-    Fails loud: a NaN or ±Inf component raises ``ValueError`` (from
-    ``_sql_double``) while the literal is built on the driver, so no job
-    ever runs with a non-finite constant. Per-element ``F.lit`` would
-    accept it and score rows NaN, which Spark orders FIRST under
-    ``desc`` — a silently wrong top-k."""
-    vals = list(vals)
-    if not vals:
-        return F.array().cast("array<double>")
-    return F.expr("array(" + ",".join(_sql_double(x) for x in vals) + ")")
-
-
-def lit_double_array2(rows) -> Column:
-    """``ARRAY<ARRAY<DOUBLE>>`` literal (codebooks) in one round-trip."""
-    inner = [
-        "array(" + ",".join(_sql_double(x) for x in row) + ")" for row in rows
-    ]
-    return F.expr("array(" + ",".join(inner) + ")")
+    return repr(float(x)) + "D"
 
 
 def _sql_long(x: int) -> str:
@@ -200,9 +227,99 @@ def _sql_long(x: int) -> str:
     return f"{v}L"
 
 
+# Spark JSON type name → (NumPy storage dtype, SQL text of one element)
+_ELEMENTS = {
+    "double": (np.float64, _sql_double),
+    "long": (np.int64, _sql_long),
+    "integer": (np.int32, lambda x: str(int(x))),
+}
+
+
+def _packed(vals, elem: str) -> np.ndarray:
+    """``vals`` as a 1-D array of ``elem``'s storage dtype. Fails loud: a
+    NaN or ±Inf double raises ``ValueError`` here, on the driver, so no
+    job ever runs with a non-finite constant (per-element ``F.lit``
+    would accept it and score rows NaN, which Spark orders FIRST under
+    ``desc`` — a silently wrong top-k)."""
+    arr = np.asarray(vals if isinstance(vals, np.ndarray) else list(vals), dtype=_ELEMENTS[elem][0])
+    if arr.ndim != 1:
+        raise ValueError(f"array literal must be one-dimensional, got shape {arr.shape}")
+    if elem == "double" and not np.isfinite(arr).all():
+        raise ValueError(f"non-finite array literal: {float(arr[~np.isfinite(arr)][0])!r}")
+    return arr
+
+
+def _header(n: int) -> bytes:
+    """``UnsafeArrayData`` header: the element count, then one null-bit
+    word per 64 elements (all clear)."""
+    return np.int64(n).tobytes() + bytes((n + 63) // 64 * 8)
+
+
+def _image(arr: np.ndarray) -> bytes:
+    body = arr.tobytes()
+    return _header(len(arr)) + body + bytes(-len(body) % 8)  # word-aligned
+
+
+def _nested_image(children: list[bytes]) -> bytes:
+    pos = len(_header(len(children))) + 8 * len(children)
+    words = []
+    for child in children:
+        words.append(pos << 32 | len(child))
+        pos += len(child)
+    return _header(len(children)) + np.asarray(words, dtype=np.int64).tobytes() + b"".join(children)
+
+
+def _array_literal(parts: list[np.ndarray], elem: str, nested: bool) -> Column:
+    """ONE ``ARRAY<elem>`` literal of ``parts[0]`` or, when ``nested``,
+    one ``ARRAY<ARRAY<elem>>`` literal of ``parts`` (see above)."""
+    from py4j.java_gateway import JavaClass
+    from pyspark import SparkContext
+    from pyspark.sql.utils import is_remote
+
+    sc = SparkContext._active_spark_context
+    if sc is None or is_remote():  # Spark Connect: one parse of SQL text
+        if not parts or (not nested and not len(parts[0])):  # no element to type the parse
+            return F.array().cast(f"array<array<{elem}>>" if nested else f"array<{elem}>")
+        sql = _ELEMENTS[elem][1]
+        texts = ["array(" + ",".join(sql(x) for x in p) + ")" for p in parts]
+        return F.expr("array(" + ",".join(texts) + ")" if nested else texts[0])
+    dtype: object = elem
+    for _ in range(2 if nested else 1):
+        dtype = {"type": "array", "elementType": dtype, "containsNull": False}
+    image = _nested_image([_image(p) for p in parts]) if nested else _image(parts[0])
+
+    # classes by full name: a ``sc._jvm.org.apache...`` walk costs one
+    # py4j round trip per package segment
+    def jclass(name: str):
+        return JavaClass(f"org.apache.spark.{name}", sc._gateway._gateway_client)
+
+    value = jclass("sql.catalyst.expressions.UnsafeArrayData")()
+    value.pointTo(image, jclass("unsafe.Platform").BYTE_ARRAY_OFFSET, len(image))
+    literal = jclass("sql.catalyst.expressions.Literal")(
+        value, jclass("sql.types.DataType").fromJson(json.dumps(dtype))
+    )
+    node = jclass("sql.classic.ExpressionColumnNode").apply(literal)
+    return Column(jclass("sql.Column")(node))
+
+
+def lit_double_array(vals) -> Column:
+    """``ARRAY<DOUBLE>`` literal in O(1) py4j calls (see above); a NaN or
+    ±Inf component raises ``ValueError`` before any job."""
+    return _array_literal([_packed(vals, "double")], "double", nested=False)
+
+
+def lit_double_array2(rows) -> Column:
+    """``ARRAY<ARRAY<DOUBLE>>`` literal (codebooks, query batches; rows
+    may differ in length) in O(1) py4j calls."""
+    return _array_literal([_packed(r, "double") for r in rows], "double", nested=True)
+
+
 def lit_long_array(vals) -> Column:
-    """``ARRAY<BIGINT>`` literal in one py4j round-trip."""
-    vals = list(vals)
-    if not vals:
-        return F.array().cast("array<bigint>")
-    return F.expr("array(" + ",".join(_sql_long(x) for x in vals) + ")")
+    """``ARRAY<BIGINT>`` literal in O(1) py4j calls."""
+    return _array_literal([_packed(vals, "long")], "long", nested=False)
+
+
+def lit_int_array2(rows) -> Column:
+    """``ARRAY<ARRAY<INT>>`` literal (per-query probe lists) in O(1)
+    py4j calls."""
+    return _array_literal([_packed(r, "integer") for r in rows], "integer", nested=True)

@@ -166,7 +166,7 @@ def minhash_from_grams(grams: DataFrame, keep: tuple[str, ...] = ()) -> DataFram
     codegen CSEs the shared fold). ``keep`` carries payload columns
     through (the streaming path needs gh alongside the signature —
     a streaming DF cannot re-join itself to fetch it back)."""
-    # one py4j round-trip per constant array (r11), not one per element
+    # one JVM-built literal per constant array, not one py4j call per element
     a_consts = lit_long_array(MINHASH_AS)
     b_consts = lit_long_array(MINHASH_BS)
     init = lit_long_array([MINHASH_PRIME] * N_MINHASH)

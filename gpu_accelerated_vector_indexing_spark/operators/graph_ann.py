@@ -602,7 +602,7 @@ def _beam_visited(
 def _float_scorer(emb_n: DataFrame, qvec: list[float]):
     """The ONE float-cosine walk scorer: returns (scorer_ids, q, qn).
 
-    ``q`` is one parsed array literal (one py4j round-trip, not dim
+    ``q`` is one JVM-built array literal (O(1) py4j calls, not dim
     F.lit calls); ‖q‖ is hoisted once, in Python floats — bit-identical
     to the JVM fold + sqrt (same IEEE-754 doubles, same left-to-right
     order), so the hoist is value-neutral exactly like the build's.

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from gpu_accelerated_vector_indexing_spark.functions.vector import (
     as_double_array,
-    cosine_similarity_hoisted,
+    named_cosine,
 )
 from gpu_accelerated_vector_indexing_spark.memo import session_state
 from gpu_accelerated_vector_indexing_spark.operators.knn import query_vectors
@@ -128,7 +128,7 @@ def hybrid_search_rrf(
     cos = emb.join(F.broadcast(q)).select(
         F.col("vec_id").alias("doc_id"),
         F.round(
-            cosine_similarity_hoisted(as_double_array("embedding"), F.col("qvec"), F.col("qnorm")),
+            named_cosine("embedding", "qvec", "qnorm"),
             6,
         ).alias("cos"),
     )
@@ -183,7 +183,7 @@ def mmr_rerank(
             "vec_id",
             as_double_array("embedding").alias("v"),
             F.round(
-                cosine_similarity_hoisted(as_double_array("embedding"), F.col("qvec"), F.col("qnorm")),
+                named_cosine("embedding", "qvec", "qnorm"),
                 6,
             ).alias("rel"),
         )
@@ -260,7 +260,7 @@ def hybrid_search_rrf_topn(
         .select(
             F.col("vec_id").alias("doc_id"),
             F.round(
-                cosine_similarity_hoisted(as_double_array("embedding"), F.col("qvec"), F.col("qnorm")),
+                named_cosine("embedding", "qvec", "qnorm"),
                 6,
             ).alias("cos"),
         )

@@ -87,25 +87,12 @@ def kmeans_assign(
         featuresCol="features", predictionCol="cluster",
     ).fit(fit_frame)
     assigned = model.transform(feats).drop("features")
-    spark = emb.sparkSession
-    centers = model.clusterCenters()
-    if k * len(centers[0]) <= 4096:
-        # JVM-literal construction: createDataFrame from a Python list
-        # routes through a Python-RDD task (measured ~5s of worker
-        # spin-up for 10 rows); a posexplode of ONE parsed literal
-        # (lit_double_array2) stays entirely JVM-side
-        centroids = spark.range(1).select(
-            F.posexplode(lit_double_array2(centers)).alias("cluster", "centroid")
-        )
-    else:
-        # past ~4k cells the literal's SQL parse dominates — one parse
-        # of 128 clusters × 384 dims measured 6-7 s vs 0.5-0.7 s through
-        # createDataFrame — so big shapes take the Python-RDD path and
-        # small fixture shapes keep the JVM one
-        centroids = spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
-            schema="cluster int, centroid array<double>",
-        )
+    # a posexplode of ONE JVM-built literal stays JVM-side at any shape;
+    # createDataFrame from a Python list routes through a Python-RDD task
+    # (measured ~5 s of worker spin-up for 10 rows)
+    centroids = emb.sparkSession.range(1).select(
+        F.posexplode(lit_double_array2(model.clusterCenters())).alias("cluster", "centroid")
+    )
     return assigned, centroids
 
 

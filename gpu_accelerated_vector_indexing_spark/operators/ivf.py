@@ -37,6 +37,12 @@ from pyspark.sql import functions as F
 from gpu_accelerated_vector_indexing_spark.functions.vector import (
     as_double_array,
     cosine_similarity_hoisted,
+    lit_double_array,
+    lit_double_array2,
+    lit_int_array2,
+    lit_long_array,
+    named_cosine,
+    np_dot_seq,
     seq_l2_norm,
 )
 from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
@@ -111,8 +117,11 @@ def fixture_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 @session_state
 def fixture_qvec(spark: SparkSession, sf_dir: str, query_id: int) -> list[float]:
     """Memoized raw query vector (float32 storage widened to float64) —
-    ≙ the reference reading queries_data/*.bin once (IVF.cpp:650-672)."""
+    ≙ the reference reading queries_data/*.bin once (IVF.cpp:650-672).
+    An id that is not in the corpus raises ``KeyError``."""
     row = query_vectors(spark, sf_dir, [query_id]).first()
+    if row is None:
+        raise KeyError(f"query id not in the corpus: {query_id}")
     return [float(x) for x in row.qvec]
 
 
@@ -121,11 +130,15 @@ def fixture_qvecs(
 ) -> list[tuple[int, list[float]]]:
     """Batched ``fixture_qvec``: fetch every COLD id in ONE job (a
     batched endpoint must not pay one driver round-trip per query id)
-    and fill the memo; warm ids are free."""
+    and fill the memo; warm ids are free. Ids that are not in the
+    corpus raise one ``KeyError`` naming them all."""
     cold = [q for q in query_ids if fixture_qvec.lookup(spark, sf_dir, q) is None]
     if cold:
         for row in query_vectors(spark, sf_dir, cold).collect():
             fixture_qvec.prime([float(x) for x in row.qvec], spark, sf_dir, row.query_id)
+        missing = sorted({q for q in cold if fixture_qvec.lookup(spark, sf_dir, q) is None})
+        if missing:
+            raise KeyError(f"query ids not in the corpus: {missing}")
     return [(q, fixture_qvec(spark, sf_dir, q)) for q in query_ids]
 
 
@@ -138,34 +151,60 @@ def _round_half_up6(v: float) -> float:
     return float(Decimal(repr(v)).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
 
 
-def probe_labels(
-    rows: list[tuple[int, list[float]]], qvec: list[float], n_probe: int
-) -> list[int]:
-    """Driver-side coarse search over collected centroid state.
+# queries scored per NumPy pass: bounds the (queries × centroids × dim)
+# product array at ~25 MB for 128 × 384 centroids
+_COARSE_CHUNK = 64
+
+
+def coarse_scores(
+    rows: list[tuple[int, list[float]]], qvecs: Sequence[Sequence[float]]
+) -> list[list[tuple[float, int]]]:
+    """``(score, label)`` of every centroid for each query — the
+    driver-side coarse stage over collected centroid state.
 
     ≙ IVF.cpp:271-282: the coarse stage is an in-memory op over the
     tiny (≤128 × dim) centroid matrix. Launching a distributed job to
     rank ≤128 local rows costs ~0.5 s of fixed scheduling overhead per
     query (measured at sf0.1) — pure waste at any scale, since the
-    centroid relation is index state that fits in L2. The arithmetic is
-    the SAME expression the oracle replays: sequential float64 folds,
-    ``+1e-8`` guard, HALF_UP round to 6 d.p., (cscore DESC, label DESC)
-    order — so the probe SET is identical to ``coarse_search``'s
-    (pinned by test_ivf parity and every IVF query's value oracle).
+    centroid relation is index state that fits in L2. All centroids and
+    all queries are scored in one NumPy pass (``np_dot_seq``), with the
+    SAME arithmetic the oracle replays: sequential float64 folds,
+    ``+1e-8`` guard, HALF_UP round to 6 d.p.
     """
-    import math
+    import numpy as np
 
-    qnorm = seq_l2_norm(qvec)
-    scored = []
-    for lab, cent in rows:
-        dot = 0.0
-        nc = 0.0
-        for c, qv in zip(cent, qvec):
-            dot += c * qv
-            nc += c * c
-        scored.append((_round_half_up6(dot / (math.sqrt(nc) * qnorm + 1e-8)), lab))
-    scored.sort(key=lambda t: (-t[0], -t[1]))
-    return [lab for _, lab in scored[:n_probe]]
+    if not rows:
+        return [[] for _ in qvecs]
+    labels = [lab for lab, _ in rows]
+    cents = np.asarray([c for _, c in rows], dtype=np.float64)
+    cnorm = np.sqrt(np_dot_seq(cents, cents))
+    out = []
+    for lo in range(0, len(qvecs), _COARSE_CHUNK):
+        qs = np.asarray(qvecs[lo : lo + _COARSE_CHUNK], dtype=np.float64).reshape(-1, cents.shape[1])
+        qnorm = np.sqrt(np_dot_seq(qs, qs))
+        dots = np_dot_seq(cents[None, :, :], qs[:, None, :])  # (queries, centroids)
+        raw = dots / (cnorm[None, :] * qnorm[:, None] + 1e-8)
+        out += [[(_round_half_up6(float(s)), lab) for s, lab in zip(r, labels)] for r in raw]
+    return out
+
+
+def probe_lists(
+    rows: list[tuple[int, list[float]]], qvecs: Sequence[Sequence[float]], n_probe: int
+) -> list[list[int]]:
+    """Top-``n_probe`` labels per query in (cscore DESC, label DESC)
+    order — so each probe SET is identical to ``coarse_search``'s
+    (pinned by test_ivf parity and every IVF query's value oracle)."""
+    return [
+        [lab for _, lab in sorted(scored, key=lambda t: (-t[0], -t[1]))[:n_probe]]
+        for scored in coarse_scores(rows, qvecs)
+    ]
+
+
+def probe_labels(
+    rows: list[tuple[int, list[float]]], qvec: list[float], n_probe: int
+) -> list[int]:
+    """:func:`probe_lists` for one query."""
+    return probe_lists(rows, [qvec], n_probe)[0]
 
 
 def coarse_probes(
@@ -223,9 +262,7 @@ def knn_ivf(
             "vec_id",
             F.col("label"),
             F.round(
-                cosine_similarity_hoisted(
-                    as_double_array("embedding"), F.col("qvec"), F.col("qnorm")
-                ),
+                named_cosine("embedding", "qvec", "qnorm"),
                 SCORE_SCALE,
             ).alias("score"),
         )
@@ -308,9 +345,7 @@ def knn_ivf_filtered(
         .select(
             "vec_id",
             F.round(
-                cosine_similarity_hoisted(
-                    as_double_array("embedding"), F.col("qvec"), F.col("qnorm")
-                ),
+                named_cosine("embedding", "qvec", "qnorm"),
                 SCORE_SCALE,
             ).alias("score"),
         )
@@ -328,49 +363,55 @@ def multi_query_knn_ivf(
     """IVF search for MANY queries in one job.
 
     The reference runs one query per process (IVF.cpp:650); here the
-    coarse stage scores all queries against the tiny centroid relation
-    at once, and the fine stage scans the UNION of probed clusters
-    exactly once — each (query, cluster) candidate pair exists only if
-    that query probed that cluster, so per-query work matches the
-    single-query plan while the corpus is read once.
+    coarse stage ranks the centroids for every query of the batch in one
+    driver-side pass, and the fine stage scans the UNION of probed
+    clusters exactly once — each (query, cluster) candidate pair exists
+    only if that query probed that cluster, so per-query work matches
+    the single-query plan while the corpus is read once.
 
-    Scale shape: probes is ≤ n_queries × n_probe rows (broadcast);
-    the distinct probed-label IN-list still prunes partitions; the
-    per-query top-k is a window over the pruned, scored rows.
+    Each distinct id is answered once, in first-seen order (a repeated
+    id would otherwise join its candidates twice and fill its top-k with
+    duplicates). Ids that are not in the corpus raise ``KeyError``
+    before any fine-stage job; an empty batch returns an empty result
+    with the batch schema.
+
+    Scale shape:
+    - the query vectors come from the ``fixture_qvec`` memo the coarse
+      stage fills, so the corpus is not scanned a second time for them;
+    - the batch ships as ONE literal relation of (query_id, qvec, qnorm,
+      label) rows — ≤ n_queries × n_probe, one ``BroadcastExchange`` —
+      whose arrays are JVM-built literals held by reference, so warm
+      batches reuse compiled code;
+    - the distinct probed labels are one parsed IN-list, pushed to the
+      scan (``PushedFilters: [In(label, ...)]``; partition pruning on a
+      partitioned layout);
+    - the per-query top-k is a window over the pruned, scored rows.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    qs = query_vectors(spark, sf_dir, query_ids)
-    # per-query probe pairs from the memoized index state — zero jobs;
-    # the tiny pair relation is ONE parsed array-of-structs literal (the
-    # createDataFrame route pays a Python-worker task per scan, and
-    # per-pair F.struct(F.lit, F.lit) one py4j call per element). An
-    # empty batch parses to a typed empty array: no rows, same schema.
-    pairs = [
-        (int(qid), lab)
-        for qid in query_ids
-        for lab in coarse_probes(spark, sf_dir, qid, n_probe)
-    ]
-    probed_union = sorted({lab for _, lab in pairs})
-    structs = ",".join(f"named_struct('query_id', {a}L, 'label', {b})" for a, b in pairs)
-    probes = spark.range(1).select(
+    ids = list(dict.fromkeys(int(q) for q in query_ids))
+    qvecs = [v for _, v in fixture_qvecs(spark, sf_dir, tuple(ids))]
+    probes = probe_lists(fixture_centroid_rows(spark, sf_dir), qvecs, n_probe)
+    batch = spark.range(1).select(
         F.inline(
-            F.expr(f"array({structs})").cast(
-                "array<struct<query_id:bigint,label:int>>"
+            F.arrays_zip(
+                lit_long_array(ids).alias("query_id"),
+                lit_double_array2(qvecs).alias("qvec"),
+                lit_double_array([seq_l2_norm(v) for v in qvecs]).alias("qnorm"),
+                lit_int_array2(probes).alias("labels"),
             )
         )
-    )
+    ).select("query_id", "qvec", "qnorm", F.explode("labels").alias("label"))
+    union = sorted({lab for p in probes for lab in p})
+    pruned = F.expr(f"label IN ({','.join(map(str, union))})") if union else F.lit(False)
 
     fine = (
-        emb.filter(F.col("label").isin(probed_union))  # partition pruning on the union
-        .join(F.broadcast(probes), "label")  # (query, cluster) pairs actually probed
-        .join(F.broadcast(qs), "query_id")
+        load_table(spark, sf_dir, "embeddings")
+        .filter(pruned)
+        .join(F.broadcast(batch), "label")  # (query, cluster) pairs actually probed
         .select(
             "query_id",
             "vec_id",
             F.round(
-                cosine_similarity_hoisted(
-                    as_double_array("embedding"), F.col("qvec"), F.col("qnorm")
-                ),
+                named_cosine("embedding", "qvec", "qnorm"),
                 SCORE_SCALE,
             ).alias("score"),
         )
@@ -1185,9 +1226,7 @@ def knn_with_deletes(
     )
     q = query_vectors(spark, sf_dir, [query_id])
     score = F.round(
-        cosine_similarity_hoisted(
-            as_double_array("embedding"), F.col("qvec"), F.col("qnorm")
-        ),
+        named_cosine("embedding", "qvec", "qnorm"),
         SCORE_SCALE,
     )
     return (
@@ -1454,9 +1493,7 @@ def knn_ivf_shard_merge(
         .select(
             "vec_id",
             F.round(
-                cosine_similarity_hoisted(
-                    as_double_array("embedding"), F.col("qvec"), F.col("qnorm")
-                ),
+                named_cosine("embedding", "qvec", "qnorm"),
                 SCORE_SCALE,
             ).alias("score"),
         )
@@ -1650,17 +1687,7 @@ def adaptive_probe_labels(
     queries (flat coarse profile) probe many. The per-query twin of a
     fixed n_probe, same driver-side memoized-state posture as
     ``probe_labels``; the best centroid is always included."""
-    import math
-
-    qnorm = seq_l2_norm(qvec)
-    scored = []
-    for lab, cent in rows:
-        dot = 0.0
-        nc = 0.0
-        for c, qv in zip(cent, qvec):
-            dot += c * qv
-            nc += c * c
-        scored.append((_round_half_up6(dot / (math.sqrt(nc) * qnorm + 1e-8)), lab))
+    scored = coarse_scores(rows, [qvec])[0]
     best = max(s for s, _ in scored)
     return sorted(lab for s, lab in scored if s >= best - delta)
 
@@ -1692,9 +1719,7 @@ def knn_ivf_adaptive(
         .select(
             "vec_id",
             F.round(
-                cosine_similarity_hoisted(
-                    as_double_array("embedding"), F.col("qvec"), F.col("qnorm")
-                ),
+                named_cosine("embedding", "qvec", "qnorm"),
                 SCORE_SCALE,
             ).alias("score"),
         )

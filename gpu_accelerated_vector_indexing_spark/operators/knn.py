@@ -28,9 +28,9 @@ from pyspark.sql import Window as W
 
 from gpu_accelerated_vector_indexing_spark.functions.vector import (
     as_double_array,
-    cosine_similarity_hoisted,
     cosine_similarity_pandas,
     l2_norm,
+    named_cosine,
 )
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
@@ -59,9 +59,7 @@ def scored_embeddings(
     if use_pandas:
         score = cosine_similarity_pandas(as_double_array("embedding"), F.col("qvec"))
     else:
-        score = cosine_similarity_hoisted(
-            as_double_array("embedding"), F.col("qvec"), F.col("qnorm")
-        )
+        score = named_cosine("embedding", "qvec", "qnorm")
     return emb.join(F.broadcast(queries)).withColumn("score", F.round(score, SCORE_SCALE))
 
 
@@ -269,7 +267,7 @@ def knn_per_cluster_topk(
         "label",
         "vec_id",
         F.round(
-            cosine_similarity_hoisted(as_double_array("embedding"), F.col("qvec"), F.col("qnorm")),
+            named_cosine("embedding", "qvec", "qnorm"),
             SCORE_SCALE,
         ).alias("score"),
     )
@@ -521,9 +519,7 @@ def knn_matryoshka(
         .orderBy(F.desc("s16"), F.desc("vec_id"))
         .limit(n_candidates)
     )
-    full = cosine_similarity_hoisted(
-        as_double_array("embedding"), F.col("qvec"), F.col("qnorm")
-    )
+    full = named_cosine("embedding", "qvec", "qnorm")
     return (
         emb.join(cand.select("vec_id"), "vec_id")
         .join(F.broadcast(q))
@@ -572,9 +568,7 @@ def knn_ivf_matryoshka(
         .orderBy(F.desc("s16"), F.desc("vec_id"))
         .limit(n_candidates)
     )
-    full = cosine_similarity_hoisted(
-        as_double_array("embedding"), F.col("qvec"), F.col("qnorm")
-    )
+    full = named_cosine("embedding", "qvec", "qnorm")
     return (
         emb.join(F.broadcast(cand.select("vec_id")), "vec_id")
         .join(F.broadcast(q))

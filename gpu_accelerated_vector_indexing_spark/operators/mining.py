@@ -29,8 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from gpu_accelerated_vector_indexing_spark.functions.vector import (
-    as_double_array,
-    cosine_similarity_hoisted,
+    named_cosine,
 )
 from gpu_accelerated_vector_indexing_spark.operators.knn import query_vectors
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
@@ -69,9 +68,7 @@ def contrastive_triplets(
             "vec_id",
             "label",
             F.round(
-                cosine_similarity_hoisted(
-                    as_double_array("embedding"), F.col("qvec"), F.col("qnorm")
-                ),
+                named_cosine("embedding", "qvec", "qnorm"),
                 6,
             ).alias("score"),
         )

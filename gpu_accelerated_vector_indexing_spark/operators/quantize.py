@@ -40,6 +40,7 @@ from gpu_accelerated_vector_indexing_spark.functions.vector import (
     l2_norm,
     lit_double_array,
     lit_double_array2,
+    named_cosine,
 )
 from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
 from gpu_accelerated_vector_indexing_spark.operators.knn import query_vectors
@@ -283,7 +284,7 @@ def _pq_encode(v: Column, books: list[list[list[float]]], dim: int) -> Column:
     codes = []
     for s, book in enumerate(books):
         subvec = F.slice(v, s * sub + 1, sub)
-        book_lit = lit_double_array2(book)  # one parse, not S×k×sub lits
+        book_lit = lit_double_array2(book)  # one literal, not S×k×sub lits
         d2s = F.transform(
             book_lit,
             lambda cw: F.round(
@@ -352,9 +353,7 @@ def knn_pq(
         .limit(n_candidates)
         .select("vec_id")
     )
-    exact = cosine_similarity_hoisted(
-        as_double_array("embedding"), F.col("qvec"), F.col("qnorm")
-    )
+    exact = named_cosine("embedding", "qvec", "qnorm")
     return (
         emb.join(F.broadcast(candidates), "vec_id")
         .join(F.broadcast(q))
@@ -504,9 +503,7 @@ def knn_ivf_pq(
         .limit(n_candidates)
         .select("vec_id")
     )
-    exact = cosine_similarity_hoisted(
-        as_double_array("embedding"), F.col("qvec"), F.col("qnorm")
-    )
+    exact = named_cosine("embedding", "qvec", "qnorm")
     return (
         emb.join(F.broadcast(candidates), "vec_id")
         .join(F.broadcast(q))
@@ -625,9 +622,7 @@ def knn_ivf_pq_residual(
         .limit(n_candidates)
         .select("vec_id")
     )
-    exact = cosine_similarity_hoisted(
-        as_double_array("embedding"), F.col("qvec"), F.col("qnorm")
-    )
+    exact = named_cosine("embedding", "qvec", "qnorm")
     return (
         emb.join(F.broadcast(candidates), "vec_id")
         .join(F.broadcast(q))
@@ -1358,9 +1353,7 @@ def _pq_serve_refreshed(
         .limit(n_candidates)
         .select("vec_id")
     )
-    exact = cosine_similarity_hoisted(
-        as_double_array("embedding"), F.col("qvec"), F.col("qnorm")
-    )
+    exact = named_cosine("embedding", "qvec", "qnorm")
     return (
         live.join(F.broadcast(candidates), "vec_id")
         .join(F.broadcast(q))

@@ -335,7 +335,7 @@ def refshape_graph_bq(
             if idx < len(qvec) and float(qvec[idx]) > 0.0:
                 word += 2**j if j < 63 else -(2**63)
         qwords.append(word)
-    qcode = lit_long_array(qwords)  # one py4j round-trip
+    qcode = lit_long_array(qwords)  # one JVM-built literal
 
     def hscored(ids: list[int]) -> DataFrame:
         # walk-bounded ids as a pushed InSet on the codes state
@@ -354,7 +354,7 @@ def refshape_graph_bq(
         BEAM_WIDTH,
         BEAM_HOPS,
     )
-    q = lit_double_array(qvec)  # one py4j round-trip, not dim F.lit calls
+    q = lit_double_array(qvec)  # one JVM-built literal, not dim F.lit calls
     acc = 0.0
     for x in qvec:
         acc += float(x) * float(x)

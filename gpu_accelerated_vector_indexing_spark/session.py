@@ -6,6 +6,17 @@ so the same logical plans scale to a multi-executor cluster: AQE on
 locally (on a real cluster AQE re-coalesces), UTC session timezone so
 results are comparable with the DuckDB oracle, and Arrow enabled for
 every pandas interchange.
+
+Literal IN-lists (probe labels, id allowlists) differ from query to
+query. By default Catalyst keeps a list of ≤ 10 values as ``In`` and
+inlines every value into the generated Java, and code-generates a
+larger ``InSet`` of ints as a ``switch`` over its values: either way a
+new list is new source for Janino to compile, and the JVM then
+re-JITs the new class. With both thresholds at 0 every literal IN-list
+becomes a hash-set ``InSet`` that generated code holds by reference,
+so warm queries reuse compiled code. Parquet pushdown
+(``PushedFilters: [In(...)]``) and partition pruning read the same
+``InSet``, so neither changes.
 """
 
 from __future__ import annotations
@@ -13,6 +24,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# every literal IN-list → a by-reference hash-set InSet (see module docstring)
+IN_LIST_SETTINGS = {
+    "spark.sql.optimizer.inSetConversionThreshold": "0",
+    "spark.sql.optimizer.inSetSwitchThreshold": "0",
+}
 
 
 def get_spark(app_name: str = "gpu_accelerated_vector_indexing_spark", cpus: int | None = None) -> SparkSession:
@@ -34,6 +51,8 @@ def get_spark(app_name: str = "gpu_accelerated_vector_indexing_spark", cpus: int
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    for key, value in IN_LIST_SETTINGS.items():
+        builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
@@ -43,9 +62,12 @@ def tune_session(spark: SparkSession) -> SparkSession:
     """Apply engine session settings to an externally-created session.
 
     The correctness driver owns its own SparkSession; these runtime-safe
-    settings (timezone for oracle comparability, AQE) are applied
-    idempotently by every public query entry point.
+    settings (timezone for oracle comparability, AQE, by-reference
+    IN-lists) are applied idempotently by every public query entry
+    point.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    for key, value in IN_LIST_SETTINGS.items():
+        spark.conf.set(key, value)
     return spark

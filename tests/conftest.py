@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+from contextlib import contextmanager
+from types import SimpleNamespace
+
 import pytest
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -29,3 +32,22 @@ def duck():
     con = duckdb.connect()
     yield con
     con.close()
+
+
+def compilations(spark) -> int:
+    """Janino compilations so far in this JVM (Spark's
+    ``CodegenMetrics.METRIC_COMPILATION_TIME`` histogram count); a
+    generated class served from the codegen cache does not count."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+@contextmanager
+def codegen_compiles(spark):
+    """``with codegen_compiles(spark) as c: ...`` → ``c.count`` is the
+    number of Janino compilations the block ran — the pin for "no
+    per-query recompilation" on a warm serving path."""
+    out = SimpleNamespace(count=None)
+    before = compilations(spark)
+    yield out
+    out.count = compilations(spark) - before

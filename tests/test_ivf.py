@@ -427,6 +427,112 @@ def test_multi_query_ivf_matches_single_and_empty_batch(spark):
     assert empty.collect() == []
 
 
+def test_multi_query_ivf_answers_each_distinct_id_once(spark):
+    """A repeated id is answered once, in first-seen order: its top-k
+    holds k distinct vec_ids ranked 1..k, identical to the single-query
+    search (a duplicate used to join every candidate twice, so the
+    query's own row filled ranks 1 and 2 and a true neighbour fell
+    out)."""
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import knn_ivf, multi_query_knn_ivf
+
+    dup = multi_query_knn_ivf(spark, SF_CORRECT, query_ids=[5, 3, 5], k=3, n_probe=4).collect()
+    once = multi_query_knn_ivf(spark, SF_CORRECT, query_ids=[5, 3], k=3, n_probe=4).collect()
+    assert sorted(dup) == sorted(once)
+    for qid in (5, 3):
+        ranked = sorted((r.rn, r.vec_id, r.score) for r in dup if r.query_id == qid)
+        assert [rn for rn, _, _ in ranked] == [1, 2, 3]
+        single = [
+            (r.vec_id, r.score)
+            for r in knn_ivf(spark, SF_CORRECT, query_id=qid, k=3, n_probe=4).collect()
+        ]
+        assert [(v, s) for _, v, s in ranked] == single, f"q{qid}"
+
+
+def test_unknown_query_ids_raise_key_error_before_fine_stage(spark):
+    """An id that is not in the corpus raises ``KeyError`` naming it
+    from the call itself — only the query-vector fetch runs, no
+    fine-stage job — for the batch and the single-query search."""
+    import uuid
+
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import knn_ivf, multi_query_knn_ivf
+
+    sc = spark.sparkContext
+    missing = 10**12 + 7
+    for call in (
+        lambda: multi_query_knn_ivf(spark, SF_CORRECT, query_ids=(0, missing, missing + 1), k=5),
+        lambda: knn_ivf(spark, SF_CORRECT, query_id=missing, k=5),
+    ):
+        group = f"unknown-ids-{uuid.uuid4()}"
+        sc.setJobGroup(group, "unknown ids")
+        try:
+            with pytest.raises(KeyError, match=str(missing)):
+                call()
+        finally:
+            sc.setJobGroup(None, None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1  # the id fetch
+
+
+def test_warm_multi_query_batch_does_not_recompile(spark):
+    """A second batch with different ids reuses the generated code of
+    the first: query vectors, norms and probe lists arrive as JVM-built
+    literals and the label IN-list as a by-reference InSet, so nothing
+    per-batch is compiled."""
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import fixture_qvecs, multi_query_knn_ivf
+    from tests.conftest import codegen_compiles
+
+    multi_query_knn_ivf(spark, SF_CORRECT, query_ids=(0, 3, 17), k=5, n_probe=3).collect()
+    fixture_qvecs(spark, SF_CORRECT, (1, 4, 9))  # the memo fill is its own job
+    with codegen_compiles(spark) as compiles:
+        rows = multi_query_knn_ivf(spark, SF_CORRECT, query_ids=(1, 4, 9), k=5, n_probe=3).collect()
+    assert len(rows) == 15
+    assert compiles.count == 0
+
+
+def test_coarse_scores_match_sequential_loop():
+    """The one-pass NumPy coarse stage equals the per-centroid Python
+    fold it replaced (sequential float64 dot and norm, +1e-8 guard,
+    HALF_UP to 6 places) score for score, across the query-chunk
+    boundary, for the zero query and for exact ties; each probe list
+    keeps (score desc, label desc)."""
+    import math
+    import random
+
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import (
+        _COARSE_CHUNK,
+        _round_half_up6,
+        coarse_scores,
+        probe_labels,
+        probe_lists,
+    )
+
+    rng = random.Random(13)
+    dim = 24
+    rows = [(lab, [rng.gauss(0.0, 1.0) for _ in range(dim)]) for lab in range(40)]
+    rows += [(40, rows[3][1]), (41, rows[3][1])]  # exact ties with label 3
+    queries = [[rng.uniform(-2.0, 2.0) for _ in range(dim)] for _ in range(_COARSE_CHUNK + 6)]
+    queries += [[0.0] * dim, rows[3][1]]
+
+    def loop(qvec):
+        acc = 0.0
+        for x in qvec:
+            acc += x * x
+        qnorm = math.sqrt(acc)
+        out = []
+        for lab, cent in rows:
+            dot = nc = 0.0
+            for c, qv in zip(cent, qvec):
+                dot += c * qv
+                nc += c * c
+            out.append((_round_half_up6(dot / (math.sqrt(nc) * qnorm + 1e-8)), lab))
+        return out
+
+    assert coarse_scores(rows, queries) == [loop(q) for q in queries]
+    lists = probe_lists(rows, queries, 5)
+    assert lists == [probe_labels(rows, q, 5) for q in queries]
+    assert lists[-1][:3] == [41, 40, 3]  # three-way tie at 1.0, label desc
+    assert coarse_scores([], queries[:2]) == [[], []]
+
+
 def test_append_to_index_searchable_without_rebuild(spark, tmp_path):
     """Continuous-ingest contract: vectors appended to an existing
     index (nearest-centroid assignment, partition-directory append)

@@ -726,3 +726,20 @@ def test_warm_engine_point_search_is_one_stage_topk(spark, tmp_path):
             absent=("Window", "Exchange"),
         )
         assert "cluster" in plan.split("PartitionFilters", 1)[1][:200], plan
+
+
+def test_warm_multi_query_batch_is_one_broadcast_over_one_scan(spark):
+    """A warm ``multi_query_knn_ivf`` batch reads the corpus once: the
+    query vectors, norms and probe lists ship as ONE literal relation
+    (one ``BroadcastExchange``), no second scan fetches query vectors by
+    ``vec_id``, and the probed-label IN-list reaches the Parquet reader
+    as a pushed ``In(label, ...)``."""
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import fixture_qvecs, multi_query_knn_ivf
+
+    fixture_qvecs(spark, SF_CORRECT, (1, 4, 9))
+    df = multi_query_knn_ivf(spark, SF_CORRECT, query_ids=(1, 4, 9), k=5, n_probe=3)
+    plan = physical_plan(df)
+    assert plan.count("BroadcastExchange") == 1, plan
+    assert plan.count("FileScan") == 1, plan
+    assert not any("vec_id" in f for f in pushed_filters(df)), plan
+    assert "PushedFilters: [In(label" in plan, plan

@@ -409,41 +409,71 @@ def test_cusum_changepoint_matches_python_model(spark):
 
 
 def test_lit_array_helpers_match_per_element(spark):
-    """The one-round-trip literal-array builders (r11) are BIT-identical
-    to the per-element ``F.array(*[F.lit(x), ...])`` form: repr() of a
-    finite float round-trips, and the SQL parser's Double.parseDouble is
-    correctly rounded — so the parsed Literals carry the same IEEE-754
-    bits. Longs cover both word boundaries incl. LONG_MIN (which cannot
-    parse as a negated positive literal and takes the subtraction form)."""
+    """The literal-array builders are BIT-identical to the per-element
+    ``F.array(*[F.lit(x), ...])`` form, and carry the type the one-parse
+    SQL text had (``array<double>``, containsNull=false): each builds
+    ONE JVM ``Literal`` from a packed buffer that holds the float64 bits
+    themselves. Rows of a 2-D literal may differ in length (including
+    empty). Longs cover both word boundaries incl. LONG_MIN; ints cover
+    the probe-list builder. A NaN/±Inf component raises ``ValueError``
+    while the literal is built — before any job runs."""
     import random
     import struct
+    import uuid
 
+    import pytest
     from pyspark.sql import functions as F
 
     from gpu_accelerated_vector_indexing_spark.functions.vector import (
         lit_double_array,
         lit_double_array2,
+        lit_int_array2,
         lit_long_array,
     )
 
+    def bits(xs):
+        return [struct.pack("<d", float(v)) for v in xs]
+
     rng = random.Random(711)
     vals = [rng.uniform(-1e3, 1e3) for _ in range(64)]
-    vals += [0.0, -0.0, 1e-300, -1.5e300, 0.1, 2.0, 1e-8, -3.5]
-    got = spark.range(1).select(lit_double_array(vals).alias("x")).first().x
-    ref = (
-        spark.range(1)
-        .select(F.array(*[F.lit(float(v)) for v in vals]).alias("x"))
-        .first()
-        .x
+    vals += [0.0, -0.0, 1e-300, -1.5e300, 0.1, 2.0, 1e-8, -3.5, 5e-324]
+    got = spark.range(1).select(lit_double_array(vals).alias("x"))
+    ref = spark.range(1).select(F.array(*[F.lit(float(v)) for v in vals]).alias("x"))
+    parsed = spark.range(1).select(
+        F.expr("array(" + ",".join(repr(float(v)) + "D" for v in vals) + ")").alias("x")
     )
-    assert [struct.pack("<d", v) for v in got] == [struct.pack("<d", v) for v in ref]
+    assert bits(got.first().x) == bits(ref.first().x)
+    assert got.schema == parsed.schema  # array<double>, containsNull=false
+    # a NumPy array is packed as is
+    assert bits(spark.range(1).select(lit_double_array(np.asarray(vals)).alias("x")).first().x) == bits(vals)
 
-    rows = [vals[:8], vals[8:16], [0.25, -0.5]]
-    got2 = spark.range(1).select(lit_double_array2(rows).alias("x")).first().x
-    assert [[struct.pack("<d", v) for v in r] for r in got2] == [
-        [struct.pack("<d", float(v)) for v in r] for r in rows
-    ]
+    rows = [vals[:8], vals[8:16], [0.25, -0.5], []]
+    got2 = spark.range(1).select(lit_double_array2(rows).alias("x"))
+    assert [bits(r) for r in got2.first().x] == [bits(r) for r in rows]
+    parsed2 = spark.range(1).select(
+        F.expr(
+            "array("
+            + ",".join("array(" + ",".join(repr(float(v)) + "D" for v in r) + ")" for r in rows[:3])
+            + ")"
+        ).alias("x")
+    )
+    assert got2.schema == parsed2.schema
 
     lvals = [0, 1, -1, 2**62, -(2**62), 2**63 - 1, -(2**63), 42]
     gotl = spark.range(1).select(lit_long_array(lvals).alias("x")).first().x
     assert gotl == lvals
+    probes = [[3, 1, 2], [], [2**31 - 1, -(2**31)]]
+    assert spark.range(1).select(lit_int_array2(probes).alias("x")).first().x == probes
+
+    sc = spark.sparkContext
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        group = f"lit-{uuid.uuid4()}"
+        sc.setJobGroup(group, "non-finite literal")
+        try:
+            with pytest.raises(ValueError, match="non-finite"):
+                lit_double_array(vals[:3] + [bad])
+            with pytest.raises(ValueError, match="non-finite"):
+                lit_double_array2([vals[:3], [1.0, bad]])
+        finally:
+            sc.setJobGroup(None, None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []

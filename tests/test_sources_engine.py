@@ -397,6 +397,23 @@ def test_engine_warm_search_is_one_job(spark, built_index):
     assert eng._centroid_rows is held
 
 
+def test_engine_warm_search_does_not_recompile(spark, built_index):
+    """A warm search with a different query vector reuses the generated
+    code of the previous one: the query is a JVM-built literal, its
+    norm sits in the fold's interpreted finish lambda and the probe
+    IN-list is a by-reference InSet, so the search compiles nothing."""
+    from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
+    from tests.conftest import codegen_compiles
+
+    first, second = _query_vec(spark, SF_SMOKE, 0), _query_vec(spark, SF_SMOKE, 5)
+    eng = IVFEngine.from_pretrained(spark, built_index, n_probe=2)
+    eng.search(first, k=5).collect()
+    with codegen_compiles(spark) as compiles:
+        rows = eng.search(second, k=5).collect()
+    assert len(rows) == 5
+    assert compiles.count == 0
+
+
 def test_engine_non_finite_query_fails_before_any_job(spark, built_index):
     """A NaN/±Inf query component raises ``ValueError`` from
     ``search()`` itself — not at collect, and before even the cold
