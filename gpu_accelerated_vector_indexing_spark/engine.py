@@ -31,11 +31,13 @@ from __future__ import annotations
 import argparse
 import time
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpu_accelerated_vector_indexing_spark.functions.vector import (
+    finite_doubles,
     lit_double_array,
     named_cosine,
     seq_l2_norm,
@@ -292,24 +294,20 @@ class GraphEngine:
 
     def search(self, qvec: list[float], k: int = 5) -> DataFrame:
         """Bounded beam walk → top-k ``(score, vec_id)`` desc — the ONE
-        walk definition (``graph_ann.beam_visited_over``) over the
-        persisted adjacency + normed corpus."""
-        from gpu_accelerated_vector_indexing_spark.operators.graph_ann import beam_visited_over
+        float walk (``graph_ann.beam_visited_over``) over the persisted
+        adjacency + normed corpus. A NaN/±Inf component raises
+        ``ValueError`` before any job."""
+        from gpu_accelerated_vector_indexing_spark.operators.graph_ann import beam_visited_over, top_k
 
         visited = beam_visited_over(
             self.edges.select("node", "nbr"),
-            self.corpus.select("vec_id", "label"),
             self.corpus.select("vec_id", "v", "nrm"),
-            [float(x) for x in qvec],
+            finite_doubles(qvec),
             self.beam,
             self.hops,
             entry_ids=self._entry_ids(),
         )
-        return (
-            visited.orderBy(F.desc("score"), F.desc("vec_id"))
-            .limit(k)
-            .select("score", "vec_id")
-        )
+        return top_k(visited, k).select("score", "vec_id")
 
     def search_with_docs(self, qvec: list[float], documents: DataFrame, k: int = 5) -> DataFrame:
         """Top-k + article snippet through the index-agnostic sink."""
@@ -318,44 +316,44 @@ class GraphEngine:
         return map_to_docs(self.search(qvec, k), documents)
 
     # Driver memory per walk is |chunk|·(entries + hops·beam·K) visited
-    # floats (the per-query dicts of multi_beam_visited_over live on the
-    # driver); chunking caps that at a CONSTANT regardless of |Q|
-    # (VERDICT r6 #3). 64 queries × ~(128 + 3·24·8) ≈ 45k entries per
-    # chunk — trivially driver-resident; a 10⁴-query batch runs ⌈|Q|/64⌉
-    # independent walks instead of one unbounded dict.
+    # floats (one visited dict per query, driver-side); chunking caps
+    # that at a CONSTANT regardless of |Q|. 64 queries × ~(128 + 3·24·8)
+    # ≈ 45k entries per chunk — trivially driver-resident; a 10⁴-query
+    # batch runs ⌈|Q|/64⌉ independent walks instead of one unbounded dict.
     BATCH_CHUNK = 64
 
     def search_batch(
         self, queries: list[tuple[int, list[float]]], k: int = 5
     ) -> DataFrame:
         """Batched retrieval: ONE walk serves every query per hop
-        (``graph_ann.multi_beam_visited_over`` — query_id travels in the
-        frontier, jobs per batch independent of |Q| within a chunk),
-        cut to top-k per query as (query_id, vec_id, score). Batches
-        larger than ``BATCH_CHUNK`` split into fixed-size chunks whose
-        visited unions feed ONE final cut — value-identical to the
-        unchunked walk (each query's walk dataflow is independent:
-        entries, frontier cut, expansion and fold all key on query_id,
-        so chunk membership cannot change any query's visited set;
-        pinned in tests), while bounding driver state per walk. The
-        serving endpoint shape a batched retrieval API runs over the
-        persisted index."""
+        (``graph_ann.multi_beam_visited_over`` — jobs per batch
+        independent of |Q| within a chunk), cut to top-k per query as
+        (query_id, vec_id, score). The batch is checked first
+        (``graph_ann.batch_members``: a repeated id is answered once, a
+        repeat with a different vector or a NaN/±Inf component raises
+        ``ValueError`` before any job), then split into fixed-size
+        chunks of distinct ids whose visited unions feed ONE final cut —
+        value-identical to the unchunked walk (each query's walk is
+        independent, pinned in tests) while bounding driver state per
+        walk. The serving endpoint shape a batched retrieval API runs
+        over the persisted index."""
         from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
+            batch_members,
             multi_beam_visited_over,
             topk_per_query,
         )
 
+        members = list(batch_members(queries).items())
         # [[]] for an empty batch: one walk over zero queries returns
         # the empty visited relation (schema'd), so an empty request
         # yields an empty result instead of an error
         chunks = [
-            queries[i : i + self.BATCH_CHUNK]
-            for i in range(0, len(queries), self.BATCH_CHUNK)
+            members[i : i + self.BATCH_CHUNK]
+            for i in range(0, len(members), self.BATCH_CHUNK)
         ] or [[]]
         parts = [
             multi_beam_visited_over(
                 self.edges.select("node", "nbr"),
-                self.corpus.select("vec_id", "label"),
                 self.corpus.select("vec_id", "v", "nrm"),
                 chunk,
                 self.beam,
@@ -364,17 +362,7 @@ class GraphEngine:
             )
             for chunk in chunks
         ]
-        visited = parts[0]
-        for p in parts[1:]:
-            visited = visited.unionByName(p)
-        if len(parts) > 1:
-            # a query_id duplicated ACROSS chunks emits its (identical,
-            # deterministic) visited rows once per chunk — collapse them
-            # so the per-query cut counts each vec_id once, exactly like
-            # the unchunked walk's (query_id, vec_id)-keyed fold; the
-            # single-chunk plan stays byte-identical to pre-chunking
-            visited = visited.distinct()
-        return topk_per_query(visited, k)
+        return topk_per_query(reduce(DataFrame.unionByName, parts), k)
 
 
 def main(argv: list[str] | None = None) -> None:

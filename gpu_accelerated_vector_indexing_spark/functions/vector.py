@@ -302,6 +302,15 @@ def _array_literal(parts: list[np.ndarray], elem: str, nested: bool) -> Column:
     return Column(jclass("sql.Column")(node))
 
 
+def finite_doubles(vals) -> list[float]:
+    """``vals`` as Python floats, failing loud like
+    :func:`lit_double_array`: a NaN or ±Inf raises the same
+    ``ValueError`` on the driver — for vectors that travel in a local
+    relation instead of a literal, which would accept them and score
+    rows NaN."""
+    return _packed(vals, "double").tolist()
+
+
 def lit_double_array(vals) -> Column:
     """``ARRAY<DOUBLE>`` literal in O(1) py4j calls (see above); a NaN or
     ±Inf component raises ``ValueError`` before any job."""

@@ -44,9 +44,9 @@ staged CTEs and must produce value-identical results.
 
 from __future__ import annotations
 
-import math
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -55,11 +55,15 @@ from gpu_accelerated_vector_indexing_spark.functions.vector import (
     as_double_array,
     dot_product,
     dot_product_seq_pandas,
+    finite_doubles,
     l2_norm,
     lit_double_array,
+    lit_long_array,
+    seq_l2_norm,
 )
 from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
 from gpu_accelerated_vector_indexing_spark.operators.ivf import DELETE_MOD, fixture_qvec, fixture_qvecs
+from gpu_accelerated_vector_indexing_spark.operators.quantize import bq_code, bq_hamming, bq_query_words
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
 K_GRAPH = 8  # neighbors kept per node
@@ -324,186 +328,154 @@ def _masked_adj(adj: DataFrame, modulus: int, keep_cols: bool = False) -> DataFr
     return out if keep_cols else out.select("node", "nbr")
 
 
-def _walk(
-    adj: DataFrame,
-    entries: DataFrame,
-    scorer_ids,
-    value_col: str,
-    value_type: str,
-    ascending: bool,
-    beam: int,
-    hops: int,
-) -> DataFrame:
-    """The ONE bounded beam-walk loop shared by every search variant
-    (float-scored and Hamming-scored): ``scorer_ids(ids)`` maps a
-    Python id list to a (vec_id, ``value_col``) relation; ``ascending``
-    picks the better-first ordering (False: score DESC; True: hamming
-    ASC), the vec_id DESC tie-break is shared. Returns the deduplicated
-    visited set as a local relation (vec_id, value_col).
-
-    Driver-resident walk state (VERDICT r5 #3 — walk rows are
-    driver-latency bound, not compute bound): every per-hop relation
-    except the adjacency and the corpus is walk-bounded (frontier ≤
-    beam, expansion ≤ beam·k, visited ≤ |entries| + hops·beam·k — the
-    SAME bounds that already justified broadcasting them every hop), so
-    they live driver-side, exactly the ``ivf.probe_labels`` posture
-    (ranking ≤128 centroid rows in-process instead of paying fixed
-    job-scheduling overhead per step). Each hop is exactly TWO tiny
-    distributed actions — (1) collect the frontier's neighbor ids from
-    the adjacency point-lookup (the ≤beam frontier enters as a pushed
-    InSet predicate: bucket/partition pruning at scale), (2) collect
-    the scored rows for the NEW ids (the id set enters as a pushed
-    InSet on the corpus relation — partition-prunable, strictly better
-    than the previous per-hop BroadcastExchange) — with dedup/anti-
-    visited/frontier-cut as driver set ops. The previous shape paid an
-    eager localCheckpoint plus shuffle + broadcast-exchange jobs per
-    hop for the same bounded relations. The CORPUS-scale relations
-    (adjacency, vectors/codes) are only ever scanned distributed with
-    pushed id predicates (pinned in tests/test_plans.py).
-
-    Value parity: scores are unique per vec_id, so dict keep-first ≡
-    the old MAX/MIN dedup aggregate; Python set difference ≡ the old
-    anti-join; Python float/int ordering equals the engine's total
-    order on finite doubles/longs; collect/createDataFrame round-trips
-    IEEE doubles exactly.
-    """
-    spark = adj.sparkSession
-
-    def fold(rows: list, into: dict) -> None:
-        for r in rows:
-            into.setdefault(r["vec_id"], r[value_col])
-
-    visited: dict[int, float] = {}
-    # entries may arrive pre-collected (a sorted id list) — the serving
-    # engine memoizes its index's entry points once instead of paying a
-    # groupBy job per search (VERDICT r8 wrong #1); a relation collects
-    # here exactly as before, so either form folds identically
-    entry_ids = (
-        list(entries)
-        if isinstance(entries, list)
-        else sorted(r.vec_id for r in entries.select("vec_id").collect())
-    )
-    fold(scorer_ids(entry_ids).collect(), visited)
-    sign = 1 if ascending else -1
-    for _ in range(hops):
-        # the frontier honors the beam bound from hop 0 (n_cells can
-        # exceed BEAM_WIDTH at reference shape: 128 clusters vs beam 24)
-        frontier = [
-            int(vid)
-            for vid, _ in sorted(
-                visited.items(), key=lambda kv: (sign * kv[1], -kv[0])
-            )[:beam]
-        ]
-        nbrs = (
-            adj.filter(F.col("node").isin(frontier)).select("nbr").collect()
-        )
-        # dedup + never-rescore-visited as driver set ops (value-neutral
-        # — the oracle keeps the plain union; scores are unique per id)
-        new_ids = sorted({int(r.nbr) for r in nbrs} - visited.keys())
-        if new_ids:
-            fold(scorer_ids(new_ids).collect(), visited)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(int(k), v) for k, v in sorted(visited.items())], 1
-        ),
-        f"vec_id bigint, {value_col} {value_type}",
-    )
-
-
-def _walk_lockstep(
+def beam_walk(
     adj: DataFrame,
     entry_ids: list[int],
-    members: list[tuple[str, str, bool, object]],
-    beam: int,
+    members: list[tuple[bool, int]],
+    score,
     hops: int,
-) -> list[DataFrame]:
-    """N bounded walks over ONE adjacency in LOCKSTEP — the
-    ``multi_beam_visited_over`` batching posture extended to
-    HETEROGENEOUS scorers (float cosine + Hamming cannot share one
-    scorer relation, so per-member scored rows union into ONE collect
-    per hop instead). Per hop: one union-frontier adjacency
-    point-lookup + one union scoring action for ALL members, so jobs
-    per lockstep are 2·hops+1 regardless of member count, where N
-    independent ``_walk`` calls pay N·(2·hops+1).
+) -> list[dict[int, float]]:
+    """The ONE bounded beam-walk loop: every graph search in the package
+    (single float or Hamming walks, the lockstep comparison pair, query
+    batches and beam sweeps) runs its hops here.
 
-    ``members``: (value_col, value_type, ascending, scorer_ids) per
-    walk. Value parity with independent walks is structural — each
-    member keeps its OWN visited dict, frontier cut and dedup (the
-    orchestration is shared, the dataflow is not): scored values ride
-    the union as doubles, exact for both the float scores and the
-    integer Hamming distances (≤ dim < 2^53), and the per-member
-    frontier ordering on those doubles equals the standalone walk's
-    float/int ordering. Pinned by
-    tests/test_graph_ann.py::test_comparison_pair_walk_matches_standalone.
+    ``members`` holds one ``(ascending, beam)`` per walk: ``ascending``
+    picks the better-first order (False: score DESC; True: Hamming ASC),
+    the vec_id DESC tie-break is shared, and ``beam`` bounds that walk's
+    frontier. ``score(ids_per_member)`` returns ONE relation
+    ``(wk, vec_id, val)`` scoring each member's new ids (``wk`` is the
+    member's index). Returns each member's visited set, vec_id → value.
+
+    Walk state is driver-resident (walk rows are driver-latency bound,
+    not compute bound): per member the frontier is ≤ beam, an expansion
+    ≤ beam·K and the visited set ≤ |entries| + hops·beam·K rows, the
+    ``ivf.probe_labels`` posture. The entries fold once; each hop cuts
+    every member's frontier on the driver, then runs ONE adjacency
+    point-lookup for the union frontier (a pushed InSet on ``node``) and
+    ONE scoring collect for every member's new ids — 2·hops+1 actions
+    whatever the member count. The corpus-scale relations (adjacency,
+    vectors/codes) are only ever scanned with pushed id predicates
+    (pinned in tests/test_plans.py).
+
+    Value parity with one walk per member is structural: each member
+    keeps its own visited dict, frontier cut and dedup; only the
+    orchestration is shared. Scores are unique per vec_id, so dict
+    keep-first ≡ a MAX/MIN dedup aggregate and set difference ≡ an
+    anti-join; values ride as doubles, exact for rounded scores and for
+    integer Hamming distances (≤ dim < 2^53), and Python's order on them
+    is the engine's on finite doubles.
     """
-    spark = adj.sparkSession
-    n = len(members)
-
-    def union_scored(per_member_ids: list[list[int]]) -> list:
-        out = None
-        for i, ((vcol, _vt, _asc, scorer), ids) in enumerate(
-            zip(members, per_member_ids)
-        ):
-            if not ids:
-                continue
-            part = scorer(ids).select(
-                F.lit(i).alias("wk"),
-                "vec_id",
-                F.col(vcol).cast("double").alias("val"),
-            )
-            out = part if out is None else out.unionByName(part)
-        return out.collect() if out is not None else []
-
     visited: list[dict[int, float]] = [{} for _ in members]
 
-    def fold(rows: list) -> None:
-        for r in rows:
-            visited[r["wk"]].setdefault(r["vec_id"], r["val"])
+    def fold(ids_per_member: list[list[int]]) -> None:
+        if any(ids_per_member):
+            for wk, vec_id, val in score(ids_per_member).collect():
+                visited[wk].setdefault(vec_id, val)
 
-    entry_list = sorted(int(v) for v in entry_ids)
-    fold(union_scored([entry_list] * n))
+    fold([sorted(int(v) for v in entry_ids)] * len(members))
     for _ in range(hops):
-        frontiers: list[list[int]] = []
-        for i, (_vcol, _vt, asc, _scorer) in enumerate(members):
-            sign = 1 if asc else -1
-            frontiers.append(
-                [
-                    int(vid)
-                    for vid, _ in sorted(
-                        visited[i].items(), key=lambda kv: (sign * kv[1], -kv[0])
-                    )[:beam]
-                ]
-            )
-        union_nodes = sorted({v for f in frontiers for v in f})
-        nbr_rows = (
-            adj.filter(F.col("node").isin(union_nodes))
-            .select("node", "nbr")
-            .collect()
-        )
-        adj_map: dict[int, list[int]] = {}
-        for r in nbr_rows:
-            adj_map.setdefault(r.node, []).append(r.nbr)
-        new_ids = [
-            sorted(
-                {int(nb) for v in frontiers[i] for nb in adj_map.get(v, ())}
-                - visited[i].keys()
-            )
-            for i in range(n)
+        # the frontier honors the beam bound from hop 0 (n_cells can
+        # exceed the beam at reference shape: 128 cells vs beam 24)
+        frontiers = [
+            sorted(seen, key=lambda v: (seen[v] if asc else -seen[v], -v))[:beam]
+            for seen, (asc, beam) in zip(visited, members)
         ]
-        if any(new_ids):
-            fold(union_scored(new_ids))
-    out: list[DataFrame] = []
-    for i, (vcol, vt, _asc, _scorer) in enumerate(members):
-        conv = int if vt == "bigint" else float
-        out.append(
-            spark.createDataFrame(
-                spark.sparkContext.parallelize(
-                    [(int(kk), conv(v)) for kk, v in sorted(visited[i].items())], 1
-                ),
-                f"vec_id bigint, {vcol} {vt}",
-            )
+        nodes = sorted({v for f in frontiers for v in f})
+        if not nodes:
+            break
+        nbrs: dict[int, list[int]] = {}
+        for node, nbr in adj.filter(F.col("node").isin(nodes)).select("node", "nbr").collect():
+            nbrs.setdefault(node, []).append(nbr)
+        fold(
+            [
+                sorted({n for v in f for n in nbrs.get(v, ())} - seen.keys())
+                for f, seen in zip(frontiers, visited)
+            ]
         )
-    return out
+    return visited
+
+
+def lookup_scorer(*members: tuple[DataFrame, Column]):
+    """:func:`beam_walk`'s scorer over per-member ``(relation, value)``
+    pairs: member i's new ids enter as a pushed InSet on its relation (a
+    pruned scan, never a shuffle), its rows are tagged ``wk = i`` with
+    the value as a double, and the members union into the one relation
+    the kernel collects per hop."""
+
+    def score(ids_per_member: list[list[int]]) -> DataFrame:
+        parts = [
+            rel.filter(F.col("vec_id").isin(ids)).select(
+                F.lit(wk).alias("wk"), "vec_id", val.cast("double").alias("val")
+            )
+            for wk, ((rel, val), ids) in enumerate(zip(members, ids_per_member))
+            if ids
+        ]
+        return reduce(DataFrame.unionByName, parts)
+
+    return score
+
+
+def _float_scorer(emb_n: DataFrame, qvec: list[float]) -> tuple[DataFrame, Column]:
+    """The ONE float-cosine scorer ``(emb_n, score)`` for a literal query:
+    ``q`` is one JVM-built array literal (O(1) py4j calls) and ‖q‖ is
+    hoisted once on the driver (``seq_l2_norm`` — bit-identical to the
+    JVM fold + sqrt), so the hoist is value-neutral exactly like the
+    build's; ``score`` is the engine recipe
+    round(dot(v, q) / (‖v‖·‖q‖ + ε), 6)."""
+    q = lit_double_array(qvec)
+    qn = F.lit(seq_l2_norm(qvec))
+    return emb_n, F.round(
+        dot_product(F.col("v"), q) / (F.col("nrm") * qn + F.lit(EPSILON)), 6
+    )
+
+
+def top_k(visited: DataFrame, k: int) -> DataFrame:
+    """The k best ``(vec_id, score)`` rows — (score DESC, vec_id DESC),
+    the reference's KNN tie-break (IVF.cpp:247)."""
+    return visited.orderBy(F.desc("score"), F.desc("vec_id")).limit(k)
+
+
+def rescore_topk(emb_n: DataFrame, qvec: list[float], ids, k: int) -> DataFrame:
+    """Exact cosine top-k of a compressed walk's visited ids (the
+    DiskANN rescore): the ids enter as a pushed InSet on the normed
+    corpus and score with :func:`_float_scorer`'s recipe."""
+    rel, score = _float_scorer(emb_n, qvec)
+    return top_k(
+        rel.filter(F.col("vec_id").isin(sorted(ids))).select("vec_id", score.alias("score")), k
+    )
+
+
+def _visited_relation(
+    spark: SparkSession, visited: list[dict[int, float]], member_ids: list[int] | None = None
+) -> DataFrame:
+    """Walk results as ONE 1-slice local relation: ``(vec_id, score)``
+    for a single walk, ``(query_id, vec_id, score)`` over every member
+    with ``member_ids`` (collect/createDataFrame round-trip IEEE doubles
+    exactly)."""
+    if member_ids is None:
+        rows, schema = sorted(visited[0].items()), "vec_id bigint, score double"
+    else:
+        rows = sorted((q, v, s) for q, seen in zip(member_ids, visited) for v, s in seen.items())
+        schema = "query_id bigint, vec_id bigint, score double"
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+
+
+def beam_visited_over(
+    adj: DataFrame,
+    emb_n: DataFrame,
+    qvec: list[float],
+    beam: int,
+    hops: int,
+    entry_ids: list[int],
+) -> DataFrame:
+    """One float-scored beam walk over an adjacency + normed state from
+    ``entry_ids`` (every caller memoizes them): the deduplicated visited
+    set ``(vec_id, score)``. Shared by the fixture, merged,
+    reference-shape and engine searches."""
+    (visited,) = beam_walk(
+        adj, entry_ids, [(False, beam)], lookup_scorer(_float_scorer(emb_n, qvec)), hops
+    )
+    return _visited_relation(adj.sparkSession, [visited])
 
 
 def graph_comparison_members(
@@ -515,43 +487,25 @@ def graph_comparison_members(
     hops: int = BEAM_HOPS,
 ) -> tuple[DataFrame, DataFrame]:
     """The two graph members of ``ivf.ann_method_comparison``
-    (``graph_beam``, ``graph_beam_bq``) served from ONE lockstep walk
-    loop (r11): the standalone rows paid 2·(2·hops+1) driver actions
-    for two walks over the SAME adjacency and entry points; the
-    lockstep pays 2·hops+1. Each member's visited set — and hence its
-    top-k / rescored top-k — is exactly the standalone query's (the
-    per-member dataflow is untouched; see ``_walk_lockstep``)."""
-    adj = fixture_graph(spark, sf_dir)
+    (``graph_beam``, ``graph_beam_bq``) served from ONE lockstep walk: a
+    float member and a Hamming member under the union of their scorers,
+    2·hops+1 actions for both instead of 2·(2·hops+1). Each member's
+    visited set — and hence its top-k / rescored top-k — is exactly the
+    standalone query's (see :func:`beam_walk`)."""
     emb_n = fixture_normed(spark, sf_dir)
-    codes = fixture_bq_codes(spark, sf_dir)
     qvec = fixture_qvec(spark, sf_dir, query_id)
-    fscored, q, qn = _float_scorer(emb_n, qvec)
-    hscored = _bq_scorer(codes, qvec)
-    fvis, hvis = _walk_lockstep(
-        adj,
+    fvis, hvis = beam_walk(
+        fixture_graph(spark, sf_dir),
         fixture_entry_ids(spark, sf_dir),
-        [
-            ("score", "double", False, fscored),
-            ("hamming", "bigint", True, hscored),
-        ],
-        beam,
+        [(False, beam), (True, beam)],
+        lookup_scorer(
+            _float_scorer(emb_n, qvec), _fixture_bq_scorer(spark, sf_dir, qvec)
+        ),
         hops,
     )
-    float_member = fvis.orderBy(F.desc("score"), F.desc("vec_id")).limit(k)
-    # BQ member: exact rescore of EVERY visited node (rescore_n=None
-    # posture of knn_graph_beam_bq) through the same scorer expressions
-    bq_member = (
-        emb_n.join(F.broadcast(hvis.select("vec_id")), "vec_id")
-        .select(
-            "vec_id",
-            F.round(
-                dot_product(F.col("v"), q) / (F.col("nrm") * qn + F.lit(EPSILON)), 6
-            ).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
-    return float_member, bq_member
+    # the BQ member rescores EVERY visited node (knn_graph_beam_bq's
+    # default rescore_n=None)
+    return top_k(_visited_relation(spark, [fvis]), k), rescore_topk(emb_n, qvec, hvis, k)
 
 
 def _beam_visited(
@@ -562,97 +516,32 @@ def _beam_visited(
     hops: int,
     delete_mod: int | None = None,
 ) -> DataFrame:
-    """The float-scored beam walk shared by ``knn_graph_beam`` and its
-    filtered variant: returns the deduplicated visited set
-    ``(vec_id, score)`` after ``hops`` bounded expansions.
+    """The fixture float walk shared by ``knn_graph_beam`` and its
+    filtered / with-deletes variants: the visited set ``(vec_id, score)``
+    after ``hops`` bounded expansions.
 
     Entry points are one node per IVF cell (the cell's minimum vec_id)
     — the multi-entry posture of a layered graph index's upper levels,
     and measurably necessary: a single fixed entry navigates near-
     uniform fixture embeddings at <10% recall@5, per-cell entries at
-    ~90% with the same beam budget. Fixed hop count, fixed beam width
-    — each hop is two bounded point-lookups (pushed-InSet adjacency
-    expansion, pushed-InSet scoring), with the walk-bounded state
-    (frontier/visited ≤ cells + hops·beam·K rows) driver-resident; no
-    stage's width depends on corpus size and nothing corpus-sized is
-    ever collected. The visited set is deduplicated by grouping on
-    vec_id (scores for a given vector are identical by construction,
-    so MAX is a no-op chosen for engine portability).
+    ~90% with the same beam budget. Fixed hop count, fixed beam width;
+    no stage's width depends on corpus size and nothing corpus-sized is
+    ever collected.
     """
     adj = fixture_graph(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
     if delete_mod is not None:
         # read path under deletion: the masked adjacency is exactly what
         # the index holds after the tombstoned rows' delete-compaction
         # (the graph_ann_insert arch posture); entries come from the
         # LIVE corpus, so the walk can never visit a tombstone.
         adj = _masked_adj(adj, delete_mod)
-        emb = emb.filter(F.col("vec_id") % delete_mod != 0)
     return beam_visited_over(
         adj,
-        emb,
         fixture_normed(spark, sf_dir),
         fixture_qvec(spark, sf_dir, query_id),
         beam,
         hops,
         entry_ids=fixture_entry_ids(spark, sf_dir, delete_mod),
-    )
-
-
-def _float_scorer(emb_n: DataFrame, qvec: list[float]):
-    """The ONE float-cosine walk scorer: returns (scorer_ids, q, qn).
-
-    ``q`` is one JVM-built array literal (O(1) py4j calls, not dim
-    F.lit calls); ‖q‖ is hoisted once, in Python floats — bit-identical
-    to the JVM fold + sqrt (same IEEE-754 doubles, same left-to-right
-    order), so the hoist is value-neutral exactly like the build's.
-    ``scorer_ids(ids)``: ids is walk-bounded (≤ |entries| or ≤ beam·K)
-    and enters as a pushed InSet predicate on the corpus relation, so
-    the probe is a pruned scan (pinned in tests/test_plans.py), never a
-    shuffle."""
-    q = lit_double_array(qvec)
-    acc = 0.0
-    for x in qvec:
-        acc += float(x) * float(x)
-    qn = F.lit(math.sqrt(acc))  # math.sqrt: correctly rounded, ≡ JVM/DuckDB sqrt
-
-    def scored(ids: list[int]) -> DataFrame:
-        return emb_n.filter(F.col("vec_id").isin(ids)).select(
-            "vec_id",
-            F.round(
-                dot_product(F.col("v"), q) / (F.col("nrm") * qn + F.lit(EPSILON)), 6
-            ).alias("score"),
-        )
-
-    return scored, q, qn
-
-
-def beam_visited_over(
-    adj: DataFrame,
-    emb: DataFrame,
-    emb_n: DataFrame,
-    qvec: list[float],
-    beam: int,
-    hops: int,
-    entry_ids: list[int] | None = None,
-) -> DataFrame:
-    """Corpus-parameterized float-scored beam walk: adjacency + entry
-    corpus (vec_id, label) + normed state + a raw query vector. Shared
-    by the fixture search above and the reference-shape search
-    (operators/refshape.refshape_graph_beam) — one walk definition.
-    ``entry_ids`` bypasses the per-search entry-point groupBy when the
-    caller (the serving engine) has memoized them for its index."""
-    scored, _q, _qn = _float_scorer(emb_n, qvec)
-
-    return _walk(
-        adj,
-        entry_ids if entry_ids is not None else _entry_points(emb),
-        scored,
-        "score",
-        "double",
-        False,
-        beam,
-        hops,
     )
 
 
@@ -666,8 +555,7 @@ def knn_graph_beam(
 ) -> DataFrame:
     """Beam search over the kNN graph: top-k (vec_id, score) — the
     bounded walk of :func:`_beam_visited` cut to the k best."""
-    visited = _beam_visited(spark, sf_dir, query_id, beam, hops)
-    return visited.orderBy(F.desc("score"), F.desc("vec_id")).limit(k)
+    return top_k(_beam_visited(spark, sf_dir, query_id, beam, hops), k)
 
 
 def knn_graph_beam_with_deletes(
@@ -691,8 +579,7 @@ def knn_graph_beam_with_deletes(
     the adjacency scan (a pushed predicate here; an anti-join against a
     broadcast tombstone table at scale) and everything downstream is
     unchanged."""
-    visited = _beam_visited(spark, sf_dir, query_id, beam, hops, delete_mod=delete_mod)
-    return visited.orderBy(F.desc("score"), F.desc("vec_id")).limit(k)
+    return top_k(_beam_visited(spark, sf_dir, query_id, beam, hops, delete_mod=delete_mod), k)
 
 
 def knn_graph_beam_filtered(
@@ -725,11 +612,7 @@ def knn_graph_beam_filtered(
         F.col("doc_id").alias("vec_id")
     )
     visited = _beam_visited(spark, sf_dir, query_id, beam, hops)
-    return (
-        visited.join(allowed, "vec_id", "left_semi")
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    return top_k(visited.join(allowed, "vec_id", "left_semi"), k)
 
 
 def knn_graph_search_with_docs(
@@ -746,76 +629,44 @@ def knn_graph_search_with_docs(
     return map_to_docs(topk, load_table(spark, sf_dir, "documents"))
 
 
-def multi_beam_visited_over(
-    adj: DataFrame,
-    emb: DataFrame,
-    emb_n: DataFrame,
-    queries: list[tuple[int, list[float]]],
-    beam: int,
-    hops: int,
-    entry_ids: list[int] | None = None,
-    beams: dict[int, int] | None = None,
-) -> DataFrame:
-    """ONE walk loop serving ALL queries per hop — ``query_id`` travels
-    with the driver-resident frontier (the ``ivf.multi_query_knn_ivf``
-    one-plan posture, VERDICT r5 #5): each hop is TWO tiny distributed
-    actions for the whole batch (collect the union frontier's neighbor
-    lists via a pushed InSet on the adjacency; collect the scored new
-    (query_id, vec_id) pairs via a pushed InSet on the corpus), so jobs
-    per walk are 2·hops+2 regardless of |Q|, where the previous
-    per-query loop paid a full walk's job-scheduling overhead |Q|
-    times.
-
-    Value parity with the per-query walk is structural: the walk's
-    dataflow is independent per query (entries, frontier cut, expansion
-    and fold all key on ``query_id``) and only the orchestration
-    changes — ‖q‖ is hoisted in the same Python-float fold, scores
-    round the same way, and the per-query beam cut is the same (score
-    DESC, vec_id DESC) ordering as a driver sort (Python float order ≡
-    the engine's on finite doubles). Returns the deduplicated visited
-    set (query_id, vec_id, score).
-
-    ``beams`` optionally overrides the frontier bound PER MEMBER
-    (member id → beam width): because the walk's dataflow is
-    independent per member, a batch whose members share one query
-    vector but sweep the beam knob is value-identical to one
-    single-query walk per width — the r10 batching that serves the
-    whole recall/NDCG sweep grid from ONE walk loop (2·hops+2 jobs for
-    the grid instead of per swept value).
-    """
-    spark = emb.sparkSession
-    qmeta: dict[int, tuple[list[float], float]] = {}
+def batch_members(queries: list[tuple[int, list[float]]]) -> dict[int, list[float]]:
+    """A batch's ``query id → vector`` in first-seen order, checked on the
+    driver before any job: an id repeated with the same vector is
+    answered once; an id repeated with a different vector, or a NaN/±Inf
+    component, raises ``ValueError``."""
+    members: dict[int, list[float]] = {}
     for qid, qv in queries:
-        acc = 0.0
-        for x in qv:
-            acc += float(x) * float(x)
-        qmeta[int(qid)] = ([float(x) for x in qv], math.sqrt(acc))
+        qv = finite_doubles(qv)
+        if members.setdefault(int(qid), qv) != qv:
+            raise ValueError(f"query id {qid} is repeated with a different vector")
+    return members
 
-    def score_pairs(pairs: list[tuple[int, int]]) -> DataFrame:
+
+def _pairs_scorer(emb_n: DataFrame, qvecs: list[list[float]]):
+    """:func:`beam_walk`'s scorer for a batch whose members each carry
+    their own query vector (``qvecs[wk]``): ‖q‖ is hoisted per member in
+    the same driver fold as :func:`_float_scorer`, and scores round the
+    same way."""
+    spark = emb_n.sparkSession
+    meta = [(qv, seq_l2_norm(qv)) for qv in qvecs]
+
+    def score(ids_per_member: list[list[int]]) -> DataFrame:
         # the union id set enters as a pushed InSet on the corpus
-        # relation (pruned scan); query attribution AND the per-query
-        # vector/norm ride ONE 1-slice local (query_id, vec_id, qv, qn)
-        # relation whose broadcast builds driver-side — the r8 shape
-        # carried them as two relations and paid a second broadcast
-        # exchange + join per hop for a ≤|Q|-row lookup (VERDICT r8
-        # wrong #1's job-overhead drift); fusing them is value-neutral
-        # (same rows reach the same score expression)
-        union_ids = sorted({int(v) for _, v in pairs})
+        # relation (pruned scan); member attribution AND the per-member
+        # vector/norm ride ONE 1-slice local (wk, vec_id, qv, qn)
+        # relation whose broadcast builds driver-side
+        union_ids = sorted({v for ids in ids_per_member for v in ids})
         pdf = spark.createDataFrame(
             spark.sparkContext.parallelize(
-                [
-                    (int(q_id), int(v), qmeta[int(q_id)][0], qmeta[int(q_id)][1])
-                    for q_id, v in pairs
-                ],
-                1,
+                [(wk, v, *meta[wk]) for wk, ids in enumerate(ids_per_member) for v in ids], 1
             ),
-            "query_id bigint, vec_id bigint, qv array<double>, qn double",
+            "wk bigint, vec_id bigint, qv array<double>, qn double",
         )
         return (
             emb_n.filter(F.col("vec_id").isin(union_ids))
             .join(F.broadcast(pdf), "vec_id")
             .select(
-                "query_id",
+                "wk",
                 "vec_id",
                 F.round(
                     dot_product(F.col("v"), F.col("qv"))
@@ -825,61 +676,40 @@ def multi_beam_visited_over(
             )
         )
 
-    # Driver-resident walk state, exactly like the single-query _walk
-    # (frontier/expansion/visited are ≤ |Q|·(|entries| + hops·beam·k)
-    # rows — the same bounds that justified broadcasting them per hop):
-    # each hop is TWO tiny distributed actions for the WHOLE batch —
-    # collect the union frontier's neighbor lists, then collect the
-    # scored new pairs — with per-query dedup/anti/cut as driver set
-    # ops. Jobs per walk stay hops·2+2 regardless of |Q|.
-    visited: dict[tuple[int, int], float] = {}
+    return score
 
-    def fold(batch_rows: list) -> None:
-        for r in batch_rows:
-            visited.setdefault((r["query_id"], r["vec_id"]), r["score"])
 
-    if entry_ids is None:
-        entry_ids = sorted(
-            r.vec_id for r in _entry_points(emb).select("vec_id").collect()
-        )
-    q_ids = [int(q_id) for q_id, _ in queries]
-    fold(score_pairs([(q_id, v) for q_id in q_ids for v in entry_ids]).collect())
-    for _ in range(hops):
-        per_q: dict[int, list[tuple[int, float]]] = {}
-        for (q_id, vid), s in visited.items():
-            per_q.setdefault(q_id, []).append((vid, s))
-        frontier = [
-            (q_id, vid)
-            for q_id, items in per_q.items()
-            for vid, _ in sorted(items, key=lambda kv: (-kv[1], -kv[0]))[
-                : beams.get(q_id, beam) if beams else beam
-            ]
-        ]
-        union_nodes = sorted({int(vid) for _, vid in frontier})
-        nbr_rows = (
-            adj.filter(F.col("node").isin(union_nodes))
-            .select("node", "nbr")
-            .collect()
-        )
-        adj_map: dict[int, list[int]] = {}
-        for r in nbr_rows:
-            adj_map.setdefault(r.node, []).append(r.nbr)
-        new_pairs = sorted(
-            {
-                (q_id, int(nbr))
-                for q_id, vid in frontier
-                for nbr in adj_map.get(vid, ())
-            }
-            - visited.keys()
-        )
-        if new_pairs:
-            fold(score_pairs(new_pairs).collect())
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(int(q), int(v), s) for (q, v), s in sorted(visited.items())], 1
-        ),
-        "query_id bigint, vec_id bigint, score double",
+def multi_beam_visited_over(
+    adj: DataFrame,
+    emb_n: DataFrame,
+    queries: list[tuple[int, list[float]]],
+    beam: int,
+    hops: int,
+    entry_ids: list[int],
+    beams: dict[int, int] | None = None,
+) -> DataFrame:
+    """The batch entry: one :func:`beam_walk` member per distinct query
+    id (:func:`batch_members`), so the whole batch costs 2·hops+1 walk
+    actions whatever |Q| (the ``ivf.multi_query_knn_ivf`` one-plan
+    posture). Each member's visited set is exactly the single-query
+    walk's. Returns the visited sets as (query_id, vec_id, score).
+
+    ``beams`` optionally overrides the frontier bound PER MEMBER
+    (member id → beam width): a batch whose members share one query
+    vector but sweep the beam knob is value-identical to one
+    single-query walk per width, so a whole recall/NDCG sweep grid
+    rides one walk.
+    """
+    members = batch_members(queries)
+    beams = beams or {}
+    visited = beam_walk(
+        adj,
+        entry_ids,
+        [(False, beams.get(q, beam)) for q in members],
+        _pairs_scorer(emb_n, list(members.values())),
+        hops,
     )
+    return _visited_relation(emb_n.sparkSession, visited, list(members))
 
 
 def multi_query_graph_beam(
@@ -891,19 +721,14 @@ def multi_query_graph_beam(
     """Batch retrieval through the graph index — the graph-class twin of
     ``knn.multi_query_knn`` (brute) / ``ivf.multi_query_knn_ivf``: ONE
     bounded beam walk serves the whole batch over the SHARED memoized
-    adjacency + normed state (``multi_beam_visited_over`` carries
-    ``query_id`` in the frontier), results cut to top-k per query as
-    (query_id, vec_id, score). Jobs per batch no longer scale with |Q|
-    (VERDICT r5 #5) — the serving shape of a batched retrieval endpoint
-    backed by the second index class.
+    adjacency + normed state (:func:`multi_beam_visited_over`), results
+    cut to top-k per query as (query_id, vec_id, score). Jobs per batch
+    do not scale with |Q| — the serving shape of a batched retrieval
+    endpoint backed by the second index class.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    adj = fixture_graph(spark, sf_dir)
-    emb_n = fixture_normed(spark, sf_dir)
     visited = multi_beam_visited_over(
-        adj,
-        emb,
-        emb_n,
+        fixture_graph(spark, sf_dir),
+        fixture_normed(spark, sf_dir),
         fixture_qvecs(spark, sf_dir, query_ids),
         BEAM_WIDTH,
         BEAM_HOPS,
@@ -932,34 +757,26 @@ def _sweep_visited(
     beams: tuple[int, ...],
     hops: int = BEAM_HOPS,
 ) -> DataFrame:
-    """ONE batched walk serving EVERY swept beam width (member id = the
-    beam value, all members sharing the query vector): the batched
-    walk's per-member dataflow is independent, so each member's visited
-    set is exactly the single-query walk's at that width (the pinned
-    ``multi_query_graph_beam`` parity, applied to the beam knob). Jobs
-    per sweep drop from |beams|·(2·hops+2) to 2·hops+2."""
+    """ONE batched walk serving EVERY swept beam width: member id = the
+    beam value, every member walking the same query vector with its own
+    beam, so each member's visited set is exactly the single-query
+    walk's at that width. One walk's jobs per sweep, not one per width."""
     qv = fixture_qvec(spark, sf_dir, query_id)
     return multi_beam_visited_over(
         fixture_graph(spark, sf_dir),
-        load_table(spark, sf_dir, "embeddings"),
         fixture_normed(spark, sf_dir),
-        [(int(b), qv) for b in beams],
+        [(b, qv) for b in beams],
         max(beams),
         hops,
         entry_ids=fixture_entry_ids(spark, sf_dir),
-        beams={int(b): int(b) for b in beams},
+        beams={b: b for b in beams},
     )
 
 
 def _member_topk(visited: DataFrame, member: int, k: int) -> DataFrame:
     """One member's top-k cut from a batched visited set — the same
-    (score DESC, vec_id DESC) order + limit as ``knn_graph_beam``."""
-    return (
-        visited.filter(F.col("query_id") == member)
-        .select("vec_id", "score")
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    :func:`top_k` as ``knn_graph_beam``."""
+    return top_k(visited.filter(F.col("query_id") == member).select("vec_id", "score"), k)
 
 
 def graph_recall_sweep(
@@ -1003,14 +820,13 @@ def graph_ann_recall(
     graph index's row in the ANN-quality harness (the
     ``ivf.ann_method_comparison`` posture). Each side is k rows, the
     comparison itself costs nothing; ALL queries ride one batched walk
-    loop (``multi_beam_visited_over`` — the pinned batching-parity
-    shape), so the walk's job count is |Q|-independent.
+    (``multi_beam_visited_over`` — the pinned batching-parity shape),
+    so the walk's job count is |Q|-independent.
     """
     from gpu_accelerated_vector_indexing_spark.operators.knn import knn_bruteforce
 
     visited = multi_beam_visited_over(
         fixture_graph(spark, sf_dir),
-        load_table(spark, sf_dir, "embeddings"),
         fixture_normed(spark, sf_dir),
         fixture_qvecs(spark, sf_dir, tuple(query_ids)),
         BEAM_WIDTH,
@@ -1039,8 +855,6 @@ BEAM_RESCORE = None  # None → exact-rescore EVERY visited node (see docstring)
 # are touched only by the final rescore). 8 bytes/vector at dim 64.
 @session_state
 def fixture_bq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gpu_accelerated_vector_indexing_spark.operators.quantize import bq_code
-
     emb = load_table(spark, sf_dir, "embeddings")
     df = emb.select(
         "vec_id", bq_code(as_double_array("embedding")).alias("code")
@@ -1049,33 +863,25 @@ def fixture_bq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-def _bq_scorer(codes: DataFrame, qvec: list[float]):
-    """The ONE Hamming walk scorer over the 1-bit sign codes: packs the
-    query codeword (same bit convention as ``quantize.bq_code`` — bit 63
-    via two's complement) and returns ``hscored(ids)``; ids enter as a
-    pushed InSet on the codes state (see ``_float_scorer``)."""
+def bq_scorer(codes: DataFrame, words: Column, qvec: list[float]) -> tuple[DataFrame, Column]:
+    """The ONE Hamming scorer ``(codes, hamming)`` over sign codes:
+    ``words`` is the relation's ARRAY<BIGINT> codeword and the query's
+    (``quantize.bq_query_words`` — ``bq_code``'s bit convention) is one
+    by-reference JVM literal, so no per-query constant reaches
+    generated code. Serves the one-word fixture walk and the multi-word
+    reference-shape walk (``refshape.refshape_graph_bq``)."""
+    return codes, bq_hamming(words, lit_long_array(bq_query_words(qvec))).cast("long")
+
+
+def _fixture_bq_scorer(spark: SparkSession, sf_dir: str, qvec: list[float]) -> tuple[DataFrame, Column]:
     if len(qvec) > 64:
-        # the one-word packing below and fixture_bq_codes' quantize.bq_code
-        # are both 64-dim forms; past one word the stored codes go NULL and
-        # the hand-packed qcode wraps — fail loudly (the multi-word path is
-        # quantize.bq_codes, used by the refshape family).
+        # fixture_bq_codes' quantize.bq_code is a 64-dim form; past one
+        # word the stored codes go NULL — fail loudly (the multi-word
+        # path is quantize.bq_codes, used by the refshape family).
         raise ValueError(
             f"knn_graph_beam_bq packs one 64-bit word; embedding dim is {len(qvec)}"
         )
-    qcode = 0
-    for j, x in enumerate(qvec):  # same packing as quantize.bq_code
-        if float(x) > 0.0:
-            qcode += 2**j if j < 63 else -(2**63)
-
-    def hscored(ids: list[int]) -> DataFrame:
-        return codes.filter(F.col("vec_id").isin(ids)).select(
-            "vec_id",
-            F.bit_count(F.col("code").bitwiseXOR(F.lit(qcode).cast("long")))
-            .cast("long")
-            .alias("hamming"),
-        )
-
-    return hscored
+    return bq_scorer(fixture_bq_codes(spark, sf_dir), F.array("code"), qvec)
 
 
 def knn_graph_beam_bq(
@@ -1107,8 +913,8 @@ def knn_graph_beam_bq(
 
     At 100 TB this is exactly the deployment split the pattern exists
     for: graph adjacency + codes fit in executor memory as broadcast /
-    bucketed state, the float table is touched by ONE broadcast-id
-    lookup of ≤rescore_n rows per query. No stage's width depends on
+    bucketed state, the float table is touched by ONE pushed-InSet id
+    lookup of ≤rescore_n rows per query (:func:`rescore_topk`). No stage's width depends on
     the corpus.
 
     Determinism: Hamming is an integer (``bit_count(code XOR qcode)``),
@@ -1117,40 +923,16 @@ def knn_graph_beam_bq(
     The oracle replays the walk with sign agreements folded in exact
     small-integer doubles (queries/_graph_ann_oracle.beam_bq_sql).
     """
-    adj = fixture_graph(spark, sf_dir)
     emb_n = fixture_normed(spark, sf_dir)
-    codes = fixture_bq_codes(spark, sf_dir)
     qvec = fixture_qvec(spark, sf_dir, query_id)
-    hscored = _bq_scorer(codes, qvec)
-    _scored, q, qn = _float_scorer(emb_n, qvec)  # for the exact rescore
-
-    cand = _walk(
-        adj,
-        # memoized per (session, corpus) — the same ids the per-call
-        # _entry_points groupBy produced (one node per cell, the cell's
-        # min vec_id); using the cache drops one job per call (r11, the
-        # fixture_entry_ids posture every float walk already has)
+    (visited,) = beam_walk(
+        fixture_graph(spark, sf_dir),
         fixture_entry_ids(spark, sf_dir),
-        hscored,
-        "hamming",
-        "bigint",
-        True,
-        beam,
+        [(True, beam)],
+        lookup_scorer(_fixture_bq_scorer(spark, sf_dir, qvec)),
         hops,
     )
-    if rescore_n is not None:
-        cand = cand.orderBy(F.asc("hamming"), F.desc("vec_id")).limit(rescore_n)
-    return (
-        emb_n.join(F.broadcast(cand.select("vec_id")), "vec_id")
-        .select(
-            "vec_id",
-            F.round(
-                dot_product(F.col("v"), q) / (F.col("nrm") * qn + F.lit(EPSILON)), 6
-            ).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    return rescore_topk(emb_n, qvec, sorted(visited, key=lambda v: (visited[v], -v))[:rescore_n], k)
 
 
 # --- graph index-state persistence (the graph side of dedup's / PQ's
@@ -1598,8 +1380,6 @@ def merge_graph_shards(
     the full build over the union and a bounded touch-up whose every
     stage is Θ(n·k) ∪ Θ(n·SEED_WINDOW).
     """
-    from functools import reduce
-
     cross = (
         _grouped(emb)
         .alias("a")
@@ -1653,7 +1433,6 @@ def knn_graph_beam_merged(
     (queries/_graph_ann_oracle.merged_beam_sql)."""
     visited = beam_visited_over(
         fixture_merged_graph(spark, sf_dir).select("node", "nbr"),
-        load_table(spark, sf_dir, "embeddings"),
         fixture_normed(spark, sf_dir),
         fixture_qvec(spark, sf_dir, query_id),
         beam,
@@ -1663,7 +1442,7 @@ def knn_graph_beam_merged(
         # memoized fixture set; one groupBy job fewer per serve (r11)
         entry_ids=fixture_entry_ids(spark, sf_dir),
     )
-    return visited.orderBy(F.desc("score"), F.desc("vec_id")).limit(k)
+    return top_k(visited, k)
 
 
 def graph_retrieval_ndcg(

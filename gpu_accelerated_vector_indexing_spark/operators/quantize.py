@@ -41,6 +41,7 @@ from gpu_accelerated_vector_indexing_spark.functions.vector import (
     lit_double_array,
     lit_double_array2,
     named_cosine,
+    seq_l2_norm,
 )
 from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
 from gpu_accelerated_vector_indexing_spark.operators.knn import query_vectors
@@ -59,20 +60,14 @@ def _fixture_qrow(spark: SparkSession, sf_dir: str, query_id: int):
     """Memoized ``(qvec ndarray, qnorm float)`` for the ADC LUT builds —
     served from ``ivf.fixture_qvec``'s per-(session, corpus, id) memo
     instead of a per-call ``.first()`` driver job. ``qnorm`` is the
-    Python left-to-right square fold + ``math.sqrt``, bit-identical to
-    the JVM ``l2_norm`` fold (same IEEE-754 doubles, same order — the
-    documented equivalence the graph walk's hoist relies on)."""
-    import math
-
+    driver twin of the JVM ``l2_norm`` fold (``seq_l2_norm`` —
+    bit-identical, the equivalence the graph walk's hoist relies on)."""
     import numpy as np
 
     from gpu_accelerated_vector_indexing_spark.operators.ivf import fixture_qvec
 
     qv = fixture_qvec(spark, sf_dir, query_id)
-    acc = 0.0
-    for x in qv:
-        acc += float(x) * float(x)
-    return np.asarray(qv), math.sqrt(acc)
+    return np.asarray(qv), seq_l2_norm(qv)
 
 
 @session_state
@@ -757,6 +752,21 @@ def bq_codes(v: Column, dim: int) -> Column:
             lambda acc, x: acc + x,
         ),
     )
+
+
+def bq_query_words(qvec) -> list[int]:
+    """Driver-side twin of :func:`bq_codes` for one query vector: the
+    sign bits packed into ``ceil(len/64)`` Python ints with the same
+    two's-complement bit-63 convention, so word 0 equals
+    :func:`bq_code` of the first 64 dims."""
+    words = []
+    for w in range(0, len(qvec), 64):
+        word = 0
+        for j, x in enumerate(qvec[w : w + 64]):
+            if float(x) > 0.0:
+                word += 2**j if j < 63 else -(2**63)
+        words.append(word)
+    return words
 
 
 def bq_hamming(a: Column, b: Column) -> Column:

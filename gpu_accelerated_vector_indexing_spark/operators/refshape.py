@@ -35,8 +35,6 @@ from gpu_accelerated_vector_indexing_spark.functions.vector import (
     as_double_array,
     cosine_similarity_hoisted,
     l2_norm,
-    lit_double_array,
-    lit_long_array,
 )
 from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
 from gpu_accelerated_vector_indexing_spark.operators.ivf import (
@@ -260,20 +258,19 @@ def refshape_graph_beam(
         BEAM_HOPS,
         BEAM_WIDTH,
         beam_visited_over,
+        top_k,
     )
     from gpu_accelerated_vector_indexing_spark.operators.knn import map_to_docs
 
     visited = beam_visited_over(
         refshape_graph(spark, sf_dir),
-        ref_corpus(spark, sf_dir),
         refshape_normed(spark, sf_dir),
         ref_qvec(spark, sf_dir, query_id),
         beam=BEAM_WIDTH,
         hops=BEAM_HOPS,
         entry_ids=ref_entry_ids(spark, sf_dir),  # memoized, one job fewer
     )
-    topk = visited.orderBy(F.desc("score"), F.desc("vec_id")).limit(k)
-    return map_to_docs(topk, load_table(spark, sf_dir, "documents"))
+    return map_to_docs(top_k(visited, k), load_table(spark, sf_dir, "documents"))
 
 
 @session_state
@@ -304,72 +301,29 @@ def refshape_graph_bq(
     which refuses >64 dims by design) cannot. Completes the matrix:
     graph × BQ at the reference's true shape, rescore-all posture.
 
-    The walk loop is the ONE shared ``graph_ann._walk``; only the
-    scoring expressions differ (integer multi-word Hamming, engine-
+    The walk is the ONE shared ``graph_ann.beam_walk`` kernel; only the
+    scoring expression differs (integer multi-word Hamming, engine-
     exact). Full oracle: the staged-CTE compressed walk over the
     derived corpus (sign agreements folded in exact small-integer
     doubles)."""
-    import math
-
-    from gpu_accelerated_vector_indexing_spark.functions.vector import (
-        EPSILON,
-        dot_product,
-    )
     from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
         BEAM_HOPS,
         BEAM_WIDTH,
-        _walk,
+        beam_walk,
+        bq_scorer,
+        lookup_scorer,
+        rescore_topk,
     )
 
-    adj = refshape_graph(spark, sf_dir)
-    emb_n = refshape_normed(spark, sf_dir)
-    codes = refshape_bq_codes(spark, sf_dir)
     qvec = ref_qvec(spark, sf_dir, query_id)
-    # query codewords packed in Python ints — the same bit convention as
-    # quantize.bq_codes (bit 63 via two's complement)
-    qwords = []
-    for w in range((REF_DIM + 63) // 64):
-        word = 0
-        for j in range(64):
-            idx = w * 64 + j
-            if idx < len(qvec) and float(qvec[idx]) > 0.0:
-                word += 2**j if j < 63 else -(2**63)
-        qwords.append(word)
-    qcode = lit_long_array(qwords)  # one JVM-built literal
-
-    def hscored(ids: list[int]) -> DataFrame:
-        # walk-bounded ids as a pushed InSet on the codes state
-        return codes.filter(F.col("vec_id").isin(ids)).select(
-            "vec_id",
-            bq_hamming(F.col("codes"), qcode).cast("long").alias("hamming"),
-        )
-
-    cand = _walk(
-        adj,
-        ref_entry_ids(spark, sf_dir),  # memoized, one job fewer (r11)
-        hscored,
-        "hamming",
-        "bigint",
-        True,
-        BEAM_WIDTH,
+    (visited,) = beam_walk(
+        refshape_graph(spark, sf_dir),
+        ref_entry_ids(spark, sf_dir),
+        [(True, BEAM_WIDTH)],
+        lookup_scorer(bq_scorer(refshape_bq_codes(spark, sf_dir), F.col("codes"), qvec)),
         BEAM_HOPS,
     )
-    q = lit_double_array(qvec)  # one JVM-built literal, not dim F.lit calls
-    acc = 0.0
-    for x in qvec:
-        acc += float(x) * float(x)
-    qn = F.lit(math.sqrt(acc))
-    return (
-        emb_n.join(F.broadcast(cand.select("vec_id")), "vec_id")
-        .select(
-            "vec_id",
-            F.round(
-                dot_product(F.col("v"), q) / (F.col("nrm") * qn + F.lit(EPSILON)), 6
-            ).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    return rescore_topk(refshape_normed(spark, sf_dir), qvec, visited, k)
 
 
 @session_state

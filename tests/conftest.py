@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import uuid
 from contextlib import contextmanager
 from types import SimpleNamespace
 
@@ -51,3 +52,18 @@ def codegen_compiles(spark):
     before = compilations(spark)
     yield out
     out.count = compilations(spark) - before
+
+
+@contextmanager
+def spark_jobs(spark):
+    """``with spark_jobs(spark) as j: ...`` → ``j.count`` is the number
+    of Spark jobs the block ran (counted through a private job group)."""
+    sc = spark.sparkContext
+    out = SimpleNamespace(count=None)
+    group = f"jobs-{uuid.uuid4()}"
+    sc.setJobGroup(group, "job count")
+    try:
+        yield out
+    finally:
+        sc.setJobGroup(None, None)
+        out.count = len(sc.statusTracker().getJobIdsForGroup(group))

@@ -2,7 +2,7 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_CORRECT, SF_SMOKE
+from tests.conftest import SF_CORRECT, SF_SMOKE, codegen_compiles, spark_jobs
 from tests.parity import assert_parity
 
 NAMES = [
@@ -135,8 +135,6 @@ def test_multi_query_graph_beam_batched_parity_and_jobs(spark):
     per-query walk's top-k exactly and (b) cost a job count INDEPENDENT
     of |Q| — the VERDICT r5 #5 acceptance (previously one full walk's
     jobs per query)."""
-    import uuid
-
     from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
         knn_graph_beam,
         multi_query_graph_beam,
@@ -166,13 +164,9 @@ def test_multi_query_graph_beam_batched_parity_and_jobs(spark):
     fixture_qvecs(spark, SF_CORRECT, (0, 1, 3, 5, 7, 9))
 
     def jobs(query_ids):
-        group = f"jobcount-{uuid.uuid4()}"
-        spark.sparkContext.setJobGroup(group, "multi-beam job count")
-        try:
+        with spark_jobs(spark) as batch:
             multi_query_graph_beam(spark, SF_CORRECT, query_ids=query_ids).collect()
-        finally:
-            spark.sparkContext.setJobGroup(None, None)
-        return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+        return batch.count
 
     j2, j6 = jobs((0, 3)), jobs((0, 1, 3, 5, 7, 9))
     assert j6 <= j2 + 1, f"jobs grew with |Q|: {j2} -> {j6}"
@@ -247,22 +241,15 @@ def test_single_walk_job_count_bounded(spark):
     collect + one entry scoring + 2 jobs per hop (expansion lookup,
     scoring lookup) + the final top-k — a regression back to per-hop
     checkpoints/broadcast-exchanges would blow this bound."""
-    import uuid
-
     from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
         BEAM_HOPS,
         knn_graph_beam,
     )
 
     knn_graph_beam(spark, SF_CORRECT).collect()  # warm memoized state
-    group = f"walkjobs-{uuid.uuid4()}"
-    spark.sparkContext.setJobGroup(group, "single walk job count")
-    try:
+    with spark_jobs(spark) as jobs:
         knn_graph_beam(spark, SF_CORRECT).collect()
-    finally:
-        spark.sparkContext.setJobGroup(None, None)
-    jobs = len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
-    assert jobs <= 2 * BEAM_HOPS + 4, f"walk scheduled {jobs} jobs"
+    assert jobs.count <= 2 * BEAM_HOPS + 4, f"walk scheduled {jobs.count} jobs"
 
 
 def test_search_batch_chunking_value_neutral(spark):
@@ -371,6 +358,7 @@ def test_merge_beats_bare_union(spark):
     from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
         BEAM_HOPS,
         BEAM_WIDTH,
+        _entry_points,
         beam_visited_over,
         build_knn_graph_over,
         fixture_normed,
@@ -389,8 +377,9 @@ def test_merge_beats_bare_union(spark):
         ).select("node", "nbr")
         union = half if union is None else union.union(half)
     exact = {r.vec_id for r in knn_bruteforce(spark, SF_SMOKE, query_id=0, k=5).collect()}
+    entry_ids = [r.vec_id for r in _entry_points(emb).collect()]
     bare_visited = beam_visited_over(
-        union, emb, emb_n, fixture_qvec(spark, SF_SMOKE, 0), BEAM_WIDTH, BEAM_HOPS
+        union, emb_n, fixture_qvec(spark, SF_SMOKE, 0), BEAM_WIDTH, BEAM_HOPS, entry_ids
     )
     bare = {
         r.vec_id
@@ -442,22 +431,15 @@ def test_single_serve_walk_job_count_bounded(spark):
     top-k once the serving memo is warm; silent re-accretion of
     per-hop actions fails here instead of showing up as bench drift
     two rounds later."""
-    import uuid
-
     from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
         BEAM_HOPS,
         graph_serve_after_repair,
     )
 
     graph_serve_after_repair(spark, SF_CORRECT).collect()  # warm serving memo
-    group = f"servejobs-{uuid.uuid4()}"
-    spark.sparkContext.setJobGroup(group, "single serve walk job count")
-    try:
+    with spark_jobs(spark) as jobs:
         graph_serve_after_repair(spark, SF_CORRECT).collect()
-    finally:
-        spark.sparkContext.setJobGroup(None, None)
-    jobs = len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
-    assert jobs <= 2 * BEAM_HOPS + 4, f"serve walk scheduled {jobs} jobs"
+    assert jobs.count <= 2 * BEAM_HOPS + 4, f"serve walk scheduled {jobs.count} jobs"
 
 
 def test_graph_cdc_refresh_lifecycle(spark):
@@ -608,3 +590,93 @@ def test_comparison_pair_walk_matches_standalone(spark):
         (r.vec_id, r.score)
         for r in knn_graph_beam_bq(spark, SF_CORRECT, query_id=0, k=5).collect()
     ]
+
+
+def test_one_member_batch_matches_single_walk_bit_for_bit(spark):
+    """The batch entry's pairs scorer and the single-query literal
+    scorer feed the same kernel: a one-member batch visits exactly the
+    single walk's nodes with the same score bits."""
+    from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
+        BEAM_HOPS,
+        BEAM_WIDTH,
+        beam_visited_over,
+        fixture_entry_ids,
+        fixture_graph,
+        fixture_normed,
+        multi_beam_visited_over,
+    )
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import fixture_qvec
+
+    adj, emb_n = fixture_graph(spark, SF_CORRECT), fixture_normed(spark, SF_CORRECT)
+    entry_ids = fixture_entry_ids(spark, SF_CORRECT)
+    for qid in (0, 7):
+        qv = fixture_qvec(spark, SF_CORRECT, qid)
+        single = beam_visited_over(adj, emb_n, qv, BEAM_WIDTH, BEAM_HOPS, entry_ids)
+        batch = multi_beam_visited_over(adj, emb_n, [(qid, qv)], BEAM_WIDTH, BEAM_HOPS, entry_ids)
+        a = sorted((r.vec_id, r.score.hex()) for r in single.collect())
+        b = [(r.vec_id, r.score.hex()) for r in batch.orderBy("vec_id").collect()]
+        assert {r.query_id for r in batch.collect()} == {qid}
+        assert len(a) > BEAM_WIDTH and a == b, f"query {qid} diverged"
+
+
+def test_search_batch_repeated_query_id(spark):
+    """A query id repeated with the same vector is answered once, in one
+    chunk or across chunks; repeated with a different vector it raises
+    ``ValueError`` naming the id before any job, whatever the chunking."""
+    from gpu_accelerated_vector_indexing_spark.engine import GraphEngine
+    from gpu_accelerated_vector_indexing_spark.operators.graph_ann import fixture_graph_index
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import fixture_qvecs
+
+    (_, v0), (_, v7) = fixture_qvecs(spark, SF_SMOKE, (0, 7))
+    idx = fixture_graph_index(spark, SF_SMOKE)
+    for chunk in (64, 1):
+        eng = GraphEngine.from_pretrained(spark, idx)
+        eng.BATCH_CHUNK = chunk
+        once = sorted(tuple(r) for r in eng.search_batch([(1, v0)], k=5).collect())
+        twice = sorted(tuple(r) for r in eng.search_batch([(1, v0), (1, v0)], k=5).collect())
+        assert len(once) == 5 and twice == once
+        with spark_jobs(spark) as jobs, pytest.raises(ValueError, match="query id 1 "):
+            eng.search_batch([(1, v0), (1, v7)], k=5)
+        assert jobs.count == 0
+
+
+# Warm (jobs, Janino compilations) per walk form before the walk loops
+# became one kernel (sf0.01, fresh query ids): the kernel may not add an
+# action or a per-query compilation to any of them.
+WALK_FORM_COUNTS = {
+    "knn_graph_beam": (8, 1),
+    "knn_graph_beam_bq": (9, 3),
+    "graph_comparison_members": (10, 3),
+    "multi_query_graph_beam": (13, 0),
+    "graph_recall_sweep": (14, 2),
+}
+
+
+@pytest.mark.parametrize("form", sorted(WALK_FORM_COUNTS))
+def test_warm_walk_form_counts(spark, form):
+    from gpu_accelerated_vector_indexing_spark.operators import graph_ann as g
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import fixture_qvecs
+
+    calls = {
+        "knn_graph_beam": lambda q: [g.knn_graph_beam(spark, SF_CORRECT, query_id=q[0])],
+        "knn_graph_beam_bq": lambda q: [g.knn_graph_beam_bq(spark, SF_CORRECT, query_id=q[0])],
+        "graph_comparison_members": lambda q: list(
+            g.graph_comparison_members(spark, SF_CORRECT, q[0], 5)
+        ),
+        "multi_query_graph_beam": lambda q: [
+            g.multi_query_graph_beam(spark, SF_CORRECT, query_ids=q)
+        ],
+        "graph_recall_sweep": lambda q: [g.graph_recall_sweep(spark, SF_CORRECT, query_id=q[0])],
+    }
+    # ids no other form has walked, so no per-query code is cached
+    base = 100 + 10 * sorted(WALK_FORM_COUNTS).index(form)
+    warm, fresh = (base, base + 1, base + 2), (base + 3, base + 4, base + 5)
+    fixture_qvecs(spark, SF_CORRECT, warm + fresh)
+    for df in calls[form](warm):
+        df.collect()
+    with spark_jobs(spark) as jobs, codegen_compiles(spark) as compiles:
+        for df in calls[form](fresh):
+            df.collect()
+    max_jobs, max_compiles = WALK_FORM_COUNTS[form]
+    assert jobs.count <= max_jobs, f"{form}: {jobs.count} jobs"
+    assert compiles.count <= max_compiles, f"{form}: {compiles.count} compilations"

@@ -452,24 +452,17 @@ def test_unknown_query_ids_raise_key_error_before_fine_stage(spark):
     """An id that is not in the corpus raises ``KeyError`` naming it
     from the call itself — only the query-vector fetch runs, no
     fine-stage job — for the batch and the single-query search."""
-    import uuid
-
     from gpu_accelerated_vector_indexing_spark.operators.ivf import knn_ivf, multi_query_knn_ivf
+    from tests.conftest import spark_jobs
 
-    sc = spark.sparkContext
     missing = 10**12 + 7
     for call in (
         lambda: multi_query_knn_ivf(spark, SF_CORRECT, query_ids=(0, missing, missing + 1), k=5),
         lambda: knn_ivf(spark, SF_CORRECT, query_id=missing, k=5),
     ):
-        group = f"unknown-ids-{uuid.uuid4()}"
-        sc.setJobGroup(group, "unknown ids")
-        try:
-            with pytest.raises(KeyError, match=str(missing)):
-                call()
-        finally:
-            sc.setJobGroup(None, None)
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1  # the id fetch
+        with spark_jobs(spark) as jobs, pytest.raises(KeyError, match=str(missing)):
+            call()
+        assert jobs.count <= 1  # the id fetch
 
 
 def test_warm_multi_query_batch_does_not_recompile(spark):

@@ -419,7 +419,6 @@ def test_lit_array_helpers_match_per_element(spark):
     while the literal is built — before any job runs."""
     import random
     import struct
-    import uuid
 
     import pytest
     from pyspark.sql import functions as F
@@ -430,6 +429,7 @@ def test_lit_array_helpers_match_per_element(spark):
         lit_int_array2,
         lit_long_array,
     )
+    from tests.conftest import spark_jobs
 
     def bits(xs):
         return [struct.pack("<d", float(v)) for v in xs]
@@ -465,15 +465,10 @@ def test_lit_array_helpers_match_per_element(spark):
     probes = [[3, 1, 2], [], [2**31 - 1, -(2**31)]]
     assert spark.range(1).select(lit_int_array2(probes).alias("x")).first().x == probes
 
-    sc = spark.sparkContext
     for bad in (float("nan"), float("inf"), float("-inf")):
-        group = f"lit-{uuid.uuid4()}"
-        sc.setJobGroup(group, "non-finite literal")
-        try:
+        with spark_jobs(spark) as jobs:
             with pytest.raises(ValueError, match="non-finite"):
                 lit_double_array(vals[:3] + [bad])
             with pytest.raises(ValueError, match="non-finite"):
                 lit_double_array2([vals[:3], [1.0, bad]])
-        finally:
-            sc.setJobGroup(None, None)
-        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert jobs.count == 0

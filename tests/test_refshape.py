@@ -35,14 +35,16 @@ def test_refshape_parity_sf001(spark, duck, name):
 
 def test_bq_codes_multiword_matches_numpy(spark):
     """384-dim sign codes pack into exactly 6 BIGINT words, bit-for-bit
-    equal to a NumPy packing; word 0 at dim=64 equals the one-word
-    bq_code; multi-word Hamming equals NumPy popcount of the XOR."""
+    equal to a NumPy packing and to the driver-side query packer
+    (bq_query_words); word 0 at dim=64 equals the one-word bq_code;
+    multi-word Hamming equals NumPy popcount of the XOR."""
     from pyspark.sql import functions as F
 
     from gpu_accelerated_vector_indexing_spark.operators.quantize import (
         bq_code,
         bq_codes,
         bq_hamming,
+        bq_query_words,
     )
 
     rng = np.random.default_rng(5)
@@ -74,6 +76,7 @@ def test_bq_codes_multiword_matches_numpy(spark):
         assert len(got[i][0]) == 6
         assert got[i][0] == want
         assert got[i][1] == want[0]  # one-word compatibility
+        assert bq_query_words([float(x) for x in v]) == want
 
     # pairwise Hamming vs NumPy popcount
     a = df.select(F.col("i").alias("ia"), bq_codes(F.col("v"), 384).alias("ca"))

@@ -12,7 +12,7 @@ import json
 import numpy as np
 import pytest
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, spark_jobs
 
 
 # --- raw float32 .bin (O1/O2/O7) --------------------------------------------
@@ -308,20 +308,6 @@ def test_engine_sequential_equals_combined(spark, built_index):
             assert rows, f"q{qid} k={k}: empty answer"
 
 
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs it ran) via a private job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"engine-jobs-{uuid.uuid4()}"
-    sc.setJobGroup(group, "engine job count")
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _spark_coarse(centroids, qvec, n_probe):
     """The engine's former per-query coarse job, kept as the oracle for
     the driver-side probes: cosine against every centroid row in Spark,
@@ -386,14 +372,17 @@ def test_engine_warm_search_is_one_job(spark, built_index):
     qvec = _query_vec(spark, SF_SMOKE)
     eng = IVFEngine.from_pretrained(spark, built_index, n_probe=2)
     assert eng._centroid_rows is None  # nothing collected at load
-    _, cold_jobs = _jobs(spark, lambda: eng.search(qvec, k=5))
-    assert cold_jobs == 1  # the one centroid collect
+    with spark_jobs(spark) as cold_jobs:
+        eng.search(qvec, k=5)
+    assert cold_jobs.count == 1  # the one centroid collect
     held = eng._centroid_rows
     for q in (qvec, _query_vec(spark, SF_SMOKE, 5)):
-        df, search_jobs = _jobs(spark, lambda: eng.search(q, k=5))
-        assert search_jobs == 0, "a warm search must run no coarse job"
-        rows, collect_jobs = _jobs(spark, df.collect)
-        assert collect_jobs == 1 and len(rows) == 5
+        with spark_jobs(spark) as search_jobs:
+            df = eng.search(q, k=5)
+        assert search_jobs.count == 0, "a warm search must run no coarse job"
+        with spark_jobs(spark) as collect_jobs:
+            rows = df.collect()
+        assert collect_jobs.count == 1 and len(rows) == 5
     assert eng._centroid_rows is held
 
 
@@ -425,14 +414,29 @@ def test_engine_non_finite_query_fails_before_any_job(spark, built_index):
     for bad in (float("nan"), float("inf"), float("-inf")):
         q = list(qvec)
         q[3] = bad
-
-        def call(q=q):
-            with pytest.raises(ValueError, match="non-finite"):
-                eng.search(q, k=5)
-
-        _, jobs = _jobs(spark, call)
-        assert jobs == 0
+        with spark_jobs(spark) as jobs, pytest.raises(ValueError, match="non-finite"):
+            eng.search(q, k=5)
+        assert jobs.count == 0
     assert eng._centroid_rows is None
+
+
+def test_graph_engine_non_finite_query_fails_before_any_job(spark):
+    """The graph engine's point search and batch entry reject a NaN/±Inf
+    component with the same ``ValueError`` before any job: a batch's
+    vectors travel in a local relation, which would otherwise accept
+    them and score every visited row NaN."""
+    from gpu_accelerated_vector_indexing_spark.engine import GraphEngine
+    from gpu_accelerated_vector_indexing_spark.operators.graph_ann import fixture_graph_index
+
+    qvec = _query_vec(spark, SF_SMOKE)
+    eng = GraphEngine.from_pretrained(spark, fixture_graph_index(spark, SF_SMOKE))
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        q = list(qvec)
+        q[3] = bad
+        for call in (lambda: eng.search(q, k=5), lambda: eng.search_batch([(0, qvec), (1, q)], k=5)):
+            with spark_jobs(spark) as jobs, pytest.raises(ValueError, match="non-finite"):
+                call()
+            assert jobs.count == 0
 
 
 def _cluster_members(eng, clusters):
