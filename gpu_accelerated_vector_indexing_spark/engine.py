@@ -36,15 +36,10 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gpu_accelerated_vector_indexing_spark.functions.vector import (
-    finite_doubles,
-    lit_double_array,
-    named_cosine,
-    seq_l2_norm,
-)
+from gpu_accelerated_vector_indexing_spark.functions.vector import finite_doubles
 from gpu_accelerated_vector_indexing_spark.memo import session_state
 from gpu_accelerated_vector_indexing_spark.operators.ivf import probe_labels
-from gpu_accelerated_vector_indexing_spark.operators.knn import SCORE_SCALE
+from gpu_accelerated_vector_indexing_spark.operators.knn import cosine_score, top_k, with_query
 
 VALID_MODES = ("Atomic", "NonAtomic")  # IVF.cpp:583-588
 
@@ -55,10 +50,12 @@ class SearchConfig:
 
     n_probe: int = 20
     mode: str = "NonAtomic"
-    # accepted, inert: orderBy(...).limit(k) plans as
-    # TakeOrderedAndProject, which already runs a per-partition partial
-    # top-k and then merges — the reference's sequential strategy
-    # (IVF.cpp:286-342) — so both flag values share one plan
+    # accepted, inert: every search cuts through knn.top_k, whose
+    # orderBy(...).limit(k) plans as TakeOrderedAndProject — a partial
+    # top-k per partition, then one merge: the reference's sequential
+    # strategy (IVF.cpp:286-342), with the combined strategy's rows — so
+    # both flag values share one plan, as do the fixture rows
+    # knn_ivf_sequential and knn_ivf_combined
     sequential_fine_search: bool = True
     use_cuda_coarse: bool = False  # accepted, inert (SURVEY.md §4 P9)
     use_cuda_fine: bool = False  # accepted, inert
@@ -161,13 +158,13 @@ class IVFEngine:
         """IVF-pruned top-k cosine search → ``(score, vec_id)`` desc.
 
         ≙ ``IVFIndex::search`` (IVF.cpp:267-436): driver-side coarse
-        stage, then ONE pruned fine scan whose top-k runs as
-        TakeOrderedAndProject (partial top-k per partition, then merge —
-        the reference's sequential strategy, for either flag value).
+        stage, then ONE pruned fine scan cut like ``knn.cosine_topk`` —
+        the query as one literal, the top-k as TakeOrderedAndProject
+        (partial top-k per partition, then merge — the reference's
+        sequential strategy, for either flag value).
         A NaN/Inf query component raises ``ValueError`` before any job.
         """
-        qvec = [float(x) for x in qvec]
-        q = lit_double_array(qvec)  # fails loud on NaN/Inf, before any job
+        qvec = finite_doubles(qvec)  # fails loud on NaN/Inf, before any job
         probes = self._coarse(qvec, self.config.n_probe)
         emb = self.embeddings
         if self.tombstones is not None:
@@ -193,16 +190,9 @@ class IVFEngine:
         # one parse for the probe IN-list (Column.isin pays a py4j call
         # per element); an empty centroid table probes nothing
         pruned = F.expr(f"cluster IN ({','.join(map(str, probes))})") if probes else F.lit(False)
-        # the query and its hoisted norm enter as named columns, so the
-        # score is the process-wide named_cosine; the optimizer folds the
-        # two projections into one, with both constants held by reference
-        return (
-            emb.filter(pruned)
-            .select("vec_id", "embedding", q.alias("qvec"), F.lit(seq_l2_norm(qvec)).alias("qnorm"))
-            .select(F.round(named_cosine("embedding", "qvec", "qnorm"), SCORE_SCALE).alias("score"), "vec_id")
-            .orderBy(F.desc("score"), F.desc("vec_id"))
-            .limit(k)
-        )
+        # knn.cosine_topk's cut with the facade's (score, vec_id) column order
+        scored = with_query(emb.filter(pruned), qvec).select(cosine_score().alias("score"), "vec_id")
+        return top_k(scored, k)
 
     def search_with_docs(self, qvec: list[float], documents: DataFrame, k: int = 5) -> DataFrame:
         """Top-k + article snippet (≙ print_results path, IVF.cpp:688-710)
@@ -297,7 +287,7 @@ class GraphEngine:
         float walk (``graph_ann.beam_visited_over``) over the persisted
         adjacency + normed corpus. A NaN/±Inf component raises
         ``ValueError`` before any job."""
-        from gpu_accelerated_vector_indexing_spark.operators.graph_ann import beam_visited_over, top_k
+        from gpu_accelerated_vector_indexing_spark.operators.graph_ann import beam_visited_over
 
         visited = beam_visited_over(
             self.edges.select("node", "nbr"),

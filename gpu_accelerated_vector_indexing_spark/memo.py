@@ -6,7 +6,7 @@ The engine loads index state once and serves many queries from it
 "incremental top-k similarity search in interactive sessions" shape in
 PAPERS.md): persisted DataFrames (``graph._pagerank_edges``), persisted
 index directories (``ivf.merged_ivf_index``), small driver-side lists
-(``refshape.ref_qvec``). Every such builder is a function whose first
+(``knn.fixture_qvec``). Every such builder is a function whose first
 parameter is the session, decorated with :func:`session_state`:
 
 - the memo key is ``(spark, *arguments)``, bound through the function's

@@ -63,6 +63,7 @@ from gpu_accelerated_vector_indexing_spark.functions.vector import (
 )
 from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
 from gpu_accelerated_vector_indexing_spark.operators.ivf import DELETE_MOD, fixture_qvec, fixture_qvecs
+from gpu_accelerated_vector_indexing_spark.operators.knn import top_k
 from gpu_accelerated_vector_indexing_spark.operators.quantize import bq_code, bq_hamming, bq_query_words
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
@@ -421,18 +422,21 @@ def _float_scorer(emb_n: DataFrame, qvec: list[float]) -> tuple[DataFrame, Colum
     hoisted once on the driver (``seq_l2_norm`` — bit-identical to the
     JVM fold + sqrt), so the hoist is value-neutral exactly like the
     build's; ``score`` is the engine recipe
-    round(dot(v, q) / (‖v‖·‖q‖ + ε), 6)."""
+    round(dot(v, q) / (‖v‖·‖q‖ + ε), 6). The division runs in the
+    fold's finish lambda (as in ``named_cosine``): higher-order
+    functions are interpreted, so neither constant is inlined into
+    generated code and a warm walk compiles nothing per query."""
     q = lit_double_array(qvec)
     qn = F.lit(seq_l2_norm(qvec))
     return emb_n, F.round(
-        dot_product(F.col("v"), q) / (F.col("nrm") * qn + F.lit(EPSILON)), 6
+        F.aggregate(
+            F.zip_with(F.col("v"), q, lambda x, y: x * y),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+            lambda dot: dot / (F.col("nrm") * qn + F.lit(EPSILON)),
+        ),
+        6,
     )
-
-
-def top_k(visited: DataFrame, k: int) -> DataFrame:
-    """The k best ``(vec_id, score)`` rows — (score DESC, vec_id DESC),
-    the reference's KNN tie-break (IVF.cpp:247)."""
-    return visited.orderBy(F.desc("score"), F.desc("vec_id")).limit(k)
 
 
 def rescore_topk(emb_n: DataFrame, qvec: list[float], ids, k: int) -> DataFrame:

@@ -31,12 +31,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from gpu_accelerated_vector_indexing_spark.functions.vector import (
-    as_double_array,
-    named_cosine,
-)
+from gpu_accelerated_vector_indexing_spark.functions.vector import as_double_array
 from gpu_accelerated_vector_indexing_spark.memo import session_state
-from gpu_accelerated_vector_indexing_spark.operators.knn import query_vectors
+from gpu_accelerated_vector_indexing_spark.operators.knn import (
+    cosine_score,
+    cosine_topk,
+    fixture_qvec,
+    with_query,
+)
 from gpu_accelerated_vector_indexing_spark.operators.text_analysis import tokens
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
@@ -123,15 +125,9 @@ def hybrid_search_rrf(
     ranking via TakeOrdered — RRF only ever needs the heads); the
     fixture form keeps the full window for oracle exactness.
     """
+    qvec = fixture_qvec(spark, sf_dir, query_id)
     emb = load_table(spark, sf_dir, "embeddings")
-    q = query_vectors(spark, sf_dir, [query_id])
-    cos = emb.join(F.broadcast(q)).select(
-        F.col("vec_id").alias("doc_id"),
-        F.round(
-            named_cosine("embedding", "qvec", "qnorm"),
-            6,
-        ).alias("cos"),
-    )
+    cos = with_query(emb, qvec).select(F.col("vec_id").alias("doc_id"), cosine_score().alias("cos"))
     cos_ranked = cos.withColumn(
         "cos_rank", F.row_number().over(W.orderBy(F.desc("cos"), F.desc("doc_id")))
     )
@@ -175,18 +171,11 @@ def mmr_rerank(
     """
     import numpy as np
 
+    qvec = fixture_qvec(spark, sf_dir, query_id)
     emb = load_table(spark, sf_dir, "embeddings")
-    q = query_vectors(spark, sf_dir, [query_id])
     cand = (
-        emb.join(F.broadcast(q))
-        .select(
-            "vec_id",
-            as_double_array("embedding").alias("v"),
-            F.round(
-                named_cosine("embedding", "qvec", "qnorm"),
-                6,
-            ).alias("rel"),
-        )
+        with_query(emb, qvec)
+        .select("vec_id", as_double_array("embedding").alias("v"), cosine_score().alias("rel"))
         .orderBy(F.desc("rel"), F.desc("vec_id"))
         .limit(n_candidates)
         .collect()
@@ -253,19 +242,9 @@ def hybrid_search_rrf_topn(
     the whole query stays one lazy plan, so it composes (and is
     DuckDB-oracle-checkable, unlike the former driver-side fusion).
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = query_vectors(spark, sf_dir, [query_id])
-    cos_head = (
-        emb.join(F.broadcast(q))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.round(
-                named_cosine("embedding", "qvec", "qnorm"),
-                6,
-            ).alias("cos"),
-        )
-        .orderBy(F.desc("cos"), F.desc("doc_id"))
-        .limit(head_n)
+    qvec = fixture_qvec(spark, sf_dir, query_id)
+    cos_head = cosine_topk(load_table(spark, sf_dir, "embeddings"), qvec, head_n).select(
+        F.col("vec_id").alias("doc_id"), F.col("score").alias("cos")
     )
     cos_ranked = cos_head.withColumn(
         "cos_rank", F.row_number().over(W.orderBy(F.desc("cos"), F.desc("doc_id")))

@@ -20,10 +20,13 @@ Spark-first re-expression:
   partitioned index layout (``write.partitionBy("cluster")``) this is
   Parquet **partition pruning**: a 1000-executor job never opens the
   other clusters' files. That is what makes this work at 100 TB.
-- "Combined" fine search (IVF.cpp:344-434) = one global top-k over the
-  pruned union. "Sequential" (IVF.cpp:286-342) = per-cluster window
-  top-k then global top-k (partial + final top-k). Both are physical
-  strategies over the SAME logical query and must agree (§5.2).
+- The fine search is ``knn.cosine_topk`` over the pruned scan: the
+  query enters as one literal, and ``orderBy().limit()`` plans as
+  TakeOrderedAndProject — a bounded top-k per partition, then one
+  merge. That is the reference's "sequential" strategy (IVF.cpp:
+  286-342: per-cluster top-k, then a global top-k) and yields the
+  "combined" one's rows (IVF.cpp:344-434: one top-k over the pruned
+  union), so both registered strategies run this one plan (§5.2).
 """
 
 from __future__ import annotations
@@ -46,7 +49,13 @@ from gpu_accelerated_vector_indexing_spark.functions.vector import (
     seq_l2_norm,
 )
 from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
-from gpu_accelerated_vector_indexing_spark.operators.knn import SCORE_SCALE, query_vectors
+from gpu_accelerated_vector_indexing_spark.operators.knn import (
+    SCORE_SCALE,
+    cosine_topk,
+    fixture_qvec,
+    prenorm_topk,
+    query_vectors,
+)
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
 CENTROID_SCALE = 8  # centroid components rounded for cross-engine determinism
@@ -112,17 +121,6 @@ def fixture_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cache()
     df.count()
     return df
-
-
-@session_state
-def fixture_qvec(spark: SparkSession, sf_dir: str, query_id: int) -> list[float]:
-    """Memoized raw query vector (float32 storage widened to float64) —
-    ≙ the reference reading queries_data/*.bin once (IVF.cpp:650-672).
-    An id that is not in the corpus raises ``KeyError``."""
-    row = query_vectors(spark, sf_dir, [query_id]).first()
-    if row is None:
-        raise KeyError(f"query id not in the corpus: {query_id}")
-    return [float(x) for x in row.qvec]
 
 
 def fixture_qvecs(
@@ -237,40 +235,28 @@ def coarse_search(centroids: DataFrame, queries: DataFrame, n_probe: int) -> Dat
     return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= n_probe)
 
 
+def probed_corpus(spark: SparkSession, sf_dir: str, probes: list[int]) -> DataFrame:
+    """The fixture corpus pruned to the probed clusters (partition
+    pruning on a partitioned layout)."""
+    return load_table(spark, sf_dir, "embeddings").filter(F.col("label").isin(probes))
+
+
 def knn_ivf(
     spark: SparkSession,
     sf_dir: str,
     query_id: int = 0,
     k: int = 5,
     n_probe: int = 3,
-    sequential: bool = False,
 ) -> DataFrame:
     """IVF-pruned top-k cosine search over the fixture ``label`` clusters.
 
-    ≙ reference ``IVFIndex::search`` (IVF.cpp:267-436). ``sequential``
-    selects the per-cluster-window physical strategy
-    (``sequential_fine_search`` flag, IVF.cpp:286).
+    ≙ reference ``IVFIndex::search`` (IVF.cpp:267-436): the coarse stage
+    runs on the driver over memoized index state (IVF.cpp:282), the fine
+    stage is one ``cosine_topk`` over the probed clusters.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = query_vectors(spark, sf_dir, [query_id])
-    probes = coarse_probes(spark, sf_dir, query_id, n_probe)  # driver-side over memoized index state (IVF.cpp:282)
-
-    fine = (
-        emb.filter(F.col("label").isin(probes))  # ⇒ partition pruning on a partitioned layout
-        .join(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.col("label"),
-            F.round(
-                named_cosine("embedding", "qvec", "qnorm"),
-                SCORE_SCALE,
-            ).alias("score"),
-        )
-    )
-    if sequential:
-        w = W.partitionBy("label").orderBy(F.desc("score"), F.desc("vec_id"))
-        fine = fine.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
-    return fine.select("vec_id", "score").orderBy(F.desc("score"), F.desc("vec_id")).limit(k)
+    qvec = fixture_qvec(spark, sf_dir, query_id)
+    probes = coarse_probes(spark, sf_dir, query_id, n_probe)
+    return cosine_topk(probed_corpus(spark, sf_dir, probes), qvec, k)
 
 
 def knn_ivf_prenorm(
@@ -293,26 +279,9 @@ def knn_ivf_prenorm(
     scoring arithmetic differs (normalized dot, +1e-8 guard applied
     once per vector, reference IVF.cpp:150).
     """
-    from gpu_accelerated_vector_indexing_spark.functions.vector import l2_normalize
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = query_vectors(spark, sf_dir, [query_id])
+    qvec = fixture_qvec(spark, sf_dir, query_id)
     probes = coarse_probes(spark, sf_dir, query_id, n_probe)
-    nq = (
-        emb.filter(F.col("vec_id") == query_id)
-        .select(l2_normalize(as_double_array("embedding")).alias("nq"))
-    )
-    nv = l2_normalize(as_double_array("embedding"))
-    dot = F.aggregate(
-        F.zip_with(nv, F.col("nq"), lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-    )
-    return (
-        emb.filter(F.col("label").isin(probes))
-        .join(F.broadcast(nq))
-        .select("vec_id", F.round(dot, SCORE_SCALE).alias("score"))
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    return prenorm_topk(probed_corpus(spark, sf_dir, probes), qvec, k)
 
 
 def knn_ivf_filtered(
@@ -333,24 +302,11 @@ def knn_ivf_filtered(
     semi join, so the plan keeps BOTH prunings: partition pruning from
     the probe list AND the predicate pushed to the documents scan.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
+    qvec = fixture_qvec(spark, sf_dir, query_id)
+    probes = coarse_probes(spark, sf_dir, query_id, n_probe)
     docs = load_table(spark, sf_dir, "documents")
     allowed = docs.filter(F.col("lang") == lang).select(F.col("doc_id").alias("vec_id"))
-    q = query_vectors(spark, sf_dir, [query_id])
-    probes = coarse_probes(spark, sf_dir, query_id, n_probe)
-    fine = (
-        emb.filter(F.col("label").isin(probes))
-        .join(allowed, "vec_id", "left_semi")
-        .join(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(
-                named_cosine("embedding", "qvec", "qnorm"),
-                SCORE_SCALE,
-            ).alias("score"),
-        )
-    )
-    return fine.orderBy(F.desc("score"), F.desc("vec_id")).limit(k)
+    return cosine_topk(probed_corpus(spark, sf_dir, probes).join(allowed, "vec_id", "left_semi"), qvec, k)
 
 
 def multi_query_knn_ivf(
@@ -863,11 +819,7 @@ def knn_filtered_planned(
     :data:`PLAN_SELECTIVITY_CUTOFF`. The strategy column is part of the
     value contract, so the oracle certifies the CHOICE, not just the
     rows."""
-    from gpu_accelerated_vector_indexing_spark.operators.knn import (
-        query_vectors,
-        scored_embeddings,
-    )
-
+    qvec = fixture_qvec(spark, sf_dir, query_id)
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
     n_total = docs.count()
@@ -875,7 +827,6 @@ def knn_filtered_planned(
     allowed = docs.filter(F.col("lang") == lang).select(
         F.col("doc_id").alias("vec_id")
     )
-    q = query_vectors(spark, sf_dir, [query_id])
     if n_match / n_total < PLAN_SELECTIVITY_CUTOFF:
         strategy = "prefilter"
         cands = emb.join(F.broadcast(allowed), "vec_id", "left_semi")
@@ -885,12 +836,7 @@ def knn_filtered_planned(
         cands = emb.filter(F.col("label").isin(probes)).join(
             F.broadcast(allowed), "vec_id", "left_semi"
         )
-    return (
-        scored_embeddings(cands, q)
-        .select(F.lit(strategy).alias("strategy"), "vec_id", "score")
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    return cosine_topk(cands, qvec, k).select(F.lit(strategy).alias("strategy"), "vec_id", "score")
 
 
 # --- r10 cont.: EXECUTE the split half of the rebalance plan ----------------
@@ -1221,20 +1167,9 @@ def knn_with_deletes(
     is the stock brute-force plan (TakeOrderedAndProject, broadcast
     query).
     """
-    emb = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") % delete_mod != 0
-    )
-    q = query_vectors(spark, sf_dir, [query_id])
-    score = F.round(
-        named_cosine("embedding", "qvec", "qnorm"),
-        SCORE_SCALE,
-    )
-    return (
-        emb.join(F.broadcast(q))
-        .select("vec_id", score.alias("score"))
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    qvec = fixture_qvec(spark, sf_dir, query_id)
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % delete_mod != 0)
+    return cosine_topk(emb, qvec, k)
 
 
 # ---------------------------------------------------------------------------
@@ -1480,25 +1415,9 @@ def knn_ivf_shard_merge(
     is byte-identical to the single-build plan. Shares ``knn_ivf``'s
     full value oracle.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = query_vectors(spark, sf_dir, [query_id])
-    probes = probe_labels(
-        merged_centroid_rows(spark, sf_dir, n_shards),
-        fixture_qvec(spark, sf_dir, query_id),
-        n_probe,
-    )
-    fine = (
-        emb.filter(F.col("label").isin(probes))
-        .join(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(
-                named_cosine("embedding", "qvec", "qnorm"),
-                SCORE_SCALE,
-            ).alias("score"),
-        )
-    )
-    return fine.orderBy(F.desc("score"), F.desc("vec_id")).limit(k)
+    qvec = fixture_qvec(spark, sf_dir, query_id)
+    probes = probe_labels(merged_centroid_rows(spark, sf_dir, n_shards), qvec, n_probe)
+    return cosine_topk(probed_corpus(spark, sf_dir, probes), qvec, k)
 
 
 @session_state
@@ -1708,23 +1627,9 @@ def knn_ivf_adaptive(
     decision stays a driver-side op over the memoized centroid state,
     and the oracle recomputes the same rounded-score gap rule in SQL.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = query_vectors(spark, sf_dir, [query_id])
-    probes = adaptive_probe_labels(
-        fixture_centroid_rows(spark, sf_dir), fixture_qvec(spark, sf_dir, query_id), delta
-    )
-    fine = (
-        emb.filter(F.col("label").isin(probes))
-        .join(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(
-                named_cosine("embedding", "qvec", "qnorm"),
-                SCORE_SCALE,
-            ).alias("score"),
-        )
-    )
-    return fine.orderBy(F.desc("score"), F.desc("vec_id")).limit(k)
+    qvec = fixture_qvec(spark, sf_dir, query_id)
+    probes = adaptive_probe_labels(fixture_centroid_rows(spark, sf_dir), qvec, delta)
+    return cosine_topk(probed_corpus(spark, sf_dir, probes), qvec, k)
 
 
 def ivf_adaptive_sweep(

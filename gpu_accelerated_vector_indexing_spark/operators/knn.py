@@ -12,26 +12,36 @@ to the reference's min-heap top-k (IVF.cpp:185-191, 241-252), but
 distributed. Tie-break is the canonical ``(score DESC, vec_id DESC)``
 (reference IVF.cpp:247; SURVEY.md §7.3).
 
-Scale notes: the query vector rides along as a broadcast single-row
-relation (never a driver-side loop); at 100 TB the scan is partition-
-parallel and the only data movement is each task's k-row heap to the
-driver.
+Every single-query search enters its plan the same way:
+:func:`with_query` adds the query as one JVM-built array literal and
+its norm as a scalar (both held by reference, so a query that differs
+only in its vector reuses the compiled code), and :func:`cosine_topk`
+scores and cuts through the one :func:`top_k`. The vector comes from
+the per-session :func:`fixture_qvec` memo — no second scan of the
+corpus for the query row, and an id that is not in the corpus raises
+``KeyError`` before any job. At 100 TB the scan is partition-parallel
+and the only data movement is each task's k-row heap to the driver.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from gpu_accelerated_vector_indexing_spark.functions.vector import (
+    EPSILON,
     as_double_array,
     cosine_similarity_pandas,
     l2_norm,
+    l2_normalize,
+    lit_double_array,
     named_cosine,
+    seq_l2_norm,
 )
+from gpu_accelerated_vector_indexing_spark.memo import session_state
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
 SCORE_SCALE = 6  # score comparison precision (reference check_cos_sim.cpp:72: 1e-5)
@@ -50,17 +60,71 @@ def query_vectors(spark: SparkSession, sf_dir: str, query_ids: Sequence[int]) ->
     )
 
 
-def scored_embeddings(
-    emb: DataFrame, queries: DataFrame, use_pandas: bool = False
-) -> DataFrame:
-    """Cross-score every (embedding, query) pair via a broadcast of the
-    tiny query relation; scoring stays JVM-side unless ``use_pandas``
-    selects the NumPy kernel (≙ reference's CPU/CUDA mode switch)."""
+def cosine_score(use_pandas: bool = False) -> Column:
+    """``round(cosine(embedding, qvec), SCORE_SCALE)`` over a relation
+    carrying ``qvec``/``qnorm`` (:func:`with_query`, or a joined query
+    relation). Scoring stays JVM-side unless ``use_pandas`` selects the
+    NumPy kernel (≙ the reference's CPU/CUDA mode switch)."""
     if use_pandas:
         score = cosine_similarity_pandas(as_double_array("embedding"), F.col("qvec"))
     else:
         score = named_cosine("embedding", "qvec", "qnorm")
-    return emb.join(F.broadcast(queries)).withColumn("score", F.round(score, SCORE_SCALE))
+    return F.round(score, SCORE_SCALE)
+
+
+def scored_embeddings(emb: DataFrame, queries: DataFrame) -> DataFrame:
+    """Cross-score every (embedding, query) pair of a query BATCH via a
+    broadcast of the tiny query relation."""
+    return emb.join(F.broadcast(queries)).withColumn("score", cosine_score())
+
+
+def with_query(rows: DataFrame, qvec: Sequence[float]) -> DataFrame:
+    """``rows`` plus one query: ``qvec`` as one JVM-built array literal
+    and ``qnorm`` as its hoisted norm (``seq_l2_norm`` — bit-identical
+    to the JVM fold). The ONE way a single query enters a plan: no
+    query relation to scan or broadcast, and both constants are held by
+    reference, so queries that differ only in their vector share one
+    compiled plan. A NaN/Inf component raises ``ValueError`` before any
+    job."""
+    qvec = [float(x) for x in qvec]
+    return rows.select(
+        "*", lit_double_array(qvec).alias("qvec"), F.lit(seq_l2_norm(qvec)).alias("qnorm")
+    )
+
+
+def top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The k best rows of a ``(vec_id, score)`` relation — (score DESC,
+    vec_id DESC), the reference's KNN tie-break (IVF.cpp:247).
+    ``orderBy().limit()`` plans as TakeOrderedAndProject: a bounded heap
+    per partition, merged once (the reference's sequential strategy,
+    IVF.cpp:286-342)."""
+    return scored.orderBy(F.desc("score"), F.desc("vec_id")).limit(k)
+
+
+def cosine_topk(rows: DataFrame, qvec: Sequence[float], k: int) -> DataFrame:
+    """Exact cosine top-k of ``rows`` (``vec_id``, ``embedding``) against
+    one query — :func:`with_query` scored by :func:`cosine_score` and cut
+    by :func:`top_k`: the shape of every single-query search."""
+    return top_k(with_query(rows, qvec).select("vec_id", cosine_score().alias("score")), k)
+
+
+@session_state
+def fixture_ids(spark: SparkSession, sf_dir: str) -> frozenset[int]:
+    """Memoized id set of the fixture corpus — index state like the
+    centroid rows (one collect of the id column per session and corpus),
+    so an unknown query id fails on the driver before any job."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    return frozenset(int(r.vec_id) for r in emb.select("vec_id").collect())
+
+
+@session_state
+def fixture_qvec(spark: SparkSession, sf_dir: str, query_id: int) -> list[float]:
+    """Memoized raw query vector (float32 storage widened to float64) —
+    ≙ the reference reading queries_data/*.bin once (IVF.cpp:650-672).
+    An id that is not in the corpus raises ``KeyError`` naming it."""
+    if query_id not in fixture_ids(spark, sf_dir):
+        raise KeyError(f"query id not in the corpus: {query_id}")
+    return [float(x) for x in query_vectors(spark, sf_dir, (query_id,)).first().qvec]
 
 
 def knn_bruteforce(
@@ -74,14 +138,21 @@ def knn_bruteforce(
 
     ≙ reference ``findSimilar`` over the whole corpus (IVF.cpp:168-264).
     """
+    qvec = fixture_qvec(spark, sf_dir, query_id)
     emb = load_table(spark, sf_dir, "embeddings")
-    q = query_vectors(spark, sf_dir, [query_id])
-    scored = scored_embeddings(emb, q, use_pandas=use_pandas)
-    return (
-        scored.select("vec_id", "score")
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    return top_k(with_query(emb, qvec).select("vec_id", cosine_score(use_pandas).alias("score")), k)
+
+
+def prenorm_topk(rows: DataFrame, qvec: Sequence[float], k: int) -> DataFrame:
+    """Top-k by the bare dot product of unit-normalized vectors. The
+    query is normalized on the driver — ``x / (‖q‖ + 1e-8)`` per
+    component, the same IEEE ops as :func:`l2_normalize` — and enters as
+    one literal; each row normalizes inline."""
+    n = seq_l2_norm(qvec) + EPSILON
+    nq = lit_double_array([float(x) / n for x in qvec])
+    nv = l2_normalize(as_double_array("embedding"))
+    dot = F.aggregate(F.zip_with(nv, nq, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
+    return top_k(rows.select("vec_id", F.round(dot, SCORE_SCALE).alias("score")), k)
 
 
 def knn_prenorm(
@@ -101,23 +172,8 @@ def knn_prenorm(
     denominator guard (IVF.cpp:150) applied once per vector instead of
     once per pair, replicated exactly in the oracle SQL.
     """
-    from gpu_accelerated_vector_indexing_spark.functions.vector import l2_normalize
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = (
-        emb.filter(F.col("vec_id") == query_id)
-        .select(l2_normalize(as_double_array("embedding")).alias("nq"))
-    )
-    nv = l2_normalize(as_double_array("embedding"))
-    dot = F.aggregate(
-        F.zip_with(nv, F.col("nq"), lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-    )
-    return (
-        emb.join(F.broadcast(q))
-        .select("vec_id", F.round(dot, SCORE_SCALE).alias("score"))
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    qvec = fixture_qvec(spark, sf_dir, query_id)
+    return prenorm_topk(load_table(spark, sf_dir, "embeddings"), qvec, k)
 
 
 def knn_filtered(
@@ -139,16 +195,11 @@ def knn_filtered(
     broadcast semi join when the predicate is selective, and the
     embeddings scan still prunes columns to (vec_id, embedding).
     """
+    qvec = fixture_qvec(spark, sf_dir, query_id)
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
     allowed = docs.filter(F.col("lang") == lang).select(F.col("doc_id").alias("vec_id"))
-    q = query_vectors(spark, sf_dir, [query_id])
-    scored = scored_embeddings(emb.join(allowed, "vec_id", "left_semi"), q)
-    return (
-        scored.select("vec_id", "score")
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    return cosine_topk(emb.join(allowed, "vec_id", "left_semi"), qvec, k)
 
 
 def similarity_range_search(
@@ -165,10 +216,10 @@ def similarity_range_search(
     Catalyst fuses scan+score+filter into one codegen stage with no
     shuffle and no heap at all; result size is data-dependent.
     """
+    qvec = fixture_qvec(spark, sf_dir, query_id)
     emb = load_table(spark, sf_dir, "embeddings")
-    q = query_vectors(spark, sf_dir, [query_id])
-    scored = scored_embeddings(emb, q)
-    return scored.select("vec_id", "score").filter(F.col("score") >= threshold)
+    scored = with_query(emb, qvec).select("vec_id", cosine_score().alias("score"))
+    return scored.filter(F.col("score") >= threshold)
 
 
 def map_to_docs(topk: DataFrame, docs: DataFrame) -> DataFrame:
@@ -229,8 +280,6 @@ def multi_query_knn_prenorm(
     window over scored rows. At 100 TB the scan cost is paid once for
     the whole query batch instead of once per query.
     """
-    from gpu_accelerated_vector_indexing_spark.functions.vector import l2_normalize
-
     emb = load_table(spark, sf_dir, "embeddings")
     qs = (
         emb.filter(F.col("vec_id").isin(list(query_ids)))
@@ -261,16 +310,9 @@ def knn_per_cluster_topk(
     nearest in EVERY cluster', the diagnostic view that shows which
     clusters would have answered if probed.
     """
+    qvec = fixture_qvec(spark, sf_dir, query_id)
     emb = load_table(spark, sf_dir, "embeddings")
-    q = query_vectors(spark, sf_dir, [query_id])
-    scored = emb.join(F.broadcast(q)).select(
-        "label",
-        "vec_id",
-        F.round(
-            named_cosine("embedding", "qvec", "qnorm"),
-            SCORE_SCALE,
-        ).alias("score"),
-    )
+    scored = with_query(emb, qvec).select("label", "vec_id", cosine_score().alias("score"))
     w = W.partitionBy("label").orderBy(F.desc("score"), F.desc("vec_id"))
     return (
         scored.withColumn("rn", F.row_number().over(w).cast("int"))
@@ -505,28 +547,21 @@ def knn_matryoshka(
     (reference IVF.cpp:247 policy), so candidate sets — not just final
     ranks — are deterministic and oracle-replayable.
     """
-    from gpu_accelerated_vector_indexing_spark.functions.vector import cosine_similarity
-
+    qvec = fixture_qvec(spark, sf_dir, query_id)
     emb = load_table(spark, sf_dir, "embeddings")
-    q = query_vectors(spark, sf_dir, [query_id])
-    q16 = q.select(F.slice("qvec", 1, prefix_dim).alias("q16"))
-    s16 = cosine_similarity(
-        F.slice(as_double_array("embedding"), 1, prefix_dim), F.col("q16")
+    cand = _prefix_candidates(emb, qvec, prefix_dim, n_candidates)
+    return cosine_topk(emb.join(cand, "vec_id"), qvec, k)
+
+
+def _prefix_candidates(
+    emb: DataFrame, qvec: list[float], prefix_dim: int, n_candidates: int
+) -> DataFrame:
+    """The matryoshka candidate stage: the ``n_candidates`` best ids by
+    cosine over the first ``prefix_dim`` dims, cut like every top-k."""
+    prefix = emb.select(
+        "vec_id", F.slice(as_double_array("embedding"), 1, prefix_dim).alias("embedding")
     )
-    cand = (
-        emb.join(F.broadcast(q16))
-        .select("vec_id", F.round(s16, SCORE_SCALE).alias("s16"))
-        .orderBy(F.desc("s16"), F.desc("vec_id"))
-        .limit(n_candidates)
-    )
-    full = named_cosine("embedding", "qvec", "qnorm")
-    return (
-        emb.join(cand.select("vec_id"), "vec_id")
-        .join(F.broadcast(q))
-        .select("vec_id", F.round(full, SCORE_SCALE).alias("score"))
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    return cosine_topk(prefix, qvec[:prefix_dim], n_candidates).select("vec_id")
 
 
 def knn_ivf_matryoshka(
@@ -552,27 +587,9 @@ def knn_ivf_matryoshka(
     round to 6 d.p. and tie-break ``vec_id DESC``, so the candidate
     set — not just the final top-k — replays exactly in the oracle.
     """
-    from gpu_accelerated_vector_indexing_spark.functions.vector import cosine_similarity
-    from gpu_accelerated_vector_indexing_spark.operators.ivf import coarse_probes
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import coarse_probes, probed_corpus
 
-    probes = coarse_probes(spark, sf_dir, query_id, n_probe)  # memoized index state
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("label").isin(probes))
-    q = query_vectors(spark, sf_dir, [query_id])
-    q16 = q.select(F.slice("qvec", 1, prefix_dim).alias("q16"))
-    s16 = cosine_similarity(
-        F.slice(as_double_array("embedding"), 1, prefix_dim), F.col("q16")
-    )
-    cand = (
-        emb.join(F.broadcast(q16))
-        .select("vec_id", F.round(s16, SCORE_SCALE).alias("s16"))
-        .orderBy(F.desc("s16"), F.desc("vec_id"))
-        .limit(n_candidates)
-    )
-    full = named_cosine("embedding", "qvec", "qnorm")
-    return (
-        emb.join(F.broadcast(cand.select("vec_id")), "vec_id")
-        .join(F.broadcast(q))
-        .select("vec_id", F.round(full, SCORE_SCALE).alias("score"))
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    qvec = fixture_qvec(spark, sf_dir, query_id)
+    emb = probed_corpus(spark, sf_dir, coarse_probes(spark, sf_dir, query_id, n_probe))
+    cand = _prefix_candidates(emb, qvec, prefix_dim, n_candidates)
+    return cosine_topk(emb.join(F.broadcast(cand), "vec_id"), qvec, k)

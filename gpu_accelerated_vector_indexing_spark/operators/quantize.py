@@ -37,14 +37,13 @@ from gpu_accelerated_vector_indexing_spark.functions.vector import (
     as_double_array,
     cosine_similarity_hoisted,
     dot_product,
-    l2_norm,
     lit_double_array,
     lit_double_array2,
-    named_cosine,
+    lit_long_array,
     seq_l2_norm,
 )
 from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
-from gpu_accelerated_vector_indexing_spark.operators.knn import query_vectors
+from gpu_accelerated_vector_indexing_spark.operators.knn import cosine_topk, fixture_qvec, with_query
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
 SQ_LEVELS = 255
@@ -56,18 +55,17 @@ SPAN_GUARD = 1e-12  # constant-dimension guard (span 0 → code 0)
 # for stats it could read from the index (``corpus_quantizer``).
 
 
-def _fixture_qrow(spark: SparkSession, sf_dir: str, query_id: int):
-    """Memoized ``(qvec ndarray, qnorm float)`` for the ADC LUT builds —
-    served from ``ivf.fixture_qvec``'s per-(session, corpus, id) memo
-    instead of a per-call ``.first()`` driver job. ``qnorm`` is the
-    driver twin of the JVM ``l2_norm`` fold (``seq_l2_norm`` —
-    bit-identical, the equivalence the graph walk's hoist relies on)."""
-    import numpy as np
-
-    from gpu_accelerated_vector_indexing_spark.operators.ivf import fixture_qvec
-
-    qv = fixture_qvec(spark, sf_dir, query_id)
-    return np.asarray(qv), seq_l2_norm(qv)
+def candidate_rescore(
+    rows: DataFrame, approx: DataFrame, n_candidates: int, qvec: list[float], k: int,
+    ascending: bool = False,
+) -> DataFrame:
+    """The exact-rescore half every compressed search shares: the
+    ``n_candidates`` best ``(vec_id, approx_score)`` rows (higher first,
+    or lower first when ``ascending``; ties vec_id DESC) broadcast-join
+    ``rows`` by id, and the survivors cut through ``knn.cosine_topk``."""
+    order = F.asc("approx_score") if ascending else F.desc("approx_score")
+    cand = approx.orderBy(order, F.desc("vec_id")).limit(n_candidates).select("vec_id")
+    return cosine_topk(rows.join(F.broadcast(cand), "vec_id"), qvec, k)
 
 
 @session_state
@@ -182,31 +180,25 @@ def knn_sq8(
     approx-path-must-equal-exact-path contract as IVF at full probe.
     ``levels`` selects the rung (255 = SQ8 default, 15 = SQ4).
     """
+    qvec = fixture_qvec(spark, sf_dir, query_id)
     emb = load_table(spark, sf_dir, "embeddings")
-    mins, maxs = corpus_quantizer(spark, sf_dir)
-    q = query_vectors(spark, sf_dir, [query_id])
+    return _sq_topk(spark, sf_dir, emb, qvec, k, n_candidates, levels)
 
+
+def _sq_topk(
+    spark: SparkSession, sf_dir: str, rows: DataFrame, qvec: list[float], k: int,
+    n_candidates: int, levels: int,
+) -> DataFrame:
+    """SQ candidate scan over ``rows`` (unrounded cosine of the
+    dequantized codes, the query norm hoisted) + exact rescore."""
+    mins, maxs = corpus_quantizer(spark, sf_dir)
     v = as_double_array("embedding")
     approx_v = sq8_dequantize(sq8_codes(v, mins, maxs, levels), mins, maxs, levels)
-    approx_score = F.aggregate(
-        F.zip_with(approx_v, F.col("qvec"), lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-    ) / (l2_norm(approx_v) * F.col("qnorm") + F.lit(EPSILON))
-
-    candidates = (
-        emb.join(F.broadcast(q))
-        .select("vec_id", approx_score.alias("approx_score"))
-        .orderBy(F.desc("approx_score"), F.desc("vec_id"))
-        .limit(n_candidates)
-        .select("vec_id")
+    approx = with_query(rows, qvec).select(
+        "vec_id",
+        cosine_similarity_hoisted(approx_v, F.col("qvec"), F.col("qnorm")).alias("approx_score"),
     )
-    exact = cosine_similarity_hoisted(v, F.col("qvec"), F.col("qnorm"))
-    return (
-        emb.join(F.broadcast(candidates), "vec_id")
-        .join(F.broadcast(q))
-        .select("vec_id", F.round(exact, 6).alias("score"))
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    return candidate_rescore(rows, approx, n_candidates, qvec, k)
 
 
 # --- product quantization (PQ) ----------------------------------------------
@@ -336,26 +328,14 @@ def knn_pq(
     and that every returned score is the exact float cosine (the rescore
     guarantees it by construction). Driver check is rows-only.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = query_vectors(spark, sf_dir, [query_id])
-    codes_tbl, approx_score = _pq_adc_score(spark, sf_dir, query_id)
+    qvec = fixture_qvec(spark, sf_dir, query_id)
     # rounded to 6 d.p. before ranking so the candidate SET (not just the
     # final rescored scores) is deterministic across engines — the
     # oracle's SQL replay selects the identical candidates
-    candidates = (
-        codes_tbl.select("vec_id", F.round(approx_score, 6).alias("approx_score"))
-        .orderBy(F.desc("approx_score"), F.desc("vec_id"))
-        .limit(n_candidates)
-        .select("vec_id")
+    approx = pq_codes_table(spark, sf_dir).select(
+        "vec_id", F.round(_pq_adc(pq_codebooks(spark, sf_dir), qvec), 6).alias("approx_score")
     )
-    exact = named_cosine("embedding", "qvec", "qnorm")
-    return (
-        emb.join(F.broadcast(candidates), "vec_id")
-        .join(F.broadcast(q))
-        .select("vec_id", F.round(exact, 6).alias("score"))
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    return candidate_rescore(load_table(spark, sf_dir, "embeddings"), approx, n_candidates, qvec, k)
 
 
 def knn_ivf_sq4(
@@ -400,58 +380,31 @@ def knn_ivf_sq8(
     probed set the result equals the exact fine search, so the oracle
     is the standard IVF fine-search SQL.
     """
-    from gpu_accelerated_vector_indexing_spark.operators.ivf import coarse_probes
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import coarse_probes, probed_corpus
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    mins, maxs = corpus_quantizer(spark, sf_dir)
-    q = query_vectors(spark, sf_dir, [query_id])
-    probes = coarse_probes(spark, sf_dir, query_id, n_probe)  # driver-side over memoized index state (IVF.cpp:282)
-    pruned = emb.filter(F.col("label").isin(probes))
-
-    v = as_double_array("embedding")
-    approx_v = sq8_dequantize(sq8_codes(v, mins, maxs, levels), mins, maxs, levels)
-    approx_score = F.aggregate(
-        F.zip_with(approx_v, F.col("qvec"), lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-    ) / (l2_norm(approx_v) * F.col("qnorm") + F.lit(EPSILON))
-    candidates = (
-        pruned.join(F.broadcast(q))
-        .select("vec_id", approx_score.alias("approx_score"))
-        .orderBy(F.desc("approx_score"), F.desc("vec_id"))
-        .limit(n_candidates)
-        .select("vec_id")
-    )
-    exact = cosine_similarity_hoisted(v, F.col("qvec"), F.col("qnorm"))
-    return (
-        pruned.join(F.broadcast(candidates), "vec_id")
-        .join(F.broadcast(q))
-        .select("vec_id", F.round(exact, 6).alias("score"))
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    qvec = fixture_qvec(spark, sf_dir, query_id)
+    rows = probed_corpus(spark, sf_dir, coarse_probes(spark, sf_dir, query_id, n_probe))
+    return _sq_topk(spark, sf_dir, rows, qvec, k, n_candidates, levels)
 
 
-def _pq_adc_score(
-    spark: SparkSession, sf_dir: str, query_id: int
-) -> tuple[DataFrame, Column]:
-    """Shared ADC machinery: the (codes, label) table and the
-    lookup-table approximate-cosine expression for one query.
+def _pq_adc(books: list[list[list[float]]], qvec: list[float]) -> Column:
+    """The ADC approximate cosine of one query over a ``codes`` column.
 
-    The ADC lookup tables are computed ONCE per query on the driver
-    (S×k floats — the PQ analog of hoisting the query norm,
-    IVF.cpp:130-136): per subspace, dot(codeword, q_sub) and
-    ‖codeword‖² for every codeword. The scan then scores a vector from
-    its S stored codes alone — it never touches the float vectors.
+    The lookup tables are computed ONCE per query on the driver (S×k
+    floats — the PQ analog of hoisting the query norm, IVF.cpp:130-136):
+    per subspace, dot(codeword, q_sub) and ‖codeword‖² for every
+    codeword. The scan then scores a vector from its S stored codes
+    alone — it never touches the float vectors. ‖q‖ is ``seq_l2_norm``,
+    the driver twin of the JVM fold.
     """
     import numpy as np
 
-    books = pq_codebooks(spark, sf_dir)
-    codes_tbl = pq_codes_table(spark, sf_dir)
-    qvec, qnorm = _fixture_qrow(spark, sf_dir, query_id)
-    sub = len(qvec) // PQ_SUBSPACES
+    q = np.asarray(qvec)
+    sub = len(q) // PQ_SUBSPACES
     dot_luts, nsq_luts = [], []
     for s, book in enumerate(books):
         B = np.asarray(book)
-        dot_luts.append(_lit_array((B @ qvec[s * sub : (s + 1) * sub]).tolist()))
+        dot_luts.append(_lit_array((B @ q[s * sub : (s + 1) * sub]).tolist()))
         nsq_luts.append(_lit_array((B * B).sum(axis=1).tolist()))
     approx_dot = sum(
         F.element_at(dot_luts[s], F.col("codes")[s]) for s in range(PQ_SUBSPACES)
@@ -459,7 +412,7 @@ def _pq_adc_score(
     recon_norm = F.sqrt(
         sum(F.element_at(nsq_luts[s], F.col("codes")[s]) for s in range(PQ_SUBSPACES))
     )
-    return codes_tbl, approx_dot / (recon_norm * F.lit(qnorm) + F.lit(EPSILON))
+    return approx_dot / (recon_norm * F.lit(seq_l2_norm(qvec)) + F.lit(EPSILON))
 
 
 def knn_ivf_pq(
@@ -485,27 +438,15 @@ def knn_ivf_pq(
     recall@k vs the exact IVF fine search and full-margin equality.
     """
     from gpu_accelerated_vector_indexing_spark.operators.ivf import coarse_probes
-    from gpu_accelerated_vector_indexing_spark.operators.knn import query_vectors
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = query_vectors(spark, sf_dir, [query_id])
+    qvec = fixture_qvec(spark, sf_dir, query_id)
     probes = coarse_probes(spark, sf_dir, query_id, n_probe)  # driver-side over memoized index state (IVF.cpp:282)
-    codes_tbl, approx_score = _pq_adc_score(spark, sf_dir, query_id)
-    candidates = (
-        codes_tbl.filter(F.col("label").isin(probes))
-        .select("vec_id", F.round(approx_score, 6).alias("approx_score"))
-        .orderBy(F.desc("approx_score"), F.desc("vec_id"))
-        .limit(n_candidates)
-        .select("vec_id")
+    approx = (
+        pq_codes_table(spark, sf_dir)
+        .filter(F.col("label").isin(probes))
+        .select("vec_id", F.round(_pq_adc(pq_codebooks(spark, sf_dir), qvec), 6).alias("approx_score"))
     )
-    exact = named_cosine("embedding", "qvec", "qnorm")
-    return (
-        emb.join(F.broadcast(candidates), "vec_id")
-        .join(F.broadcast(q))
-        .select("vec_id", F.round(exact, 6).alias("score"))
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    return candidate_rescore(load_table(spark, sf_dir, "embeddings"), approx, n_candidates, qvec, k)
 
 
 # --- IVF-PQ with RESIDUAL encoding (FAISS "IVFADC" proper) -------------------
@@ -609,22 +550,9 @@ def knn_ivf_pq_residual(
     1e-6 rounding quantum, so a ULP-level association flip cannot move
     a top-k vector across the cut on either engine.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = query_vectors(spark, sf_dir, [query_id])
-    scored = residual_approx_scores(spark, sf_dir, query_id, n_probe)
-    candidates = (
-        scored.orderBy(F.desc("approx_score"), F.desc("vec_id"))
-        .limit(n_candidates)
-        .select("vec_id")
-    )
-    exact = named_cosine("embedding", "qvec", "qnorm")
-    return (
-        emb.join(F.broadcast(candidates), "vec_id")
-        .join(F.broadcast(q))
-        .select("vec_id", F.round(exact, 6).alias("score"))
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    qvec = fixture_qvec(spark, sf_dir, query_id)
+    approx = residual_approx_scores(spark, sf_dir, query_id, n_probe)
+    return candidate_rescore(load_table(spark, sf_dir, "embeddings"), approx, n_candidates, qvec, k)
 
 
 def residual_approx_scores(
@@ -641,11 +569,12 @@ def residual_approx_scores(
         fixture_centroid_rows,
     )
 
+    qv = fixture_qvec(spark, sf_dir, query_id)
     probes = coarse_probes(spark, sf_dir, query_id, n_probe)
     books = pq_residual_codebooks(spark, sf_dir)
     codes_tbl = pq_residual_codes_table(spark, sf_dir)
 
-    qvec, qnorm = _fixture_qrow(spark, sf_dir, query_id)
+    qvec, qnorm = np.asarray(qv), seq_l2_norm(qv)
     sub = len(qvec) // PQ_SUBSPACES
     B = [np.asarray(book) for book in books]
     # label-independent LUTs (literals): q·codeword, ‖codeword‖²
@@ -804,28 +733,17 @@ def knn_bq(
     list against the float table. Hamming ties break on vec_id DESC —
     fully deterministic end to end.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = query_vectors(spark, sf_dir, [query_id])
-    qcode = q.select(
-        "query_id", "qvec", "qnorm", bq_code(F.col("qvec")).alias("qcode")
-    )
-    v = as_double_array("embedding")
-    hamming = F.bit_count(bq_code(v).bitwiseXOR(F.col("qcode")))
-    candidates = (
-        emb.join(F.broadcast(qcode))
-        .select("vec_id", hamming.alias("hamming"))
-        .orderBy(F.asc("hamming"), F.desc("vec_id"))
-        .limit(n_candidates)
-        .select("vec_id")
-    )
-    exact = cosine_similarity_hoisted(v, F.col("qvec"), F.col("qnorm"))
-    return (
-        emb.join(F.broadcast(candidates), "vec_id")
-        .join(F.broadcast(q))
-        .select("vec_id", F.round(exact, 6).alias("score"))
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    qvec = fixture_qvec(spark, sf_dir, query_id)
+    return _bq_topk(load_table(spark, sf_dir, "embeddings"), qvec, k, n_candidates)
+
+
+def _bq_topk(rows: DataFrame, qvec: list[float], k: int, n_candidates: int) -> DataFrame:
+    """One-word Hamming candidate scan over ``rows`` + exact rescore; the
+    query's codeword (``bq_query_words`` — ``bq_code``'s bit convention)
+    is one by-reference literal."""
+    hamming = bq_hamming(F.array(bq_code(as_double_array("embedding"))), lit_long_array(bq_query_words(qvec)))
+    approx = rows.select("vec_id", hamming.alias("approx_score"))
+    return candidate_rescore(rows, approx, n_candidates, qvec, k, ascending=True)
 
 def knn_ivf_bq(
     spark: SparkSession,
@@ -846,32 +764,11 @@ def knn_ivf_bq(
     ``knn_ivf`` — the layout decides what is READ, the code decides how
     cheaply it is SCANNED, the rescore restores exact ranking.
     """
-    from gpu_accelerated_vector_indexing_spark.operators.ivf import coarse_probes
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import coarse_probes, probed_corpus
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = query_vectors(spark, sf_dir, [query_id])
-    probes = coarse_probes(spark, sf_dir, query_id, n_probe)  # driver-side over memoized index state (IVF.cpp:282)
-    pruned = emb.filter(F.col("label").isin(probes))
-    qcode = q.select(
-        "query_id", "qvec", "qnorm", bq_code(F.col("qvec")).alias("qcode")
-    )
-    v = as_double_array("embedding")
-    hamming = F.bit_count(bq_code(v).bitwiseXOR(F.col("qcode")))
-    candidates = (
-        pruned.join(F.broadcast(qcode))
-        .select("vec_id", hamming.alias("hamming"))
-        .orderBy(F.asc("hamming"), F.desc("vec_id"))
-        .limit(n_candidates)
-        .select("vec_id")
-    )
-    exact = cosine_similarity_hoisted(v, F.col("qvec"), F.col("qnorm"))
-    return (
-        pruned.join(F.broadcast(candidates), "vec_id")
-        .join(F.broadcast(q))
-        .select("vec_id", F.round(exact, 6).alias("score"))
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    qvec = fixture_qvec(spark, sf_dir, query_id)
+    rows = probed_corpus(spark, sf_dir, coarse_probes(spark, sf_dir, query_id, n_probe))
+    return _bq_topk(rows, qvec, k, n_candidates)
 
 
 def _recon_err_micro(a: Column, b: Column) -> Column:
@@ -1326,8 +1223,7 @@ def _pq_serve_refreshed(
     ``asof_gen`` windows the read to version v — codes written at
     gen <= v, retirements emitted by cycles <= v (dead-gen <= v-1) —
     the same visibility rule as ``index_build._live_index_rows_asof``."""
-    import numpy as np
-
+    qvec = fixture_qvec(spark, sf_dir, query_id)
     codes = spark.read.parquet(f"{out}/codes")
     tombs_raw = spark.read.parquet(f"{out}/tombstones")
     if asof_gen is not None:
@@ -1342,32 +1238,5 @@ def _pq_serve_refreshed(
         "left_anti",
     )
 
-    q = query_vectors(spark, sf_dir, [query_id])
-    qvec, qnorm = _fixture_qrow(spark, sf_dir, query_id)
-    sub = len(qvec) // PQ_SUBSPACES
-    dot_luts, nsq_luts = [], []
-    for s, book in enumerate(books):
-        B = np.asarray(book)
-        dot_luts.append(_lit_array((B @ qvec[s * sub : (s + 1) * sub]).tolist()))
-        nsq_luts.append(_lit_array((B * B).sum(axis=1).tolist()))
-    approx_dot = sum(
-        F.element_at(dot_luts[s], F.col("codes")[s]) for s in range(PQ_SUBSPACES)
-    )
-    recon_norm = F.sqrt(
-        sum(F.element_at(nsq_luts[s], F.col("codes")[s]) for s in range(PQ_SUBSPACES))
-    )
-    approx = approx_dot / (recon_norm * F.lit(qnorm) + F.lit(EPSILON))
-    candidates = (
-        live_codes.select("vec_id", F.round(approx, 6).alias("approx_score"))
-        .orderBy(F.desc("approx_score"), F.desc("vec_id"))
-        .limit(n_candidates)
-        .select("vec_id")
-    )
-    exact = named_cosine("embedding", "qvec", "qnorm")
-    return (
-        live.join(F.broadcast(candidates), "vec_id")
-        .join(F.broadcast(q))
-        .select("vec_id", F.round(exact, 6).alias("score"))
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    approx = live_codes.select("vec_id", F.round(_pq_adc(books, qvec), 6).alias("approx_score"))
+    return candidate_rescore(live, approx, n_candidates, qvec, k)

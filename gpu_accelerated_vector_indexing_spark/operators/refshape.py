@@ -31,18 +31,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gpu_accelerated_vector_indexing_spark.functions.vector import (
-    as_double_array,
-    cosine_similarity_hoisted,
-    l2_norm,
-)
+from gpu_accelerated_vector_indexing_spark.functions.vector import as_double_array, lit_long_array
 from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
 from gpu_accelerated_vector_indexing_spark.operators.ivf import (
     label_centroids,
     probe_labels,
 )
-from gpu_accelerated_vector_indexing_spark.operators.knn import SCORE_SCALE
-from gpu_accelerated_vector_indexing_spark.operators.quantize import bq_codes, bq_hamming
+from gpu_accelerated_vector_indexing_spark.operators.knn import fixture_qvec, top_k
+from gpu_accelerated_vector_indexing_spark.operators.quantize import (
+    bq_codes,
+    bq_hamming,
+    bq_query_words,
+    candidate_rescore,
+)
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
 REF_DIM = 384  # ≙ IVF.cpp:13 (MiniLM all-MiniLM-L6-v2 dimensionality)
@@ -74,23 +75,13 @@ def ref_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ref_query(spark: SparkSession, sf_dir: str, query_id: int) -> DataFrame:
-    """One derived 384-dim query vector with its norm hoisted."""
-    return (
-        ref_corpus(spark, sf_dir)
-        .filter(F.col("vec_id") == query_id)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-        .withColumn("qnorm", l2_norm(F.col("qvec")))
-    )
-
-
-@session_state
 def ref_qvec(spark: SparkSession, sf_dir: str, query_id: int) -> list[float]:
-    """Memoized raw 384-dim query vector (≙ reading queries_data/*.bin
-    once, IVF.cpp:650-672)."""
-    return [
-        float(x) for x in ref_query(spark, sf_dir, query_id).first().qvec
-    ]
+    """The derived 384-dim query vector: :func:`ref_embed` applied on the
+    driver to the memoized fixture vector (``knn.fixture_qvec``, which
+    raises ``KeyError`` for an unknown id). Power-of-two multiplies are
+    exact, so this is bit-for-bit the corpus row."""
+    qv = fixture_qvec(spark, sf_dir, query_id)
+    return [x * s for s in REF_SCALES for x in qv]
 
 
 # Index state, same posture as ivf.fixture_centroids / quantize.pq_codebooks:
@@ -258,7 +249,6 @@ def refshape_graph_beam(
         BEAM_HOPS,
         BEAM_WIDTH,
         beam_visited_over,
-        top_k,
     )
     from gpu_accelerated_vector_indexing_spark.operators.knn import map_to_docs
 
@@ -397,36 +387,14 @@ def refshape_search_bq(
     scan can prune on, but on the index it is the partition column — so
     the probe IN-list prunes 108 of 128 directories here exactly as in
     the facade path."""
-    q = ref_query(spark, sf_dir, query_id)
-    probes = probe_labels(
-        refshape_centroid_rows(spark, sf_dir),
-        ref_qvec(spark, sf_dir, query_id),
-        n_probe,
-    )
+    qvec = ref_qvec(spark, sf_dir, query_id)
+    probes = probe_labels(refshape_centroid_rows(spark, sf_dir), qvec, n_probe)
     idx = refshape_index(spark, sf_dir)
     pruned = (
         spark.read.parquet(f"{idx}/embeddings_indexed")
         .filter(F.col("cluster").isin(probes))
         .withColumnRenamed("cluster", "label")
     )
-    qcode = q.select(
-        "query_id", "qvec", "qnorm", bq_codes(F.col("qvec"), REF_DIM).alias("qcode")
-    )
-    hamming = bq_hamming(bq_codes(F.col("embedding"), REF_DIM), F.col("qcode"))
-    candidates = (
-        pruned.join(F.broadcast(qcode))
-        .select("vec_id", hamming.alias("hamming"))
-        .orderBy(F.asc("hamming"), F.desc("vec_id"))
-        .limit(n_candidates)
-        .select("vec_id")
-    )
-    exact = cosine_similarity_hoisted(
-        F.col("embedding"), F.col("qvec"), F.col("qnorm")
-    )
-    return (
-        pruned.join(F.broadcast(candidates), "vec_id")
-        .join(F.broadcast(q))
-        .select("vec_id", F.round(exact, SCORE_SCALE).alias("score"))
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    hamming = bq_hamming(bq_codes(F.col("embedding"), REF_DIM), lit_long_array(bq_query_words(qvec)))
+    approx = pruned.select("vec_id", hamming.alias("approx_score"))
+    return candidate_rescore(pruned, approx, n_candidates, qvec, k, ascending=True)

@@ -153,11 +153,11 @@ QUERIES = {
     "multi_query_knn_ivf": partial(
         ivf.multi_query_knn_ivf, query_ids=QUERY_IDS, k=K, n_probe=N_PROBE
     ),
-    "knn_ivf_combined": partial(ivf.knn_ivf, query_id=QUERY_ID, k=K, n_probe=N_PROBE, sequential=False),
+    "knn_ivf_combined": partial(ivf.knn_ivf, query_id=QUERY_ID, k=K, n_probe=N_PROBE),
     "knn_ivf_filtered": partial(
         ivf.knn_ivf_filtered, query_id=QUERY_ID, k=K, n_probe=N_PROBE, lang="en"
     ),
-    "knn_ivf_sequential": partial(ivf.knn_ivf, query_id=QUERY_ID, k=K, n_probe=N_PROBE, sequential=True),
+    "knn_ivf_sequential": partial(ivf.knn_ivf, query_id=QUERY_ID, k=K, n_probe=N_PROBE),
     "knn_ivf_prenorm": partial(ivf.knn_ivf_prenorm, query_id=QUERY_ID, k=K, n_probe=N_PROBE),
     "ivf_recall": partial(ivf.ivf_recall, query_id=QUERY_ID, k=K, n_probe=N_PROBE),
     "knn_ivf_sq8": _knn_ivf_sq8,
@@ -196,9 +196,7 @@ QUERIES["embedding_drift"] = _embedding_drift
 # of 128 clusters — here {1,5,10} of 10; 10 = full probe = brute force)
 N_PROBE_GRID = (1, 5, 10)
 for _np in N_PROBE_GRID:
-    QUERIES[f"knn_ivf_np{_np}"] = partial(
-        ivf.knn_ivf, query_id=QUERY_ID, k=K, n_probe=_np, sequential=False
-    )
+    QUERIES[f"knn_ivf_np{_np}"] = partial(ivf.knn_ivf, query_id=QUERY_ID, k=K, n_probe=_np)
 QUERIES["ivf_recall_sweep"] = partial(
     ivf.ivf_recall_sweep, query_id=QUERY_ID, k=K, n_probes=N_PROBE_GRID
 )

@@ -4,11 +4,14 @@ DuckDB oracle at sf0.01 with the driver's compare semantics
 
 Not collected by pytest (no test_ prefix); run manually:
     python tests/gate_sweep.py [sf_dir] [--only name1,name2,...]
+Cores and driver heap come from $SPARK_GRAFT_CPUS (default: every
+core) and $SPARK_GRAFT_DRIVER_MEM (default 8g), as in session.get_spark.
 Prints one line per query and a final summary; exit 1 on any failure.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
@@ -30,11 +33,13 @@ def main() -> int:
     from gpu_accelerated_vector_indexing_spark.queries import merged
     from tests.parity import _register_views, compare_frames
 
+    # cores and heap as session.get_spark sizes them
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     spark = (
-        SparkSession.builder.master("local[32]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "32g")
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .appName("gate-sweep")
         .getOrCreate()
     )

@@ -640,15 +640,16 @@ def test_search_batch_repeated_query_id(spark):
         assert jobs.count == 0
 
 
-# Warm (jobs, Janino compilations) per walk form before the walk loops
-# became one kernel (sf0.01, fresh query ids): the kernel may not add an
-# action or a per-query compilation to any of them.
+# Warm (jobs, Janino compilations) per walk form, measured at sf0.01
+# with fresh query ids: no walk form may add an action, and none
+# compiles per query — the float scorer holds q and ‖q‖ by reference
+# and the sweep's exact side is a literal-query top-k.
 WALK_FORM_COUNTS = {
-    "knn_graph_beam": (8, 1),
-    "knn_graph_beam_bq": (9, 3),
-    "graph_comparison_members": (10, 3),
+    "knn_graph_beam": (8, 0),
+    "knn_graph_beam_bq": (8, 0),
+    "graph_comparison_members": (9, 0),
     "multi_query_graph_beam": (13, 0),
-    "graph_recall_sweep": (14, 2),
+    "graph_recall_sweep": (13, 0),
 }
 
 

@@ -103,12 +103,32 @@ def test_ivf_full_probe_equals_bruteforce(spark):
 
 
 def test_sequential_equals_combined(spark):
-    """Two physical strategies, one logical query (O16 ≡ O17)."""
-    from gpu_accelerated_vector_indexing_spark.operators.ivf import knn_ivf
+    """Two physical strategies, one logical query (O16 ≡ O17): the
+    reference's sequential fine search — a top-k per probed cluster
+    (a Window), then a global top-k — must return exactly ``knn_ivf``'s
+    rows, which cut once through TakeOrderedAndProject."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
 
-    seq = knn_ivf(spark, SF_SMOKE, query_id=2, k=5, n_probe=4, sequential=True).collect()
-    com = knn_ivf(spark, SF_SMOKE, query_id=2, k=5, n_probe=4, sequential=False).collect()
-    assert [(r.vec_id, r.score) for r in seq] == [(r.vec_id, r.score) for r in com]
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import coarse_probes, knn_ivf
+    from gpu_accelerated_vector_indexing_spark.operators.knn import query_vectors, scored_embeddings
+    from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
+
+    for sf, qid, k, n_probe in ((SF_SMOKE, 2, 5, 4), (SF_CORRECT, 17, 8, 3), (SF_CORRECT, 0, 3, 10)):
+        emb = load_table(spark, sf, "embeddings").filter(
+            F.col("label").isin(coarse_probes(spark, sf, qid, n_probe))
+        )
+        per_cluster = Window.partitionBy("label").orderBy(F.desc("score"), F.desc("vec_id"))
+        seq = (
+            scored_embeddings(emb, query_vectors(spark, sf, [qid]))
+            .withColumn("rn", F.row_number().over(per_cluster))
+            .filter(F.col("rn") <= k)
+            .orderBy(F.desc("score"), F.desc("vec_id"))
+            .limit(k)
+            .collect()
+        )
+        com = knn_ivf(spark, sf, query_id=qid, k=k, n_probe=n_probe).collect()
+        assert [(r.vec_id, r.score) for r in seq] == [(r.vec_id, r.score) for r in com], (sf, qid)
 
 
 def test_kmeans_invariants(spark):

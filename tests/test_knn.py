@@ -275,10 +275,9 @@ def test_sq4_margin_headroom(spark):
         as_double_array,
         l2_norm,
     )
-    from gpu_accelerated_vector_indexing_spark.operators.knn import knn_bruteforce
+    from gpu_accelerated_vector_indexing_spark.operators.knn import knn_bruteforce, query_vectors
     from gpu_accelerated_vector_indexing_spark.operators.quantize import (
         corpus_quantizer,
-        query_vectors,
         sq8_codes,
         sq8_dequantize,
     )
@@ -454,3 +453,99 @@ def test_pq_asof_latest_slice_equals_gen2_serve(spark):
     assert asof2 == latest
     v0_ids = {r.vec_id for r in rows if r.asof_gen == 0}
     assert all(v % GRAPH_CDC_ADD_MOD != GRAPH_CDC_ADD_REM for v in v0_ids)
+
+
+def _query_id_call(name):
+    """A converted single-query registered row as ``call(spark, sf, qid)``:
+    the row itself with ``query_id`` passed (a partial's is overridden),
+    or, where the registry wraps the operator in a function, the
+    operator."""
+    from gpu_accelerated_vector_indexing_spark.operators import hybrid, knn, quantize
+    from gpu_accelerated_vector_indexing_spark.queries import merged
+
+    wrapped = {
+        "knn_matryoshka": knn.knn_matryoshka,
+        "knn_ivf_matryoshka": knn.knn_ivf_matryoshka,
+        "knn_sq8": quantize.knn_sq8,
+        "knn_sq4": quantize.knn_sq4,
+        "knn_ivf_sq8": quantize.knn_ivf_sq8,
+        "knn_bq": quantize.knn_bq,
+        "knn_ivf_bq": quantize.knn_ivf_bq,
+        "knn_pq": quantize.knn_pq,
+        "knn_ivf_pq": quantize.knn_ivf_pq,
+        "knn_ivf_pq_residual": quantize.knn_ivf_pq_residual,
+        "hybrid_search_rrf": hybrid.hybrid_search_rrf,
+        "hybrid_search_rrf_topn": hybrid.hybrid_search_rrf_topn,
+        "mmr_rerank": hybrid.mmr_rerank,
+    }
+    fn = wrapped.get(name, merged()[0][name])
+    return lambda spark, sf, qid: fn(spark, sf, query_id=qid)
+
+
+SINGLE_QUERY_ROWS = [
+    "knn_bruteforce",
+    "knn_bruteforce_pandas",
+    "knn_prenorm",
+    "knn_filtered",
+    "similarity_range_search",
+    "knn_per_cluster_topk",
+    "knn_matryoshka",
+    "knn_ivf_matryoshka",
+    "knn_ivf_combined",
+    "knn_ivf_sequential",
+    "knn_ivf_prenorm",
+    "knn_ivf_filtered",
+    "knn_filtered_planned_broad",
+    "knn_with_deletes",
+    "knn_ivf_shard_merge",
+    "knn_ivf_adaptive",
+    "knn_sq8",
+    "knn_sq4",
+    "knn_ivf_sq8",
+    "knn_bq",
+    "knn_ivf_bq",
+    "knn_pq",
+    "knn_ivf_pq",
+    "knn_ivf_pq_residual",
+    "refshape_search_bq",
+    "hybrid_search_rrf",
+    "hybrid_search_rrf_topn",
+    "mmr_rerank",
+]
+
+
+@pytest.mark.parametrize("name", SINGLE_QUERY_ROWS)
+def test_unknown_query_id_raises_before_any_job(spark, name):
+    """Every single-query search raises ``KeyError`` naming an id that is
+    not in the corpus, from the call itself and before any job: the
+    check runs on the driver against the memoized corpus id set (index
+    state, built once per session and corpus)."""
+    from gpu_accelerated_vector_indexing_spark.operators.knn import fixture_ids
+    from tests.conftest import spark_jobs
+
+    missing = 10**12 + 7
+    fixture_ids(spark, SF_CORRECT)
+    with spark_jobs(spark) as jobs, pytest.raises(KeyError, match=str(missing)):
+        _query_id_call(name)(spark, SF_CORRECT, missing)
+    assert jobs.count == 0, f"{name}: {jobs.count} jobs"
+
+
+@pytest.mark.parametrize("name", ["knn_bruteforce", "knn_ivf_combined"])
+def test_warm_fresh_query_id_is_one_job_and_no_compile(spark, name):
+    """A warm single-query search for an id no earlier query used is one
+    Spark job (the scan and its top-k — no query scan, no broadcast) and
+    compiles nothing: the query arrives as a by-reference literal, so it
+    reuses the code the previous id compiled."""
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import fixture_qvecs
+    from tests.conftest import codegen_compiles, spark_jobs
+
+    call = _query_id_call(name)
+    base = 300 + 10 * ["knn_bruteforce", "knn_ivf_combined"].index(name)
+    warm, fresh = base, base + 1
+    fixture_qvecs(spark, SF_CORRECT, (warm, fresh))  # the memo fill is its own job
+    call(spark, SF_CORRECT, warm).collect()
+    with spark_jobs(spark) as jobs, codegen_compiles(spark) as compiles:
+        rows = call(spark, SF_CORRECT, fresh).collect()
+    assert len(rows) == 5
+    assert jobs.count == 1, f"{name}: {jobs.count} jobs"
+    assert compiles.count == 0, f"{name}: {compiles.count} compilations"

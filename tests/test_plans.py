@@ -743,3 +743,15 @@ def test_warm_multi_query_batch_is_one_broadcast_over_one_scan(spark):
     assert plan.count("FileScan") == 1, plan
     assert not any("vec_id" in f for f in pushed_filters(df)), plan
     assert "PushedFilters: [In(label" in plan, plan
+
+
+def test_single_query_search_is_one_scan_without_query_broadcast(spark):
+    """A single-query search reads the corpus once: the query arrives as
+    one literal (``knn.with_query``), so there is no second scan that
+    fetches the query row by ``vec_id`` and no ``BroadcastExchange`` of
+    it — brute force and IVF alike."""
+    for name in ("knn_bruteforce", "knn_ivf_combined"):
+        df = _q(spark, name)
+        plan = assert_plan(df, contains=("TakeOrderedAndProject",), absent=("BroadcastExchange",))
+        assert plan.count("FileScan") == 1, plan
+        assert not any("EqualTo(vec_id" in f for f in pushed_filters(df)), plan

@@ -201,12 +201,12 @@ def test_refshape_search_prunes_128_way_partitions(spark):
     from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
     from gpu_accelerated_vector_indexing_spark.operators.refshape import (
         REF_N_PROBE,
-        ref_query,
+        ref_qvec,
         refshape_index,
     )
 
     idx = refshape_index(spark, SF_SMOKE)
-    qvec = [float(x) for x in ref_query(spark, SF_SMOKE, 0).first().qvec]
+    qvec = ref_qvec(spark, SF_SMOKE, 0)
     eng = IVFEngine.from_pretrained(spark, idx, n_probe=REF_N_PROBE)
     plan = eng.search(qvec, k=5)._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
@@ -214,3 +214,16 @@ def test_refshape_search_prunes_128_way_partitions(spark):
     # the probe IN-list sits in the partition filter (display truncates
     # long IN-lists, so assert the filter form, not the literal count)
     assert "cluster" in tail[:200] and ("INSET" in tail[:200] or " IN " in tail[:200])
+
+
+def test_ref_qvec_is_the_derived_corpus_row(spark):
+    """``ref_qvec`` derives the 384-dim query on the driver from the
+    memoized fixture vector; power-of-two scalings are exact, so it is
+    bit-for-bit the derived corpus row the oracle replays."""
+    from pyspark.sql import functions as F
+
+    from gpu_accelerated_vector_indexing_spark.operators.refshape import ref_corpus, ref_qvec
+
+    for qid in (0, 7, 499):
+        row = ref_corpus(spark, SF_SMOKE).filter(F.col("vec_id") == qid).first()
+        assert ref_qvec(spark, SF_SMOKE, qid) == [float(x) for x in row.embedding]
