@@ -40,6 +40,7 @@ from gpu_accelerated_vector_indexing_spark.functions.vector import finite_double
 from gpu_accelerated_vector_indexing_spark.memo import session_state
 from gpu_accelerated_vector_indexing_spark.operators.ivf import probe_labels
 from gpu_accelerated_vector_indexing_spark.operators.knn import cosine_score, top_k, with_query
+from gpu_accelerated_vector_indexing_spark.session import tune_session
 
 VALID_MODES = ("Atomic", "NonAtomic")  # IVF.cpp:583-588
 
@@ -88,7 +89,9 @@ class IVFEngine:
         tombstones: DataFrame | None = None,
     ):
         config.validate()
-        self.spark = spark
+        # the engine's session settings (UTC, AQE, by-reference IN-lists)
+        # on any session, not only one that get_spark built
+        self.spark = tune_session(spark)
         self.config = config
         # lazy relations — nothing is read until a search runs (vs IVF.cpp:456-486)
         self.embeddings = spark.read.parquet(emb_path)

@@ -62,38 +62,58 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot_product(a, b) / (l2_norm(a) * l2_norm(b) + F.lit(EPSILON))
 
 
-def cosine_similarity_hoisted(v: Column, q: Column, qnorm: Column) -> Column:
+def hoisted_quotient(
+    terms: Column, vnorm: Column, qnorm: Column, offset: Column | None = None
+) -> Column:
+    """``(offset +) Σ terms / (vnorm·qnorm + 1e-8)``: a sequential fold of
+    the ``terms`` array from 0.0, divided in the fold's finish lambda.
+
+    Higher-order functions are interpreted, not code-generated, so a
+    literal ``qnorm`` (or a literal lookup table inside ``terms``) stays
+    in the expression tree instead of being inlined into generated Java
+    — queries that differ only in their constants share one compiled
+    class. The ops and their order are those of the inline expression
+    ``offset + (0.0 + t₀ + t₁ + …)`` over ``vnorm * qnorm + 1e-8``."""
+
+    def finish(total: Column) -> Column:
+        num = total if offset is None else offset + total
+        return num / (vnorm * qnorm + F.lit(EPSILON))
+
+    return F.aggregate(terms, F.lit(0.0), lambda acc, x: acc + x, finish)
+
+
+def cosine_similarity_hoisted(
+    v: Column, q: Column, qnorm: Column, vnorm: Column | None = None
+) -> Column:
     """Cosine with the query norm HOISTED to a precomputed column.
 
     ≙ the reference computing ‖q‖ once per batch instead of per row
     (IVF.cpp:130-136; SURVEY.md §4 P4). When ``q`` arrives via a join
     (multi-query), Catalyst cannot constant-fold ‖q‖ — carrying it as a
     column on the tiny broadcast side removes a per-row O(dim) fold.
-    Numerically identical to :func:`cosine_similarity` (same float64
-    ops, same order).
-
-    The division runs in the fold's finish lambda: higher-order
-    functions are interpreted, not code-generated, so a literal ``q`` or
-    ``qnorm`` stays in the expression tree instead of being inlined into
-    generated Java — queries that differ only in their constants share
-    one compiled class.
+    ``vnorm`` hoists ‖v‖ the same way when the rows carry it (the
+    pinned normed corpus, ``knn.fixture_normed``). Numerically identical
+    to :func:`cosine_similarity` (same float64 ops, same order; ‖v‖ is
+    the same sequential fold wherever it is computed). The division runs
+    in the fold's finish lambda (:func:`hoisted_quotient`).
     """
-    return F.aggregate(
-        F.zip_with(v, q, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-        lambda dot: dot / (l2_norm(v) * qnorm + F.lit(EPSILON)),
+    return hoisted_quotient(
+        F.zip_with(v, q, lambda x, y: x * y), l2_norm(v) if vnorm is None else vnorm, qnorm
     )
 
 
 @functools.lru_cache(maxsize=32)
-def _named_cosine(v: str, q: str, qnorm: str, gateway: int | None) -> Column:
-    return cosine_similarity_hoisted(as_double_array(v), F.col(q), F.col(qnorm))
+def _named_cosine(v: str, q: str, qnorm: str, vnorm: str | None, gateway: int | None) -> Column:
+    if vnorm is None:
+        return cosine_similarity_hoisted(as_double_array(v), F.col(q), F.col(qnorm))
+    return cosine_similarity_hoisted(F.col(v), F.col(q), F.col(qnorm), F.col(vnorm))
 
 
-def named_cosine(v: str, q: str, qnorm: str) -> Column:
-    """:func:`cosine_similarity_hoisted` over NAMED columns (``v`` widened
-    by :func:`as_double_array`), built once per process.
+def named_cosine(v: str, q: str, qnorm: str, vnorm: str | None = None) -> Column:
+    """:func:`cosine_similarity_hoisted` over NAMED columns, built once
+    per process: ``v`` is widened by :func:`as_double_array`, or, with
+    ``vnorm``, is an ``ARRAY<DOUBLE>`` whose hoisted norm column is
+    ``vnorm`` (the normed corpus: one fold per scored pair, not two).
 
     pyspark builds a higher-order function with ~100 py4j round trips
     (one per lambda variable, operator and argument list) — ~250 for
@@ -106,7 +126,7 @@ def named_cosine(v: str, q: str, qnorm: str) -> Column:
     from pyspark.sql.utils import is_remote
 
     gateway = None if is_remote() else id(SparkContext._gateway)
-    return _named_cosine(v, q, qnorm, gateway)
+    return _named_cosine(v, q, qnorm, vnorm, gateway)
 
 
 def l2_normalize(a: Column) -> Column:

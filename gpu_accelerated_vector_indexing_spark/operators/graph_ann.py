@@ -53,17 +53,20 @@ from pyspark.sql.window import Window
 from gpu_accelerated_vector_indexing_spark.functions.vector import (
     EPSILON,
     as_double_array,
-    dot_product,
     dot_product_seq_pandas,
     finite_doubles,
-    l2_norm,
-    lit_double_array,
     lit_long_array,
+    named_cosine,
     seq_l2_norm,
 )
 from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
 from gpu_accelerated_vector_indexing_spark.operators.ivf import DELETE_MOD, fixture_qvec, fixture_qvecs
-from gpu_accelerated_vector_indexing_spark.operators.knn import top_k
+from gpu_accelerated_vector_indexing_spark.operators.knn import (
+    fixture_normed,
+    normed_corpus,
+    top_k,
+    with_query,
+)
 from gpu_accelerated_vector_indexing_spark.operators.quantize import bq_code, bq_hamming, bq_query_words
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
@@ -72,24 +75,6 @@ NN_DESCENT_ROUNDS = 4  # fixed rounds → SQL-replayable build
 SEED_WINDOW = 50  # width of BOTH seed groupings (within-cell rank windows + id blocks)
 BEAM_WIDTH = 24
 BEAM_HOPS = 3
-
-
-def _normed(emb: DataFrame) -> DataFrame:
-    """(vec_id, v float64, nrm) with the L2 norm hoisted per vector.
-
-    ≙ the reference computing ‖v‖ once per stored vector instead of
-    per scored pair (the P4 hoisting pattern,
-    ``vector.cosine_similarity_hoisted``). Numerically EXACT vs inline
-    cosine: ``sqrt(dot(a,a))`` is the same double wherever it is
-    computed, and the pair score multiplies the same two doubles —
-    so the oracle's norm-CTE mirror is value-identical, while the
-    per-pair cost drops from three O(dim) folds to one.
-    """
-    return emb.select(
-        "vec_id",
-        as_double_array("embedding").alias("v"),
-        l2_norm(as_double_array("embedding")).alias("nrm"),
-    )
 
 
 def _score_pairs(cand: DataFrame, emb_n: DataFrame) -> DataFrame:
@@ -128,18 +113,6 @@ def _topk_per_node(scored: DataFrame, k: int) -> DataFrame:
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
     )
-
-
-# Normed embeddings are INDEX STATE shared by the build, the beam
-# search, and the incremental attach — memoized per (session, corpus)
-# like `fixture_graph`/`ivf.fixture_centroids`, so no query path ever
-# pays the corpus-wide norm fold more than once per snapshot (a real
-# deployment persists ‖v‖ alongside the vectors at ingest).
-@session_state
-def fixture_normed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = _normed(load_table(spark, sf_dir, "embeddings")).cache()
-    df.count()
-    return df
 
 
 def _grouped(emb: DataFrame) -> DataFrame:
@@ -417,26 +390,16 @@ def lookup_scorer(*members: tuple[DataFrame, Column]):
 
 
 def _float_scorer(emb_n: DataFrame, qvec: list[float]) -> tuple[DataFrame, Column]:
-    """The ONE float-cosine scorer ``(emb_n, score)`` for a literal query:
-    ``q`` is one JVM-built array literal (O(1) py4j calls) and ‖q‖ is
-    hoisted once on the driver (``seq_l2_norm`` — bit-identical to the
-    JVM fold + sqrt), so the hoist is value-neutral exactly like the
+    """The ONE float-cosine scorer ``(relation, score)`` for a literal
+    query: ``knn.with_query`` adds ``q`` as one JVM-built array literal
+    and ‖q‖ hoisted on the driver (``seq_l2_norm`` — bit-identical to
+    the JVM fold + sqrt), so the hoist is value-neutral exactly like the
     build's; ``score`` is the engine recipe
-    round(dot(v, q) / (‖v‖·‖q‖ + ε), 6). The division runs in the
-    fold's finish lambda (as in ``named_cosine``): higher-order
-    functions are interpreted, so neither constant is inlined into
-    generated code and a warm walk compiles nothing per query."""
-    q = lit_double_array(qvec)
-    qn = F.lit(seq_l2_norm(qvec))
-    return emb_n, F.round(
-        F.aggregate(
-            F.zip_with(F.col("v"), q, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-            lambda dot: dot / (F.col("nrm") * qn + F.lit(EPSILON)),
-        ),
-        6,
-    )
+    round(dot(v, q) / (‖v‖·‖q‖ + ε), 6) as ``named_cosine`` over the
+    stored norm — built once per process, divided in the fold's finish
+    lambda, so neither constant is inlined into generated code and a
+    warm walk compiles nothing per query."""
+    return with_query(emb_n, qvec), F.round(named_cosine("v", "qvec", "qnorm", "nrm"), 6)
 
 
 def rescore_topk(emb_n: DataFrame, qvec: list[float], ids, k: int) -> DataFrame:
@@ -669,15 +632,7 @@ def _pairs_scorer(emb_n: DataFrame, qvecs: list[list[float]]):
         return (
             emb_n.filter(F.col("vec_id").isin(union_ids))
             .join(F.broadcast(pdf), "vec_id")
-            .select(
-                "wk",
-                "vec_id",
-                F.round(
-                    dot_product(F.col("v"), F.col("qv"))
-                    / (F.col("nrm") * F.col("qn") + F.lit(EPSILON)),
-                    6,
-                ).alias("score"),
-            )
+            .select("wk", "vec_id", F.round(named_cosine("v", "qv", "qn", "nrm"), 6).alias("score"))
         )
 
     return score
@@ -1158,11 +1113,7 @@ def new_graph_index(tag: str, edges: DataFrame, corpus_normed: DataFrame) -> str
 def fixture_graph_index(spark: SparkSession, sf_dir: str) -> str:
     """The PRETRAINED fixture graph index, once per (session, corpus)
     (the fixture twin of ``refshape.refshape_graph_index``)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus_normed = emb.select("vec_id", "label").join(
-        fixture_normed(spark, sf_dir), "vec_id"
-    )
-    return new_graph_index("graphidx", fixture_graph(spark, sf_dir), corpus_normed)
+    return new_graph_index("graphidx", fixture_graph(spark, sf_dir), fixture_normed(spark, sf_dir))
 
 
 def graph_engine_batch_search(
@@ -1256,13 +1207,8 @@ def repaired_graph_index(
     full = unaffected.select("node", "nbr", "score", "rk").unionByName(
         repaired.select("node", "nbr", "score", "rk")
     )
-    emb = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") % delete_mod != 0
-    )
-    corpus_normed = emb.select("vec_id", "label").join(
-        fixture_normed(spark, sf_dir), "vec_id"
-    )
-    return new_graph_index("graphrepaired", full, corpus_normed)
+    kept = fixture_normed(spark, sf_dir).filter(F.col("vec_id") % delete_mod != 0)
+    return new_graph_index("graphrepaired", full, kept)
 
 
 def graph_serve_after_repair(
@@ -1483,11 +1429,9 @@ def merged_graph_index(spark: SparkSession, sf_dir: str) -> str:
     :func:`merge_graph_shards` and serving, completing the lifecycle
     build-shards → merge → persist → serve exactly as the repair family
     does for deletes (``repaired_graph_index``)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus_normed = emb.select("vec_id", "label").join(
-        fixture_normed(spark, sf_dir), "vec_id"
+    return new_graph_index(
+        "graphmerged", fixture_merged_graph(spark, sf_dir), fixture_normed(spark, sf_dir)
     )
-    return new_graph_index("graphmerged", fixture_merged_graph(spark, sf_dir), corpus_normed)
 
 
 def graph_merge_serve(
@@ -1600,10 +1544,10 @@ def cdc_refreshed_graph_index(spark: SparkSession, sf_dir: str) -> str:
     # many scoring actions (seed + 4 descent rounds / repair + attach),
     # unpersisted once the index write lands — downstream serves read
     # the PERSISTED corpus_normed, never these
-    old_n = _normed(old).cache()
+    old_n = normed_corpus(old).cache()
     g = build_knn_graph_over(old, old_n)
     live = _cdc_live_emb(spark, sf_dir)
-    live_n = _normed(live).cache()
+    live_n = normed_corpus(live).cache()
 
     dead_node = _cdc_dead(F.col("node"))
     dead_nbr = _cdc_dead(F.col("nbr"))
@@ -1642,8 +1586,7 @@ def cdc_refreshed_graph_index(spark: SparkSession, sf_dir: str) -> str:
         .unionByName(repaired.select("node", "nbr", "score", "rk"))
         .unionByName(attached.select("node", "nbr", "score", "rk"))
     )
-    corpus_normed = live.select("vec_id", "label").join(live_n, "vec_id")
-    out = new_graph_index("graphcdc", full, corpus_normed)
+    out = new_graph_index("graphcdc", full, live_n)
     old_n.unpersist()
     live_n.unpersist()
     return out
@@ -1747,7 +1690,7 @@ def cdc_refreshed_graph_index_gen2(spark: SparkSession, sf_dir: str) -> str:
     idx1 = cdc_refreshed_graph_index(spark, sf_dir)
     edges1 = spark.read.parquet(f"{idx1}/edges")
     live3 = _cdc_live_emb_v3(spark, sf_dir)
-    live3_n = _normed(live3).cache()
+    live3_n = normed_corpus(live3).cache()
 
     dead_node = _cdc2_dead(F.col("node"))
     dead_nbr = _cdc2_dead(F.col("nbr"))
@@ -1783,8 +1726,7 @@ def cdc_refreshed_graph_index_gen2(spark: SparkSession, sf_dir: str) -> str:
         .unionByName(repaired.select("node", "nbr", "score", "rk"))
         .unionByName(attached.select("node", "nbr", "score", "rk"))
     )
-    corpus_normed = live3.select("vec_id", "label").join(live3_n, "vec_id")
-    out = new_graph_index("graphcdc2", full, corpus_normed)
+    out = new_graph_index("graphcdc2", full, live3_n)
     live3_n.unpersist()
     return out
 

@@ -52,6 +52,7 @@ from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
 from gpu_accelerated_vector_indexing_spark.operators.knn import (
     SCORE_SCALE,
     cosine_topk,
+    fixture_normed,
     fixture_qvec,
     prenorm_topk,
     query_vectors,
@@ -332,45 +333,57 @@ def multi_query_knn_ivf(
     with the batch schema.
 
     Scale shape:
-    - the query vectors come from the ``fixture_qvec`` memo the coarse
-      stage fills, so the corpus is not scanned a second time for them;
-    - the batch ships as ONE literal relation of (query_id, qvec, qnorm,
-      label) rows — ≤ n_queries × n_probe, one ``BroadcastExchange`` —
-      whose arrays are JVM-built literals held by reference, so warm
-      batches reuse compiled code;
-    - the distinct probed labels are one parsed IN-list, pushed to the
-      scan (``PushedFilters: [In(label, ...)]``; partition pruning on a
-      partitioned layout);
-    - the per-query top-k is a window over the pruned, scored rows.
+    - the corpus side is the pinned normed corpus
+      (``knn.fixture_normed``: decoded, widened and normed once per
+      session and corpus, ≙ the reference loading its index once,
+      IVF.cpp:456-486), so a warm batch neither decodes the parquet nor
+      widens float→double or folds ‖v‖ per (query, row) pair — the
+      score is ``dot(v, qvec) / (nrm·qnorm + 1e-8)``, one fold per pair
+      (``named_cosine`` over the stored norm);
+    - the (query, row) pairs are generated inside the scan stage, not
+      joined: rows outside the probed-label union are cut by a
+      by-reference ``InSet``, then one ``explode`` emits, per surviving
+      row, the batch positions whose probe list holds its label — looked
+      up by the label VALUE (``array_position`` into the sorted union
+      literal, ``element_at`` into one nested positions literal, never
+      arithmetic on the label) — and ``query_id``, ``qvec`` and
+      ``qnorm`` are read by position from JVM-built literals held by
+      reference: no literal relation, no broadcast job, no
+      recompilation for a new batch;
+    - the per-query vectors come from the ``fixture_qvec`` memo the
+      coarse stage fills, so the corpus is never scanned for them;
+    - the per-query top-k is a window over the scored pairs.
+
+    Trade-off: the label filter is evaluated over the in-memory corpus
+    instead of being pushed into the parquet reader as
+    ``In(label, …)``. On the fixture layout such a pushdown prunes
+    nothing (the file is not partitioned and its row groups are not
+    clustered by label), so every row is decoded either way; a
+    cluster-partitioned index is served by ``IVFEngine.search``, which
+    keeps partition pruning.
     """
     ids = list(dict.fromkeys(int(q) for q in query_ids))
     qvecs = [v for _, v in fixture_qvecs(spark, sf_dir, tuple(ids))]
     probes = probe_lists(fixture_centroid_rows(spark, sf_dir), qvecs, n_probe)
-    batch = spark.range(1).select(
-        F.inline(
-            F.arrays_zip(
-                lit_long_array(ids).alias("query_id"),
-                lit_double_array2(qvecs).alias("qvec"),
-                lit_double_array([seq_l2_norm(v) for v in qvecs]).alias("qnorm"),
-                lit_int_array2(probes).alias("labels"),
-            )
-        )
-    ).select("query_id", "qvec", "qnorm", F.explode("labels").alias("label"))
     union = sorted({lab for p in probes for lab in p})
+    # 1-based batch positions per probed label, in `union` order
+    positions = [[i + 1 for i, p in enumerate(probes) if lab in p] for lab in union]
     pruned = F.expr(f"label IN ({','.join(map(str, union))})") if union else F.lit(False)
-
+    slot = F.array_position(lit_long_array(union), F.col("label")).cast("int")
+    qi = F.col("qi")
     fine = (
-        load_table(spark, sf_dir, "embeddings")
+        fixture_normed(spark, sf_dir)
         .filter(pruned)
-        .join(F.broadcast(batch), "label")  # (query, cluster) pairs actually probed
+        .select("vec_id", "v", "nrm", F.explode(F.element_at(lit_int_array2(positions), slot)).alias("qi"))
         .select(
-            "query_id",
+            F.element_at(lit_long_array(ids), qi).alias("query_id"),
             "vec_id",
-            F.round(
-                named_cosine("embedding", "qvec", "qnorm"),
-                SCORE_SCALE,
-            ).alias("score"),
+            "v",
+            "nrm",
+            F.element_at(lit_double_array2(qvecs), qi).alias("qvec"),
+            F.element_at(lit_double_array([seq_l2_norm(v) for v in qvecs]), qi).alias("qnorm"),
         )
+        .select("query_id", "vec_id", F.round(named_cosine("v", "qvec", "qnorm", "nrm"), SCORE_SCALE).alias("score"))
     )
     w = W.partitionBy("query_id").orderBy(F.desc("score"), F.desc("vec_id"))
     return (

@@ -127,6 +127,35 @@ def fixture_qvec(spark: SparkSession, sf_dir: str, query_id: int) -> list[float]
     return [float(x) for x in query_vectors(spark, sf_dir, (query_id,)).first().qvec]
 
 
+def normed_corpus(emb: DataFrame) -> DataFrame:
+    """``(vec_id, label, v ARRAY<DOUBLE>, nrm)`` with the L2 norm hoisted
+    per vector.
+
+    ≙ the reference computing ‖v‖ once per stored vector instead of per
+    scored pair (IVF.cpp:130-136, the P4 hoisting pattern). Numerically
+    EXACT vs inline cosine: ``sqrt(dot(v, v))`` is the same double
+    wherever it is computed and the pair score multiplies the same two
+    doubles, so the oracle's norm-CTE mirror is value-identical while
+    the per-pair cost drops from three O(dim) folds to one. ``label``
+    rides along, so the relation is also the graph index's persisted
+    ``corpus_normed`` layout."""
+    v = as_double_array("embedding")
+    return emb.select("vec_id", "label", v.alias("v"), l2_norm(v).alias("nrm"))
+
+
+# The normed corpus is INDEX STATE shared by the graph build, the graph
+# walks and the IVF batch (``ivf.multi_query_knn_ivf``): decoded,
+# widened and normed ONCE per (session, corpus) and pinned in memory,
+# like the reference loading its index before any query (IVF.cpp:456-486).
+# No query path pays the corpus-wide decode or norm fold again; a real
+# deployment persists ‖v‖ alongside the vectors at ingest. The pin fills
+# inside the first query that reads it: an eager count would cost that
+# query one more job and one more generated aggregate.
+@session_state
+def fixture_normed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return normed_corpus(load_table(spark, sf_dir, "embeddings")).cache()
+
+
 def knn_bruteforce(
     spark: SparkSession,
     sf_dir: str,

@@ -33,10 +33,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpu_accelerated_vector_indexing_spark.functions.vector import (
-    EPSILON,
     as_double_array,
     cosine_similarity_hoisted,
     dot_product,
+    hoisted_quotient,
     lit_double_array,
     lit_double_array2,
     lit_long_array,
@@ -406,13 +406,14 @@ def _pq_adc(books: list[list[list[float]]], qvec: list[float]) -> Column:
         B = np.asarray(book)
         dot_luts.append(_lit_array((B @ q[s * sub : (s + 1) * sub]).tolist()))
         nsq_luts.append(_lit_array((B * B).sum(axis=1).tolist()))
-    approx_dot = sum(
-        F.element_at(dot_luts[s], F.col("codes")[s]) for s in range(PQ_SUBSPACES)
+    dot_terms = F.array(
+        *[F.element_at(dot_luts[s], F.col("codes")[s]) for s in range(PQ_SUBSPACES)]
     )
     recon_norm = F.sqrt(
         sum(F.element_at(nsq_luts[s], F.col("codes")[s]) for s in range(PQ_SUBSPACES))
     )
-    return approx_dot / (recon_norm * F.lit(seq_l2_norm(qvec)) + F.lit(EPSILON))
+    # ‖q‖ held by reference: the division runs in the fold's finish lambda
+    return hoisted_quotient(dot_terms, recon_norm, F.lit(seq_l2_norm(qvec)))
 
 
 def knn_ivf_pq(
@@ -600,8 +601,8 @@ def residual_approx_scores(
     cent_tbl = spark.createDataFrame(
         cent_rows, schema="label int, qdotc double, cnormsq double, cdot array<array<double>>"
     )
-    approx_dot = F.col("qdotc") + sum(
-        F.element_at(dot_luts[s], F.col("codes")[s]) for s in range(PQ_SUBSPACES)
+    dot_terms = F.array(
+        *[F.element_at(dot_luts[s], F.col("codes")[s]) for s in range(PQ_SUBSPACES)]
     )
     recon_nsq = (
         F.col("cnormsq")
@@ -611,7 +612,8 @@ def residual_approx_scores(
         )
         + sum(F.element_at(nsq_luts[s], F.col("codes")[s]) for s in range(PQ_SUBSPACES))
     )
-    approx = approx_dot / (F.sqrt(recon_nsq) * F.lit(qnorm) + F.lit(EPSILON))
+    # qdotc + Σ lookups over ‖recon‖·‖q‖ + ε, ‖q‖ held by reference
+    approx = hoisted_quotient(dot_terms, F.sqrt(recon_nsq), F.lit(qnorm), offset=F.col("qdotc"))
     return (
         codes_tbl.filter(F.col("label").isin(probes))
         .join(F.broadcast(cent_tbl), "label")

@@ -37,7 +37,7 @@ from gpu_accelerated_vector_indexing_spark.operators.ivf import (
     label_centroids,
     probe_labels,
 )
-from gpu_accelerated_vector_indexing_spark.operators.knn import fixture_qvec, top_k
+from gpu_accelerated_vector_indexing_spark.operators.knn import fixture_qvec, normed_corpus, top_k
 from gpu_accelerated_vector_indexing_spark.operators.quantize import (
     bq_codes,
     bq_hamming,
@@ -181,9 +181,7 @@ def refshape_kmeans_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
 def refshape_normed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized normed 384-dim corpus — the graph family's
     ``fixture_normed`` posture at reference shape."""
-    from gpu_accelerated_vector_indexing_spark.operators.graph_ann import _normed
-
-    df = _normed(ref_corpus(spark, sf_dir)).cache()
+    df = normed_corpus(ref_corpus(spark, sf_dir)).cache()
     df.count()
     return df
 
@@ -326,10 +324,9 @@ def refshape_graph_index(spark: SparkSession, sf_dir: str) -> str:
         new_graph_index,
     )
 
-    corpus_normed = ref_corpus(spark, sf_dir).select("vec_id", "label").join(
-        refshape_normed(spark, sf_dir), "vec_id"
+    return new_graph_index(
+        "refshape_graphindex", refshape_graph(spark, sf_dir), refshape_normed(spark, sf_dir)
     )
-    return new_graph_index("refshape_graphindex", refshape_graph(spark, sf_dir), corpus_normed)
 
 
 def refshape_graph_cli(

@@ -48,8 +48,8 @@ from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
     _topk_per_node,
     attach_candidates,
     fixture_graph,
-    fixture_normed,
 )
+from gpu_accelerated_vector_indexing_spark.operators.knn import fixture_normed
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 from gpu_accelerated_vector_indexing_spark.streaming._drain import (
     drain_accumulate,

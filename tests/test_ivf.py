@@ -501,6 +501,83 @@ def test_warm_multi_query_batch_does_not_recompile(spark):
     assert compiles.count == 0
 
 
+def test_warm_multi_query_batch_is_two_jobs_and_no_compile(spark):
+    """A warm batch over the pinned normed corpus runs two jobs (the
+    window's shuffle stage and its result stage: no broadcast job for a
+    query relation) and compiles nothing."""
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import fixture_qvecs, multi_query_knn_ivf
+    from tests.conftest import codegen_compiles, spark_jobs
+
+    multi_query_knn_ivf(spark, SF_CORRECT, query_ids=(20, 21, 22), k=5, n_probe=3).collect()
+    fixture_qvecs(spark, SF_CORRECT, (23, 24, 25))  # the memo fill is its own job
+    with spark_jobs(spark) as jobs, codegen_compiles(spark) as compiles:
+        rows = multi_query_knn_ivf(spark, SF_CORRECT, query_ids=(23, 24, 25), k=5, n_probe=3).collect()
+    assert len(rows) == 15
+    assert jobs.count == 2, f"{jobs.count} jobs"
+    assert compiles.count == 0, f"{compiles.count} compilations"
+
+
+def _broadcast_join_batch(spark, sf_dir, query_ids, k, n_probe):
+    """The batch as it was planned before the pinned corpus: one literal
+    (query_id, qvec, qnorm, label) relation broadcast-joined to the
+    label-filtered parquet scan, scored with ‖v‖ folded per pair."""
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
+    from gpu_accelerated_vector_indexing_spark.functions.vector import named_cosine, seq_l2_norm
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import (
+        fixture_centroid_rows,
+        fixture_qvecs,
+        probe_lists,
+    )
+    from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
+
+    ids = list(dict.fromkeys(int(q) for q in query_ids))
+    qvecs = [v for _, v in fixture_qvecs(spark, sf_dir, tuple(ids))]
+    probes = probe_lists(fixture_centroid_rows(spark, sf_dir), qvecs, n_probe)
+    batch = spark.createDataFrame(
+        [(q, v, seq_l2_norm(v), lab) for q, v, p in zip(ids, qvecs, probes) for lab in p],
+        "query_id bigint, qvec array<double>, qnorm double, label int",
+    )
+    fine = (
+        load_table(spark, sf_dir, "embeddings")
+        .join(F.broadcast(batch), "label")
+        .select("query_id", "vec_id", F.round(named_cosine("embedding", "qvec", "qnorm"), 6).alias("score"))
+    )
+    w = W.partitionBy("query_id").orderBy(F.desc("score"), F.desc("vec_id"))
+    return (
+        fine.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("query_id", "vec_id", "score", "rn")
+    )
+
+
+@pytest.mark.parametrize(
+    "query_ids, k, n_probe",
+    [
+        ((5, 3, 5, 3), 4, 3),  # duplicate ids
+        ((7, 8), 400, 2),  # k past the probed candidates
+        ((2, 9, 14), 5, 64),  # n_probe >= the cluster count: every cell
+        ((), 5, 3),  # empty batch
+        ((11,), 5, 1),  # one query, one cell
+    ],
+)
+def test_multi_query_ivf_matches_broadcast_join_form(spark, query_ids, k, n_probe):
+    """The pinned-corpus batch returns exactly the rows, scores (bit for
+    bit) and ranks of the broadcast-join plan it replaced: the label →
+    batch-position lookup reproduces the (query, probed cell) pairs and
+    the hoisted ‖v‖ is the same fold."""
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import multi_query_knn_ivf
+
+    got = multi_query_knn_ivf(spark, SF_CORRECT, query_ids=query_ids, k=k, n_probe=n_probe)
+    ref = _broadcast_join_batch(spark, SF_CORRECT, query_ids, k, n_probe)
+    rows = sorted(tuple(r) for r in got.collect())
+    assert rows == sorted(tuple(r) for r in ref.collect())
+    assert {r[0] for r in rows} == set(query_ids)
+    per_query = [sorted(r[3] for r in rows if r[0] == q) for q in set(query_ids)]
+    assert all(ranks == list(range(1, len(ranks) + 1)) and len(ranks) <= k for ranks in per_query)
+
+
 def test_coarse_scores_match_sequential_loop():
     """The one-pass NumPy coarse stage equals the per-centroid Python
     fold it replaced (sequential float64 dot and norm, +1e-8 guard,

@@ -549,3 +549,23 @@ def test_warm_fresh_query_id_is_one_job_and_no_compile(spark, name):
     assert len(rows) == 5
     assert jobs.count == 1, f"{name}: {jobs.count} jobs"
     assert compiles.count == 0, f"{name}: {compiles.count} compilations"
+
+
+@pytest.mark.parametrize("name", ["knn_pq", "knn_ivf_pq_residual"])
+def test_warm_fresh_query_id_pq_compiles_nothing(spark, name):
+    """A warm PQ search for a fresh id compiles nothing: the ADC score
+    divides by ‖recon‖·‖q‖ + ε in a fold's finish lambda, so the hoisted
+    ‖q‖ stays a by-reference literal instead of a double inlined into
+    generated code."""
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import fixture_qvecs
+    from tests.conftest import codegen_compiles
+
+    call = _query_id_call(name)
+    base = 340 + 10 * ["knn_pq", "knn_ivf_pq_residual"].index(name)
+    warm, fresh = base, base + 1
+    fixture_qvecs(spark, SF_CORRECT, (warm, fresh))
+    call(spark, SF_CORRECT, warm).collect()
+    with codegen_compiles(spark) as compiles:
+        rows = call(spark, SF_CORRECT, fresh).collect()
+    assert len(rows) == 5
+    assert compiles.count == 0, f"{name}: {compiles.count} compilations"

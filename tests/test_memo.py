@@ -225,3 +225,27 @@ def test_no_hand_rolled_memo_dicts():
                 ):
                     found.append(f"{path.relative_to(PACKAGE)}:{node.lineno} {t.id}")
     assert not found, f"hand-rolled memo dicts (use memo.session_state): {found}"
+
+
+def test_pinned_normed_corpus_is_released_and_rebuilt_after_clear(spark):
+    """The IVF batch's pinned normed corpus is session state like any
+    other: a clear unpersists it, and the next batch pins it again with
+    identical rows and answers identically."""
+    from gpu_accelerated_vector_indexing_spark import memo
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import multi_query_knn_ivf
+    from gpu_accelerated_vector_indexing_spark.operators.knn import fixture_normed
+
+    def batch():
+        df = multi_query_knn_ivf(spark, SF_SMOKE, query_ids=(0, 3, 7), k=5, n_probe=2)
+        return sorted(tuple(r) for r in df.collect())
+
+    first = batch()
+    pinned = fixture_normed.lookup(spark, SF_SMOKE)
+    assert pinned is not None and pinned.storageLevel.useMemory
+    memo.clear_session_caches(spark)
+    assert fixture_normed.lookup(spark, SF_SMOKE) is None
+    assert not pinned.storageLevel.useMemory  # unpersisted
+    assert batch() == first
+    rebuilt = fixture_normed.lookup(spark, SF_SMOKE)
+    assert rebuilt is not None and rebuilt is not pinned and rebuilt.storageLevel.useMemory
+    assert sorted(tuple(r) for r in rebuilt.collect()) == sorted(tuple(r) for r in pinned.collect())

@@ -475,19 +475,12 @@ import pytest  # noqa: E402
 def built_graph_index_plans(spark, tmp_path_factory):
     from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
         fixture_graph,
-        fixture_normed,
         write_graph_index,
     )
-    from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
-    from pyspark.sql import functions as F  # noqa: F401
+    from gpu_accelerated_vector_indexing_spark.operators.knn import fixture_normed
 
     out = str(tmp_path_factory.mktemp("graph_index_plans"))
-    corpus_normed = (
-        load_table(spark, SF_CORRECT, "embeddings")
-        .select("vec_id", "label")
-        .join(fixture_normed(spark, SF_CORRECT), "vec_id")
-    )
-    write_graph_index(fixture_graph(spark, SF_CORRECT), corpus_normed, out)
+    write_graph_index(fixture_graph(spark, SF_CORRECT), fixture_normed(spark, SF_CORRECT), out)
     return out
 
 
@@ -728,21 +721,19 @@ def test_warm_engine_point_search_is_one_stage_topk(spark, tmp_path):
         assert "cluster" in plan.split("PartitionFilters", 1)[1][:200], plan
 
 
-def test_warm_multi_query_batch_is_one_broadcast_over_one_scan(spark):
-    """A warm ``multi_query_knn_ivf`` batch reads the corpus once: the
-    query vectors, norms and probe lists ship as ONE literal relation
-    (one ``BroadcastExchange``), no second scan fetches query vectors by
-    ``vec_id``, and the probed-label IN-list reaches the Parquet reader
-    as a pushed ``In(label, ...)``."""
+def test_warm_multi_query_batch_scans_the_pinned_corpus_once(spark):
+    """A warm ``multi_query_knn_ivf`` batch reads the pinned normed
+    corpus (one ``InMemoryTableScan``; its one ``FileScan`` is the pin's
+    own build) and generates its (query, row) pairs in the scan stage:
+    no ``BroadcastExchange``, no join, and no second scan that fetches
+    query vectors by ``vec_id``."""
     from gpu_accelerated_vector_indexing_spark.operators.ivf import fixture_qvecs, multi_query_knn_ivf
 
     fixture_qvecs(spark, SF_CORRECT, (1, 4, 9))
     df = multi_query_knn_ivf(spark, SF_CORRECT, query_ids=(1, 4, 9), k=5, n_probe=3)
-    plan = physical_plan(df)
-    assert plan.count("BroadcastExchange") == 1, plan
+    plan = assert_plan(df, contains=("InMemoryTableScan", "Generate"), absent=("BroadcastExchange", "Join"))
     assert plan.count("FileScan") == 1, plan
     assert not any("vec_id" in f for f in pushed_filters(df)), plan
-    assert "PushedFilters: [In(label" in plan, plan
 
 
 def test_single_query_search_is_one_scan_without_query_broadcast(spark):

@@ -403,6 +403,33 @@ def test_engine_warm_search_does_not_recompile(spark, built_index):
     assert compiles.count == 0
 
 
+def test_engine_tunes_an_untuned_session(spark, built_index):
+    """An engine on a session that ``get_spark`` did not build applies
+    the engine settings itself (``session.tune_session``): with Spark's
+    default IN-list thresholds in place, constructing an engine sets the
+    by-reference ones, and its warm search compiles nothing."""
+    from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
+    from gpu_accelerated_vector_indexing_spark.session import IN_LIST_SETTINGS
+    from tests.conftest import codegen_compiles
+
+    first, second = _query_vec(spark, SF_SMOKE, 0), _query_vec(spark, SF_SMOKE, 5)
+    saved = {key: spark.conf.get(key) for key in IN_LIST_SETTINGS}
+    try:
+        for key in IN_LIST_SETTINGS:
+            spark.conf.unset(key)  # Spark's defaults: 10 and 400
+        assert [spark.conf.get(key) for key in IN_LIST_SETTINGS] == ["10", "400"]
+        eng = IVFEngine.from_pretrained(spark, built_index, n_probe=2)
+        assert {key: spark.conf.get(key) for key in IN_LIST_SETTINGS} == IN_LIST_SETTINGS
+        eng.search(first, k=5).collect()
+        with codegen_compiles(spark) as compiles:
+            rows = eng.search(second, k=5).collect()
+        assert len(rows) == 5
+        assert compiles.count == 0
+    finally:
+        for key, value in saved.items():
+            spark.conf.set(key, value)
+
+
 def test_engine_non_finite_query_fails_before_any_job(spark, built_index):
     """A NaN/±Inf query component raises ``ValueError`` from
     ``search()`` itself — not at collect, and before even the cold
@@ -546,22 +573,14 @@ def test_cli_main_smoke(spark, built_index, tmp_path, capsys):
 def built_graph_index(spark, tmp_path_factory):
     """A pretrained graph index on disk: edges + normed corpus — the
     layout GraphEngine.from_pretrained consumes."""
-    from pyspark.sql import functions as F
-
     from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
         fixture_graph,
-        fixture_normed,
         write_graph_index,
     )
-    from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
+    from gpu_accelerated_vector_indexing_spark.operators.knn import fixture_normed
 
     out = str(tmp_path_factory.mktemp("graph_index"))
-    corpus_normed = (
-        load_table(spark, SF_SMOKE, "embeddings")
-        .select("vec_id", "label")
-        .join(fixture_normed(spark, SF_SMOKE), "vec_id")
-    )
-    write_graph_index(fixture_graph(spark, SF_SMOKE), corpus_normed, out)
+    write_graph_index(fixture_graph(spark, SF_SMOKE), fixture_normed(spark, SF_SMOKE), out)
     return out
 
 
