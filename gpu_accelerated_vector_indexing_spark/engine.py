@@ -10,36 +10,52 @@ threadsperBlock a positive multiple of 32, IVF.cpp:604-619) and are
 otherwise inert — the "kernel choice" is Spark's task parallelism
 (SURVEY.md §4 P9).
 
-Where the reference eagerly loads ALL 128 cluster files at startup
-(IVF.cpp:456-486 — §4 P10's anti-optimization), this engine is lazy:
-``from_pretrained`` only binds the table paths, and a search with
-``cluster IN (probes)`` opens just the probed partition directories
-(Parquet partition pruning) — the property that holds at 100 TB.
+The engine loads its index once, as the reference does
+(IVF.cpp:456-486), but lazily: ``from_pretrained`` only binds the
+table paths, and the first search fills one pinned serving relation,
+the layout's LIVE rows as ``(vec_id, cluster, v ARRAY<DOUBLE>, nrm)``
+(tombstones applied, float→double widened and ‖v‖ folded once). The
+pin is cached (MEMORY_AND_DISK: an index bigger than executor memory
+spills instead of failing) and shared by every engine over the same
+snapshot of the layout.
 
 The coarse stage runs on the driver, as the reference's does
 (IVF.cpp:271-282): the first search collects the tiny centroid table
 (≤ a few hundred rows) once and keeps it on the engine, and every
 search ranks it with ``ivf.probe_labels``. A warm search is then ONE
-Spark job — the pruned fine scan and its top-k — with the query
-shipped as one JVM-built literal and its norm hoisted to a scalar.
-Neither value, nor the probe IN-list, is inlined into generated code,
-so a warm search reuses the classes the previous one compiled.
+Spark job over the pin — the probe filter, the score of the probed
+rows and their top-k (≙ IVF.cpp:286-435 scoring only the probed
+clusters in memory) — with the query shipped as one JVM-built literal
+and its norm hoisted to a scalar. Neither value, nor the probe list,
+is inlined into generated code, so a warm search reuses the classes
+the previous one compiled: it opens no file and compiles nothing.
+
+Trade-off: every warm query filters ALL pinned rows (a columnar scan
+of the cached batches) and scores only the probed ones, where a search
+over the parquet layout opened just the probed partition directories —
+and paid, per query, the scan planning, about 20 file opens, the
+widening and a ‖v‖ fold per candidate row. The layout stays
+cluster-partitioned for its other readers (``append_to_index`` writes
+into cells, the CDC refreshes read it, ``IVFEngine.embeddings`` still
+prunes); an index larger than one session can hold calls for one local
+index per shard and a global top-k merge, not a bigger pin.
 """
 
 from __future__ import annotations
 
 import argparse
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from functools import reduce
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gpu_accelerated_vector_indexing_spark.functions.vector import finite_doubles
+from gpu_accelerated_vector_indexing_spark.functions.vector import finite_doubles, lit_long_array
 from gpu_accelerated_vector_indexing_spark.memo import session_state
 from gpu_accelerated_vector_indexing_spark.operators.ivf import probe_labels
-from gpu_accelerated_vector_indexing_spark.operators.knn import cosine_score, top_k, with_query
+from gpu_accelerated_vector_indexing_spark.operators.knn import normed_corpus, normed_score, top_k, with_query
 from gpu_accelerated_vector_indexing_spark.session import tune_session
 
 VALID_MODES = ("Atomic", "NonAtomic")  # IVF.cpp:583-588
@@ -72,12 +88,77 @@ class SearchConfig:
             raise ValueError("--n_probe must be positive")
 
 
+@dataclass(frozen=True)
+class LayoutSnapshot:
+    """What an engine's relations listed when they were opened: the
+    files under the layout ``root`` and those of its tombstone list
+    (``None`` for a classic layout). Spark writers never reuse a file
+    name, so equal listings hold equal live rows: equality and hash
+    read the listings only, and the relations ride along for their
+    schemas."""
+
+    root: str
+    files: tuple[str, ...]
+    tomb_files: tuple[str, ...] | None
+    embeddings: DataFrame = field(compare=False, repr=False)
+    tombstones: DataFrame | None = field(compare=False, repr=False)
+
+    def rows(self) -> DataFrame:
+        """The snapshot's live rows, read from the listed files only.
+        Spark re-lists a cached relation that reads a DIRECTORY when a
+        write lands under it (``append_to_index``), which would move an
+        already-open engine onto the new files; a relation over named
+        files re-lists just those."""
+
+        def listed(rel: DataFrame, files: tuple[str, ...], **options: str) -> DataFrame:
+            return rel.sparkSession.read.schema(rel.schema).options(**options).parquet(*files)
+
+        emb = listed(self.embeddings, self.files, basePath=self.root)
+        # an empty tombstone list retires nothing
+        return live_rows(emb, listed(self.tombstones, self.tomb_files) if self.tomb_files else None)
+
+
+def live_rows(emb: DataFrame, tombstones: DataFrame | None) -> DataFrame:
+    """A layout's rows minus the ones its tombstone list retires (r9
+    masked reads: a CDC-refreshed layout ships the list beside the
+    index). Delta-sized list → broadcast anti-join. A generation-stamped
+    layout retires rows written at or before the tombstone's dead-gen
+    (index_build.TOMBSTONE_SCHEMA — the multi-cycle rule: an edited
+    doc's LATEST re-embedding survives every earlier retirement); a
+    gen-less tombstone list against a gen-stamped index retires base
+    rows only (the r9 single-cycle layout); a fully classic layout
+    retires by vec_id alone."""
+    if tombstones is None:
+        return emb
+    tombs = tombstones.withColumnRenamed("vec_id", "t_vec_id").withColumnRenamed("gen", "t_gen")
+    cond = emb.vec_id == tombs.t_vec_id
+    if "gen" in emb.columns:
+        cond = cond & ((emb.gen <= tombs.t_gen) if "t_gen" in tombs.columns else (emb.gen == 0))
+    return emb.join(F.broadcast(tombs), cond, "left_anti")
+
+
+# IVFEngine serving state, memoized per (session, layout snapshot): the
+# live rows normed once and cached, like the reference loading its index
+# before any query (IVF.cpp:456-486). Engines over the same snapshot
+# share one pin; an engine opened after ``append_to_index`` lists the
+# new files, so it pins the appended rows, while an engine opened before
+# keeps its own snapshot. The pin fills inside the first search's job
+# (an eager count would cost that search one more job), and
+# memo.clear_session_caches unpersists it.
+@session_state
+def _ivf_pin(spark: SparkSession, snapshot: LayoutSnapshot) -> DataFrame:
+    return normed_corpus(snapshot.rows(), "cluster").cache()
+
+
 class IVFEngine:
     """Online query engine over a prebuilt cluster-partitioned index.
 
     Index layout = ``operators.index_build.build_partitioned_index``
     output: ``{index_dir}/embeddings_indexed`` (partitioned by
-    ``cluster``) + ``{index_dir}/centroids``.
+    ``cluster``) + ``{index_dir}/centroids``. Searches read the pinned
+    live rows of the layout (see the module docstring for the
+    trade-off against per-query partition pruning); ``embeddings``
+    stays the raw, prunable layout relation.
     """
 
     def __init__(
@@ -93,17 +174,19 @@ class IVFEngine:
         # on any session, not only one that get_spark built
         self.spark = tune_session(spark)
         self.config = config
-        # lazy relations — nothing is read until a search runs (vs IVF.cpp:456-486)
+        # lazy relations — nothing is read until a search runs (vs
+        # IVF.cpp:456-486); each snapshots its file listing here
+        self._emb_path = emb_path
         self.embeddings = spark.read.parquet(emb_path)
         self.centroids = spark.read.parquet(cent_path)
-        # (cluster, centroid) rows, collected by the first search; the
-        # relation above already snapshots its file listing, and every
+        # (cluster, centroid) rows, collected by the first search; every
         # centroid writer builds into a fresh directory
         self._centroid_rows: list[tuple[int, list[float]]] | None = None
         # masked reads (r9): a CDC-refreshed layout ships a tombstone
-        # list beside the index; searches anti-join it so retired base
-        # rows never score. None ⇒ the classic immutable-index path.
+        # list beside the index (see live_rows). None ⇒ the classic
+        # immutable-index path.
         self.tombstones = tombstones
+        self._snapshot: LayoutSnapshot | None = None
 
     @classmethod
     def from_pretrained(
@@ -157,45 +240,44 @@ class IVFEngine:
             ]
         return probe_labels(self._centroid_rows, qvec, n_probe)
 
+    def _pin(self) -> DataFrame:
+        """The pinned live rows of this engine's snapshot (``_ivf_pin``),
+        looked up per search, so a search after a cache clear pins
+        again. Listing the relations' files runs no job."""
+        if self._snapshot is None:
+            tombs = self.tombstones
+
+            def listing(rel: DataFrame) -> tuple[str, ...]:
+                # inputFiles() gives escaped URIs; a reader takes paths
+                return tuple(sorted(unquote(f) for f in rel.inputFiles()))
+
+            self._snapshot = LayoutSnapshot(
+                self._emb_path,
+                listing(self.embeddings),
+                None if tombs is None else listing(tombs),
+                self.embeddings,
+                tombs,
+            )
+        return _ivf_pin(self.spark, self._snapshot)
+
     def search(self, qvec: list[float], k: int = 5) -> DataFrame:
-        """IVF-pruned top-k cosine search → ``(score, vec_id)`` desc.
+        """IVF top-k cosine search → ``(score, vec_id)`` desc.
 
         ≙ ``IVFIndex::search`` (IVF.cpp:267-436): driver-side coarse
-        stage, then ONE pruned fine scan cut like ``knn.cosine_topk`` —
-        the query as one literal, the top-k as TakeOrderedAndProject
-        (partial top-k per partition, then merge — the reference's
-        sequential strategy, for either flag value).
+        stage, then ONE fine stage over the pinned live rows — the probe
+        filter, the score of the probed rows, and the top-k cut like
+        ``knn.cosine_topk`` as TakeOrderedAndProject (partial top-k per
+        partition, then merge — the reference's sequential strategy,
+        for either flag value).
         A NaN/Inf query component raises ``ValueError`` before any job.
         """
         qvec = finite_doubles(qvec)  # fails loud on NaN/Inf, before any job
         probes = self._coarse(qvec, self.config.n_probe)
-        emb = self.embeddings
-        if self.tombstones is not None:
-            # delta-sized list → broadcast anti-join. A generation-
-            # stamped layout retires rows written at or before the
-            # tombstone's dead-gen (index_build.TOMBSTONE_SCHEMA — the
-            # multi-cycle rule: an edited doc's LATEST re-embedding
-            # survives every earlier retirement); a gen-less tombstone
-            # list against a gen-stamped index retires base rows only
-            # (the r9 single-cycle layout); a fully classic layout
-            # retires by vec_id alone.
-            tombs = self.tombstones.withColumnRenamed(
-                "vec_id", "t_vec_id"
-            ).withColumnRenamed("gen", "t_gen")
-            cond = emb.vec_id == tombs.t_vec_id
-            if "gen" in emb.columns:
-                cond = cond & (
-                    (emb.gen <= tombs.t_gen)
-                    if "t_gen" in tombs.columns
-                    else (emb.gen == 0)
-                )
-            emb = emb.join(F.broadcast(tombs), cond, "left_anti")
-        # one parse for the probe IN-list (Column.isin pays a py4j call
-        # per element); an empty centroid table probes nothing
-        pruned = F.expr(f"cluster IN ({','.join(map(str, probes))})") if probes else F.lit(False)
-        # knn.cosine_topk's cut with the facade's (score, vec_id) column order
-        scored = with_query(emb.filter(pruned), qvec).select(cosine_score().alias("score"), "vec_id")
-        return top_k(scored, k)
+        # the probes as one by-reference array literal: a parsed IN-list
+        # of one value would become `cluster = v`, inlined into generated
+        # code and compiled again for every fresh cluster
+        probed = self._pin().filter(F.array_contains(lit_long_array(probes), F.col("cluster")))
+        return top_k(with_query(probed, qvec).select(normed_score().alias("score"), "vec_id"), k)
 
     def search_with_docs(self, qvec: list[float], documents: DataFrame, k: int = 5) -> DataFrame:
         """Top-k + article snippet (≙ print_results path, IVF.cpp:688-710)

@@ -64,6 +64,7 @@ from gpu_accelerated_vector_indexing_spark.operators.ivf import DELETE_MOD, fixt
 from gpu_accelerated_vector_indexing_spark.operators.knn import (
     fixture_normed,
     normed_corpus,
+    normed_score,
     top_k,
     with_query,
 )
@@ -395,11 +396,11 @@ def _float_scorer(emb_n: DataFrame, qvec: list[float]) -> tuple[DataFrame, Colum
     and ‖q‖ hoisted on the driver (``seq_l2_norm`` — bit-identical to
     the JVM fold + sqrt), so the hoist is value-neutral exactly like the
     build's; ``score`` is the engine recipe
-    round(dot(v, q) / (‖v‖·‖q‖ + ε), 6) as ``named_cosine`` over the
-    stored norm — built once per process, divided in the fold's finish
-    lambda, so neither constant is inlined into generated code and a
-    warm walk compiles nothing per query."""
-    return with_query(emb_n, qvec), F.round(named_cosine("v", "qvec", "qnorm", "nrm"), 6)
+    round(dot(v, q) / (‖v‖·‖q‖ + ε), 6) as ``knn.normed_score``
+    (``named_cosine`` over the stored norm) — built once per process,
+    divided in the fold's finish lambda, so neither constant is inlined
+    into generated code and a warm walk compiles nothing per query."""
+    return with_query(emb_n, qvec), normed_score()
 
 
 def rescore_topk(emb_n: DataFrame, qvec: list[float], ids, k: int) -> DataFrame:

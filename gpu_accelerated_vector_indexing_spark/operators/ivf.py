@@ -19,7 +19,8 @@ Spark-first re-expression:
 - Probe pruning is a ``cluster IN (...)`` predicate. Against the
   partitioned index layout (``write.partitionBy("cluster")``) this is
   Parquet **partition pruning**: a 1000-executor job never opens the
-  other clusters' files. That is what makes this work at 100 TB.
+  other clusters' files. ``IVFEngine`` instead pins the layout's live
+  rows once and filters the pin per query (engine.py says why).
 - The fine search is ``knn.cosine_topk`` over the pruned scan: the
   query enters as one literal, and ``orderBy().limit()`` plans as
   TakeOrderedAndProject — a bounded top-k per partition, then one
@@ -44,7 +45,6 @@ from gpu_accelerated_vector_indexing_spark.functions.vector import (
     lit_double_array2,
     lit_int_array2,
     lit_long_array,
-    named_cosine,
     np_dot_seq,
     seq_l2_norm,
 )
@@ -54,6 +54,7 @@ from gpu_accelerated_vector_indexing_spark.operators.knn import (
     cosine_topk,
     fixture_normed,
     fixture_qvec,
+    normed_score,
     prenorm_topk,
     query_vectors,
 )
@@ -339,7 +340,7 @@ def multi_query_knn_ivf(
       IVF.cpp:456-486), so a warm batch neither decodes the parquet nor
       widens float→double or folds ‖v‖ per (query, row) pair — the
       score is ``dot(v, qvec) / (nrm·qnorm + 1e-8)``, one fold per pair
-      (``named_cosine`` over the stored norm);
+      (``knn.normed_score``: ``named_cosine`` over the stored norm);
     - the (query, row) pairs are generated inside the scan stage, not
       joined: rows outside the probed-label union are cut by a
       by-reference ``InSet``, then one ``explode`` emits, per surviving
@@ -358,9 +359,10 @@ def multi_query_knn_ivf(
     instead of being pushed into the parquet reader as
     ``In(label, …)``. On the fixture layout such a pushdown prunes
     nothing (the file is not partitioned and its row groups are not
-    clustered by label), so every row is decoded either way; a
-    cluster-partitioned index is served by ``IVFEngine.search``, which
-    keeps partition pruning.
+    clustered by label), so every row is decoded either way.
+    ``IVFEngine.search`` makes the same trade over a cluster-partitioned
+    layout: it filters its pinned live rows instead of pruning
+    directories per query.
     """
     ids = list(dict.fromkeys(int(q) for q in query_ids))
     qvecs = [v for _, v in fixture_qvecs(spark, sf_dir, tuple(ids))]
@@ -383,7 +385,7 @@ def multi_query_knn_ivf(
             F.element_at(lit_double_array2(qvecs), qi).alias("qvec"),
             F.element_at(lit_double_array([seq_l2_norm(v) for v in qvecs]), qi).alias("qnorm"),
         )
-        .select("query_id", "vec_id", F.round(named_cosine("v", "qvec", "qnorm", "nrm"), SCORE_SCALE).alias("score"))
+        .select("query_id", "vec_id", normed_score().alias("score"))
     )
     w = W.partitionBy("query_id").orderBy(F.desc("score"), F.desc("vec_id"))
     return (

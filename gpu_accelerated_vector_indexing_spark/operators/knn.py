@@ -72,6 +72,14 @@ def cosine_score(use_pandas: bool = False) -> Column:
     return F.round(score, SCORE_SCALE)
 
 
+def normed_score() -> Column:
+    """:func:`cosine_score` over the normed corpus (:func:`normed_corpus`
+    rows plus ``qvec``/``qnorm``): the stored ‖v‖ leaves one fold per
+    scored row, with the same ops in the same order, so the same
+    doubles."""
+    return F.round(named_cosine("v", "qvec", "qnorm", "nrm"), SCORE_SCALE)
+
+
 def scored_embeddings(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """Cross-score every (embedding, query) pair of a query BATCH via a
     broadcast of the tiny query relation."""
@@ -127,9 +135,10 @@ def fixture_qvec(spark: SparkSession, sf_dir: str, query_id: int) -> list[float]
     return [float(x) for x in query_vectors(spark, sf_dir, (query_id,)).first().qvec]
 
 
-def normed_corpus(emb: DataFrame) -> DataFrame:
+def normed_corpus(emb: DataFrame, cell: str = "label") -> DataFrame:
     """``(vec_id, label, v ARRAY<DOUBLE>, nrm)`` with the L2 norm hoisted
-    per vector.
+    per vector; ``cell`` names the cell column kept in place of
+    ``label`` (``cluster`` in the engine's partitioned layout).
 
     ≙ the reference computing ‖v‖ once per stored vector instead of per
     scored pair (IVF.cpp:130-136, the P4 hoisting pattern). Numerically
@@ -140,7 +149,7 @@ def normed_corpus(emb: DataFrame) -> DataFrame:
     rides along, so the relation is also the graph index's persisted
     ``corpus_normed`` layout."""
     v = as_double_array("embedding")
-    return emb.select("vec_id", "label", v.alias("v"), l2_norm(v).alias("nrm"))
+    return emb.select("vec_id", cell, v.alias("v"), l2_norm(v).alias("nrm"))
 
 
 # The normed corpus is INDEX STATE shared by the graph build, the graph

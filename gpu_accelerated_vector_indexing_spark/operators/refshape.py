@@ -3,8 +3,8 @@
 The reference's index constants are 128 clusters of 384-dim MiniLM
 embeddings (IVF.cpp:13-14, embedding.py:16); the test fixtures are
 10 × 64. Constants-driven bugs — bit packing past one 64-bit word,
-probe lists over 128 labels, 384-element folds, partition pruning at
-128 directories — only surface at the reference shape, so this module
+probe lists over 128 labels, 384-element folds, a 128-directory
+layout — only surface at the reference shape, so this module
 derives a DETERMINISTIC 384-dim corpus from the fixture embeddings and
 runs the real engine paths on it:
 
@@ -353,8 +353,9 @@ def refshape_search_cli(
     n_probe: int = REF_N_PROBE,
 ) -> DataFrame:
     """Reference-shape search through the CLI's engine facade: 20 of 128
-    clusters probed (partition pruning over 128 directories), 384-dim
-    cosine fine scan, (score, vec_id) out — ≙ ``./IVF --n_probe 20``
+    clusters probed over the engine's pinned live rows (the 128-directory
+    layout is read once, into the pin, not pruned per query), 384-dim
+    cosine fine stage, (score, vec_id) out — ≙ ``./IVF --n_probe 20``
     (IVF.cpp:558-635) at the reference's true index shape."""
     from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
 

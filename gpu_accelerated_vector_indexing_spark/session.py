@@ -17,6 +17,16 @@ becomes a hash-set ``InSet`` that generated code holds by reference,
 so warm queries reuse compiled code. Parquet pushdown
 (``PushedFilters: [In(...)]``) and partition pruning read the same
 ``InSet``, so neither changes.
+
+A local session also lists partition directories on the driver. Above
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths (32 by
+default) Spark lists them in a job with one task per directory, so
+opening a 125-cell index layout ran a 125-task listing job. On
+``local[N]`` that job's tasks list the same local disk from the same
+JVM, so it only adds scheduling; :func:`get_spark`, which builds only
+local sessions, keeps every listing on the driver.
+:func:`tune_session` leaves the threshold alone: it also configures
+sessions on clusters, where a parallel listing spreads real work.
 """
 
 from __future__ import annotations
@@ -53,6 +63,8 @@ def get_spark(app_name: str = "gpu_accelerated_vector_indexing_spark", cpus: int
     )
     for key, value in IN_LIST_SETTINGS.items():
         builder = builder.config(key, value)
+    # partition discovery on the driver (see module docstring)
+    builder = builder.config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -67,3 +67,30 @@ def spark_jobs(spark):
     finally:
         sc.setJobGroup(None, None)
         out.count = len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def assert_pinned_point_search(df) -> str:
+    """Pin the plan of a warm ``IVFEngine.search``: a bounded top-k
+    (``TakeOrderedAndProject``) over the score projection, over the
+    probe ``Filter`` (a by-reference ``array_contains`` on ``cluster``),
+    over an ``InMemoryTableScan`` of the engine's pin — so only probed
+    rows are scored — with no ``Window``, no ``Exchange`` and no
+    ``FileScan`` above the pinned relation. The pin's build plan prints
+    below its ``InMemoryRelation`` and is not part of the query."""
+    import re
+
+    from gpu_accelerated_vector_indexing_spark.plans.inspect import physical_plan
+
+    plan = physical_plan(df)
+    serving = plan.split("InMemoryRelation", 1)[0]
+    nodes = [re.sub(r"^[\s:+\-]*(\*\(\d+\) )?", "", ln) for ln in serving.splitlines()]
+    lines = [n for n in nodes if n]
+    if lines[0].startswith("AdaptiveSparkPlan"):  # AQE wraps a pin whose build has an exchange
+        lines = lines[1:]
+    ops = [re.split(r"[ (\[]", n, maxsplit=1)[0] for n in lines]
+    assert ops == ["TakeOrderedAndProject", "Project", "Filter", "InMemoryTableScan"], serving
+    assert " AS score" in lines[1], serving
+    assert "array_contains(" in lines[2] and "cluster" in lines[2], serving
+    for frag in ("Window", "Exchange", "FileScan"):
+        assert frag not in serving, serving
+    return plan

@@ -545,15 +545,16 @@ def test_shard_stats_merge_is_two_partial_aggregates(spark):
     assert plan.count("HashAggregate") == 4, plan  # partial+final × 2 stages
 
 
-def test_merged_ivf_serve_prunes_partitions(spark):
-    """Serving through the MERGED shard layout keeps the engine's
-    partition-pruning claim: the fine scan shows a cluster IN-list in
-    PartitionFilters (only probed directories are even listed) and the
-    whole serve plan carries exactly ONE exchange (the top-k's)."""
-    plan = physical_plan(_q(spark, "engine_ivf_merge_serve"))
-    assert "PartitionFilters" in plan, plan
-    assert "cluster" in plan.split("PartitionFilters", 1)[1][:200], plan
-    assert plan.count("Exchange") <= 1, plan
+def test_merged_ivf_serve_reads_the_engine_pin(spark):
+    """Serving through the MERGED shard layout goes through the engine's
+    pinned live rows: a bounded top-k over the scored probe filter on
+    the ``InMemoryTableScan``, with no exchange and no file scan outside
+    the pin's build."""
+    from tests.conftest import assert_pinned_point_search
+
+    df = _q(spark, "engine_ivf_merge_serve")
+    df.collect()
+    assert_pinned_point_search(df)
 
 
 def test_pagerank_round_is_single_shuffle(spark):
@@ -626,16 +627,18 @@ def test_curriculum_single_corpus_shuffle(spark):
 def test_gen2_serve_masked_read_is_broadcast_anti_with_pruning(spark):
     """The twice-refreshed serve keeps the masked-read scale posture:
     the tombstone retirement is a BROADCAST anti-join (the list is
-    delta-sized — a shuffled anti here would move the corpus), and the
-    fine scan still lists only probed cluster directories
-    (PartitionFilters survives composing with the gen-aware anti-join
-    across TWO tombstone generations)."""
-    plan = physical_plan(_q(spark, "index_refresh_cdc_gen2"))
+    delta-sized — a shuffled anti here would move the corpus), composed
+    with the gen-aware rule across TWO tombstone generations. It runs
+    once, in the build of the engine's pin (below its
+    ``InMemoryRelation``); the serve itself filters the pin by the
+    probes, with no join, exchange or file scan per query."""
+    from tests.conftest import assert_pinned_point_search
+
+    plan = assert_pinned_point_search(_q(spark, "index_refresh_cdc_gen2"))
     anti_lines = [ln for ln in plan.splitlines() if "LeftAnti" in ln]
     assert anti_lines, plan
     assert all("BroadcastHashJoin" in ln for ln in anti_lines), plan
-    assert "PartitionFilters" in plan, plan
-    assert "cluster" in plan.split("PartitionFilters", 1)[1][:200], plan
+    assert "LeftAnti" not in plan.split("InMemoryRelation", 1)[0], plan
 
 
 # --- r10 cont.: plan pins for the new lifecycle operators --------------------
@@ -693,16 +696,18 @@ def test_delete_where_serve_masks_via_broadcast_antijoin(spark):
 
 
 def test_warm_engine_point_search_is_one_stage_topk(spark, tmp_path):
-    """A warm ``IVFEngine.search`` is one pruned scan feeding a bounded
-    top-k: TakeOrderedAndProject (partial top-k per partition, then
-    merge) over a PartitionFilters scan, with no Window and no Exchange
-    — the coarse stage ran on the driver, and both
+    """A warm ``IVFEngine.search`` is one stage over the engine's pin:
+    TakeOrderedAndProject (partial top-k per partition, then merge) over
+    the score projection of the probe-filtered ``InMemoryTableScan``,
+    with no Window, no Exchange and no file scan outside the pin's
+    build — the coarse stage ran on the driver, and both
     ``sequential_fine_search`` values share this plan."""
     from pyspark.sql import functions as F
 
     from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
     from gpu_accelerated_vector_indexing_spark.operators.index_build import build_partitioned_index
     from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
+    from tests.conftest import assert_pinned_point_search
 
     out = str(tmp_path / "idx")
     build_partitioned_index(spark, SF_CORRECT, out, k=4, seed=42)
@@ -712,13 +717,8 @@ def test_warm_engine_point_search_is_one_stage_topk(spark, tmp_path):
         eng = IVFEngine.from_pretrained(
             spark, out, n_probe=2, sequential_fine_search=sequential
         )
-        eng.search(qvec, k=5).collect()  # warm: centroid rows now held
-        plan = assert_plan(
-            eng.search(qvec, k=5),
-            contains=("TakeOrderedAndProject", "PartitionFilters"),
-            absent=("Window", "Exchange"),
-        )
-        assert "cluster" in plan.split("PartitionFilters", 1)[1][:200], plan
+        eng.search(qvec, k=5).collect()  # warm: centroid rows held, pin filled
+        assert_pinned_point_search(eng.search(qvec, k=5))
 
 
 def test_warm_multi_query_batch_scans_the_pinned_corpus_once(spark):

@@ -194,26 +194,25 @@ def test_refshape_cli_end_to_end(spark, tmp_path, capsys):
     assert printed == [r.vec_id for r in brute]
 
 
-def test_refshape_search_prunes_128_way_partitions(spark):
-    """At reference shape the engine's pruning claim must hold against a
-    REAL 128-directory layout: the fine scan's PartitionFilters carries
-    the 20-probe IN-list, so 108 of 128 directories are never opened."""
+def test_refshape_search_reads_the_128_cell_pin(spark):
+    """At reference shape the engine serves a REAL 128-directory layout
+    from its pin: the 20-probe list filters the ``InMemoryTableScan``
+    below the score projection, so only probed rows are scored, and no
+    directory is opened per query (the layout's own pruning is pinned
+    by ``test_engine_partition_pruning``)."""
     from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
     from gpu_accelerated_vector_indexing_spark.operators.refshape import (
         REF_N_PROBE,
         ref_qvec,
         refshape_index,
     )
+    from tests.conftest import assert_pinned_point_search
 
     idx = refshape_index(spark, SF_SMOKE)
     qvec = ref_qvec(spark, SF_SMOKE, 0)
     eng = IVFEngine.from_pretrained(spark, idx, n_probe=REF_N_PROBE)
-    plan = eng.search(qvec, k=5)._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    tail = plan.split("PartitionFilters", 1)[1]
-    # the probe IN-list sits in the partition filter (display truncates
-    # long IN-lists, so assert the filter form, not the literal count)
-    assert "cluster" in tail[:200] and ("INSET" in tail[:200] or " IN " in tail[:200])
+    assert len(eng._coarse(qvec, REF_N_PROBE)) == REF_N_PROBE
+    assert_pinned_point_search(eng.search(qvec, k=5))
 
 
 def test_ref_qvec_is_the_derived_corpus_row(spark):

@@ -521,6 +521,157 @@ def test_engine_partition_pruning(spark, built_index):
     assert n_files < all_files
 
 
+def _parquet_scan_search(eng, qvec, k):
+    """The engine's former per-query plan, kept as the reference for the
+    pinned search: the tombstone anti-join and a scan of the probed
+    partition directories (``cluster IN (probes)``), widened, scored
+    and cut on every query."""
+    from pyspark.sql import functions as F
+
+    from gpu_accelerated_vector_indexing_spark.operators.knn import cosine_score, top_k, with_query
+
+    emb = eng.embeddings
+    if eng.tombstones is not None:
+        tombs = eng.tombstones.withColumnRenamed("vec_id", "t_vec_id").withColumnRenamed("gen", "t_gen")
+        cond = emb.vec_id == tombs.t_vec_id
+        if "gen" in emb.columns:
+            cond = cond & ((emb.gen <= tombs.t_gen) if "t_gen" in tombs.columns else (emb.gen == 0))
+        emb = emb.join(F.broadcast(tombs), cond, "left_anti")
+    probes = eng._coarse(qvec, eng.config.n_probe)
+    pruned = F.expr(f"cluster IN ({','.join(map(str, probes))})")
+    return top_k(with_query(emb.filter(pruned), qvec).select(cosine_score().alias("score"), "vec_id"), k)
+
+
+@pytest.fixture(scope="module")
+def tombstoned_layouts(spark, built_index, tmp_path_factory):
+    """Two copies of ``built_index`` with a tombstone list beside them:
+    ``classic`` retires every third vec_id; ``gen`` stamps the rows
+    gen 0, re-embeds ids 1-9 (reversed vector, gen 1, same cell) and
+    retires the gen-0 rows of those ids and of every seventh id."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    root = tmp_path_factory.mktemp("tombstoned")
+    classic, gen = str(root / "classic"), str(root / "gen")
+    shutil.copytree(built_index, classic)
+    rows = spark.read.parquet(f"{built_index}/embeddings_indexed")
+    rows.select("vec_id").filter(F.col("vec_id") % 3 == 0).coalesce(1).write.parquet(f"{classic}/tombstones")
+
+    shutil.copytree(f"{built_index}/centroids", f"{gen}/centroids")
+    edited = rows.filter(F.col("vec_id").between(1, 9)).withColumn("embedding", F.reverse("embedding"))
+    rows.withColumn("gen", F.lit(0)).unionByName(edited.withColumn("gen", F.lit(1))).write.partitionBy("cluster").parquet(
+        f"{gen}/embeddings_indexed"
+    )
+    rows.select("vec_id", F.lit(0).alias("gen")).filter(
+        F.col("vec_id").between(1, 9) | (F.col("vec_id") % 7 == 0)
+    ).coalesce(1).write.parquet(f"{gen}/tombstones")
+    return {"classic": classic, "gen": gen}
+
+
+def test_engine_pinned_search_matches_parquet_scan(spark, built_index, tombstoned_layouts):
+    """The pinned search returns exactly the rows of the former
+    per-query parquet scan: n_probe 1, 2, every cell and past it, k
+    inside and past the candidates, seeded queries and the zero query,
+    on the classic layout and on both tombstoned ones."""
+    from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
+
+    queries = [_query_vec(spark, SF_SMOKE, qid) for qid in (0, 1, 3, 11)]
+    queries.append([0.0] * len(queries[0]))
+    for layout in (built_index, *tombstoned_layouts.values()):
+        for n_probe in (1, 2, 4, 9):
+            eng = IVFEngine.from_pretrained(spark, layout, n_probe=n_probe)
+            for qvec in queries:
+                for k in (5, 100_000):
+                    got = [(r.score, r.vec_id) for r in eng.search(qvec, k=k).collect()]
+                    assert got == [(r.score, r.vec_id) for r in _parquet_scan_search(eng, qvec, k).collect()]
+                    assert got or k == 5, (layout, n_probe, k)
+
+
+def test_engine_tombstoned_warm_search_is_one_job_without_join(spark, tombstoned_layouts):
+    """Over a tombstoned layout the anti-join runs once, in the pin's
+    build: a warm search is one job, and its plan above the pinned
+    relation has no ``BroadcastExchange`` and no join."""
+    from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
+    from gpu_accelerated_vector_indexing_spark.plans.inspect import physical_plan
+
+    for layout in tombstoned_layouts.values():
+        eng = IVFEngine.from_pretrained(spark, layout, n_probe=2)
+        eng.search(_query_vec(spark, SF_SMOKE, 0), k=5).collect()
+        df = eng.search(_query_vec(spark, SF_SMOKE, 5), k=5)
+        with spark_jobs(spark) as jobs:
+            assert len(df.collect()) == 5
+        assert jobs.count == 1
+        serving = physical_plan(df).split("InMemoryRelation", 1)[0]
+        assert "InMemoryTableScan" in serving
+        for frag in ("BroadcastExchange", "Join", "FileScan"):
+            assert frag not in serving, serving
+
+
+def test_engine_warm_fresh_cluster_search_does_not_recompile(spark, built_index):
+    """At n_probe=1 every search probes one cluster, and a search that
+    probes a cluster no earlier search did compiles nothing: the probe
+    list is a by-reference array literal, never an IN-list that
+    Catalyst would rewrite to ``cluster = v`` and inline into generated
+    code. Each centroid, as the query, probes its own cluster."""
+    from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
+    from tests.conftest import codegen_compiles
+
+    eng = IVFEngine.from_pretrained(spark, built_index, n_probe=1)
+    eng.search(_query_vec(spark, SF_SMOKE), k=5).collect()
+    seen = set(eng._coarse(_query_vec(spark, SF_SMOKE), 1))
+    for cluster, centroid in sorted(eng._centroid_rows):
+        assert eng._coarse(centroid, 1) == [cluster]
+        with codegen_compiles(spark) as compiles:
+            rows = eng.search(centroid, k=3).collect()
+        assert rows and compiles.count == 0, (cluster, seen)
+        seen.add(cluster)
+
+
+def test_engine_pins_its_snapshot_across_an_append(spark, built_index, tmp_path):
+    """An engine opened after ``append_to_index`` pins the appended rows
+    and finds one at rank 1; an engine opened (and pinned) before the
+    append keeps serving its own snapshot."""
+    import shutil
+
+    from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
+    from gpu_accelerated_vector_indexing_spark.operators.index_build import append_to_index
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(built_index, idx)
+    new_vec = list(reversed(_query_vec(spark, SF_SMOKE, 5)))  # float32 values, no such row yet
+    before = IVFEngine.from_pretrained(spark, idx, n_probe=4)
+    first = [(r.score, r.vec_id) for r in before.search(new_vec, k=5).collect()]
+    new = spark.createDataFrame([(10**6, new_vec)], "vec_id long, embedding array<float>")
+    assert append_to_index(spark, idx, new) == 1
+
+    after = IVFEngine.from_pretrained(spark, idx, n_probe=4)
+    rows = after.search(new_vec, k=5).collect()
+    assert (rows[0].vec_id, rows[0].score) == (10**6, 1.0)
+    assert [(r.score, r.vec_id) for r in rows[1:]] == first[:4]
+    assert [(r.score, r.vec_id) for r in before.search(new_vec, k=5).collect()] == first
+
+
+def test_engine_pin_is_released_and_rebuilt_after_clear(spark, built_index):
+    """The engine's pin is session state: a clear unpersists it, and the
+    next search pins the snapshot again with identical rows and answers
+    identically."""
+    from gpu_accelerated_vector_indexing_spark import memo
+    from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
+
+    qvec = _query_vec(spark, SF_SMOKE, 3)
+    eng = IVFEngine.from_pretrained(spark, built_index, n_probe=2)
+    first = eng.search(qvec, k=10).collect()
+    pinned = eng._pin()
+    assert pinned.storageLevel.useMemory
+    memo.clear_session_caches(spark)
+    assert not pinned.storageLevel.useMemory  # unpersisted, not just dropped
+    assert eng.search(qvec, k=10).collect() == first
+    rebuilt = eng._pin()
+    assert rebuilt is not pinned and rebuilt.storageLevel.useMemory
+    assert sorted(tuple(r) for r in rebuilt.collect()) == sorted(tuple(r) for r in pinned.collect())
+
+
 def test_engine_flag_validation():
     from gpu_accelerated_vector_indexing_spark.engine import SearchConfig
 
