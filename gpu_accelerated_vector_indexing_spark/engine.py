@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 
 from gpu_accelerated_vector_indexing_spark.functions.vector import finite_doubles, lit_long_array
 from gpu_accelerated_vector_indexing_spark.memo import session_state
+from gpu_accelerated_vector_indexing_spark.operators.index_build import live_rows
 from gpu_accelerated_vector_indexing_spark.operators.ivf import probe_labels
 from gpu_accelerated_vector_indexing_spark.operators.knn import normed_corpus, normed_score, top_k, with_query
 from gpu_accelerated_vector_indexing_spark.session import tune_session
@@ -116,25 +117,6 @@ class LayoutSnapshot:
         emb = listed(self.embeddings, self.files, basePath=self.root)
         # an empty tombstone list retires nothing
         return live_rows(emb, listed(self.tombstones, self.tomb_files) if self.tomb_files else None)
-
-
-def live_rows(emb: DataFrame, tombstones: DataFrame | None) -> DataFrame:
-    """A layout's rows minus the ones its tombstone list retires (r9
-    masked reads: a CDC-refreshed layout ships the list beside the
-    index). Delta-sized list → broadcast anti-join. A generation-stamped
-    layout retires rows written at or before the tombstone's dead-gen
-    (index_build.TOMBSTONE_SCHEMA — the multi-cycle rule: an edited
-    doc's LATEST re-embedding survives every earlier retirement); a
-    gen-less tombstone list against a gen-stamped index retires base
-    rows only (the r9 single-cycle layout); a fully classic layout
-    retires by vec_id alone."""
-    if tombstones is None:
-        return emb
-    tombs = tombstones.withColumnRenamed("vec_id", "t_vec_id").withColumnRenamed("gen", "t_gen")
-    cond = emb.vec_id == tombs.t_vec_id
-    if "gen" in emb.columns:
-        cond = cond & ((emb.gen <= tombs.t_gen) if "t_gen" in tombs.columns else (emb.gen == 0))
-    return emb.join(F.broadcast(tombs), cond, "left_anti")
 
 
 # IVFEngine serving state, memoized per (session, layout snapshot): the

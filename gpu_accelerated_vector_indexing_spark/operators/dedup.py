@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from gpu_accelerated_vector_indexing_spark.functions.vector import lit_long_array
 from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
+from gpu_accelerated_vector_indexing_spark.operators.iterate import NotConverged, iterate
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
 SHINGLE_LEN = 5
@@ -1215,178 +1216,78 @@ def train_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# serializes the (registry-snapshot, checkpoint, registry-snapshot)
-# critical section below so concurrent kernel invocations (e.g. two
-# component queries on different threads of one session) can never
-# attribute each other's snapshot blocks and free them
-import threading as _threading
-
-_FIXPOINT_LOCK = _threading.Lock()
+def min_label_round(und: DataFrame, labels: DataFrame) -> DataFrame:
+    """One min-label round: a one-hop neighbor min, then a SHORTCUT
+    (pointer-doubling) join through the previous labels; ``chg`` flags a
+    dropped label, so the changed count needs no old-vs-new join."""
+    neigh = (
+        und.join(labels.withColumnRenamed("node", "n2"), und.nbr == F.col("n2"))
+        .groupBy("node")
+        .agg(F.min("component").alias("ncomp"))
+    )
+    # POINTER DOUBLING (r11, guide §2 — fewer synchronized rounds):
+    # after the one-hop neighbor min, each candidate label is SHORTCUT
+    # through the previous snapshot (component ← labels_prev[candidate]):
+    # label values are always node ids of the same component with
+    # labels_prev[v] ≤ v, so the jump is value-safe and contracts
+    # label-chase chains exponentially — an ascending-id chain of
+    # diameter d converges in O(log d) rounds instead of d (Kiveris et
+    # al.'s star-contraction idea applied to the min-label kernel). The
+    # FIXPOINT is unchanged: at convergence neither the neighbor min nor
+    # the jump moves any label, which is exactly the plain kernel's
+    # termination state (constant min-id per component — the
+    # transitive-closure oracle's answer).
+    cand = F.least(F.col("component"), F.coalesce("ncomp", F.col("component")))
+    # jump ≤ cand and rides the same component; coalesce is
+    # belt-and-braces (label values are always present as nodes, so the
+    # left join cannot actually miss)
+    jumped = F.coalesce("jump", F.col("cand"))
+    return (
+        labels.join(neigh, "node", "left")
+        .select("node", "component", cand.alias("cand"))
+        .join(
+            labels.select(F.col("node").alias("cand"), F.col("component").alias("jump")),
+            "cand",
+            "left",
+        )
+        .select("node", jumped.alias("component"), (jumped < F.col("component")).alias("chg"))
+    )
 
 
 def min_label_fixpoint(und: DataFrame, max_rounds: int = 50) -> DataFrame:
-    """Min-label propagation over a symmetric (undirected, both
-    directions materialized) edge relation ``(node, nbr)`` to FIXPOINT:
-    every node ends labeled with the minimum node id of its connected
-    component. This is the engine's ONE iterative-fixpoint kernel —
-    ``duplicate_components`` and ``semantic_graph_components`` both run
-    through it (two hand-maintained copies of the loop had already
-    drifted on exhaustion behavior and cache hygiene — r6 review).
+    """Min-label propagation over a symmetric (both directions
+    materialized) edge relation ``(node, nbr)`` to FIXPOINT: every node
+    ends labeled with the minimum node id of its component. Used by
+    ``duplicate_components``, ``semantic_graph_components`` and
+    ``text_typo_clusters``; one :func:`min_label_round` per kernel round,
+    one job per round.
 
-    Each round is a one-hop neighbor min (hash-join + min-agg)
-    followed by a SHORTCUT join (pointer doubling): the candidate
-    label ``c`` is replaced by the previous snapshot's label of node
-    ``c``. Labels are node ids of the same component and never rise, so
-    the jump is value-safe and the fixpoint is the plain kernel's
-    (min id per component). Rounds: where ids ascend along a chain the
-    label-chase distance doubles every round, so a diameter-d chain
-    converges in O(log d) rounds (≈ log2(d) + 2 — a simulated 2048-node
-    path takes 13); with ids in arbitrary order the gain is only a
-    constant factor, and since the jump only ever lowers a label the
-    one-hop bound — d changing rounds plus the zero-change confirmation
-    — stays the guarantee. Size ``max_rounds`` by that guarantee, not
-    by the doubling: the loop runs up to ``max_rounds + 1`` times and
-    converges for every diameter ≤ ``max_rounds``; deeper components
-    converge only if the shortcut happens to reach them. Raises if the
-    graph has not converged within the budget — a loud guard against
-    silent under-merging, instead of returning split components. Each
-    round is ONE job: the changed flag travels in the snapshot,
-    so the count that materializes the lazy checkpoint is also the
-    convergence check — no separate old-vs-new join pass.
-
-    Cache hygiene: each round's labels are localCheckpointed
-    (lineage truncation — a cache-only loop grows the logical plan
-    exponentially in the round count and OOMs the driver building
-    explain strings past ~20 rounds) and the SUPERSEDED round's
-    checkpoint blocks are freed via the persistent-RDD registry — peak
-    storage is two label snapshots regardless of round count. The id
-    diff around each eager checkpoint is serialized by a module-level
-    lock (``_FIXPOINT_LOCK``) so two kernel invocations on concurrent
-    threads can never free each other's blocks; an RDD some OTHER
-    concurrent query registers during a checkpoint job is excluded by
-    filtering the diff to localCheckpoint-produced RDDs (their
-    callSite marks them) — the residual assumption is only that no
-    other code localCheckpoints concurrently in the same session (the
-    engine's sessions execute queries sequentially — driver contract).
-    Callers must MATERIALIZE any cache feeding ``und`` before calling
-    (a lazy cache registering its blocks inside the kernel's first
-    checkpoint job would otherwise block-register mid-diff; the
-    callSite filter makes this a belt-and-braces rule rather than a
-    correctness cliff). The returned labels keep their checkpoint
-    (callers may memoize the result).
+    Where ids ascend along a chain the label-chase distance doubles
+    every round (a 2048-node path takes 13 rounds); in general the jump
+    only lowers labels, so the one-hop bound — d changing rounds plus
+    the zero-change confirmation — is the guarantee: the loop runs up to
+    ``max_rounds + 1`` rounds, converges for every diameter ≤
+    ``max_rounds``, and raises instead of returning split components.
+    Materialize any cache feeding ``und`` first; the returned labels
+    keep their checkpoint (callers may memoize them).
     """
-    spark = und.sparkSession
-
-    def _is_local_ckpt(jrdd) -> bool:
-        # a localCheckpoint RDD renders as "MapPartitionsRDD[n] at
-        # localCheckpoint at ..."; a cached query relation renders as
-        # its plan string ("*(1) Range ...") — so the callSite cleanly
-        # separates this kernel's snapshots from any cache a concurrent
-        # query registers mid-job
-        s = jrdd.toString()
-        return s.startswith("MapPartitionsRDD") and " at localCheckpoint at " in s
-
-    def ckpt(df: DataFrame) -> tuple[DataFrame, set]:
-        with _FIXPOINT_LOCK:
-            before = set(spark._jsc.getPersistentRDDs())
-            out = df.localCheckpoint(eager=True)
-            after = dict(spark._jsc.getPersistentRDDs())
-        raw = set(after) - before
-        new_ids = {i for i in raw if _is_local_ckpt(after[i])}
-        if raw and not new_ids:
-            # the callSite filter matched nothing although the eager
-            # checkpoint must have registered blocks — the toString
-            # format drifted (Spark upgrade). Fall back to the raw diff
-            # (the lock already serializes kernel invocations; only a
-            # concurrent OTHER query's cache could now be misattributed
-            # — the pre-r7 exposure) rather than silently freeing
-            # nothing and leaking one snapshot per round forever.
-            new_ids = raw
-        return out, new_ids
-
-    def ckpt_count(df: DataFrame, pred) -> tuple[DataFrame, set, int]:
-        """Lazy localCheckpoint materialized THROUGH the round's scalar
-        count action: ONE job persists the snapshot AND returns the
-        changed count (the r6-r9 form paid two jobs per round — an
-        eager checkpoint, then a separate old-vs-new join + count).
-        Block registration happens during the count, so the
-        persistent-RDD diff wraps the whole action."""
-        with _FIXPOINT_LOCK:
-            before = set(spark._jsc.getPersistentRDDs())
-            out = df.localCheckpoint(eager=False)
-            n = out.filter(pred).count()
-            after = dict(spark._jsc.getPersistentRDDs())
-        raw = set(after) - before
-        new_ids = {i for i in raw if _is_local_ckpt(after[i])}
-        if raw and not new_ids:
-            new_ids = raw
-        return out, new_ids, n
-
-    def free(ids: set) -> None:
-        m = dict(spark._jsc.getPersistentRDDs())
-        for i in ids:
-            if i in m:
-                m[i].unpersist(False)
-
-    labels, held = ckpt(
-        und.select("node").distinct().withColumn("component", F.col("node"))
+    labels = und.select("node").distinct().select(
+        "node", F.col("node").alias("component"), F.lit(True).alias("chg")
     )
-    for _ in range(max_rounds + 1):
-        neigh = (
-            und.join(labels.withColumnRenamed("node", "n2"), und.nbr == F.col("n2"))
-            .groupBy("node")
-            .agg(F.min("component").alias("ncomp"))
+    try:
+        labels, _ = iterate(
+            labels,
+            lambda prev: min_label_round(und, prev),
+            max_rounds + 1,
+            stats=(F.count_if("chg").alias("changed"),),
+            converged=lambda row: row.changed == 0,
         )
-        # a node changes iff this round's label beats its current one —
-        # carrying that flag in the snapshot lets the changed count run
-        # off the NEW snapshot alone (no old-vs-new join), fused with
-        # the checkpoint materialization into one job per round.
-        #
-        # POINTER DOUBLING (r11, guide §2 — fewer synchronized rounds):
-        # after the one-hop neighbor min, each candidate label is
-        # SHORTCUT through the previous snapshot (component ←
-        # labels_prev[candidate]): label values are always node ids of
-        # the same component with labels_prev[v] ≤ v, so the jump is
-        # value-safe and contracts label-chase chains exponentially —
-        # an ascending-id chain of diameter d converges in O(log d)
-        # rounds instead of d (see the docstring for the general bound;
-        # Kiveris et al.'s star-contraction idea applied to the
-        # min-label kernel). The FIXPOINT is unchanged: at convergence
-        # neither the neighbor min nor the jump moves any label, which
-        # is exactly the plain kernel's termination state (constant
-        # min-id per component — the transitive-closure oracle's
-        # answer). One extra hash join per round against the already-
-        # checkpointed snapshot; still ONE job per round.
-        cand = F.least(F.col("component"), F.coalesce("ncomp", F.col("component")))
-        new_labels, new_held, changed = ckpt_count(
-            labels.join(neigh, "node", "left")
-            .select("node", "component", cand.alias("cand"))
-            .join(
-                labels.select(
-                    F.col("node").alias("cand"), F.col("component").alias("jump")
-                ),
-                "cand",
-                "left",
-            )
-            .select(
-                "node",
-                # jump ≤ cand and rides the same component; coalesce is
-                # belt-and-braces (label values are always present as
-                # nodes, so the left join cannot actually miss)
-                F.coalesce("jump", F.col("cand")).alias("component"),
-                (F.coalesce("jump", F.col("cand")) < F.col("component")).alias("chg"),
-            ),
-            F.col("chg"),
-        )
-        free(held)  # superseded snapshot — the round's join was its last read
-        labels, held = new_labels, new_held
-        if changed == 0:
-            return labels.select("node", "component")
-    free(held)
-    raise RuntimeError(
-        f"min_label_fixpoint: not converged after {max_rounds + 1} rounds — "
-        f"component diameter exceeds {max_rounds}; raise max_rounds"
-    )
+    except NotConverged:
+        raise RuntimeError(
+            f"min_label_fixpoint: not converged after {max_rounds + 1} rounds — "
+            f"component diameter exceeds {max_rounds}; raise max_rounds"
+        ) from None
+    return labels.select("node", "component")
 
 
 @session_state

@@ -9,12 +9,13 @@ is an undirected edge — the market-basket graph of
 relational.copurchase_part_pairs).
 
 Spark-first iterative shape (same posture as duplicate_components):
-driver-controlled fixed-iteration loop, one hash-join + one
-contribution aggregation per round, ranks localCheckpoint-ed each
-round so the lineage (and thus task-serialization cost) stays O(1) in
-the iteration count. At 100 TB the edge list shuffles once per round
-on the node key — the standard Pregel-as-joins pattern; GraphX/GraphFrames
-do exactly this under the hood, re-expressed here in plain DataFrames.
+a fixed-iteration loop over the shared ``iterate.iterate`` kernel, one
+hash-join + one contribution aggregation per round, ranks
+localCheckpoint-ed every ``PR_CKPT_EVERY``-th round (and the last) so
+the lineage (and thus task-serialization cost) stays O(1) in the
+iteration count. At 100 TB the edge list shuffles once per round on the
+node key — the standard Pregel-as-joins pattern; GraphX/GraphFrames do
+exactly this under the hood, re-expressed here in plain DataFrames.
 
 Determinism: per-round contribution sums go through DECIMAL(28,18)
 (order-independent exact addition — float sums would drift with
@@ -32,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpu_accelerated_vector_indexing_spark.memo import session_state
+from gpu_accelerated_vector_indexing_spark.operators.iterate import iterate
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
 DAMPING = 0.85
@@ -97,6 +99,26 @@ def _pagerank_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ce
 
 
+def pagerank_round(edges: DataFrame, ranks: DataFrame, damping: float) -> DataFrame:
+    """One PageRank round, (part, rank) → (part, rank), with ONE
+    shuffle — the contribution sum on dst: the edge side reads the
+    cached state already hashed on src and the |V|-row rank side
+    broadcasts. Every node is some edge's ``dst``, so no node misses a
+    row."""
+    return (
+        edges.join(ranks, edges.src == ranks.part)
+        .select("dst", (F.col("rank") / F.col("outdeg")).alias("c"))
+        .groupBy("dst")
+        # DECIMAL sum: exact, order-independent — the one step where
+        # float addition would make the result partitioning-dependent
+        .agg(F.sum(F.col("c").cast("decimal(28,18)")).cast("double").alias("inflow"))
+        .select(
+            F.col("dst").alias("part"),
+            F.round(F.lit(1.0 - damping) + F.lit(damping) * F.col("inflow"), 10).alias("rank"),
+        )
+    )
+
+
 def copurchase_pagerank(
     spark: SparkSession,
     sf_dir: str,
@@ -107,49 +129,18 @@ def copurchase_pagerank(
     """PageRank over the co-purchase part graph, top-``top_n`` parts.
 
     rank_{t+1}(v) = (1-d) + d·Σ_{u→v} rank_t(u)/outdeg(u), ``iters``
-    fixed rounds (the convention where ranks sum to |V|). Every node in
-    the edge list has outdeg ≥ 1 (edges are materialized both ways), so
-    there is no dangling mass. Ranks are truncated to 10 d.p. each
-    round to damp float-order noise; the output rounds to 6 d.p. like
-    every engine score.
-
-    Per-round cost (r8 constant-factor pass): ONE shuffle — the
-    contribution sum on dst. The rank join shuffles NOTHING: the edge
-    side reads the cached ``_pagerank_edges`` relation already hashed
-    on src, and the |V|-row rank side broadcasts (AQE) or exchanges
-    tiny rows. The r7 form's per-round nodes LEFT join is gone
-    entirely: every node appears as a ``dst`` (edges are materialized
-    both ways), so the aggregated inflow relation ALREADY covers all
-    of V and no node can miss a row — ``coalesce(inflow, 0)`` was
-    dead code. Ranks stay eagerly localCheckpoint-ed so lineage (and
-    task-serialization cost) is O(1) in the round count.
+    fixed rounds of :func:`pagerank_round` (ranks sum to |V|; edges are
+    materialized both ways, so there is no dangling mass), cut every
+    ``PR_CKPT_EVERY`` rounds. Ranks are truncated to 10 d.p. each round
+    to damp float-order noise; the output rounds to 6 d.p.
     """
-    contrib_edges = _pagerank_edges(spark, sf_dir)
-    ranks = (
-        contrib_edges.select(F.col("src").alias("part"))
-        .distinct()
-        .withColumn("rank", F.lit(1.0))
-        .localCheckpoint(eager=True)
+    edges = _pagerank_edges(spark, sf_dir)
+    ranks, _ = iterate(
+        edges.select(F.col("src").alias("part")).distinct().withColumn("rank", F.lit(1.0)),
+        lambda r: pagerank_round(edges, r, damping),
+        iters,
+        checkpoint_every=PR_CKPT_EVERY,
     )
-    for i in range(iters):
-        ranks = (
-            contrib_edges.join(ranks, contrib_edges.src == ranks.part)
-            .select("dst", (F.col("rank") / F.col("outdeg")).alias("c"))
-            .groupBy("dst")
-            # DECIMAL sum: exact, order-independent — the one step where
-            # float addition would make the result partitioning-dependent
-            .agg(F.sum(F.col("c").cast("decimal(28,18)")).cast("double").alias("inflow"))
-            .select(
-                F.col("dst").alias("part"),
-                F.round(
-                    F.lit(1.0 - damping) + F.lit(damping) * F.col("inflow"), 10
-                ).alias("rank"),
-            )
-        )
-        # bounded lineage across rounds: cut every PR_CKPT_EVERY rounds
-        # (and at the end) — see the cadence note on PR_CKPT_EVERY
-        if (i + 1) % PR_CKPT_EVERY == 0 or i == iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
     return (
         ranks.select("part", F.round("rank", 6).alias("rank"))
         .orderBy(F.desc("rank"), F.asc("part"))
@@ -297,6 +288,19 @@ KCORE_K = 100
 KCORE_ROUNDS = 4
 
 
+def kcore_round(edges: DataFrame, alive: DataFrame, k: int) -> DataFrame:
+    """One synchronized peeling round: the alive ``node`` ids with ≥ ``k``
+    neighbors among the alive nodes."""
+    return (
+        edges.join(alive.select(F.col("node").alias("src")), "src", "left_semi")
+        .join(alive.select(F.col("node").alias("dst")), "dst", "left_semi")
+        .groupBy("src")
+        .agg(F.count("*").alias("deg"))
+        .filter(F.col("deg") >= k)
+        .select(F.col("src").alias("node"))
+    )
+
+
 def kcore_trajectory(
     spark: SparkSession,
     sf_dir: str,
@@ -305,43 +309,26 @@ def kcore_trajectory(
 ) -> DataFrame:
     """k-core peeling profile: (iter, n_alive, node_id_sum) per round.
 
-    Distributed peeling (Montresor et al. style, synchronized): each
-    round keeps nodes whose degree WITHIN the surviving subgraph is
-    ≥ k — two semi-joins of the cached edge state against the alive
-    set plus one count aggregate; the alive set (node ids only) is
-    localCheckpoint-ed per round so round r+1's two references never
-    re-execute the prefix. Rounds are FIXED (the staged-CTE oracle
-    replays them exactly); on this co-purchase graph the core
-    transition is sharp — the trajectory documents the corrosion,
-    including the empty fixpoint. Nothing driver-side ever holds nodes:
-    per-round state lives in executors, the digest is one row per
-    round. At 100 TB this is the standard iterative-peeling shape:
-    edge state scanned per round, alive set shrinking monotonically.
+    Distributed peeling (Montresor et al. style, synchronized):
+    ``rounds`` FIXED rounds of :func:`kcore_round` (the staged-CTE oracle
+    replays them exactly), the alive set checkpointed every round and
+    its digest observed in the same job. On this co-purchase graph the
+    core transition is sharp — the trajectory documents the corrosion,
+    including the empty fixpoint. Per-round state lives in executors;
+    the result is a local relation of the digest rows.
     """
     edges = copurchase_edges(spark, sf_dir)
-    alive = edges.select(F.col("src").alias("node")).distinct().localCheckpoint(eager=True)
-
-    def digest(df: DataFrame, it: int) -> DataFrame:
-        return df.agg(
-            F.lit(it).alias("iter"),
+    _, digests = iterate(
+        edges.select(F.col("src").alias("node")).distinct(),
+        lambda alive: kcore_round(edges, alive, k),
+        rounds,
+        stats=(
             F.count("*").alias("n_alive"),
             F.coalesce(F.sum("node"), F.lit(0)).cast("long").alias("node_id_sum"),
-        )
-
-    out = digest(alive, 0)
-    for i in range(1, rounds + 1):
-        a_src = alive.select(F.col("node").alias("src"))
-        a_dst = alive.select(F.col("node").alias("dst"))
-        deg = (
-            edges.join(a_src, "src", "left_semi")
-            .join(a_dst, "dst", "left_semi")
-            .groupBy("src")
-            .agg(F.count("*").alias("deg"))
-        )
-        alive = (
-            deg.filter(F.col("deg") >= k)
-            .select(F.col("src").alias("node"))
-            .localCheckpoint(eager=True)
-        )
-        out = out.unionByName(digest(alive, i))
-    return out.orderBy("iter")
+        ),
+        keep=False,
+    )
+    return spark.createDataFrame(
+        [(i, d.n_alive, d.node_id_sum) for i, d in enumerate(digests)],
+        "iter int, n_alive bigint, node_id_sum bigint",
+    )

@@ -11,8 +11,9 @@ Spark-first over the ``documents`` + ``embeddings`` fixtures
 * **BM25** (k1 = 1.2, b = 0.75) from corpus statistics computed
   in-plan: tf per (doc, term) and df per term from one tokenized
   explode, doc length and corpus-average length from a narrow scan.
-  The query's term set and the df table are vocabulary-bounded and
-  broadcast — the corpus is never shuffled.
+  The query's term set travels as an array literal and the
+  vocabulary-bounded df table broadcasts — the corpus is never
+  shuffled.
 * **Fusion by reciprocal-rank fusion** (RRF, Cormack et al., SIGIR'09):
   ``Σ 1/(60 + rank)`` over both rankings. Rank-based fusion avoids the
   score-normalization trap (cosine ∈ [-1,1] vs unbounded BM25) and is
@@ -31,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from gpu_accelerated_vector_indexing_spark.functions.vector import as_double_array
+from gpu_accelerated_vector_indexing_spark.functions.vector import as_double_array, lit_long_array
 from gpu_accelerated_vector_indexing_spark.memo import session_state
 from gpu_accelerated_vector_indexing_spark.operators.knn import (
     cosine_score,
@@ -72,6 +73,22 @@ def bm25_state(
     return (tf, df, dl, int(row.n_docs), float(row.avgdl))
 
 
+@session_state
+def query_terms(spark: SparkSession, sf_dir: str, query_id: int) -> tuple[str, ...]:
+    """Memoized distinct tokens of the query document (sorted; empty for
+    an id with no document) — the lexical twin of ``knn.fixture_qvec``.
+    The id travels in an array literal, so a fresh id reuses the filter
+    code the previous one compiled."""
+    docs = load_table(spark, sf_dir, "documents")
+    rows = (
+        docs.filter(F.array_contains(lit_long_array([query_id]), F.col("doc_id")))
+        .select(F.explode(tokens(F.col("text"))).alias("token"))
+        .distinct()
+        .collect()
+    )
+    return tuple(sorted(r.token for r in rows))
+
+
 def bm25_scores(spark: SparkSession, sf_dir: str, query_id: int = 0) -> DataFrame:
     """BM25 score of every document containing ≥1 term of the query
     document's text — ``(doc_id, bm25)``.
@@ -79,18 +96,16 @@ def bm25_scores(spark: SparkSession, sf_dir: str, query_id: int = 0) -> DataFram
     idf uses the standard Robertson/Sparck-Jones smoothed form
     ln(1 + (N - df + 0.5)/(df + 0.5)). Each per-term contribution is
     rounded before the decimal sum so both engines fold identical
-    values.
+    values. The query's terms filter ``tf`` as one array literal, which
+    Catalyst folds into a by-reference constant (an IN-list of one
+    value would become ``=`` with the term inlined into generated
+    code), so a warm search for a fresh id compiles nothing.
     """
-    docs = load_table(spark, sf_dir, "documents")
     tf, df, dl, n_docs, avgdl = bm25_state(spark, sf_dir)
     corpus = spark.range(1).select(
         F.lit(n_docs).alias("n_docs"), F.lit(avgdl).alias("avgdl")
     )
-    q_terms = (
-        docs.filter(F.col("doc_id") == query_id)
-        .select(F.explode(tokens(F.col("text"))).alias("token"))
-        .distinct()
-    )
+    terms = F.array(*map(F.lit, query_terms(spark, sf_dir, query_id))).cast("array<string>")
     idf = F.round(
         F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)), 6
     )
@@ -100,7 +115,7 @@ def bm25_scores(spark: SparkSession, sf_dir: str, query_id: int = 0) -> DataFram
     )
     term_score = F.round(idf * tf_part, 6)
     return (
-        tf.join(F.broadcast(q_terms), "token")
+        tf.filter(F.array_contains(terms, F.col("token")))
         .join(F.broadcast(df), "token")
         .join(dl, "doc_id")
         .join(F.broadcast(corpus))

@@ -322,6 +322,25 @@ def _snapshot_emb(docs: DataFrame, gen: int, salt: str = "") -> DataFrame:
 TOMBSTONE_SCHEMA = "vec_id long, gen int"
 
 
+def live_rows(emb: DataFrame, tombstones: DataFrame | None) -> DataFrame:
+    """A layout's rows minus the ones its tombstone list retires (r9
+    masked reads: a CDC-refreshed layout ships the list beside the
+    index). Delta-sized list → broadcast anti-join. A generation-stamped
+    layout retires rows written at or before the tombstone's dead-gen
+    (``row.gen <= tombstone.gen``, the TOMBSTONE_SCHEMA multi-cycle rule:
+    an edited doc's LATEST re-embedding survives every earlier
+    retirement); a gen-less tombstone list against a gen-stamped index retires base
+    rows only (the r9 single-cycle layout); a fully classic layout
+    retires by vec_id alone."""
+    if tombstones is None:
+        return emb
+    tombs = tombstones.withColumnRenamed("vec_id", "t_vec_id").withColumnRenamed("gen", "t_gen")
+    cond = emb.vec_id == tombs.t_vec_id
+    if "gen" in emb.columns:
+        cond = cond & ((emb.gen <= tombs.t_gen) if "t_gen" in tombs.columns else (emb.gen == 0))
+    return emb.join(F.broadcast(tombs), cond, "left_anti")
+
+
 def build_base_snapshot_index(
     spark: SparkSession, sf_dir: str, batch_layout: bool = False, salt: str = ""
 ) -> str:
@@ -435,18 +454,10 @@ def apply_cdc_refresh(spark: SparkSession, sf_dir: str, out: str) -> dict[str, i
 
 def _live_index_rows(spark: SparkSession, index_dir: str) -> DataFrame:
     """The refreshed index's LIVE rows: base ∪ appends, minus rows
-    retired by the tombstone list (``row.gen <= tombstone.gen`` — see
-    TOMBSTONE_SCHEMA). The tombstone side is delta-sized, so it
-    broadcasts; the gen comparison is what lets an edited doc's
-    latest re-embedding survive every earlier retirement."""
-    idx = spark.read.parquet(f"{index_dir}/embeddings_indexed")
-    tombs = spark.read.parquet(f"{index_dir}/tombstones").select(
-        F.col("vec_id").alias("t_vec_id"), F.col("gen").alias("t_gen")
-    )
-    return idx.join(
-        F.broadcast(tombs),
-        (idx.vec_id == tombs.t_vec_id) & (idx.gen <= tombs.t_gen),
-        "left_anti",
+    retired by the tombstone list (:func:`live_rows`)."""
+    return live_rows(
+        spark.read.parquet(f"{index_dir}/embeddings_indexed"),
+        spark.read.parquet(f"{index_dir}/tombstones"),
     )
 
 
@@ -744,20 +755,11 @@ def _live_index_rows_asof(spark: SparkSession, index_dir: str, asof_gen: int) ->
     """Rows visible AS OF generation ``asof_gen``: writes at
     ``gen <= asof_gen``, minus retirements by tombstones EMITTED by
     cycles ≤ asof_gen (cycle g stamps dead-gen g-1, so the emitted-by
-    filter is ``t_gen <= asof_gen - 1``); within that window the
-    standard monotone rule ``row.gen <= t_gen`` applies unchanged."""
-    idx = spark.read.parquet(f"{index_dir}/embeddings_indexed").filter(
-        F.col("gen") <= asof_gen
-    )
-    tombs = (
-        spark.read.parquet(f"{index_dir}/tombstones")
-        .filter(F.col("gen") <= asof_gen - 1)
-        .select(F.col("vec_id").alias("t_vec_id"), F.col("gen").alias("t_gen"))
-    )
-    return idx.join(
-        F.broadcast(tombs),
-        (idx.vec_id == tombs.t_vec_id) & (idx.gen <= tombs.t_gen),
-        "left_anti",
+    filter is ``t_gen <= asof_gen - 1``); within that window
+    :func:`live_rows` applies unchanged."""
+    return live_rows(
+        spark.read.parquet(f"{index_dir}/embeddings_indexed").filter(F.col("gen") <= asof_gen),
+        spark.read.parquet(f"{index_dir}/tombstones").filter(F.col("gen") <= asof_gen - 1),
     )
 
 

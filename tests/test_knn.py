@@ -569,3 +569,34 @@ def test_warm_fresh_query_id_pq_compiles_nothing(spark, name):
         rows = call(spark, SF_CORRECT, fresh).collect()
     assert len(rows) == 5
     assert compiles.count == 0, f"{name}: {compiles.count} compilations"
+
+
+def test_warm_fresh_query_id_hybrid_compiles_nothing(spark):
+    """A warm ``hybrid_search_rrf_topn`` for a fresh id compiles nothing:
+    the cosine half takes the query vector as a by-reference literal and
+    the BM25 half filters ``tf`` by the memoized query terms as one
+    array literal instead of reading the query document by ``doc_id``
+    (7 jobs and 2 compilations at sf0.01 with the per-query scan)."""
+    from gpu_accelerated_vector_indexing_spark.operators.hybrid import (
+        hybrid_search_rrf_topn,
+        query_terms,
+    )
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import fixture_qvecs
+    from tests.conftest import codegen_compiles, spark_jobs
+
+    warm, fresh = 380, 381
+    fixture_qvecs(spark, SF_CORRECT, (warm, fresh))  # the memo fills are their own jobs
+    query_terms(spark, SF_CORRECT, fresh)
+    # Spark's codegen cache holds 100 classes in LRU segments, so after
+    # other queries a warm call can evict and recompile some of its own
+    # classes; repeat it until a same-id call compiles nothing
+    for _ in range(3):
+        with codegen_compiles(spark) as settle:
+            hybrid_search_rrf_topn(spark, SF_CORRECT, query_id=warm).collect()
+        if settle.count == 0:
+            break
+    with spark_jobs(spark) as jobs, codegen_compiles(spark) as compiles:
+        rows = hybrid_search_rrf_topn(spark, SF_CORRECT, query_id=fresh).collect()
+    assert len(rows) == 10
+    assert compiles.count == 0, f"{compiles.count} compilations"
+    assert jobs.count <= 5, f"{jobs.count} jobs"

@@ -227,6 +227,29 @@ def test_no_hand_rolled_memo_dicts():
     assert not found, f"hand-rolled memo dicts (use memo.session_state): {found}"
 
 
+def test_no_hand_rolled_checkpoint_loops():
+    """Iterative operators go through ``iterate.iterate``: no function
+    under ``operators/`` other than the kernel calls ``.localCheckpoint(``
+    inside a ``for``/``while`` body — a hand-rolled loop would restate
+    the cut cadence and the snapshot freeing the kernel owns. Streaming
+    ``foreachBatch`` accumulators are callbacks, not loops."""
+    found = []
+    for path in sorted((PACKAGE / "operators").rglob("*.py")):
+        if path.name == "iterate.py":
+            continue
+        for loop in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(loop, (ast.For, ast.While)):
+                continue
+            for node in ast.walk(loop):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "localCheckpoint"
+                ):
+                    found.append(f"{path.relative_to(PACKAGE)}:{node.lineno}")
+    assert not found, f"localCheckpoint loops outside operators/iterate.py: {sorted(set(found))}"
+
+
 def test_pinned_normed_corpus_is_released_and_rebuilt_after_clear(spark):
     """The IVF batch's pinned normed corpus is session state like any
     other: a clear unpersists it, and the next batch pins it again with

@@ -558,7 +558,7 @@ def test_merged_ivf_serve_reads_the_engine_pin(spark):
 
 
 def test_pagerank_round_is_single_shuffle(spark):
-    """One PageRank round's plan (r8 rewrite): the contribution sum's
+    """One ``pagerank_round`` plan (r8 rewrite): the contribution sum's
     dst exchange is the ONLY shuffle — the |E| side reads the cached
     src-hashed state (InMemoryTableScan directly under the join, no
     exchange above it) and the tiny rank side broadcasts. Counted on
@@ -566,7 +566,11 @@ def test_pagerank_round_is_single_shuffle(spark):
     whose nested build-plan printout carries its own exchanges)."""
     from pyspark.sql import functions as F
 
-    from gpu_accelerated_vector_indexing_spark.operators.graph import _pagerank_edges
+    from gpu_accelerated_vector_indexing_spark.operators.graph import (
+        DAMPING,
+        _pagerank_edges,
+        pagerank_round,
+    )
 
     ce = _pagerank_edges(spark, SF_CORRECT)
     ranks = (
@@ -575,13 +579,7 @@ def test_pagerank_round_is_single_shuffle(spark):
         .withColumn("rank", F.lit(1.0))
         .localCheckpoint(eager=True)
     )
-    one_round = (
-        ce.join(ranks, ce.src == ranks.part)
-        .select("dst", (F.col("rank") / F.col("outdeg")).alias("c"))
-        .groupBy("dst")
-        .agg(F.sum(F.col("c").cast("decimal(28,18)")).cast("double").alias("inflow"))
-    )
-    plan = physical_plan(one_round)
+    plan = physical_plan(pagerank_round(ce, ranks, DAMPING))
     round_plan = plan.split("InMemoryRelation", 1)[0]
     assert round_plan.count("Exchange") == 1, round_plan
     assert "hashpartitioning(dst" in round_plan, round_plan

@@ -13,6 +13,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -279,31 +280,40 @@ def test_min_label_fixpoint_matches_union_find(spark, edges):
     assert got == truth
 
 
-def test_min_label_fixpoint_frees_superseded_snapshots(spark):
-    """Cache-hygiene contract (ADVICE r6 / review r7): the kernel frees
-    each superseded round's checkpoint blocks, so the persistent-RDD
-    registry grows by AT MOST ONE entry per call (the returned labels'
-    own snapshot) — a silent no-op in the callSite-filtered id diff
-    would leak one snapshot per round and show up here immediately."""
+@pytest.mark.parametrize(
+    "consumer, allowance", [("pagerank", 1), ("kcore", 0), ("min_label", 1)]
+)
+def test_iteration_kernel_frees_superseded_snapshots(spark, consumer, allowance):
+    """Cache-hygiene contract of the iteration kernel (ADVICE r6 / review
+    r7): every cut frees the superseded snapshot, so a call grows the
+    persistent-RDD registry by AT MOST the returned state's own snapshot
+    — one for PageRank's ranks and min-label's labels, none for k-core's
+    local digest rows. A leak registers one snapshot per cut: 5 for
+    PageRank and k-core at sf0.01, ≥ 12 for the 12-node path graph."""
     from pyspark.sql import functions as F
 
-    from gpu_accelerated_vector_indexing_spark.operators.dedup import (
-        min_label_fixpoint,
+    from gpu_accelerated_vector_indexing_spark.operators.dedup import min_label_fixpoint
+    from gpu_accelerated_vector_indexing_spark.operators.graph import (
+        _pagerank_edges,
+        copurchase_pagerank,
+        kcore_trajectory,
     )
+    from tests.conftest import SF_CORRECT
 
-    # a 12-node path graph: diameter 11 forces >= 12 rounds, so a leak
-    # would register ~12 extra snapshots, far above the allowance
-    df = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], "node bigint, nbr bigint"
-    )
-    und = df.union(
-        df.select(F.col("nbr").alias("node"), F.col("node").alias("nbr"))
-    ).distinct()
+    # a 12-node path graph: diameter 11 forces >= 12 rounds
+    path = spark.createDataFrame([(i, i + 1) for i in range(12)], "node bigint, nbr bigint")
+    und = path.union(path.select(F.col("nbr").alias("node"), F.col("node").alias("nbr"))).distinct()
+    # the memoized graph state registers its caches outside the count
+    _pagerank_edges(spark, SF_CORRECT)
+    call, n_rows = {
+        "pagerank": (lambda: copurchase_pagerank(spark, SF_CORRECT), 25),
+        "kcore": (lambda: kcore_trajectory(spark, SF_CORRECT), 5),
+        "min_label": (lambda: min_label_fixpoint(und, max_rounds=20), 13),
+    }[consumer]
     before = len(dict(spark._jsc.getPersistentRDDs()))
-    labels = min_label_fixpoint(und, max_rounds=20)
-    assert labels.count() == 13
+    assert call().count() == n_rows
     after = len(dict(spark._jsc.getPersistentRDDs()))
-    assert after - before <= 1, f"registry grew {before} -> {after}: snapshots leaked"
+    assert after - before <= allowance, f"registry grew {before} -> {after}: snapshots leaked"
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
