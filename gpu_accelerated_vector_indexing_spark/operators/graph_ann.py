@@ -44,7 +44,7 @@ staged CTEs and must produce value-identical results.
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import partial, reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,6 +60,7 @@ from gpu_accelerated_vector_indexing_spark.functions.vector import (
     seq_l2_norm,
 )
 from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
+from gpu_accelerated_vector_indexing_spark.operators.iterate import iterate
 from gpu_accelerated_vector_indexing_spark.operators.ivf import DELETE_MOD, fixture_qvec, fixture_qvecs
 from gpu_accelerated_vector_indexing_spark.operators.knn import (
     fixture_normed,
@@ -130,23 +131,25 @@ def _grouped(emb: DataFrame) -> DataFrame:
     )
 
 
-def _seed_pairs(emb: DataFrame) -> DataFrame:
-    """Union of the two grouping self-joins (see build_knn_graph's seed
-    comment), deduplicated — Θ(n·SEED_WINDOW) pairs."""
-    g = _grouped(emb)
-    cells = (
-        g.alias("a")
-        .join(g.alias("b"), (F.col("a.label") == F.col("b.label")) & (F.col("a.cg") == F.col("b.cg")))
+_CELLS, _BLOCKS = ("label", "cg"), ("blk",)  # the two seed groupings' join keys
+
+
+def _group_pairs(a: DataFrame, b: DataFrame, keys: tuple = (_CELLS, _BLOCKS)) -> DataFrame:
+    """(node, nbr) pairs of distinct ids — node from ``a``, nbr from
+    ``b`` (both :func:`_grouped` rows) — that share a seed group under
+    any grouping in ``keys``, one join per grouping, NOT deduplicated
+    (each caller deduplicates once, after its own unions): the ONE
+    grouping join behind the build's seed (both groupings,
+    Θ(n·SEED_WINDOW) pairs), the attach's new→archive seed and the
+    shard merge's id-block cross links."""
+    pairs = [
+        a.alias("a")
+        .join(b.alias("b"), [F.col(f"a.{c}") == F.col(f"b.{c}") for c in key])
         .filter(F.col("a.vec_id") != F.col("b.vec_id"))
         .select(F.col("a.vec_id").alias("node"), F.col("b.vec_id").alias("nbr"))
-    )
-    blocks = (
-        g.alias("a")
-        .join(g.alias("b"), "blk")
-        .filter(F.col("a.vec_id") != F.col("b.vec_id"))
-        .select(F.col("a.vec_id").alias("node"), F.col("b.vec_id").alias("nbr"))
-    )
-    return cells.union(blocks).distinct()
+        for key in keys
+    ]
+    return reduce(DataFrame.union, pairs)
 
 
 def build_knn_graph(
@@ -200,24 +203,32 @@ def build_knn_graph_over(
     # paths alternate between them, and the proposal graph becomes
     # expansive (measured: 65% true-top-8 edge recall after 4 rounds
     # at sf0.01 — within 2 points of the quadratic-seed build).
-    seed = _seed_pairs(emb)
-    # Each round's graph is materialized (lineage truncated): round r+1
-    # references round r's edges four times (undirected ×2 via the
-    # self-join, plus the incumbent union), so an unmaterialized lineage
-    # would re-execute the whole prefix a compounding number of times.
-    # n·k rows per round — bounded state, the same posture a real build
-    # pipeline has (each NN-descent round persists its edge list).
-    graph = _topk_per_node(_score_pairs(seed, emb_n), k).localCheckpoint(eager=True)
-    for _ in range(rounds):
-        graph = _descent_round(graph, emb_n, k)
+    g = _grouped(emb)
+    return _descend(_group_pairs(g, g).distinct(), emb_n, k, rounds)
+
+
+def _descend(cand: DataFrame, emb_n: DataFrame, k: int, rounds: int) -> DataFrame:
+    """Round 0 (the scored per-node top-k of ``cand``) plus ``rounds``
+    NN-descent rounds on the iteration kernel, shared by the full build
+    and the shard merge. The kernel cuts the lineage at round 0 and
+    after every round — round r+1 reads round r's edges four times
+    (undirected ×2 via the self-join, plus the incumbent union), so an
+    uncut lineage would re-execute the whole prefix a compounding number
+    of times — and frees each superseded round, so a build leaves one
+    snapshot: n·k rows, the posture of a build pipeline that persists
+    each round's edge list."""
+    graph, _ = iterate(
+        _topk_per_node(_score_pairs(cand, emb_n), k),
+        lambda g: _descent_round(g, emb_n, k),
+        rounds,
+    )
     return graph
 
 
 def _descent_round(graph: DataFrame, emb_n: DataFrame, k: int) -> DataFrame:
     """ONE NN-descent round: neighbor-of-neighbor proposals over the
     undirected edge set ∪ the incumbent edges, rescored, per-node
-    top-k, materialized. Shared by the full build and the shard merge
-    so the round semantics can never drift between the two."""
+    top-k — the kernel step of :func:`_descend`."""
     undirected = graph.select("node", "nbr").union(
         graph.select(F.col("nbr").alias("node"), F.col("node").alias("nbr"))
     )
@@ -228,7 +239,7 @@ def _descent_round(graph: DataFrame, emb_n: DataFrame, k: int) -> DataFrame:
         .select(F.col("u1.node").alias("node"), F.col("u2.nbr").alias("nbr"))
     )
     cand = proposals.union(graph.select("node", "nbr")).distinct()
-    return _topk_per_node(_score_pairs(cand, emb_n), k).localCheckpoint(eager=True)
+    return _topk_per_node(_score_pairs(cand, emb_n), k)
 
 
 # The finished graph is index state — memoized per (session, corpus) and
@@ -289,18 +300,21 @@ def fixture_entry_ids(
     )
 
 
-def _masked_adj(adj: DataFrame, modulus: int, keep_cols: bool = False) -> DataFrame:
-    """Adjacency with every edge touching a ``vec_id % modulus == 0``
-    node removed — the ONE definition of the tombstone/new-batch mask
-    shared by the with-deletes read path, the batch attach, the
-    streaming attach, and the repaired-index writer (what the index
-    holds after those rows' delete-compaction). ``keep_cols`` retains
-    the stored (score, rk) for consumers that persist surviving edges
-    instead of just walking them."""
-    out = adj.filter(
-        (F.col("node") % modulus != 0) & (F.col("nbr") % modulus != 0)
-    )
-    return out if keep_cols else out.select("node", "nbr")
+def _mod_slice(modulus: int):
+    """The modular slice ``vec_id % modulus == 0`` as a node predicate —
+    the fixture's tombstone (``DELETE_MOD``) and new-batch
+    (``GRAPH_INSERT_MODULUS``) convention."""
+    return lambda c: c % modulus == 0
+
+
+def _masked_adj(adj: DataFrame, dead) -> DataFrame:
+    """Adjacency with every edge touching a ``dead(vec_id)`` node removed
+    — the ONE definition of the tombstone/new-batch mask shared by the
+    with-deletes read path, the batch attach, the streaming attach, and
+    every delta pass (what the index holds after those rows'
+    delete-compaction). Stored columns (score, rk) ride along for the
+    delta pass, which persists the surviving edges."""
+    return adj.filter(~dead(F.col("node")) & ~dead(F.col("nbr")))
 
 
 def beam_walk(
@@ -502,7 +516,7 @@ def _beam_visited(
         # the index holds after the tombstoned rows' delete-compaction
         # (the graph_ann_insert arch posture); entries come from the
         # LIVE corpus, so the walk can never visit a tombstone.
-        adj = _masked_adj(adj, delete_mod)
+        adj = _masked_adj(adj, _mod_slice(delete_mod))
     return beam_visited_over(
         adj,
         fixture_normed(spark, sf_dir),
@@ -967,22 +981,7 @@ def attach_candidates(
     equivalence — and the shared oracle (insert_digest_sql) — is
     STRUCTURAL rather than maintained by keeping two copies of these
     joins in sync."""
-    cells = (
-        new_g.alias("a")
-        .join(
-            arch_g.alias("b"),
-            (F.col("a.label") == F.col("b.label")) & (F.col("a.cg") == F.col("b.cg")),
-        )
-        .filter(F.col("a.vec_id") != F.col("b.vec_id"))
-        .select(F.col("a.vec_id").alias("node"), F.col("b.vec_id").alias("nbr"))
-    )
-    blocks = (
-        new_g.alias("a")
-        .join(arch_g.alias("b"), "blk")
-        .filter(F.col("a.vec_id") != F.col("b.vec_id"))
-        .select(F.col("a.vec_id").alias("node"), F.col("b.vec_id").alias("nbr"))
-    )
-    seed = cells.union(blocks).distinct()
+    seed = _group_pairs(new_g, arch_g).distinct()
     refine = (
         seed.alias("s")
         .join(arch_adj.alias("g"), F.col("s.nbr") == F.col("g.node"))
@@ -1015,16 +1014,22 @@ def graph_ann_insert(
     Output: the build-digest shape (per neighbor rank: count, exact
     score sum, nbr id sum) over the newly attached edges.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    emb_n = fixture_normed(spark, sf_dir)
-    arch_adj = _masked_adj(fixture_graph(spark, sf_dir), modulus)
-    grouped = _grouped(emb)
-    cand = attach_candidates(
-        grouped.filter(F.col("vec_id") % modulus == 0),
-        grouped.filter(F.col("vec_id") % modulus != 0),
-        arch_adj,
+    new = _mod_slice(modulus)
+    return _rank_digest(
+        _attach(fixture_normed(spark, sf_dir), new, _masked_adj(fixture_graph(spark, sf_dir), new), k)
     )
-    return _rank_digest(_topk_per_node(_score_pairs(cand, emb_n), k))
+
+
+def _attach(live_n: DataFrame, new, adj: DataFrame, k: int) -> DataFrame:
+    """The attach half of a delta pass: every ``new(vec_id)`` row of the
+    normed corpus ``live_n`` takes its top-k over
+    :func:`attach_candidates` (the seed groupings of ``live_n`` split
+    into new and archive rows, one refinement hop through ``adj``),
+    scored against ``live_n``."""
+    grouped = _grouped(live_n)
+    is_new = new(F.col("vec_id"))
+    cand = attach_candidates(grouped.filter(is_new), grouped.filter(~is_new), adj)
+    return _topk_per_node(_score_pairs(cand, live_n), k)
 
 
 def graph_relink_after_deletes(
@@ -1056,26 +1061,20 @@ def graph_relink_after_deletes(
     return _rank_digest(relink_edges(spark, sf_dir, delete_mod, k))
 
 
-def _relink_affected_and_candidates(
-    spark: SparkSession, sf_dir: str, delete_mod: int
-) -> tuple[DataFrame, DataFrame]:
-    """(affected, cand): the damaged-node set and its repair candidate
-    pairs — the ONE definition shared by the repair digest
-    (``graph_relink_after_deletes``) and the persisted repaired index
-    (``repaired_graph_index``), so the certified edge set and the
-    served edge set can never drift."""
-    g = fixture_graph(spark, sf_dir)
-    live = F.col("node") % delete_mod != 0
-    masked = _masked_adj(g, delete_mod)
-    affected = (
-        g.filter(live & (F.col("nbr") % delete_mod == 0))
-        .select("node")
-        .distinct()
-    )
-    surv = masked.join(F.broadcast(affected), "node")
-    und = masked.union(
-        masked.select(F.col("nbr").alias("node"), F.col("node").alias("nbr"))
-    )
+def _repair(base: DataFrame, dead, live_n: DataFrame, k: int) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The repair half of a delta pass over the edge set ``base``:
+    ``(masked, affected, repaired)``. ``masked`` is ``base`` without the
+    edges touching a ``dead(vec_id)`` node (stored columns kept),
+    ``affected`` the live nodes that lost an out-edge, and ``repaired``
+    their top-k over the surviving out-edges ∪ the live 2-hop
+    neighborhood through the masked undirected adjacency, scored against
+    ``live_n`` — the ONE definition behind the repair digest
+    (``relink_edges``) and every persisted delta (:func:`_delta_pass`),
+    so the certified edge set and the served edge set can never drift."""
+    masked = _masked_adj(base, dead)
+    affected = base.filter(~dead(F.col("node")) & dead(F.col("nbr"))).select("node").distinct()
+    edges = masked.select("node", "nbr")
+    und = edges.union(edges.select(F.col("nbr").alias("node"), F.col("node").alias("nbr")))
     twohop = (
         und.join(F.broadcast(affected), "node")
         .select("node", F.col("nbr").alias("mid"))
@@ -1083,8 +1082,8 @@ def _relink_affected_and_candidates(
         .filter(F.col("nbr") != F.col("node"))
         .select("node", "nbr")
     )
-    cand = surv.select("node", "nbr").union(twohop).distinct()
-    return affected, cand
+    cand = edges.join(F.broadcast(affected), "node").union(twohop).distinct()
+    return masked, affected, _topk_per_node(_score_pairs(cand, live_n), k)
 
 
 def relink_edges(
@@ -1095,8 +1094,29 @@ def relink_edges(
 ) -> DataFrame:
     """The repaired out-edges (node, nbr, score, rk) for every affected
     node — the edge set ``graph_relink_after_deletes`` digests."""
-    _, cand = _relink_affected_and_candidates(spark, sf_dir, delete_mod)
-    return _topk_per_node(_score_pairs(cand, fixture_normed(spark, sf_dir)), k)
+    _, _, repaired = _repair(
+        fixture_graph(spark, sf_dir), _mod_slice(delete_mod), fixture_normed(spark, sf_dir), k
+    )
+    return repaired
+
+
+def _delta_pass(tag: str, base: DataFrame, dead, live_n: DataFrame, new=None, k: int = K_GRAPH) -> str:
+    """ONE graph maintenance pass, persisted: mask the ``dead(vec_id)``
+    nodes out of the edge set ``base``, repair the damaged
+    neighborhoods (:func:`_repair`), attach the ``new(vec_id)`` rows of
+    the live normed corpus ``live_n`` when given (:func:`_attach`
+    through the masked adjacency), and write unaffected survivors (their
+    stored scores and ranks: compaction only removes) ∪ repaired ∪
+    attached with ``live_n`` through :func:`new_graph_index`. Repair
+    volume tracks the damage, attach volume the batch; ``affected`` is
+    damage-bounded, so its anti-join side broadcasts. Serves the delete
+    repair and both CDC cycles."""
+    masked, affected, repaired = _repair(base, dead, live_n, k)
+    parts = [masked.join(F.broadcast(affected), "node", "left_anti"), repaired]
+    if new is not None:
+        parts.append(_attach(live_n, new, masked, k))
+    full = reduce(DataFrame.unionByName, [p.select("node", "nbr", "score", "rk") for p in parts])
+    return new_graph_index(tag, full, live_n)
 
 
 def new_graph_index(tag: str, edges: DataFrame, corpus_normed: DataFrame) -> str:
@@ -1187,29 +1207,16 @@ def repaired_graph_index(
     repaired edges by digest) and serving (``GraphEngine`` over the
     persisted layout): repair → persist → serve, end to end.
 
-    The repaired graph = the affected nodes' re-ranked top-k out-edges
-    (``relink_edges`` — the exact set the digest certifies) ∪ the
-    surviving masked out-edges of every unaffected live node (their
-    stored scores/ranks unchanged — compaction only removes), over the
-    live-only corpus (norms persisted, never recomputed). ``affected``
-    is damage-bounded, so its anti-join side broadcasts; everything
-    else is one scan of the edge state. Memoized per (session, corpus)
-    like every index build here.
+    The delete-only :func:`_delta_pass` over the memoized graph: the
+    affected nodes' re-ranked top-k out-edges (the exact set
+    ``relink_edges`` digests) ∪ the surviving masked out-edges of every
+    unaffected live node, over the live-only corpus (norms persisted,
+    never recomputed). Memoized per (session, corpus) like every index
+    build here.
     """
-    g = fixture_graph(spark, sf_dir)
-    # ONE candidate derivation feeds both halves (affected for the
-    # anti-join, cand for the re-rank) — a second call would run
-    # the masked/2-hop join subtrees twice in the index-build job
-    affected, cand = _relink_affected_and_candidates(spark, sf_dir, delete_mod)
-    unaffected = _masked_adj(g, delete_mod, keep_cols=True).join(
-        F.broadcast(affected), "node", "left_anti"
-    )
-    repaired = _topk_per_node(_score_pairs(cand, fixture_normed(spark, sf_dir)), k)
-    full = unaffected.select("node", "nbr", "score", "rk").unionByName(
-        repaired.select("node", "nbr", "score", "rk")
-    )
-    kept = fixture_normed(spark, sf_dir).filter(F.col("vec_id") % delete_mod != 0)
-    return new_graph_index("graphrepaired", full, kept)
+    dead = _mod_slice(delete_mod)
+    live_n = fixture_normed(spark, sf_dir).filter(~dead(F.col("vec_id")))
+    return _delta_pass("graphrepaired", fixture_graph(spark, sf_dir), dead, live_n, k=k)
 
 
 def graph_serve_after_repair(
@@ -1324,28 +1331,18 @@ def merge_graph_shards(
     cross-linking half of the build's seed — Θ(n·SEED_WINDOW), never
     all-pairs; blocks straddle any hash/parity sharding by
     construction), rescores, cuts per-node top-k, then runs
-    ``merge_rounds`` stock descent rounds to propagate the cross links.
+    ``merge_rounds`` stock descent rounds (:func:`_descend`, the build's
+    own kernel loop) to propagate the cross links.
     Shard edges act as a warm start: the intra-shard neighborhoods are
     already converged, so the merge pays only the cross-shard
     discovery — at 100 TB that is the difference between re-running
     the full build over the union and a bounded touch-up whose every
     stage is Θ(n·k) ∪ Θ(n·SEED_WINDOW).
     """
-    cross = (
-        _grouped(emb)
-        .alias("a")
-        .join(_grouped(emb).alias("b"), "blk")
-        .filter(F.col("a.vec_id") != F.col("b.vec_id"))
-        .select(F.col("a.vec_id").alias("node"), F.col("b.vec_id").alias("nbr"))
-    )
-    warm = reduce(
-        lambda x, y: x.union(y), [g.select("node", "nbr") for g in shard_edges]
-    )
-    cand = warm.union(cross).distinct()
-    graph = _topk_per_node(_score_pairs(cand, emb_n), k).localCheckpoint(eager=True)
-    for _ in range(merge_rounds):
-        graph = _descent_round(graph, emb_n, k)
-    return graph
+    g = _grouped(emb)
+    cross = _group_pairs(g, g, keys=(_BLOCKS,))
+    warm = reduce(DataFrame.union, [e.select("node", "nbr") for e in shard_edges])
+    return _descend(warm.union(cross).distinct(), emb_n, k, merge_rounds)
 
 
 # merged graph is index state, memoized like fixture_graph
@@ -1481,58 +1478,104 @@ GRAPH_CDC_CHG_MOD, GRAPH_CDC_CHG_REM = 9, 5   # vector replaced in NEW
 # every slice), so fixture_qvec and the live-corpus oracle agree.
 GRAPH_CDC_QUERY_ID = 1
 
+# Snapshot N+2 (the CDC loop LOOPS). Mirrors the documents family's v3
+# design: delta-2 classes deliberately OVERLAP delta-1's so cycle 2 must
+# retire cycle-1 WORK, not just base rows (populations at the 500-vector
+# fixture): 13 cycle-1 attaches are removed (tombstone-of-append), 9
+# vectors are replaced TWICE (negate ∘ reverse), 12 cycle-1 removals are
+# re-added (resurrection), 2 cycle-1 adds are changed. The second
+# replacement transform is element NEGATION — distinct from the original
+# AND from the reversal (reverse∘reverse would silently revert to the
+# original), and exactly restatable as list_transform(v, x -> -x).
+GRAPH_CDC2_DEL_MOD, GRAPH_CDC2_DEL_REM = 7, 3    # among v2 members
+GRAPH_CDC2_ADD_MOD, GRAPH_CDC2_ADD_REM = 4, 1    # among non-members
+GRAPH_CDC2_CHG_MOD, GRAPH_CDC2_CHG_REM = 15, 8   # among v2 survivors
 
-def _cdc_in_old(c):
-    return c % GRAPH_CDC_ADD_MOD != GRAPH_CDC_ADD_REM
-
-
-def _cdc_in_new(c):
-    return c % GRAPH_CDC_DEL_MOD != GRAPH_CDC_DEL_REM
-
-
-def _cdc_changed(c):
-    """Replaced vector: present in BOTH snapshots, content moved."""
-    return _cdc_in_old(c) & _cdc_in_new(c) & (c % GRAPH_CDC_CHG_MOD == GRAPH_CDC_CHG_REM)
-
-
-def _cdc_dead(c):
-    """Rows the delta retires from the OLD graph: removed ∪ changed."""
-    return _cdc_in_old(c) & (~_cdc_in_new(c) | (c % GRAPH_CDC_CHG_MOD == GRAPH_CDC_CHG_REM))
-
-
-def _cdc_new_node(c):
-    """Rows the delta attaches to the live graph: added ∪ changed."""
-    return _cdc_in_new(c) & (~_cdc_in_old(c) | (c % GRAPH_CDC_CHG_MOD == GRAPH_CDC_CHG_REM))
+# cycle g → (its replaced-vector slice, the replacement edit)
+_CDC_EDITS = {
+    1: (GRAPH_CDC_CHG_MOD, GRAPH_CDC_CHG_REM, F.reverse),
+    2: (GRAPH_CDC2_CHG_MOD, GRAPH_CDC2_CHG_REM, lambda v: F.transform(v, lambda x: -x)),
+}
 
 
-def _cdc_live_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The NEW snapshot's corpus: changed rows carry their REPLACED
-    vector (element reversal — norm-preserving, direction-changing, and
-    exactly restatable as DuckDB list_reverse)."""
+def cdc_member(gen: int, c: Column) -> Column:
+    """Membership of vector snapshot ``gen`` (0 = old, 1 = new, 2 = N+2)."""
+    if gen == 0:
+        return c % GRAPH_CDC_ADD_MOD != GRAPH_CDC_ADD_REM
+    if gen == 1:
+        return c % GRAPH_CDC_DEL_MOD != GRAPH_CDC_DEL_REM
+    v2 = cdc_member(1, c)
+    return (v2 & (c % GRAPH_CDC2_DEL_MOD != GRAPH_CDC2_DEL_REM)) | (
+        ~v2 & (c % GRAPH_CDC2_ADD_MOD == GRAPH_CDC2_ADD_REM)
+    )
+
+
+def _cdc_edited(gen: int, c: Column) -> Column:
+    mod, rem, _ = _CDC_EDITS[gen]
+    return c % mod == rem
+
+
+def cdc_changed(gen: int, c: Column) -> Column:
+    """Vectors cycle ``gen`` replaces: in both snapshots, content moved."""
+    return cdc_member(gen - 1, c) & cdc_member(gen, c) & _cdc_edited(gen, c)
+
+
+def cdc_dead(gen: int, c: Column) -> Column:
+    """Rows cycle ``gen`` retires from snapshot ``gen - 1``: removed ∪
+    changed."""
+    return cdc_member(gen - 1, c) & (~cdc_member(gen, c) | _cdc_edited(gen, c))
+
+
+def cdc_new(gen: int, c: Column) -> Column:
+    """Rows cycle ``gen`` attaches: added ∪ changed."""
+    return cdc_member(gen, c) & (~cdc_member(gen - 1, c) | _cdc_edited(gen, c))
+
+
+def cdc_corpus(spark: SparkSession, sf_dir: str, gen: int) -> DataFrame:
+    """Snapshot ``gen``'s corpus ``(vec_id, label, embedding)``: each
+    cycle ≤ ``gen`` applies its edit to the vectors it changed, so a
+    twice-changed vector is negate∘reverse of the original — pure
+    row-local compositions (norm-preserving, direction-changing) that
+    DuckDB restates as list_reverse / list_transform."""
     emb = load_table(spark, sf_dir, "embeddings")
-    v = F.when(
-        _cdc_changed(F.col("vec_id")), F.reverse(F.col("embedding"))
-    ).otherwise(F.col("embedding"))
-    return emb.filter(_cdc_in_new(F.col("vec_id"))).select(
-        "vec_id", "label", v.alias("embedding")
+    vid, v = F.col("vec_id"), F.col("embedding")
+    for g in range(1, gen + 1):
+        v = F.when(cdc_changed(g, vid), _CDC_EDITS[g][2](v)).otherwise(v)
+    return emb.filter(cdc_member(gen, vid)).select("vec_id", "label", v.alias("embedding"))
+
+
+def _cdc_cycle(spark: SparkSession, sf_dir: str, gen: int, base: DataFrame) -> str:
+    """Apply cycle ``gen`` to the snapshot ``gen - 1`` edge set ``base``
+    as one :func:`_delta_pass`, every re-rank scored against snapshot
+    ``gen``'s corpus (changed rows score with their NEW vector). The
+    live normed corpus is left uncached: the pass is one write, and a
+    cache would only add its own materialization jobs (serves read the
+    PERSISTED ``corpus_normed``)."""
+    return _delta_pass(
+        f"graphcdc{gen}",
+        base,
+        partial(cdc_dead, gen),
+        normed_corpus(cdc_corpus(spark, sf_dir, gen)),
+        new=partial(cdc_new, gen),
     )
 
 
 @session_state
 def cdc_refreshed_graph_index(spark: SparkSession, sf_dir: str) -> str:
     """Build the OLD-snapshot graph, apply the snapshot delta as ONE
-    maintenance pass, persist through the standard layout:
+    maintenance pass (:func:`_cdc_cycle`), persist through the standard
+    layout:
 
     1. base = NN-descent build over the old corpus (original vectors);
     2. removed + changed rows are DEAD: edges touching them are masked
        (the delete-compaction read posture);
     3. live nodes that lost an out-edge re-rank their surviving edges ∪
-       live 2-hop neighborhood (the ``relink_edges`` repair kernel,
-       keyed by the delta instead of a modulus);
+       live 2-hop neighborhood (the repair half, keyed by the delta
+       instead of a modulus);
     4. added + changed rows attach via the build's own seed groupings
        over the LIVE corpus + one refinement hop through the masked
        adjacency (the ``attach_candidates`` kernel), scored against
-       live vectors (changed rows score with their NEW vector);
+       live vectors;
     5. refreshed graph = unaffected survivors ∪ repaired ∪ attached,
        written with the live normed corpus via ``write_graph_index``.
 
@@ -1540,56 +1583,12 @@ def cdc_refreshed_graph_index(spark: SparkSession, sf_dir: str) -> str:
     the BATCH (Θ(|delta|·SEED_WINDOW·(1+K))) — the base graph is never
     rebuilt and unaffected nodes' files carry their stored scores.
     """
-    old = load_table(spark, sf_dir, "embeddings").filter(_cdc_in_old(F.col("vec_id")))
-    # both normed relations are build-scoped: cached for the build's
-    # many scoring actions (seed + 4 descent rounds / repair + attach),
-    # unpersisted once the index write lands — downstream serves read
-    # the PERSISTED corpus_normed, never these
+    old = cdc_corpus(spark, sf_dir, 0)
+    # build-scoped: cached for the build's five checkpoint jobs,
+    # released once the cycle's index write lands
     old_n = normed_corpus(old).cache()
-    g = build_knn_graph_over(old, old_n)
-    live = _cdc_live_emb(spark, sf_dir)
-    live_n = normed_corpus(live).cache()
-
-    dead_node = _cdc_dead(F.col("node"))
-    dead_nbr = _cdc_dead(F.col("nbr"))
-    masked = g.filter(~dead_node & ~dead_nbr)
-    affected = g.filter(~dead_node & dead_nbr).select("node").distinct()
-
-    # repair: the relink kernel over the delta-dead set
-    surv = masked.select("node", "nbr").join(F.broadcast(affected), "node")
-    und = masked.select("node", "nbr").union(
-        masked.select(F.col("nbr").alias("node"), F.col("node").alias("nbr"))
-    )
-    twohop = (
-        und.join(F.broadcast(affected), "node")
-        .select("node", F.col("nbr").alias("mid"))
-        .join(und.select(F.col("node").alias("mid"), "nbr"), "mid")
-        .filter(F.col("nbr") != F.col("node"))
-        .select("node", "nbr")
-    )
-    rcand = surv.select("node", "nbr").union(twohop).distinct()
-    repaired = _topk_per_node(_score_pairs(rcand, live_n), K_GRAPH)
-
-    # attach: the insert kernel over the delta-new set, grouped and
-    # scored on the LIVE corpus
-    grouped = _grouped(live)
-    new_pred = _cdc_new_node(F.col("vec_id"))
-    acand = attach_candidates(
-        grouped.filter(new_pred),
-        grouped.filter(~new_pred),
-        masked.select("node", "nbr"),
-    )
-    attached = _topk_per_node(_score_pairs(acand, live_n), K_GRAPH)
-
-    unaffected = masked.join(F.broadcast(affected), "node", "left_anti")
-    full = (
-        unaffected.select("node", "nbr", "score", "rk")
-        .unionByName(repaired.select("node", "nbr", "score", "rk"))
-        .unionByName(attached.select("node", "nbr", "score", "rk"))
-    )
-    out = new_graph_index("graphcdc", full, live_n)
+    out = _cdc_cycle(spark, sf_dir, 1, build_knn_graph_over(old, old_n))
     old_n.unpersist()
-    live_n.unpersist()
     return out
 
 
@@ -1612,124 +1611,20 @@ def graph_refresh_cdc(
     )
 
 
-# ---------------------------------------------------------------------------
-# Second delta (r10): the vector corpus' snapshot N+2 — the CDC loop LOOPS
-# ---------------------------------------------------------------------------
-# Mirrors the documents family's v3 design: delta-2 classes deliberately
-# OVERLAP delta-1's so cycle 2 must retire cycle-1 WORK, not just base
-# rows (populations at the 500-vector fixture): 13 cycle-1 attaches are
-# removed (tombstone-of-append), 9 vectors are replaced TWICE
-# (negate ∘ reverse), 12 cycle-1 removals are re-added (resurrection),
-# 2 cycle-1 adds are changed. The second replacement transform is
-# element NEGATION — distinct from the original AND from the reversal
-# (reverse∘reverse would silently revert to the original), and exactly
-# restatable as list_transform(v, x -> -x).
-
-GRAPH_CDC2_DEL_MOD, GRAPH_CDC2_DEL_REM = 7, 3    # among v2 members
-GRAPH_CDC2_ADD_MOD, GRAPH_CDC2_ADD_REM = 4, 1    # among non-members
-GRAPH_CDC2_CHG_MOD, GRAPH_CDC2_CHG_REM = 15, 8   # among v2 survivors
-
-
-def _cdc2_changed(c):
-    return (
-        _cdc_in_new(c)
-        & (c % GRAPH_CDC2_DEL_MOD != GRAPH_CDC2_DEL_REM)
-        & (c % GRAPH_CDC2_CHG_MOD == GRAPH_CDC2_CHG_REM)
-    )
-
-
-def _cdc_in_v3(c):
-    return (_cdc_in_new(c) & (c % GRAPH_CDC2_DEL_MOD != GRAPH_CDC2_DEL_REM)) | (
-        ~_cdc_in_new(c) & (c % GRAPH_CDC2_ADD_MOD == GRAPH_CDC2_ADD_REM)
-    )
-
-
-def _cdc2_dead(c):
-    """Rows delta 2 retires from the CYCLE-1 graph: removed ∪ changed
-    (every cycle-1 node is a v2 member, so the in-v2 guard is implied
-    on that set — kept explicit so the predicate is corpus-agnostic)."""
-    return _cdc_in_new(c) & (
-        (c % GRAPH_CDC2_DEL_MOD == GRAPH_CDC2_DEL_REM)
-        | (c % GRAPH_CDC2_CHG_MOD == GRAPH_CDC2_CHG_REM)
-    )
-
-
-def _cdc2_new_node(c):
-    """Rows delta 2 attaches: re-added ∪ changed."""
-    return _cdc_in_v3(c) & (~_cdc_in_new(c) | _cdc2_changed(c))
-
-
-def _cdc_live_emb_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot N+2's corpus: the v2 replacement rule applied first
-    (reversal for delta-1-changed rows), then NEGATION for the
-    delta-2-changed slice — a twice-changed vector is negate∘reverse
-    of the original, a pure row-local composition both engines restate."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    v2 = F.when(
-        _cdc_changed(F.col("vec_id")), F.reverse(F.col("embedding"))
-    ).otherwise(F.col("embedding"))
-    v3 = F.when(
-        _cdc2_changed(F.col("vec_id")), F.transform(v2, lambda x: -x)
-    ).otherwise(v2)
-    return emb.filter(_cdc_in_v3(F.col("vec_id"))).select(
-        "vec_id", "label", v3.alias("embedding")
-    )
-
-
 @session_state
 def cdc_refreshed_graph_index_gen2(spark: SparkSession, sf_dir: str) -> str:
     """Apply the SECOND snapshot delta to the PERSISTED cycle-1 index —
     the nightly loop actually looping for the graph family: read the
     cycle-1 layout from disk (edges ∪ repaired ∪ attached — exactly
-    what a fresh session would serve), mask delta-2 dead nodes, repair
-    the newly damaged neighborhoods, attach the delta-2 batch, persist.
-    Every re-rank scores against the v3-live corpus (twice-changed
-    vectors carry negate∘reverse of the original); surviving edges'
-    stored scores stay valid because any endpoint whose vector moved is
-    dead-masked by construction. Repair stays damage-bounded, attach
-    stays batch-bounded — two cycles cost two deltas, never two builds."""
+    what a fresh session would serve) and run cycle 2's
+    :func:`_cdc_cycle` over it. Every re-rank scores against the v3
+    corpus (twice-changed vectors carry negate∘reverse of the original);
+    surviving edges' stored scores stay valid because any endpoint whose
+    vector moved is dead-masked by construction. Repair stays
+    damage-bounded, attach stays batch-bounded — two cycles cost two
+    deltas, never two builds."""
     idx1 = cdc_refreshed_graph_index(spark, sf_dir)
-    edges1 = spark.read.parquet(f"{idx1}/edges")
-    live3 = _cdc_live_emb_v3(spark, sf_dir)
-    live3_n = normed_corpus(live3).cache()
-
-    dead_node = _cdc2_dead(F.col("node"))
-    dead_nbr = _cdc2_dead(F.col("nbr"))
-    masked = edges1.filter(~dead_node & ~dead_nbr)
-    affected = edges1.filter(~dead_node & dead_nbr).select("node").distinct()
-
-    surv = masked.select("node", "nbr").join(F.broadcast(affected), "node")
-    und = masked.select("node", "nbr").union(
-        masked.select(F.col("nbr").alias("node"), F.col("node").alias("nbr"))
-    )
-    twohop = (
-        und.join(F.broadcast(affected), "node")
-        .select("node", F.col("nbr").alias("mid"))
-        .join(und.select(F.col("node").alias("mid"), "nbr"), "mid")
-        .filter(F.col("nbr") != F.col("node"))
-        .select("node", "nbr")
-    )
-    rcand = surv.select("node", "nbr").union(twohop).distinct()
-    repaired = _topk_per_node(_score_pairs(rcand, live3_n), K_GRAPH)
-
-    grouped = _grouped(live3)
-    new_pred = _cdc2_new_node(F.col("vec_id"))
-    acand = attach_candidates(
-        grouped.filter(new_pred),
-        grouped.filter(~new_pred),
-        masked.select("node", "nbr"),
-    )
-    attached = _topk_per_node(_score_pairs(acand, live3_n), K_GRAPH)
-
-    unaffected = masked.join(F.broadcast(affected), "node", "left_anti")
-    full = (
-        unaffected.select("node", "nbr", "score", "rk")
-        .unionByName(repaired.select("node", "nbr", "score", "rk"))
-        .unionByName(attached.select("node", "nbr", "score", "rk"))
-    )
-    out = new_graph_index("graphcdc2", full, live3_n)
-    live3_n.unpersist()
-    return out
+    return _cdc_cycle(spark, sf_dir, 2, spark.read.parquet(f"{idx1}/edges"))
 
 
 def graph_refresh_cdc_gen2(

@@ -322,7 +322,7 @@ def _snapshot_emb(docs: DataFrame, gen: int, salt: str = "") -> DataFrame:
 TOMBSTONE_SCHEMA = "vec_id long, gen int"
 
 
-def live_rows(emb: DataFrame, tombstones: DataFrame | None) -> DataFrame:
+def live_rows(emb: DataFrame, tombstones: DataFrame | None, asof_gen: int | None = None) -> DataFrame:
     """A layout's rows minus the ones its tombstone list retires (r9
     masked reads: a CDC-refreshed layout ships the list beside the
     index). Delta-sized list → broadcast anti-join. A generation-stamped
@@ -331,7 +331,13 @@ def live_rows(emb: DataFrame, tombstones: DataFrame | None) -> DataFrame:
     an edited doc's LATEST re-embedding survives every earlier
     retirement); a gen-less tombstone list against a gen-stamped index retires base
     rows only (the r9 single-cycle layout); a fully classic layout
-    retires by vec_id alone."""
+    retires by vec_id alone. ``asof_gen`` reads version v of a
+    gen-stamped layout: rows written at ``gen <= v`` minus retirements
+    by tombstones EMITTED by cycles ≤ v (cycle g stamps dead-gen g-1,
+    so the emitted-by window is ``t_gen <= v - 1``)."""
+    if asof_gen is not None:
+        emb = emb.filter(F.col("gen") <= asof_gen)
+        tombstones = None if tombstones is None else tombstones.filter(F.col("gen") <= asof_gen - 1)
     if tombstones is None:
         return emb
     tombs = tombstones.withColumnRenamed("vec_id", "t_vec_id").withColumnRenamed("gen", "t_gen")
@@ -752,14 +758,12 @@ def index_refresh_gen2_compact_mid(
 
 
 def _live_index_rows_asof(spark: SparkSession, index_dir: str, asof_gen: int) -> DataFrame:
-    """Rows visible AS OF generation ``asof_gen``: writes at
-    ``gen <= asof_gen``, minus retirements by tombstones EMITTED by
-    cycles ≤ asof_gen (cycle g stamps dead-gen g-1, so the emitted-by
-    filter is ``t_gen <= asof_gen - 1``); within that window
-    :func:`live_rows` applies unchanged."""
+    """Rows visible AS OF generation ``asof_gen`` (:func:`live_rows`'
+    as-of window)."""
     return live_rows(
-        spark.read.parquet(f"{index_dir}/embeddings_indexed").filter(F.col("gen") <= asof_gen),
-        spark.read.parquet(f"{index_dir}/tombstones").filter(F.col("gen") <= asof_gen - 1),
+        spark.read.parquet(f"{index_dir}/embeddings_indexed"),
+        spark.read.parquet(f"{index_dir}/tombstones"),
+        asof_gen,
     )
 
 

@@ -43,6 +43,7 @@ from gpu_accelerated_vector_indexing_spark.functions.vector import (
     seq_l2_norm,
 )
 from gpu_accelerated_vector_indexing_spark.memo import session_state, state_dir
+from gpu_accelerated_vector_indexing_spark.operators.index_build import live_rows
 from gpu_accelerated_vector_indexing_spark.operators.knn import cosine_topk, fixture_qvec, with_query
 from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
 
@@ -1017,32 +1018,50 @@ def pq_state_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # The third index family joins the CDC loop (IVF: index_build.
 # cdc_refreshed_index; graph: graph_ann.cdc_refreshed_graph_index),
-# sharing the ONE vector-corpus snapshot definition (graph_ann's
-# modular vec_id slices; changed = vector replaced by element
-# reversal). The PQ-specific posture: codebooks are STORED state —
-# the delta encodes with the trained books (the assign_incremental /
-# nearest-stored-centroid analog), never refits; removed + changed
-# rows tombstone their base code rows; serving ADC-scans the live
-# codes and exact-rescores candidates against live vectors. The
-# reference cannot do any of this (immutable build artifacts,
-# ≙ IVF.cpp:439-524).
+# reading the ONE vector-snapshot definition per generation
+# (graph_ann.cdc_corpus / cdc_dead / cdc_new: modular vec_id slices,
+# changed = vector replaced by element reversal, then negation). The
+# PQ-specific posture: codebooks are STORED state — every cycle encodes
+# with the books trained on the old corpus (the assign_incremental /
+# nearest-stored-centroid analog), never refits. Cycle g tombstones
+# its dead rows at dead-gen g-1 (the index_build.TOMBSTONE_SCHEMA
+# rule: tombstone gen = max retired generation) and appends its new
+# rows' codes at gen g; serving reads the live codes through
+# index_build.live_rows and exact-rescores candidates against that
+# generation's vectors. The reference cannot do any of this (immutable
+# build artifacts, ≙ IVF.cpp:439-524).
 
 
-def _pq_cdc_build(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
-    """Un-memoized base + cycle-1 build (old-corpus fit, base encode,
-    delta-1 tombstones/appends) into a fresh directory — shared by the
-    single-cycle and gen-2 states (each memoizes its OWN copy). Returns
-    (dir, codebooks)."""
+def _pq_code_rows(rows: DataFrame, books: list[list[list[float]]], gen: int) -> DataFrame:
+    """``(vec_id, label, codes, gen)``: ``rows``' vectors encoded with
+    the stored codebooks, stamped with the writing generation."""
+    dim = len(books[0][0]) * PQ_SUBSPACES
+    return rows.select(
+        "vec_id",
+        "label",
+        _pq_encode(as_double_array("embedding"), books, dim).alias("codes"),
+        F.lit(gen).cast("int").alias("gen"),
+    )
+
+
+@session_state
+def _pq_cdc_state(spark: SparkSession, sf_dir: str, cycles: int) -> tuple[str, list]:
+    """The PQ state after ``cycles`` delta cycles, in its own directory
+    (the single-cycle and gen-2 states never share one): Lloyd fit on
+    the old corpus, base encode at gen 0, then one cycle step per
+    generation. Cycle 2's tombstones land at dead-gen 1, retiring
+    cycle-1 APPENDS as well as base rows under the shared
+    row.gen <= tombstone.gen rule. The codebooks never refit across
+    cycles — retraining is a separate drift-triggered event, exactly
+    like the IVF family's centroid refresh. Returns (dir, codebooks)."""
     from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
-        _cdc_dead,
-        _cdc_in_old,
-        _cdc_live_emb,
-        _cdc_new_node,
+        cdc_corpus,
+        cdc_dead,
+        cdc_new,
     )
 
     out = state_dir("pqcdc")
-    emb = load_table(spark, sf_dir, "embeddings")
-    old = emb.filter(_cdc_in_old(F.col("vec_id")))
+    old = cdc_corpus(spark, sf_dir, 0)
     sample = (
         old.orderBy("vec_id")
         .limit(PQ_TRAIN_SAMPLE)
@@ -1050,7 +1069,6 @@ def _pq_cdc_build(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
         .collect()
     )
     books = _lloyd_fit([r.v for r in sample])
-    dim = len(sample[0].v)
     spark.createDataFrame(
         [
             (s, cw + 1, books[s][cw])
@@ -1059,68 +1077,25 @@ def _pq_cdc_build(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
         ],
         "subspace int, codeword int, centroid array<double>",
     ).write.mode("overwrite").parquet(f"{out}/codebooks")
-    old.select(
-        "vec_id",
-        "label",
-        _pq_encode(as_double_array("embedding"), books, dim).alias("codes"),
-        F.lit(0).cast("int").alias("gen"),
-    ).write.mode("overwrite").parquet(f"{out}/codes")
-    # the delta, applied with the index_build.TOMBSTONE_SCHEMA rule
-    # (tombstone gen = max retired generation)
-    emb.filter(_cdc_dead(F.col("vec_id"))).select(
-        "vec_id", F.lit(0).cast("int").alias("gen")
-    ).coalesce(1).write.mode("overwrite").parquet(f"{out}/tombstones")
-    _cdc_live_emb(spark, sf_dir).filter(_cdc_new_node(F.col("vec_id"))).select(
-        "vec_id",
-        "label",
-        _pq_encode(as_double_array("embedding"), books, dim).alias("codes"),
-        F.lit(1).cast("int").alias("gen"),
-    ).write.mode("append").parquet(f"{out}/codes")
+    _pq_code_rows(old, books, 0).write.mode("overwrite").parquet(f"{out}/codes")
+    emb = load_table(spark, sf_dir, "embeddings")
+    vid = F.col("vec_id")
+    for gen in range(1, cycles + 1):
+        emb.filter(cdc_dead(gen, vid)).select(
+            "vec_id", F.lit(gen - 1).cast("int").alias("gen")
+        ).coalesce(1).write.mode("append").parquet(f"{out}/tombstones")
+        _pq_code_rows(cdc_corpus(spark, sf_dir, gen).filter(cdc_new(gen, vid)), books, gen).write.mode(
+            "append"
+        ).parquet(f"{out}/codes")
     return out, books
-
-
-# The memoized single-cycle (dir, codebooks) state — each state owns its
-# directory (the gen-2 state mutates a fresh copy, never this one).
-_pq_cdc_state = session_state(_pq_cdc_build)
 
 
 def cdc_refreshed_pq_state(spark: SparkSession, sf_dir: str) -> str:
-    return _pq_cdc_state(spark, sf_dir)[0]
-
-
-@session_state
-def _pq_cdc2_state(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
-    """TWO delta cycles over the PQ state — the compression rung's loop
-    (the IVF gen-2 posture): cycle-2 tombstones land at dead-gen 1
-    (retiring cycle-1 APPENDS as well as base rows, under the shared
-    row.gen <= tombstone.gen rule), cycle-2 appends encode the v3
-    vectors (twice-changed = negate ∘ reverse) with the SAME stored
-    codebooks at gen 2. The codebooks never refit across cycles —
-    retraining is a separate drift-triggered event, exactly like the
-    IVF family's centroid refresh."""
-    from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
-        _cdc2_dead,
-        _cdc2_new_node,
-        _cdc_live_emb_v3,
-    )
-
-    out, books = _pq_cdc_build(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    dim = len(books[0][0]) * PQ_SUBSPACES
-    emb.filter(_cdc2_dead(F.col("vec_id"))).select(
-        "vec_id", F.lit(1).cast("int").alias("gen")
-    ).coalesce(1).write.mode("append").parquet(f"{out}/tombstones")
-    _cdc_live_emb_v3(spark, sf_dir).filter(_cdc2_new_node(F.col("vec_id"))).select(
-        "vec_id",
-        "label",
-        _pq_encode(as_double_array("embedding"), books, dim).alias("codes"),
-        F.lit(2).cast("int").alias("gen"),
-    ).write.mode("append").parquet(f"{out}/codes")
-    return out, books
+    return _pq_cdc_state(spark, sf_dir, 1)[0]
 
 
 def cdc_refreshed_pq_state_gen2(spark: SparkSession, sf_dir: str) -> str:
-    return _pq_cdc2_state(spark, sf_dir)[0]
+    return _pq_cdc_state(spark, sf_dir, 2)[0]
 
 
 def pq_refresh_cdc(
@@ -1136,13 +1111,7 @@ def pq_refresh_cdc(
     snapshots and unchanged, so both engines read the same query
     vector. The oracle replays old-corpus Lloyd fit → live-corpus
     encode with those books → ADC rank → exact rescore."""
-    from gpu_accelerated_vector_indexing_spark.operators.graph_ann import _cdc_live_emb
-
-    out, books = _pq_cdc_state(spark, sf_dir)
-    return _pq_serve_refreshed(
-        spark, sf_dir, out, books, _cdc_live_emb(spark, sf_dir),
-        query_id, k, n_candidates,
-    )
+    return _pq_serve_refreshed(spark, sf_dir, 1, 1, query_id, k, n_candidates)
 
 
 def pq_refresh_cdc_gen2(
@@ -1156,15 +1125,7 @@ def pq_refresh_cdc_gen2(
     generations retire exactly the right code rows (including cycle-1
     appends) and candidates rescore against the v3 corpus. query 1
     misses every slice of both deltas."""
-    from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
-        _cdc_live_emb_v3,
-    )
-
-    out, books = _pq_cdc2_state(spark, sf_dir)
-    return _pq_serve_refreshed(
-        spark, sf_dir, out, books, _cdc_live_emb_v3(spark, sf_dir),
-        query_id, k, n_candidates,
-    )
+    return _pq_serve_refreshed(spark, sf_dir, 2, 2, query_id, k, n_candidates)
 
 
 def pq_read_asof(
@@ -1184,26 +1145,11 @@ def pq_read_asof(
     replays the Lloyd fit once per version block and brute-replays the
     version's encode → ADC → rescore — a value match certifies the gen
     windows reconstruct all three code sets exactly."""
-    from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
-        GRAPH_CDC_ADD_MOD,
-        GRAPH_CDC_ADD_REM,
-        _cdc_live_emb,
-        _cdc_live_emb_v3,
-    )
-    from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
-
-    out, books = _pq_cdc2_state(spark, sf_dir)
-    v0 = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") % GRAPH_CDC_ADD_MOD != GRAPH_CDC_ADD_REM)
-        .select("vec_id", "label", "embedding")
-    )
-    corpora = (v0, _cdc_live_emb(spark, sf_dir), _cdc_live_emb_v3(spark, sf_dir))
     rows: DataFrame | None = None
-    for v, corpus in enumerate(corpora):
-        topk = _pq_serve_refreshed(
-            spark, sf_dir, out, books, corpus, query_id, k, n_candidates, asof_gen=v
-        ).select(F.lit(v).alias("asof_gen"), "vec_id", "score")
+    for v in (0, 1, 2):
+        topk = _pq_serve_refreshed(spark, sf_dir, 2, v, query_id, k, n_candidates).select(
+            F.lit(v).alias("asof_gen"), "vec_id", "score"
+        )
         rows = topk if rows is None else rows.unionByName(topk)
     return rows
 
@@ -1211,34 +1157,23 @@ def pq_read_asof(
 def _pq_serve_refreshed(
     spark: SparkSession,
     sf_dir: str,
-    out: str,
-    books: list[list[list[float]]],
-    live: DataFrame,
+    cycles: int,
+    gen: int,
     query_id: int,
     k: int,
     n_candidates: int,
-    asof_gen: int | None = None,
 ) -> DataFrame:
     """The ONE refreshed-PQ serve definition (single-cycle, gen-2, and
-    time travel): broadcast tombstone anti-join over the codes table,
-    ADC LUT rank, exact rescore against the given live corpus.
-    ``asof_gen`` windows the read to version v — codes written at
-    gen <= v, retirements emitted by cycles <= v (dead-gen <= v-1) —
-    the same visibility rule as ``index_build._live_index_rows_asof``."""
-    qvec = fixture_qvec(spark, sf_dir, query_id)
-    codes = spark.read.parquet(f"{out}/codes")
-    tombs_raw = spark.read.parquet(f"{out}/tombstones")
-    if asof_gen is not None:
-        codes = codes.filter(F.col("gen") <= asof_gen)
-        tombs_raw = tombs_raw.filter(F.col("gen") <= asof_gen - 1)
-    tombs = tombs_raw.select(
-        F.col("vec_id").alias("t_vec_id"), F.col("gen").alias("t_gen")
-    )
-    live_codes = codes.join(
-        F.broadcast(tombs),
-        (codes.vec_id == tombs.t_vec_id) & (codes.gen <= tombs.t_gen),
-        "left_anti",
-    )
+    time travel): the state after ``cycles`` cycles read AS OF
+    generation ``gen`` through ``index_build.live_rows`` (the as-of
+    window and the tombstone anti-join of every layout), ADC LUT rank,
+    exact rescore against snapshot ``gen``'s corpus."""
+    from gpu_accelerated_vector_indexing_spark.operators.graph_ann import cdc_corpus
 
+    out, books = _pq_cdc_state(spark, sf_dir, cycles)
+    qvec = fixture_qvec(spark, sf_dir, query_id)
+    live_codes = live_rows(
+        spark.read.parquet(f"{out}/codes"), spark.read.parquet(f"{out}/tombstones"), gen
+    )
     approx = live_codes.select("vec_id", F.round(_pq_adc(books, qvec), 6).alias("approx_score"))
-    return candidate_rescore(live, approx, n_candidates, qvec, k)
+    return candidate_rescore(cdc_corpus(spark, sf_dir, gen), approx, n_candidates, qvec, k)

@@ -63,7 +63,8 @@ E_DEFAULT = "e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embedding
 
 def _round_ctes(g: str, u: str, p: str, out: str, k: int, en: str = "en") -> list[str]:
     """One NN-descent round as CTE parts — the SQL twin of
-    graph_ann._descent_round, shared by the full build and the merge."""
+    graph_ann._descent_round (the iteration-kernel step of
+    graph_ann._descend), shared by the full build and the merge."""
     return [
         f"{u} AS (SELECT node, nbr FROM {g} UNION ALL SELECT nbr AS node, node AS nbr FROM {g})",
         f"""{p} AS (
@@ -478,8 +479,8 @@ def _relink_parts(g: str) -> list[str]:
     set, undirected live adjacency, 2-hop candidates, repaired top-k
     edges (``rlrepaired``) — shared by the repair digest and the
     serve-after-repair walk so the certified and the served edge sets
-    are ONE SQL definition (mirroring graph_ann's shared
-    ``_relink_affected_and_candidates`` / ``relink_edges``)."""
+    are ONE SQL definition (mirroring graph_ann's shared repair half,
+    ``_repair``, read by ``relink_edges`` and every delta pass)."""
     from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
         DELETE_MOD as M,
     )

@@ -43,6 +43,7 @@ from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
     K_GRAPH,
     _grouped,
     _masked_adj,
+    _mod_slice,
     _rank_digest,
     _score_pairs,
     _topk_per_node,
@@ -71,7 +72,7 @@ def streaming_graph_attach(
     value-identical to ``graph_ann_insert`` regardless of batching."""
     emb = load_table(spark, sf_dir, "embeddings")
     emb_n = fixture_normed(spark, sf_dir)
-    arch_adj = _masked_adj(fixture_graph(spark, sf_dir), modulus)
+    arch_adj = _masked_adj(fixture_graph(spark, sf_dir), _mod_slice(modulus))
     # grouping ASSIGNMENTS are build-time index metadata: computed once
     # from the static corpus (identical to the batch twin's input), the
     # batch side just looks its rows up by id

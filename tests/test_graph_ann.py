@@ -32,6 +32,25 @@ def test_graph_ann_oracle_parity_sf001(spark, duck, name):
     assert_parity(spark, duck, name, SF_CORRECT)
 
 
+# the incremental-maintenance rows: delete repair, both graph CDC
+# cycles and the PQ CDC rung (all read graph_ann's snapshot definitions)
+MAINTENANCE_NAMES = [
+    "graph_relink_after_deletes",
+    "graph_serve_after_repair",
+    "graph_repair_recall",
+    "graph_refresh_cdc",
+    "graph_refresh_cdc_gen2",
+    "pq_refresh_cdc",
+    "pq_refresh_cdc_gen2",
+    "pq_read_asof",
+]
+
+
+@pytest.mark.parametrize("name", MAINTENANCE_NAMES)
+def test_graph_maintenance_oracle_parity_smoke(spark, duck, name):
+    assert_parity(spark, duck, name, SF_SMOKE)
+
+
 def test_graph_contract(spark):
     """k edges per node, no self loops, no duplicate edges, scores
     rounded and within [-1, 1]."""
@@ -452,9 +471,9 @@ def test_graph_cdc_refresh_lifecycle(spark):
 
     from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
         K_GRAPH,
-        _cdc_dead,
-        _cdc_in_new,
-        _cdc_new_node,
+        cdc_dead,
+        cdc_member,
+        cdc_new,
         cdc_refreshed_graph_index,
     )
     from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
@@ -465,7 +484,7 @@ def test_graph_cdc_refresh_lifecycle(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
 
     live_ids = {
-        r.vec_id for r in emb.filter(_cdc_in_new(F.col("vec_id"))).select("vec_id").collect()
+        r.vec_id for r in emb.filter(cdc_member(1, F.col("vec_id"))).select("vec_id").collect()
     }
     assert {r.vec_id for r in corpus.select("vec_id").collect()} == live_ids
 
@@ -473,7 +492,7 @@ def test_graph_cdc_refresh_lifecycle(spark):
     changed = (
         corpus.select("vec_id", "v")
         .join(emb.select("vec_id", F.reverse("embedding").alias("rev")), "vec_id")
-        .filter(_cdc_dead(F.col("vec_id")) & _cdc_in_new(F.col("vec_id")))
+        .filter(cdc_dead(1, F.col("vec_id")) & cdc_member(1, F.col("vec_id")))
         .collect()
     )
     assert changed, "the changed slice must be populated"
@@ -487,7 +506,7 @@ def test_graph_cdc_refresh_lifecycle(spark):
     assert dead_touch == 0
     new_ids = {
         r.vec_id
-        for r in emb.filter(_cdc_new_node(F.col("vec_id"))).select("vec_id").collect()
+        for r in emb.filter(cdc_new(1, F.col("vec_id"))).select("vec_id").collect()
     }
     deg = {
         r.node: r.n
@@ -508,12 +527,10 @@ def test_graph_cdc_gen2_lifecycle(spark):
 
     from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
         K_GRAPH,
-        _cdc2_dead,
-        _cdc2_new_node,
-        _cdc_changed,
-        _cdc2_changed,
-        _cdc_in_v3,
-        _cdc_new_node,
+        cdc_changed,
+        cdc_dead,
+        cdc_member,
+        cdc_new,
         cdc_refreshed_graph_index_gen2,
     )
     from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
@@ -524,7 +541,7 @@ def test_graph_cdc_gen2_lifecycle(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
 
     v3_ids = {
-        r.vec_id for r in emb.filter(_cdc_in_v3(F.col("vec_id"))).select("vec_id").collect()
+        r.vec_id for r in emb.filter(cdc_member(2, F.col("vec_id"))).select("vec_id").collect()
     }
     assert {r.vec_id for r in corpus.select("vec_id").collect()} == v3_ids
 
@@ -537,7 +554,7 @@ def test_graph_cdc_gen2_lifecycle(spark):
             ),
             "vec_id",
         )
-        .filter(_cdc_changed(F.col("vec_id")) & _cdc2_changed(F.col("vec_id")))
+        .filter(cdc_changed(1, F.col("vec_id")) & cdc_changed(2, F.col("vec_id")))
         .collect()
     )
     assert twice, "twice-changed slice must be populated"
@@ -549,9 +566,9 @@ def test_graph_cdc_gen2_lifecycle(spark):
     retired_attach = {
         r.vec_id
         for r in emb.filter(
-            _cdc_new_node(F.col("vec_id"))
-            & _cdc2_dead(F.col("vec_id"))
-            & ~_cdc_in_v3(F.col("vec_id"))
+            cdc_new(1, F.col("vec_id"))
+            & cdc_dead(2, F.col("vec_id"))
+            & ~cdc_member(2, F.col("vec_id"))
         ).select("vec_id").collect()
     }
     assert retired_attach, "delta 2 must remove some cycle-1 attaches"
@@ -561,7 +578,7 @@ def test_graph_cdc_gen2_lifecycle(spark):
 
     new2 = {
         r.vec_id
-        for r in emb.filter(_cdc2_new_node(F.col("vec_id"))).select("vec_id").collect()
+        for r in emb.filter(cdc_new(2, F.col("vec_id"))).select("vec_id").collect()
     } & v3_ids
     deg = {r.node: r.n for r in edges.groupBy("node").agg(F.count("*").alias("n")).collect()}
     assert new2

@@ -324,10 +324,9 @@ def test_pq_refresh_cdc_lifecycle(spark):
     from pyspark.sql import functions as F
 
     from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
-        _cdc_dead,
-        _cdc_in_new,
-        _cdc_in_old,
-        _cdc_new_node,
+        cdc_dead,
+        cdc_member,
+        cdc_new,
     )
     from gpu_accelerated_vector_indexing_spark.operators.quantize import (
         cdc_refreshed_pq_state,
@@ -347,20 +346,22 @@ def test_pq_refresh_cdc_lifecycle(spark):
     )
     emb = load_table(spark, SF_SMOKE, "embeddings")
     live_ids = {
-        r.vec_id for r in emb.filter(_cdc_in_new(F.col("vec_id"))).select("vec_id").collect()
+        r.vec_id for r in emb.filter(cdc_member(1, F.col("vec_id"))).select("vec_id").collect()
     }
     assert {r.vec_id for r in live_codes.select("vec_id").collect()} == live_ids
     by_gen = {
         r.gen: r.n
         for r in live_codes.groupBy("gen").agg(F.count("*").alias("n")).collect()
     }
-    new_n = emb.filter(_cdc_new_node(F.col("vec_id"))).count()
+    new_n = emb.filter(cdc_new(1, F.col("vec_id"))).count()
     assert by_gen.get(1, 0) == new_n and by_gen.get(0, 0) == len(live_ids) - new_n
 
     # a changed doc appears twice in the codes table: its dead gen-0
     # row and its live gen-1 replacement, with different codes
     changed = (
-        codes.filter(_cdc_dead(F.col("vec_id")) & _cdc_in_new(F.col("vec_id")) & _cdc_in_old(F.col("vec_id")))
+        codes.filter(
+            cdc_dead(1, F.col("vec_id")) & cdc_member(1, F.col("vec_id")) & cdc_member(0, F.col("vec_id"))
+        )
         .select("vec_id", "gen", "codes")
         .collect()
     )
@@ -381,10 +382,9 @@ def test_pq_refresh_gen2_lifecycle(spark):
     from pyspark.sql import functions as F
 
     from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
-        _cdc2_changed,
-        _cdc_changed,
-        _cdc_in_v3,
-        _cdc_new_node,
+        cdc_changed,
+        cdc_member,
+        cdc_new,
     )
     from gpu_accelerated_vector_indexing_spark.operators.quantize import (
         cdc_refreshed_pq_state_gen2,
@@ -404,7 +404,7 @@ def test_pq_refresh_gen2_lifecycle(spark):
     )
     emb = load_table(spark, SF_SMOKE, "embeddings")
     v3_ids = {
-        r.vec_id for r in emb.filter(_cdc_in_v3(F.col("vec_id"))).select("vec_id").collect()
+        r.vec_id for r in emb.filter(cdc_member(2, F.col("vec_id"))).select("vec_id").collect()
     }
     assert {r.vec_id for r in live.select("vec_id").collect()} == v3_ids
 
@@ -416,7 +416,7 @@ def test_pq_refresh_gen2_lifecycle(spark):
     twice_ids = [
         r.vec_id
         for r in emb.filter(
-            _cdc_changed(F.col("vec_id")) & _cdc2_changed(F.col("vec_id"))
+            cdc_changed(1, F.col("vec_id")) & cdc_changed(2, F.col("vec_id"))
         ).select("vec_id").collect()
     ]
     assert twice_ids

@@ -227,26 +227,42 @@ def test_no_hand_rolled_memo_dicts():
     assert not found, f"hand-rolled memo dicts (use memo.session_state): {found}"
 
 
+def _calls_local_checkpoint(tree: ast.AST) -> bool:
+    return any(
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "localCheckpoint"
+        for node in ast.walk(tree)
+    )
+
+
 def test_no_hand_rolled_checkpoint_loops():
     """Iterative operators go through ``iterate.iterate``: no function
     under ``operators/`` other than the kernel calls ``.localCheckpoint(``
-    inside a ``for``/``while`` body — a hand-rolled loop would restate
-    the cut cadence and the snapshot freeing the kernel owns. Streaming
+    inside a ``for``/``while`` body, directly or through a same-module
+    function whose body does — a hand-rolled loop would restate the cut
+    cadence and the snapshot freeing the kernel owns. Streaming
     ``foreachBatch`` accumulators are callbacks, not loops."""
     found = []
     for path in sorted((PACKAGE / "operators").rglob("*.py")):
         if path.name == "iterate.py":
             continue
-        for loop in ast.walk(ast.parse(path.read_text())):
+        tree = ast.parse(path.read_text())
+        cutters = {
+            fn.name
+            for fn in ast.walk(tree)
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) and _calls_local_checkpoint(fn)
+        }
+        for loop in ast.walk(tree):
             if not isinstance(loop, (ast.For, ast.While)):
                 continue
             for node in ast.walk(loop):
-                if (
-                    isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Attribute)
-                    and node.func.attr == "localCheckpoint"
-                ):
+                if not isinstance(node, ast.Call):
+                    continue
+                if isinstance(node.func, ast.Attribute) and node.func.attr == "localCheckpoint":
                     found.append(f"{path.relative_to(PACKAGE)}:{node.lineno}")
+                elif isinstance(node.func, ast.Name) and node.func.id in cutters:
+                    found.append(f"{path.relative_to(PACKAGE)}:{loop.lineno} {node.func.id}")
     assert not found, f"localCheckpoint loops outside operators/iterate.py: {sorted(set(found))}"
 
 

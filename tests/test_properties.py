@@ -281,15 +281,20 @@ def test_min_label_fixpoint_matches_union_find(spark, edges):
 
 
 @pytest.mark.parametrize(
-    "consumer, allowance", [("pagerank", 1), ("kcore", 0), ("min_label", 1)]
+    "consumer, allowance",
+    [("pagerank", 1), ("kcore", 0), ("min_label", 1), ("nn_descent", 1), ("shard_merge", 1)],
 )
 def test_iteration_kernel_frees_superseded_snapshots(spark, consumer, allowance):
     """Cache-hygiene contract of the iteration kernel (ADVICE r6 / review
     r7): every cut frees the superseded snapshot, so a call grows the
     persistent-RDD registry by AT MOST the returned state's own snapshot
-    — one for PageRank's ranks and min-label's labels, none for k-core's
-    local digest rows. A leak registers one snapshot per cut: 5 for
-    PageRank and k-core at sf0.01, ≥ 12 for the 12-node path graph."""
+    — one for PageRank's ranks, min-label's labels and an NN-descent
+    graph (a full build or a shard merge), none for k-core's local
+    digest rows. A leak registers one snapshot per cut: 5 for PageRank,
+    k-core and the NN-descent build at sf0.01, 3 for the shard merge
+    (round 0 plus MERGE_ROUNDS), ≥ 12 for the 12-node path graph. The
+    NN-descent cases count localCheckpoint snapshots only, over a
+    pre-filled normed corpus and (for the merge) prebuilt shards."""
     from pyspark.sql import functions as F
 
     from gpu_accelerated_vector_indexing_spark.operators.dedup import min_label_fixpoint
@@ -298,6 +303,14 @@ def test_iteration_kernel_frees_superseded_snapshots(spark, consumer, allowance)
         copurchase_pagerank,
         kcore_trajectory,
     )
+    from gpu_accelerated_vector_indexing_spark.operators.graph_ann import (
+        K_GRAPH,
+        build_knn_graph_over,
+        merge_graph_shards,
+    )
+    from gpu_accelerated_vector_indexing_spark.operators.iterate import _is_local_ckpt
+    from gpu_accelerated_vector_indexing_spark.operators.knn import fixture_normed
+    from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
     from tests.conftest import SF_CORRECT
 
     # a 12-node path graph: diameter 11 forces >= 12 rounds
@@ -305,14 +318,29 @@ def test_iteration_kernel_frees_superseded_snapshots(spark, consumer, allowance)
     und = path.union(path.select(F.col("nbr").alias("node"), F.col("node").alias("nbr"))).distinct()
     # the memoized graph state registers its caches outside the count
     _pagerank_edges(spark, SF_CORRECT)
+    emb, emb_n = load_table(spark, SF_CORRECT, "embeddings"), fixture_normed(spark, SF_CORRECT)
+    n_vec = emb_n.count()  # fills the pinned normed corpus
+    shards = []
+    if consumer == "shard_merge":
+        shards = [
+            build_knn_graph_over(emb.filter(F.col("vec_id") % 2 == i), emb_n.filter(F.col("vec_id") % 2 == i))
+            for i in (0, 1)
+        ]
     call, n_rows = {
         "pagerank": (lambda: copurchase_pagerank(spark, SF_CORRECT), 25),
         "kcore": (lambda: kcore_trajectory(spark, SF_CORRECT), 5),
         "min_label": (lambda: min_label_fixpoint(und, max_rounds=20), 13),
+        "nn_descent": (lambda: build_knn_graph_over(emb, emb_n), n_vec * K_GRAPH),
+        "shard_merge": (lambda: merge_graph_shards(emb, emb_n, shards), n_vec * K_GRAPH),
     }[consumer]
-    before = len(dict(spark._jsc.getPersistentRDDs()))
+    local_only = consumer in ("nn_descent", "shard_merge")
+
+    def registered() -> int:
+        return sum(1 for r in dict(spark._jsc.getPersistentRDDs()).values() if not local_only or _is_local_ckpt(r))
+
+    before = registered()
     assert call().count() == n_rows
-    after = len(dict(spark._jsc.getPersistentRDDs()))
+    after = registered()
     assert after - before <= allowance, f"registry grew {before} -> {after}: snapshots leaked"
 
 
