@@ -1094,10 +1094,7 @@ def relink_edges(
 ) -> DataFrame:
     """The repaired out-edges (node, nbr, score, rk) for every affected
     node — the edge set ``graph_relink_after_deletes`` digests."""
-    _, _, repaired = _repair(
-        fixture_graph(spark, sf_dir), _mod_slice(delete_mod), fixture_normed(spark, sf_dir), k
-    )
-    return repaired
+    return _repair(fixture_graph(spark, sf_dir), _mod_slice(delete_mod), fixture_normed(spark, sf_dir), k)[2]
 
 
 def _delta_pass(tag: str, base: DataFrame, dead, live_n: DataFrame, new=None, k: int = K_GRAPH) -> str:
